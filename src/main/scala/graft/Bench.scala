@@ -54,81 +54,30 @@ object Bench {
     }
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(o => o.exists(n.startsWith)) }
-    // Substrate builds (VERDICT r14 #2): the shared dup-MST and ε-slink
-    // substrates are built ONCE per JVM and then read by their gates
-    // (q348/q353 and q358/q359) — median-of-3 per-gate timing would
-    // drop the one-off build from every committed number, so each build
-    // is timed HERE, explicitly, charged exactly once in the total, and
-    // reported under "substrates"; the consumer gates' per-query lines
-    // are READOUT-ONLY by design. (q356's media parquet is fixture
-    // ENCODING — test scaffolding, not the operator under test — and
-    // stays uncharged, absorbed by the warmup convention as before.)
-    val substrateDefs: Seq[(String, Seq[String], () => Unit)] = Seq(
-      // dup_pairs MUST build before dup_mst: the MST election consumes
-      // the persisted pair table, so ordering keeps each line charging
-      // exactly its own work (r16 — VERDICT r15 #1: one verified-pair
-      // build + one LPA run for the whole graph-gate family)
-      ("dup_pairs", Seq("q74", "q84", "q85", "q90", "q98", "q111", "q112",
-          "q119", "q129", "q130", "q147", "q176", "q209", "q259", "q266",
-          "q313", "q348", "q353", "q370", "q371", "q372"),
-        () => ops.Components.warmDupPairs(spark, sfDir)),
-      ("dup_mst", Seq("q348", "q353"),
-        () => ops.Components.warmDupMst(spark, sfDir)),
-      // eps_pairs MUST build before the two slink elections: both
-      // consume the persisted candidate table (r17 — one grid ε-join
-      // for the whole family, the dup_pairs→dup_mst shape)
-      ("eps_pairs", Seq("q358", "q359", "q360", "q362", "q363", "q364",
-          "q373"),
-        () => ops.Components.warmEpsPairs(spark, sfDir)),
-      ("eps_slink", Seq("q358", "q359", "q362", "q363"),
-        () => ops.Components.warmEpsSlink(spark, sfDir)),
-      // the condensed TREE over the eps labels (r18 — VERDICT r17 #1):
-      // q358/q359/q362 were each rebuilding it per gate; one build
-      // persists cl/sel/att/dm/sela and the three gates are readouts
-      ("eps_tree", Seq("q358", "q359", "q362"),
-        () => ops.Components.warmCondTree(spark, sfDir, "eps")),
-      ("mr_slink", Seq("q360", "q364", "q373"),
-        () => ops.Components.warmMrSlink(spark, sfDir)),
-      // the mr-metric condensed tree (r18): q360's selection readout
-      // plus the published-form GLOSH/soft-membership pair
-      ("mr_tree", Seq("q360", "q381", "q382"),
-        () => ops.Components.warmCondTree(spark, sfDir, "mr")),
-      // the global suffix-order ladder (r16): q374/q375 read one build
-      ("global_sa", Seq("q374", "q375", "q377"),
-        () => ops.TrainPrep.warmGlobalSa(spark, sfDir)),
-      // the per-doc rank ladder (r17): q366/q367 read one build
-      ("per_doc_sa", Seq("q366", "q367"),
-        () => ops.TrainPrep.warmPerDocSa(spark, sfDir)),
-      // the KNN-Shapley valuation (r17): q376 reports it, q379 selects
-      // by it — one pair/rank/recursion pass feeds both
-      ("shapley", Seq("q376", "q379"),
-        () => ops.DataSelect.warmShapley(spark, sfDir)),
-      // the span-removal rewrite (r18): q378 reports it, q380 packs it
-      ("span_rm", Seq("q378", "q380"),
-        () => ops.TrainPrep.warmSpanRemoval(spark, sfDir)))
-    val substrates = substrateDefs.flatMap { case (sname, consumers, run) =>
-      if (selected.exists { case (n, _) => consumers.exists(n.startsWith) }) {
-        // drop the PREVIOUS build's debris before timing this one (r17:
-        // the builds run back-to-back and the per-gate cleanup below
-        // never runs between them — with seven builds in a row the
-        // later lines were paying the earlier builds' pinned blocks as
-        // storage eviction, mr_slink reading 2× its quiet-JVM cost).
-        // INVARIANT this blanket unpersist relies on (ADVICE r17):
-        // every substrate round-trips its artifacts through parquet
-        // before returning — no build hands the next one a live
-        // localCheckpoint'd frame (whose truncated lineage could not
-        // be recomputed after the unpersist). A future substrate that
-        // carries a checkpointed DataFrame across builds would fail
-        // here with 'checkpoint block not found'; write it to scratch
-        // parquet instead (the [[graft.core.Scratch]] contract).
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        spark.sqlContext.clearCache()
-        System.gc()
-        val t0 = System.nanoTime()
-        run()
-        Some(sname -> (System.nanoTime() - t0) / 1e9)
-      } else None
+    // Substrate builds: each shared build is made ONCE per JVM and then
+    // read by its gates, so median-of-3 per-gate timing would drop it
+    // from every number. Each build the selected gates need (the
+    // closure of their declared `uses`, in registry order so deps come
+    // first) is timed HERE, charged exactly once in the total, and
+    // reported under "substrates"; the consumer gates' lines are
+    // readouts by design. (The media fixtures are encoding scaffolding,
+    // not operators under test, and stay uncharged.)
+    val selectedNames = selected.map(_._1).toSet
+    val needed = core.Substrate.closure(
+      SparkEntry.defs.filter(d => selectedNames(d.name)).flatMap(_.uses))
+    val substrates = needed.map { sub =>
+      // drop the previous build's debris before timing this one: the
+      // builds run back-to-back and the per-gate cleanup below never
+      // runs between them. Safe because a substrate build can only
+      // leave parquet behind (see [[core.Substrate]]), never a live
+      // checkpointed frame that a later build would need.
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = false))
+      spark.sqlContext.clearCache()
+      System.gc()
+      val t0 = System.nanoTime()
+      sub.root(spark, sfDir)
+      sub.name -> (System.nanoTime() - t0) / 1e9
     }
     var gateIdx = 0
     val results = selected.map { case (name, fn) =>
@@ -184,8 +133,11 @@ object Bench {
     // (a 9.95 s median with a 14.2 s spread is unadjudicable from the
     // record alone — VERDICT r9 "what's wrong" #3). With the raw array
     // a one-off contended iteration is visible mechanically.
+    // Locale.ROOT: a comma-decimal default locale would print 0,123
+    // and make every JSON line below invalid
+    def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val itersRaw = results.map { case (k, _, _, _, raw) =>
-      "\"" + k + "\":" + raw.map(t => f"$t%.3f").mkString("[", ",", "]")
+      "\"" + k + "\":" + raw.map(f3).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     // full JSON string escaping: Spark analysis errors routinely embed
     // newlines/plans in the first line of the message
@@ -202,7 +154,7 @@ object Bench {
       "\"" + k + "\":\"" + jsonEscape(e) + "\""
     }.mkString("{", ",", "}")
     val subsJson = substrates.map { case (k, v) =>
-      "\"" + k + "\":" + f"$v%.3f"
+      "\"" + k + "\":" + f3(v)
     }.mkString("{", ",", "}")
     // total = per-gate medians + each substrate build charged ONCE —
     // the builds are real work the per-gate numbers no longer contain
@@ -223,7 +175,6 @@ object Bench {
     // for 381 gates (the query names themselves are the floor; the
     // contract forbids renaming). Queries stay FIRST so the summary
     // scalars at the END survive any tail truncation.
-    def f3(v: Double): String = f"$v%.3f"
     val qsCompact = results.map { case (k, v, _, err, _) =>
       "\"" + k + "\":" + (if (err.isDefined) "-1" else f3(v))
     }.mkString("{", ",", "}")

@@ -12,11 +12,17 @@ import org.apache.spark.sql.functions._
   *  - money/measure aggregates computed in DECIMAL (exact, order-
   *    independent) then cast to DOUBLE, so Spark's and DuckDB's
   *    summation order cannot diverge.
+  *
+  * `uses` lists the [[core.Substrate]]s the gate reads directly (their
+  * deps follow from the registry); Bench builds and charges exactly
+  * their closure, and QueriesSpec checks the list against what the gate
+  * actually touches.
   */
 final case class QueryDef(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: Option[String],
+    uses: Seq[core.Substrate] = Nil)
 
 object QueryDef {
   /** Exact decimal view of a 2-dp money/measure double. */

@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   */
 object SparkEntry {
 
-  private def allDefs: Seq[QueryDef] =
+  /** Every declared gate. */
+  def defs: Seq[QueryDef] =
     ops.Relational.defs ++ ops.TextAnalysis.defs ++ ops.Dedup.defs ++
       ops.Components.defs ++ ops.TrainPrep.defs ++ ops.Sketch.defs ++
       ops.Similarity.defs ++ ops.Ann.defs ++ ops.Scale.defs ++
@@ -37,10 +38,10 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    allDefs.map(q => q.name -> q.fn).toMap
+    defs.map(q => q.name -> q.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    allDefs.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    defs.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

@@ -1,10 +1,9 @@
 package graft.core
 
-/** Session-scoped scratch directories for substrate/fixture parquet
-  * caches ([[graft.ops.Components]]' dup-MST and ε-slink substrates,
-  * [[graft.multimodal.Multimodal]]'s media fixture): created once per
-  * (JVM, cache key) and deleted recursively on JVM exit — the temp
-  * dirs used to outlive the session (ADVICE r14). */
+/** Session-scoped scratch directories for cached parquet builds — the
+  * registered [[Substrate]]s and [[graft.multimodal.Multimodal]]'s media
+  * fixtures: created once per (JVM, cache key) by a [[Scratch.Memo]] and
+  * deleted recursively on JVM exit, so no temp dir outlives the JVM. */
 object Scratch {
   private val dirs =
     new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
@@ -46,6 +45,26 @@ object Scratch {
     }
     else try new java.io.File(dir).getCanonicalPath
     catch { case _: java.io.IOException => dir }
+
+  /** A per-corpus cache of built scratch paths: `apply(dir)(build)`
+    * runs `build` at most once per [[corpusKey]] — unless two callers
+    * race, in which case both build and one result is kept.
+    * get/putIfAbsent rather than computeIfAbsent, because a build is a
+    * long multi-job Spark pipeline and computeIfAbsent would hold the
+    * map's bin lock across all of it. */
+  final class Memo {
+    private val cache =
+      new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+    def apply(dir: String)(build: => String): String = {
+      val key = corpusKey(dir)
+      val cached = cache.get(key)
+      if (cached != null) cached else {
+        val built = build
+        Option(cache.putIfAbsent(key, built)).getOrElse(built)
+      }
+    }
+  }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit = {
     if (java.nio.file.Files.isDirectory(p,

@@ -727,11 +727,13 @@ object Multimodal {
   }
 
   /** Media fixtures, materialized ONCE per (JVM, source dir, kind) into
-    * session-scoped parquet media tables (r18 generalization of q356's
-    * r16 fixture). The fixtures are deterministic (seed/noise/frames are
-    * pure functions of doc_id), so encoding per gate run measured
-    * ImageIO *encode* — 2/3 of q356's wall, ~all of q194's — instead of
-    * the operator under test (decode/parse). Encoding executor-side
+    * session-scoped parquet media tables by a [[graft.core.Scratch.Memo]]
+    * (the [[graft.core.Substrate]] cache contract; not a registered
+    * substrate, so Bench never charges the encode). The fixtures are
+    * deterministic (seed/noise/frames are pure functions of doc_id), so
+    * encoding per gate run measured ImageIO *encode* — 2/3 of q356's
+    * wall, ~all of q194's — instead of the operator under test
+    * (decode/parse). Encoding executor-side
     * into parquet and re-reading is exactly how a real pipeline meets
     * its media: a binary column scanned from storage.
     *
@@ -746,24 +748,17 @@ object Multimodal {
     * dwarfs it at any scale. At 100 TB real media scans split by row
     * group and the spread costs one bounded pass; here it buys 32×
     * decode parallelism. */
-  private val mediaFixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val mediaMemos =
+    Seq("gif", "phash", "ahash").map(_ -> new graft.core.Scratch.Memo).toMap
 
   private def mediaFixture(s: SparkSession, dir: String, kind: String)
       (build: => Dataset[MediaRow]): Dataset[MediaRow] = {
     import s.implicits._
-    // cache contract as Components.dupMst (ADVICE r14): corpus dirs are
-    // immutable for the JVM's lifetime, scratch parquet is deleted on
-    // JVM exit, and the multi-job encode never runs under the map lock.
-    // Key normalized via corpusKey (ADVICE r18): `dir` vs `dir/` must
-    // not silently re-run the multi-job fixture encode.
-    val key = kind + "|" + graft.core.Scratch.corpusKey(dir)
-    val cached = mediaFixtureCache.get(key)
-    val path = if (cached != null) cached else {
+    val path = mediaMemos(kind)(dir) {
       val out = graft.core.Scratch.tempDir(s"graft-$kind-media") +
         "/media.parquet"
       build.write.mode("overwrite").parquet(out)
-      Option(mediaFixtureCache.putIfAbsent(key, out)).getOrElse(out)
+      out
     }
     // spread the decode: the fixture is defaultParallelism small files
     // that file-packing (openCostInBytes) would coalesce back into 1-2

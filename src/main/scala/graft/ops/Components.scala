@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Materialize, QueryDef, Tables}
+import graft.core.Substrate
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -955,128 +956,50 @@ object Components {
         coalesce(col("wsum").cast("double"), lit(0.0)).as("mst_w"))
   }
 
-  private val dupMstCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  /** Build the dup-graph MST substrate for `dir` UNCACHED into fresh
-    * scratch parquet, returning (mstPath, labelsPath) — the cacheable
-    * unit behind [[dupMst]], exposed so ScaleLawSpec can meter the
-    * BUILD cold on both fixtures (the substrate-build law, VERDICT r14
-    * #1) and Bench can charge it exactly once per run (VERDICT r14
-    * #2). Deterministic: verified pairs are a pure function of the
-    * corpus and the (w, a, b) min key makes the elected MST and min-id
-    * labels unique — so a cache race building twice is only wasted
-    * work, never divergent results. */
-  private[graft] def buildDupMst(s: SparkSession, dir: String)
-      : (String, String) = {
-    val base = graft.core.Scratch.tempDir("graft-dupmst")
-    val docs = Tables.documents(s, dir)
-    // consumes the dup-pairs SUBSTRATE (r16): the verified pair table
-    // is built/charged once for the whole graph-gate family; this
-    // build meters only the MST election on top of it
-    val edges = dupPairs(s, dir)
-      .groupBy("id_a", "id_b")
-      .agg(min(round(lit(1.0) - col("jaccard"), 6)).as("w"))
-      .select(col("id_a").as("a"), col("id_b").as("b"), col("w"))
-    val (mst, labels) =
-      boruvkaMst(docs.select(col("doc_id").as("id")), edges)
-    mst.write.mode("overwrite").parquet(s"$base/mst.parquet")
-    labels.write.mode("overwrite").parquet(s"$base/labels.parquet")
-    (s"$base/mst.parquet", s"$base/labels.parquet")
-  }
-
-  /** Pre-build (idempotent) the q348/q353 substrate so a caller can
-    * separate the one-off build cost from the readout it is about to
-    * measure (ScaleLawSpec's warm/warm gate laws, Bench's substrate
-    * lines). */
-  private[graft] def warmDupMst(s: SparkSession, dir: String): Unit =
-    dupMst(s, dir)
-
-  /** The near-dup-graph MST substrate for q348/q353, materialized ONCE
-    * per (JVM, corpus) into session-scoped parquet — the same shared-
-    * substrate rule as [[epsSlinkLabels]]: one dedup pipeline + one
-    * Borůvka run feeds both the forest-stats and dendrogram readouts.
-    *
-    * Cache contract (ADVICE r14): keyed by corpus dir alone — fixture
-    * and bench SF dirs are immutable for the JVM's lifetime, which is
-    * the documented assumption; scratch parquet is deleted on JVM exit
-    * ([[graft.core.Scratch]]). get/putIfAbsent instead of
-    * computeIfAbsent: the build is a long multi-job Spark pipeline and
-    * computeIfAbsent would hold the map bin lock across all of it,
-    * blocking concurrent callers hashing to the same segment. */
-  private def dupMst(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val key = graft.core.Scratch.corpusKey(dir)
-    val cached = dupMstCache.get(key)
-    val (me, ml) = if (cached != null) cached else {
-      val built = buildDupMst(s, dir)
-      Option(dupMstCache.putIfAbsent(key, built)).getOrElse(built)
-    }
-    (s.read.parquet(me), s.read.parquet(ml))
-  }
-
-  private val dupPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Build the VERIFIED-PAIR + LPA-COMMUNITY substrate for `dir`
-    * UNCACHED into fresh scratch parquet, returning the scratch root —
-    * the cacheable unit behind [[dupPairs]]/[[lpaCommunities]]
-    * (VERDICT r15 #1): the whole near-dup graph-gate family (q74/q85/
-    * q90/q98/q111/q112/q119/q129/q130/q147/q176/q209/q259/q266/q313/
-    * q370/q371/q372, plus the MST substrate itself) reads the SAME
-    * verified pair set, and the community gates the SAME 4-round LPA
-    * over it — one candidate-generation + verification pass and one
-    * LPA run per (JVM, corpus) instead of one per gate, which is the
-    * production compute-once shape CurationShareSpec proves.
-    *
-    * Both artifacts of the one build persist under one scratch root:
-    * `pairs.parquet` (id_a, id_b, jaccard — the q51 pipeline's exact
-    * output) and `lpa.parquet` (doc_id, community, community_size —
-    * [[labelPropagation]]'s default 4 rounds over the PERSISTED pairs,
-    * read back rather than lineage so the two artifacts are
-    * definitionally views of one pair set). Deterministic: the pair
-    * set is a pure function of the corpus (LSH bands + exact Jaccard,
-    * both exact arithmetic) and LPA's (max count, min label) tie order
-    * is total — a cache race building twice is wasted work, never
-    * divergent results. */
-  private[graft] def buildDupPairs(s: SparkSession, dir: String): String = {
-    val out = graft.core.Scratch.tempDir("graft-duppairs")
+  /** The verified near-dup pair table and its LPA communities — the
+    * input of the whole near-dup graph-gate family, so candidate
+    * generation, verification and one LPA run happen once per (JVM,
+    * corpus) instead of once per gate. Artifacts:
+    *  - `pairs` (id_a, id_b, jaccard): the q51 pipeline's exact output;
+    *  - `lpa` (doc_id, community, community_size): [[labelPropagation]]'s
+    *    default 4 rounds over the PERSISTED pairs, read back rather than
+    *    lineage so both artifacts are views of one pair set.
+    * Deterministic: LSH bands and exact Jaccard are exact arithmetic,
+    * and LPA's (max count, min label) tie order is total. */
+  lazy val DupPairs: Substrate = Substrate("dup_pairs") { (s, dir, out) =>
     val docs = Tables.documents(s, dir)
     Dedup.dedupPipeline(docs)
       .write.mode("overwrite").parquet(out + "/pairs.parquet")
     labelPropagation(docs.select(col("doc_id").as("id")),
         s.read.parquet(out + "/pairs.parquet").select("id_a", "id_b"))
       .write.mode("overwrite").parquet(out + "/lpa.parquet")
-    out
   }
 
-  /** Pre-build (idempotent) the graph-gate substrate — see
-    * [[warmDupMst]]. */
-  private[graft] def warmDupPairs(s: SparkSession, dir: String): Unit =
-    dupPairsBase(s, dir)
-
-  private def dupPairsBase(s: SparkSession, dir: String): String = {
-    val key = graft.core.Scratch.corpusKey(dir)
-    val cached = dupPairsCache.get(key)
-    if (cached != null) cached else {
-      val built = buildDupPairs(s, dir)
-      Option(dupPairsCache.putIfAbsent(key, built)).getOrElse(built)
-    }
+  /** The near-dup-graph MST for q348/q353: one Borůvka election over
+    * [[DupPairs]] feeds both the forest-stats and dendrogram readouts.
+    * Artifacts `mst` (a, b, w) and `labels` (node, comp); the (w, a, b)
+    * min key makes the elected MST and min-id labels unique. */
+  lazy val DupMst: Substrate = Substrate("dup_mst", Seq(DupPairs)) {
+    (s, dir, out) =>
+      val edges = dupPairs(s, dir)
+        .groupBy("id_a", "id_b")
+        .agg(min(round(lit(1.0) - col("jaccard"), 6)).as("w"))
+        .select(col("id_a").as("a"), col("id_b").as("b"), col("w"))
+      val (mst, labels) = boruvkaMst(
+        Tables.documents(s, dir).select(col("doc_id").as("id")), edges)
+      mst.write.mode("overwrite").parquet(out + "/mst.parquet")
+      labels.write.mode("overwrite").parquet(out + "/labels.parquet")
   }
 
-  /** The verified near-dup pair table (`id_a`, `id_b`, `jaccard` — the
-    * q51 pipeline's output) from the cached one-per-(JVM, corpus)
-    * build. Cache contract as [[dupMst]]: corpus dirs immutable for
-    * the JVM's lifetime, scratch deleted on exit, no build under the
-    * map lock. */
+  /** The verified near-dup pair table (`id_a`, `id_b`, `jaccard`). */
   private[graft] def dupPairs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(dupPairsBase(s, dir) + "/pairs.parquet")
+    DupPairs.read(s, dir, "pairs")
 
   /** The 4-round LPA communities over [[dupPairs]] (`doc_id`,
-    * `community`, `community_size`), from the same cached build —
-    * q112's output and q370/q371's partition input. */
+    * `community`, `community_size`) — q112's output and q370/q371's
+    * partition input. */
   private[graft] def lpaCommunities(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(dupPairsBase(s, dir) + "/lpa.parquet")
+    DupPairs.read(s, dir, "lpa")
 
   /** The Borůvka loop itself, returning the raw artifacts —
     * (MST edge set `(a, b, w)`, final labels `(node, comp)`) — for
@@ -1469,8 +1392,8 @@ object Components {
   /** The pure READOUT half of [[hdbscanSelection]] — one keyed join of
     * the (cluster-count-sized) selection frame against the cluster
     * table. Factored out in r18 so q358/q360 can read the cached
-    * condensed-tree substrate ([[condTree]]) instead of re-deriving
-    * the selection per gate. */
+    * condensed-tree substrate ([[EpsTree]], [[MrTree]]) instead of
+    * re-deriving the selection per gate. */
   private[ops] def hdbscanReadout(sel: DataFrame, cl: DataFrame,
       cuts: Seq[Double]): DataFrame = {
     val ts = cuts
@@ -1668,7 +1591,7 @@ object Components {
   /** The pure READOUT half of [[gloshBody]] — one keyed join of the
     * per-point attachment frame against the subtree-deepest frame,
     * then integer score algebra. Factored out in r18 so q359 can read
-    * the cached condensed-tree substrate ([[condTree]]). */
+    * the cached condensed-tree substrate ([[EpsTree]], [[MrTree]]). */
   private[ops] def gloshReadout(att: DataFrame, dm: DataFrame,
       lambdas: Seq[Long]): DataFrame =
     att.join(dm, Seq("bj", "bc"))
@@ -1716,7 +1639,7 @@ object Components {
     * clusters with NO selected ancestor are dropped). Returns (bj, bc,
     * abj, abc) on cluster-count-sized tables. Factored out of
     * [[softMembershipsFromLabels]] in r18 so the condensed-tree
-    * substrate ([[condTree]]) can persist it once. */
+    * substrate ([[EpsTree]], [[MrTree]]) can persist it once. */
   private def selectedAncestors(sel: DataFrame, cl: DataFrame, k: Int,
       materialize: Materialize.Strategy): DataFrame = {
     var aParts = List.empty[DataFrame]
@@ -1770,189 +1693,78 @@ object Components {
   private[graft] lazy val HdbLambdas = Seq(2500L, 1600L, 625L, 400L)
   private[graft] lazy val HdbMinSize = 5
 
-  private val epsPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Build the shared ε-CANDIDATE-PAIR substrate for `dir` UNCACHED
-    * (r17): [[buildSlinkLabels]] and [[buildMrSlinkLabels]] both ran
-    * the identical grid ε-join over the same 2-D embedding slice —
-    * the dup_pairs→dup_mst lesson again: one candidate pass per
-    * (JVM, corpus) feeds both MST elections. Persists the DIRECTED
-    * pair table (ia, ib, w — both orientations, the core-distance
-    * window needs per-point neighbor lists) plus the id frame the
-    * Borůvka elections seed from, so neither consumer rescans the
-    * embeddings. */
-  private[graft] def buildEpsPairs(s: SparkSession, dir: String): String = {
-    val out = graft.core.Scratch.tempDir("graft-epspairs")
+  /** The ε-candidate pairs of the slink family: one grid ε-join over the
+    * embeddings' 2-D slice feeds both single-linkage elections
+    * ([[EpsSlink]], [[MrSlink]]). Artifacts `pairs` (ia, ib, w — both
+    * orientations, since the core-distance window needs per-point
+    * neighbor lists) and `ids` (id), the frame the Borůvka elections
+    * seed from, so neither consumer rescans the embeddings. */
+  lazy val EpsPairs: Substrate = Substrate("eps_pairs") { (s, dir, out) =>
     val pts = Tables.embeddings(s, dir).select(col("vec_id").as("id"),
       element_at(col("embedding"), 1).cast("double").as("x"),
       element_at(col("embedding"), 2).cast("double").as("y"))
     gridEpsPairs(pts, eps = 0.05, eps2 = 0.0025)
       .write.mode("overwrite").parquet(out + "/pairs.parquet")
     pts.select("id").write.mode("overwrite").parquet(out + "/ids.parquet")
-    out
   }
 
-  /** Pre-build (idempotent) the slink-family candidate substrate. */
-  private[graft] def warmEpsPairs(s: SparkSession, dir: String): Unit = {
-    epsPairsBase(s, dir); ()
+  /** ε-graph single linkage for the q358 family: Borůvka over the raw
+    * ε-pairs, then the level-encoded label pass, persisted as `labels`.
+    * Labels are component minima and the (w, a, b) min key makes the
+    * elected MST unique. */
+  lazy val EpsSlink: Substrate = Substrate("eps_slink", Seq(EpsPairs)) {
+    (s, dir, out) =>
+      val edges = EpsPairs.read(s, dir, "pairs").where(col("ia") < col("ib"))
+        .select(col("ia").as("a"), col("ib").as("b"), col("w"))
+      val (mst, _) = boruvkaMst(EpsPairs.read(s, dir, "ids"), edges)
+      singleLinkageLabels(mst, HdbCuts)
+        .write.mode("overwrite").parquet(out + "/labels.parquet")
   }
 
-  private def epsPairsBase(s: SparkSession, dir: String): String = {
-    val key = graft.core.Scratch.corpusKey(dir)
-    val cached = epsPairsCache.get(key)
-    if (cached != null) cached else {
-      val built = buildEpsPairs(s, dir)
-      Option(epsPairsCache.putIfAbsent(key, built)).getOrElse(built)
-    }
+  /** MUTUAL-REACHABILITY single linkage (q360's metric — HDBSCAN as
+    * published): same candidates, Borůvka and label pass as
+    * [[EpsSlink]], over [[mutualReachEdges]]' core-distance-weighted
+    * edges. Artifacts `mst` (a, b, w — q364's OPTICS traversal runs on
+    * this exact tree; n−1 rows) and `labels`, derived from the
+    * PERSISTED tree so both are views of one elected MST. */
+  lazy val MrSlink: Substrate = Substrate("mr_slink", Seq(EpsPairs)) {
+    (s, dir, out) =>
+      val edges = mutualReachEdgesFrom(EpsPairs.read(s, dir, "pairs"),
+        HdbMinSize)
+      val (mst, _) = boruvkaMst(EpsPairs.read(s, dir, "ids"), edges)
+      mst.write.mode("overwrite").parquet(out + "/mst.parquet")
+      singleLinkageLabels(s.read.parquet(out + "/mst.parquet"), HdbCuts)
+        .write.mode("overwrite").parquet(out + "/labels.parquet")
   }
 
-  /** The cached (ids, directed ε-pairs) of the slink family — cache
-    * contract as [[dupMst]]. */
-  private def epsPairs(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val base = epsPairsBase(s, dir)
-    (s.read.parquet(base + "/ids.parquet"),
-      s.read.parquet(base + "/pairs.parquet"))
-  }
+  /** The condensed tree over the [[EpsSlink]] labels — the q358/q359/
+    * q362 readouts' input; see [[condensedTree]]. */
+  lazy val EpsTree: Substrate =
+    Substrate("eps_tree", Seq(EpsSlink))(condensedTree(EpsSlink))
 
-  private val slinkLabelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The condensed tree over the [[MrSlink]] labels — q360/q381/q382's. */
+  lazy val MrTree: Substrate =
+    Substrate("mr_tree", Seq(MrSlink))(condensedTree(MrSlink))
 
-  /** Build the ε-graph single-linkage substrate for `dir` UNCACHED
-    * into fresh scratch parquet, returning the label-frame path — the
-    * cacheable unit behind [[epsSlinkLabels]], exposed for
-    * ScaleLawSpec's cold/cold substrate-build law and Bench's
-    * once-per-run substrate line (VERDICT r14 #1/#2). Deterministic:
-    * the (w, a, b) min key makes the elected MST unique and labels are
-    * component minima, so the parquet round-trip is exact and a cache
-    * race is only wasted work. */
-  private[graft] def buildSlinkLabels(s: SparkSession, dir: String): String = {
-    val out = graft.core.Scratch.tempDir("graft-slink") + "/labels.parquet"
-    // candidates come from the shared eps-pairs substrate (r17): this
-    // build meters the Borůvka election + label pass only
-    val (ids, pairs) = epsPairs(s, dir)
-    val edges = pairs.where(col("ia") < col("ib"))
-      .select(col("ia").as("a"), col("ib").as("b"), col("w"))
-    val (mst, _) = boruvkaMst(ids, edges)
-    singleLinkageLabels(mst, HdbCuts).write.mode("overwrite").parquet(out)
-    out
-  }
-
-  /** Pre-build (idempotent) the q358/q359 substrate — see
-    * [[warmDupMst]]. */
-  private[graft] def warmEpsSlink(s: SparkSession, dir: String): Unit =
-    epsSlinkLabels(s, dir)
-
-  /** The ε-graph single-linkage substrate for q358/q359, materialized
-    * ONCE per (JVM, corpus) into session-scoped parquet — the
-    * production shape: one grid-pair pass + one MST + one label pass
-    * feeds BOTH the cluster-selection and outlier-scoring readouts,
-    * so each gate measures its own algebra rather than a rebuild of
-    * the shared substrate (the q356 fixture-materialization pattern,
-    * VERDICT r13 #2). Cache contract as [[dupMst]]: immutable corpus
-    * dirs for the JVM's lifetime, scratch deleted on exit, no build
-    * under the map lock. */
-  private def epsSlinkLabels(s: SparkSession, dir: String): DataFrame = {
-    val key = graft.core.Scratch.corpusKey(dir)
-    val cached = slinkLabelCache.get(key)
-    val path = if (cached != null) cached else {
-      val built = buildSlinkLabels(s, dir)
-      Option(slinkLabelCache.putIfAbsent(key, built)).getOrElse(built)
-    }
-    s.read.parquet(path)
-  }
-
-  private val mrSlinkLabelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Build the MUTUAL-REACHABILITY single-linkage substrate for `dir`
-    * UNCACHED (the q360 analog of [[buildSlinkLabels]]): same grid
-    * candidates, same Borůvka, same level-encoded label pass — but the
-    * MST is over [[mutualReachEdges]]' core-distance-weighted metric,
-    * which is HDBSCAN as published rather than raw-ε single linkage.
-    * Persists BOTH artifacts of the one build — the label frame
-    * (q360's readout input) and the elected MST edge set itself
-    * (q364's: the OPTICS ordering is a traversal of this exact tree)
-    * — under one scratch dir, returned as the cache value. The tree
-    * is n−1 rows; writing it costs nothing next to the build. */
-  private[graft] def buildMrSlinkLabels(s: SparkSession, dir: String): String = {
-    val out = graft.core.Scratch.tempDir("graft-mrslink")
-    // same shared candidate substrate as [[buildSlinkLabels]] (r17) —
-    // the mutual-reachability weighting reads the persisted pair table
-    val (ids, pairs) = epsPairs(s, dir)
-    val edges = mutualReachEdgesFrom(pairs, HdbMinSize)
-    val (mst, _) = boruvkaMst(ids, edges)
-    mst.write.mode("overwrite").parquet(out + "/mst.parquet")
-    // labels derive from the PERSISTED tree (read-back, not lineage):
-    // the two artifacts are definitionally views of one elected MST
-    singleLinkageLabels(s.read.parquet(out + "/mst.parquet"), HdbCuts)
-      .write.mode("overwrite").parquet(out + "/labels.parquet")
-    out
-  }
-
-  /** Pre-build (idempotent) the q360/q364 substrate — see
-    * [[warmDupMst]]. */
-  private[graft] def warmMrSlink(s: SparkSession, dir: String): Unit =
-    mrSlinkBase(s, dir)
-
-  private def mrSlinkBase(s: SparkSession, dir: String): String = {
-    val key = graft.core.Scratch.corpusKey(dir)
-    val cached = mrSlinkLabelCache.get(key)
-    if (cached != null) cached else {
-      val built = buildMrSlinkLabels(s, dir)
-      Option(mrSlinkLabelCache.putIfAbsent(key, built)).getOrElse(built)
-    }
-  }
-
-  /** The q360 substrate, cached per (JVM, corpus) under the same
-    * contract as [[epsSlinkLabels]]. */
-  private def mrSlinkLabels(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(mrSlinkBase(s, dir) + "/labels.parquet")
-
-  /** The mutual-reachability MST itself (`a`, `b`, `w` — the q364
-    * traversal substrate), from the same cached one-per-(JVM, corpus)
-    * build as [[mrSlinkLabels]]. */
-  private def mrMstEdges(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(mrSlinkBase(s, dir) + "/mst.parquet")
-
-  private val condTreeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Build the CONDENSED-TREE substrate for `dir`'s `variant` label
-    * scaffold UNCACHED (r18 — VERDICT r17 #1: the slink LABELS were
-    * cached but q358/q359/q362 each re-ran [[condensedTreeFromLabels]]
-    * over the SAME eps labels and q360 over the mr labels — a 4×
-    * rebuild of the one pass the substrate discipline missed, 42.5 s
-    * in the r17 driver record). One tree construction per (JVM,
-    * corpus, variant) persists every frame the readouts consume:
+  /** One condensed-tree construction over `slink`'s label scaffold,
+    * persisting every frame the readouts consume:
     *  - `cl` — condensed clusters (bj, bc, n_birth, stability, pbj,
-    *    pbc): q358/q360's join side;
+    *    pbc): the hdbscan readouts' join side;
     *  - `sel` — the excess-of-mass selection (bj, bc, selected);
     *  - `att` — per-point attachments (node, dp, bj, bc), `dm` —
     *    subtree-deepest levels, `sela` — selected ancestors: the
-    *    outlier/membership readout inputs. Both variants carry all
-    *    five since r18's q381/q382 (GLOSH + soft membership over the
-    *    mutual-reachability tree — the published form).
-    * All frames are exact integers on cluster-count-sized tables
-    * (att is point-count-sized — the one corpus-linear artifact), so
-    * the parquet round-trip is bit-exact and a cache race is only
-    * wasted work. */
-  private[graft] def buildCondTree(s: SparkSession, dir: String,
-      variant: String): String = {
-    val out = graft.core.Scratch.tempDir(s"graft-ctree-$variant")
-    val labels0 = variant match {
-      case "eps" => epsSlinkLabels(s, dir)
-      case "mr" => mrSlinkLabels(s, dir)
-      case other => sys.error(s"unknown condensed-tree variant '$other'")
-    }
+    *    outlier/membership readout inputs.
+    * All frames are exact integers (att is the one point-count-sized
+    * artifact), so the parquet round-trip is bit-exact. */
+  private def condensedTree(slink: Substrate)(s: SparkSession, dir: String,
+      out: String): Unit = {
     val k = HdbCuts.length
-    val (labels, cida, cl) = condensedTreeFromLabels(labels0, HdbCuts,
-      HdbLambdas, HdbMinSize, Materialize.local)
+    val (labels, cida, cl) = condensedTreeFromLabels(
+      slink.read(s, dir, "labels"), HdbCuts, HdbLambdas, HdbMinSize,
+      Materialize.local)
     cl.write.mode("overwrite").parquet(out + "/cl.parquet")
     // downstream frames derive from the PERSISTED cluster table
-    // (read-back, not lineage) — the artifacts are definitionally
-    // views of one tree, as [[buildMrSlinkLabels]]'s mst/labels pair
+    // (read-back, not lineage): the artifacts are views of one tree
     val clP = s.read.parquet(out + "/cl.parquet")
     val sel = selectionFrame(clP, k, Materialize.local)
     sel.write.mode("overwrite").parquet(out + "/sel.parquet")
@@ -1963,32 +1775,7 @@ object Components {
     selectedAncestors(s.read.parquet(out + "/sel.parquet"), clP, k,
         Materialize.local)
       .write.mode("overwrite").parquet(out + "/sela.parquet")
-    out
   }
-
-  /** Pre-build (idempotent) the condensed-tree substrate — see
-    * [[warmDupMst]]. */
-  private[graft] def warmCondTree(s: SparkSession, dir: String,
-      variant: String): Unit = {
-    condTreeBase(s, dir, variant); ()
-  }
-
-  private def condTreeBase(s: SparkSession, dir: String,
-      variant: String): String = {
-    val key = graft.core.Scratch.corpusKey(dir) + "#" + variant
-    val cached = condTreeCache.get(key)
-    if (cached != null) cached else {
-      val built = buildCondTree(s, dir, variant)
-      Option(condTreeCache.putIfAbsent(key, built)).getOrElse(built)
-    }
-  }
-
-  /** One artifact of the cached condensed-tree substrate — cache
-    * contract as [[dupMst]]: immutable corpus dirs for the JVM's
-    * lifetime, scratch deleted on exit, no build under the map lock. */
-  private def condTree(s: SparkSession, dir: String, variant: String,
-      artifact: String): DataFrame =
-    s.read.parquet(condTreeBase(s, dir, variant) + s"/$artifact.parquet")
 
   /** OPTICS ordering + per-point reachability over an MST forest (✚ —
     * Ankerst/Breunig/Kriegel/Sander 1999, via the MST form: with the
@@ -2619,7 +2406,8 @@ object Components {
              |       FROM lab GROUP BY canonical_id)
              |SELECT lab.doc_id, lab.canonical_id, cs.cluster_size
              |FROM lab JOIN cs USING (canonical_id)
-             |ORDER BY doc_id""".stripMargin)),
+             |ORDER BY doc_id""".stripMargin),
+      uses = Seq(DupPairs)),
 
     // Canonical representative per dup cluster — longest member wins,
     // doc_id breaks ties. Shares q74's reach/lab CTEs verbatim so the
@@ -2650,7 +2438,8 @@ object Components {
              |SELECT lab.doc_id, rep.rep_id, lab.doc_id = rep.rep_id AS is_rep,
              |       cs.cluster_size
              |FROM lab JOIN rep USING (canonical_id) JOIN cs USING (canonical_id)
-             |ORDER BY doc_id""".stripMargin)),
+             |ORDER BY doc_id""".stripMargin),
+      uses = Seq(DupPairs)),
 
     // Per-source survival under canonical-only dedup — same recursive
     // label chain as q74, aggregated to the curator's report.
@@ -2673,7 +2462,8 @@ object Components {
              |          / CAST(COUNT(*) AS DOUBLE), 6) AS survival_rate
              |FROM lab JOIN documents d USING (doc_id)
              |GROUP BY d.source
-             |ORDER BY source""".stripMargin)),
+             |ORDER BY source""".stripMargin),
+      uses = Seq(DupPairs)),
 
     // Document centrality within the near-dup graph — 5 power-iteration
     // rounds over the q51 verified pairs (the cached [[dupPairs]]
@@ -2685,7 +2475,8 @@ object Components {
           Tables.documents(s, d).select(col("doc_id").as("id")),
           dupPairs(s, d).select("id_a", "id_b"))
         .orderBy("doc_id"),
-      Some(prOracleSql(5)))
+      Some(prOracleSql(5)),
+      uses = Seq(DupPairs))
   ,
 
     // Jaccard-WEIGHTED centrality: a document's score splits over its
@@ -2709,7 +2500,8 @@ object Components {
           dupPairs(s, d).select("id_a", "id_b", "jaccard"),
           weightCol = Some("jaccard"))
         .orderBy("doc_id"),
-      Some(prOracleSql(5, weighted = true))),
+      Some(prOracleSql(5, weighted = true)),
+      uses = Seq(DupPairs)),
 
     // Communities over the near-dup graph: 4 sync LPA rounds with the
     // deterministic (max count, min label) tie order — all-integer, the
@@ -2719,7 +2511,8 @@ object Components {
       // — the LPA run itself is charged once per (JVM, corpus) in the
       // dup-pairs build, and q370/q371 consume the identical labels
       (s, d) => lpaCommunities(s, d).orderBy("doc_id"),
-      Some(lpaOracleSql(4))),
+      Some(lpaOracleSql(4)),
+      uses = Seq(DupPairs)),
 
     // Newman MODULARITY of the q112 communities (✚ — the standard
     // partition-quality readout: Q = Σ_c [e_c/m − (d_c/2m)²]; a
@@ -2762,7 +2555,8 @@ object Components {
              |  round(se / CAST(m AS DOUBLE)
              |    - sd2 / ((2.0 * CAST(m AS DOUBLE)) * (2.0 * CAST(m AS DOUBLE))), 6)
              |    AS modularity
-             |FROM per, mm, tot ORDER BY community""".stripMargin)),
+             |FROM per, mm, tot ORDER BY community""".stripMargin),
+      uses = Seq(DupPairs)),
 
     // Conductance of the q112 communities (✚ — q370's complementary
     // cut-quality readout: φ_c = cut(c) / min(vol(c), 2m − vol(c));
@@ -2799,7 +2593,8 @@ object Components {
              |    round(CAST(cut_edges AS DOUBLE)
              |      / CAST(LEAST(volume, 2 * m - volume) AS DOUBLE), 6)
              |  END AS phi
-             |FROM per, mm ORDER BY community""".stripMargin)),
+             |FROM per, mm ORDER BY community""".stripMargin),
+      uses = Seq(DupPairs)),
 
     // 3-truss of the near-dup graph (✚ — algorithm notes at
     // [[kTruss]]): edges in ≥ 1 triangle after peeling — the
@@ -2815,7 +2610,8 @@ object Components {
     // each round); rounds beyond convergence are no-ops.
     QueryDef("q372_ktruss",
       (s, d) => kTruss(dupPairs(s, d).select("id_a", "id_b"), k = 3),
-      Some(kTrussSql(3, 8))),
+      Some(kTrussSql(3, 8)),
+      uses = Seq(DupPairs)),
 
     // Cohesion audit of the near-dup graph: edge + triangle counts over
     // the SAME verified pairs as q51/q74/q90. Oracle: id-sorted edges,
@@ -2831,7 +2627,8 @@ object Components {
              |  (SELECT COUNT(*)
              |   FROM edges e1
              |   JOIN edges e2 ON e2.a = e1.b
-             |   JOIN edges e3 ON e3.a = e1.a AND e3.b = e2.b) AS n_triangles""".stripMargin)),
+             |   JOIN edges e3 ON e3.a = e1.a AND e3.b = e2.b) AS n_triangles""".stripMargin),
+      uses = Seq(DupPairs)),
 
     // Per-node clustering coefficient over the verified near-dup graph
     // — shares q98's edge CTE; the oracle enumerates each id-ordered
@@ -2858,7 +2655,8 @@ object Components {
              |         / CAST(d.dg * (d.dg - 1) AS DOUBLE)
              |    ELSE 0.0 END, 6) AS coeff
              |FROM deg d LEFT JOIN tri USING (id)
-             |ORDER BY id""".stripMargin)),
+             |ORDER BY id""".stripMargin),
+      uses = Seq(DupPairs)),
 
     // 2-core of the near-dup graph after 4 peel rounds (fixpoint at
     // gate scale — ComponentsSpec asserts round 5 changes nothing).
@@ -2884,7 +2682,8 @@ object Components {
            |$rounds
            |SELECT u AS id, CAST(COUNT(*) AS BIGINT) AS dg
            |FROM e4 GROUP BY u ORDER BY id""".stripMargin
-      }),
+      },
+      uses = Seq(DupPairs)),
 
     // Multi-source BFS hop distance (✚, the crawl-frontier / blast-
     // radius kernel: how many near-dup hops separate each document
@@ -2930,7 +2729,8 @@ object Components {
            |SELECT node AS doc_id,
            |  CASE WHEN dist >= 999 THEN -1 ELSE dist END AS hops
            |FROM d4 ORDER BY doc_id""".stripMargin
-      }),
+      },
+      uses = Seq(DupPairs)),
 
     // Per-seed eccentricity / diameter lower bound (✚, the graph-shape
     // audit q176's single frontier can't give: how DEEP are the near-dup
@@ -3002,7 +2802,8 @@ object Components {
            |  CAST(MAX(dist) AS BIGINT) AS ecc
            |FROM d4 WHERE dist < 999
            |GROUP BY seed ORDER BY seed_id""".stripMargin
-      }),
+      },
+      uses = Seq(DupPairs)),
 
     // Fuzzy entity resolution end-to-end (✚, the composition the JW
     // scorer exists FOR — q58/q214 emit pairs, a resolver needs
@@ -3126,7 +2927,8 @@ object Components {
            |${ts.zipWithIndex.map { case (t, i) => ctes(i, t) }.mkString(",\n")}
            |${ts.zipWithIndex.map { case (t, i) => arm(i, t) }.mkString("\nUNION ALL\n")}
            |ORDER BY threshold""".stripMargin
-      }),
+      },
+      uses = Seq(DupPairs)),
 
     // Degree assortativity of the near-dup graph (✚, the graph-SHAPE
     // number q129/q130's local metrics don't give: do high-degree
@@ -3193,7 +2995,8 @@ object Components {
              |     sqrt(CAST(m AS DOUBLE) * CAST(syy AS DOUBLE)
              |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
              |    AS assortativity
-             |FROM m""".stripMargin)),
+             |FROM m""".stripMargin),
+      uses = Seq(DupPairs)),
 
     // Bounded-hop cheapest path — Bellman–Ford, 4 synchronous
     // relaxation rounds (✚, the WEIGHTED upgrade of q176's BFS: "how
@@ -3360,7 +3163,8 @@ object Components {
            |SELECT node AS doc_id, ROUND(score, 6) AS score FROM p5
            |WHERE ROUND(score, 6) > 0.0
            |ORDER BY doc_id""".stripMargin
-      }),
+      },
+      uses = Seq(DupPairs)),
 
     // Grid-blocked DBSCAN (✚, density clustering — the family's gap:
     // q63/q193 partition space by LEARNED centroids, q74/q112 cluster
@@ -3448,8 +3252,8 @@ object Components {
     // where tie-broken trees differ.
     QueryDef("q348_mst_clusters",
       (s, d) => {
-        val (mst, labels) = dupMst(s, d)
-        mstForestStats(mst, labels).orderBy("root")
+        mstForestStats(DupMst.read(s, d, "mst"), DupMst.read(s, d, "labels"))
+          .orderBy("root")
       },
       Some(s"""WITH RECURSIVE ${Dedup.verifiedPairsCtes},
              |ed AS MATERIALIZED (
@@ -3478,7 +3282,8 @@ object Components {
              |  CAST(step - 1 AS BIGINT) AS n_edges, CAST(w AS DOUBLE) AS mst_w
              |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY root
              |        ORDER BY step DESC) AS rn FROM prim)
-             |WHERE rn = 1 ORDER BY root""".stripMargin)),
+             |WHERE rn = 1 ORDER BY root""".stripMargin),
+      uses = Seq(DupMst)),
 
     // Single-linkage dendrogram levels over the near-dup MST (✚, the
     // extraction step q348's scaffold was built FOR: HDBSCAN/SLINK-
@@ -3501,8 +3306,7 @@ object Components {
     // twin certifying the shortcut loses nothing.
     QueryDef("q353_dendrogram_cut",
       (s, d) => {
-        val (mst, _) = dupMst(s, d)
-        singleLinkageCuts(mst, Seq(0.02, 0.035, 0.2))
+        singleLinkageCuts(DupMst.read(s, d, "mst"), Seq(0.02, 0.035, 0.2))
       },
       Some(s"""WITH RECURSIVE ${Dedup.verifiedPairsCtes},
              |ed AS MATERIALIZED (
@@ -3530,7 +3334,8 @@ object Components {
              |  COALESCE(g.n_docs, 0) AS n_docs,
              |  COALESCE(g.max_size, 0) AS max_size
              |FROM cuts LEFT JOIN g USING (cut)
-             |ORDER BY cut""".stripMargin)),
+             |ORDER BY cut""".stripMargin),
+      uses = Seq(DupMst)),
 
     // HDBSCAN over the embeddings' 2-D density landscape (✚, VERDICT
     // r13 next-round #6 — the capstone the Borůvka→single-linkage
@@ -3559,9 +3364,10 @@ object Components {
       // readout of the cached condensed-tree substrate (r18 — VERDICT
       // r17 #1): one sel⋈cl join over the persisted tree; the build is
       // charged once as Bench's eps_tree line
-      (s, d) => hdbscanReadout(condTree(s, d, "eps", "sel"),
-        condTree(s, d, "eps", "cl"), HdbCuts),
-      Some(HdbscanSqlBase + "\n" + HdbscanSelectSql)),
+      (s, d) => hdbscanReadout(EpsTree.read(s, d, "sel"),
+        EpsTree.read(s, d, "cl"), HdbCuts),
+      Some(HdbscanSqlBase + "\n" + HdbscanSelectSql),
+      uses = Seq(EpsTree)),
 
     // HDBSCAN as PUBLISHED (✚, VERDICT r14 next-round #3): q358's
     // ladder runs single linkage over RAW ε-distances; the literature
@@ -3578,9 +3384,10 @@ object Components {
     // invariant on the mutual-reachability graph.
     QueryDef("q360_hdbscan_mreach",
       // readout of the cached mr condensed-tree substrate (r18)
-      (s, d) => hdbscanReadout(condTree(s, d, "mr", "sel"),
-        condTree(s, d, "mr", "cl"), HdbCuts),
-      Some(MreachSqlBase + "\n" + HdbscanSelectSql)),
+      (s, d) => hdbscanReadout(MrTree.read(s, d, "sel"),
+        MrTree.read(s, d, "cl"), HdbCuts),
+      Some(MreachSqlBase + "\n" + HdbscanSelectSql),
+      uses = Seq(MrTree)),
 
     // Soft cluster-membership probabilities (✚ — the fourth readout of
     // the shared ε-slink condensed tree, algorithm notes at
@@ -3595,12 +3402,13 @@ object Components {
     QueryDef("q362_soft_membership",
       // readout of the cached condensed-tree substrate (r18): the
       // att⋈sela⋈dm chain over persisted frames
-      (s, d) => softMembershipReadout(condTree(s, d, "eps", "att"),
-          condTree(s, d, "eps", "sela"), condTree(s, d, "eps", "dm"),
+      (s, d) => softMembershipReadout(EpsTree.read(s, d, "att"),
+          EpsTree.read(s, d, "sela"), EpsTree.read(s, d, "dm"),
           HdbLambdas)
         .withColumnRenamed("node", "vec_id")
         .orderBy("vec_id"),
-      Some(HdbscanSqlBase + "\n" + SoftMembershipTailSql)),
+      Some(HdbscanSqlBase + "\n" + SoftMembershipTailSql),
+      uses = Seq(EpsTree)),
 
     // GLOSH outlier scores over the SAME condensed tree as q358 (✚ —
     // the outlier-detection half of the HDBSCAN framework; algorithm
@@ -3616,11 +3424,12 @@ object Components {
     QueryDef("q359_glosh_outliers",
       // readout of the cached condensed-tree substrate (r18): one
       // att⋈dm join over persisted frames
-      (s, d) => gloshReadout(condTree(s, d, "eps", "att"),
-          condTree(s, d, "eps", "dm"), HdbLambdas)
+      (s, d) => gloshReadout(EpsTree.read(s, d, "att"),
+          EpsTree.read(s, d, "dm"), HdbLambdas)
         .withColumnRenamed("node", "vec_id")
         .orderBy("vec_id"),
-      Some(HdbscanSqlBase + "\n" + GloshSelectSql)),
+      Some(HdbscanSqlBase + "\n" + GloshSelectSql),
+      uses = Seq(EpsTree)),
 
     // GLOSH over the MUTUAL-REACHABILITY condensed tree (✚, r18 —
     // Campello et al. define GLOSH over exactly this hierarchy; q359
@@ -3633,23 +3442,25 @@ object Components {
     // VERBATIM q359 attachment/score chain, so the two GLOSH gates
     // cannot disagree on anything but the metric.
     QueryDef("q381_glosh_mreach",
-      (s, d) => gloshReadout(condTree(s, d, "mr", "att"),
-          condTree(s, d, "mr", "dm"), HdbLambdas)
+      (s, d) => gloshReadout(MrTree.read(s, d, "att"),
+          MrTree.read(s, d, "dm"), HdbLambdas)
         .withColumnRenamed("node", "vec_id")
         .orderBy("vec_id"),
-      Some(MreachSqlBase + "\n" + GloshSelectSql)),
+      Some(MreachSqlBase + "\n" + GloshSelectSql),
+      uses = Seq(MrTree)),
 
     // Soft memberships over the MUTUAL-REACHABILITY condensed tree
     // (✚, r18 — the probabilities_ readout of HDBSCAN as published,
     // q362's metric sibling): att⋈sela⋈dm over the cached mr tree;
     // oracle = the metric base swap under q362's verbatim tail.
     QueryDef("q382_soft_membership_mreach",
-      (s, d) => softMembershipReadout(condTree(s, d, "mr", "att"),
-          condTree(s, d, "mr", "sela"), condTree(s, d, "mr", "dm"),
+      (s, d) => softMembershipReadout(MrTree.read(s, d, "att"),
+          MrTree.read(s, d, "sela"), MrTree.read(s, d, "dm"),
           HdbLambdas)
         .withColumnRenamed("node", "vec_id")
         .orderBy("vec_id"),
-      Some(MreachSqlBase + "\n" + SoftMembershipTailSql)),
+      Some(MreachSqlBase + "\n" + SoftMembershipTailSql),
+      uses = Seq(MrTree)),
 
     // Cophenetic fidelity of the ε-slink dendrogram (✚ — algorithm
     // notes at [[copheneticReport]]): the FIFTH readout of the shared
@@ -3665,9 +3476,10 @@ object Components {
           element_at(col("embedding"), 2).cast("double").as("y"))
         val pairs = gridEpsPairs(pts, eps = 0.05, eps2 = 0.0025)
           .where(col("ia") < col("ib"))
-        copheneticReport(epsSlinkLabels(s, d), pairs, HdbCuts)
+        copheneticReport(EpsSlink.read(s, d, "labels"), pairs, HdbCuts)
       },
-      Some(CophOracleSql)),
+      Some(CophOracleSql),
+      uses = Seq(EpsSlink)),
 
     // OPTICS ordering + reachability over the mutual-reachability MST
     // (✚ — algorithm notes at [[opticsOrder]]): the ordering readout of
@@ -3686,12 +3498,13 @@ object Components {
         // (every mreach tree edge is ≤ the top cut by construction,
         // so level-3 connectivity IS tree connectivity) — the gate
         // spends its rounds on the list ranking, not a CC rerun
-        val comps = mrSlinkLabels(s, d)
+        val comps = MrSlink.read(s, d, "labels")
           .select(col("node"), col("l3").as("lbl"))
-        opticsOrder(mrMstEdges(s, d), compLabels = Some(comps))
+        opticsOrder(MrSlink.read(s, d, "mst"), compLabels = Some(comps))
           .orderBy("comp", "pos")
       },
-      Some(opticsOracleSql(10))),
+      Some(opticsOracleSql(10)),
+      uses = Seq(MrSlink)),
 
     // Flat DBSCAN-equivalent clusters extracted from q364's
     // reachability plot at the mid-ladder ε′ (✚ — algorithm notes at
@@ -3703,10 +3516,10 @@ object Components {
     // applies the same segmentation SQL.
     QueryDef("q373_optics_clusters",
       (s, d) => {
-        val comps = mrSlinkLabels(s, d)
+        val comps = MrSlink.read(s, d, "labels")
           .select(col("node"), col("l3").as("lbl"))
         opticsExtractClusters(
-          opticsOrder(mrMstEdges(s, d), compLabels = Some(comps)),
+          opticsOrder(MrSlink.read(s, d, "mst"), compLabels = Some(comps)),
           eps = 0.0016, minSize = HdbMinSize)
       },
       Some(opticsPlotCtes(10) + ",\n" +
@@ -3723,7 +3536,8 @@ object Components {
              |  CASE WHEN z.n >= $HdbMinSize THEN z.cid END AS cluster_id,
              |  CASE WHEN z.n >= $HdbMinSize THEN z.n END AS cluster_size
              |FROM seg s JOIN szs z ON z.comp = s.comp AND z.seg = s.seg
-             |ORDER BY vec_id""".stripMargin))
+             |ORDER BY vec_id""".stripMargin),
+      uses = Seq(MrSlink))
   )
 
   /** Per-point attachment + bottom-up subtree-deepest-level CTEs

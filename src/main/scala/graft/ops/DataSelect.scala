@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Materialize, QueryDef, Tables}
+import graft.core.Substrate
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1006,11 +1007,12 @@ object DataSelect {
     // join, the exact-decimal reverse cumulative sum — over the same
     // rounded distances.
     QueryDef("q376_knn_shapley",
-      // readout of the cached [[shapleyValues]] substrate (r17: q379
+      // readout of the cached [[Shapley]] substrate (r17: q379
       // composes the same valuation into selection — one pair/rank/
       // recursion pass per (JVM, corpus) feeds both gates)
-      (s, d) => shapleyValues(s, d).orderBy("vec_id"),
-      Some(knnShapleySql(5, 32))),
+      (s, d) => Shapley.read(s, d, "shapley").orderBy("vec_id"),
+      Some(knnShapleySql(5, 32)),
+      uses = Seq(Shapley)),
 
     // Valuation composed into selection (✚ — VERDICT r16 #5: q376
     // values each training doc against the eval sample, q121 selects a
@@ -1023,7 +1025,7 @@ object DataSelect {
     // cumulative value as an exact DECIMAL running sum.
     QueryDef("q379_value_select",
       (s, d) => shapleyBudgetSelectFrom(Tables.documents(s, d),
-        shapleyValues(s, d)),
+        Shapley.read(s, d, "shapley")),
       Some(knnShapleyCtes(5, 32) +
         """,
           |sv AS (SELECT c.t_id AS vec_id,
@@ -1043,8 +1045,8 @@ object DataSelect {
           |       FROM sz)
           |SELECT doc_id, n_tok, shapley, CAST(cum AS BIGINT) AS cum_tok,
           |  CAST(cumv AS DOUBLE) AS cum_value
-          |FROM cw WHERE cum <= 20000 ORDER BY doc_id""".stripMargin)
-  ))
+          |FROM cw WHERE cum <= 20000 ORDER BY doc_id""".stripMargin),
+      uses = Seq(Shapley)))
 
   /** Token-budget selection ranked by KNN-Shapley value (q379's engine
     * — [[knnShapley]] composed into q121's greedy budget selector):
@@ -1067,7 +1069,7 @@ object DataSelect {
       knnShapley(embs, k, nQueries, materialize), budget, materialize)
 
   /** [[shapleyBudgetSelect]] over an ALREADY-COMPUTED valuation frame
-    * — the readout half, split out so the cached [[shapleyValues]]
+    * — the readout half, split out so the cached [[Shapley]]
     * substrate can feed both q376 and q379 from one build. */
   private[ops] def shapleyBudgetSelectFrom(docs: DataFrame,
       values: DataFrame, budget: Long = 20000L,
@@ -1493,43 +1495,15 @@ object DataSelect {
       .orderBy("vec_id")
   }
 
-  private val shapleyCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Build the KNN-SHAPLEY valuation substrate for `dir` UNCACHED into
-    * fresh scratch parquet (r17): q376 reports the values, q379 ranks
-    * the budget selection by them — one pair/rank/recursion pass per
-    * (JVM, corpus) feeds both, charged once in bench with a cold/cold
-    * law, the contract of every other substrate. Deterministic: ranks
-    * come from the global order index over rounded distances and the
-    * recursion is exact DECIMAL. */
-  private[graft] def buildShapley(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val out = graft.core.Scratch.tempDir("graft-shapley")
+  /** The KNN-Shapley valuation, persisted as `shapley` (vec_id,
+    * n_queries, shapley): q376 reports the values and q379 ranks its
+    * budget selection by them, so one pair/rank/recursion pass feeds
+    * both. Deterministic: ranks come from the global order index over
+    * rounded distances and the recursion is exact DECIMAL. */
+  lazy val Shapley: Substrate = Substrate("shapley") { (s, dir, out) =>
     knnShapley(Tables.embeddings(s, dir))
       .write.mode("overwrite").parquet(out + "/shapley.parquet")
-    out
   }
-
-  /** Pre-build (idempotent) the q376/q379 substrate. */
-  private[graft] def warmShapley(s: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = { shapleyBase(s, dir); () }
-
-  private def shapleyBase(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val key = graft.core.Scratch.corpusKey(dir)
-    val cached = shapleyCache.get(key)
-    if (cached != null) cached else {
-      val built = buildShapley(s, dir)
-      Option(shapleyCache.putIfAbsent(key, built)).getOrElse(built)
-    }
-  }
-
-  /** The cached per-training-point valuation frame (vec_id, n_queries,
-    * shapley) — cache contract as the other substrates. */
-  private def shapleyValues(s: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    s.read.parquet(shapleyBase(s, dir) + "/shapley.parquet")
 
   /** q376's oracle: the identical construction with plain windows —
     * per-query ROW_NUMBER ranks over the same rounded distances, lead

@@ -543,7 +543,8 @@ object Dedup {
              |FROM vp JOIN ds a ON a.doc_id = vp.id_a
              |        JOIN ds b ON b.doc_id = vp.id_b
              |GROUP BY 1, 2
-             |ORDER BY source_a, source_b""".stripMargin)),
+             |ORDER BY source_a, source_b""".stripMargin),
+      uses = Seq(Components.DupPairs)),
 
     // SimHash sketches (32-bit majority-vote fingerprint over shingles).
     QueryDef("q28_simhash", (s, d) => simhashSpark(s, d).orderBy("doc_id"),

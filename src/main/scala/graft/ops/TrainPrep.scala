@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Materialize, QueryDef, Tables}
+import graft.core.Substrate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -705,48 +706,14 @@ object TrainPrep {
       .orderBy(col("n_docs").desc, col("h"))
   }
 
-  private val spanRmCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Build the span-removal REWRITE substrate for `dir` UNCACHED
-    * (r18 — VERDICT r17 #4): q378 reports the rewrite and q380 packs
-    * it, and each gate was re-running the full [[removeCrossDocSpans]]
-    * prefix. One rewrite per (JVM, corpus) persists the output frame
-    * and both gates become readouts — the q376/q379 shapley pattern.
-    * Deterministic: keep-first is a total order on (doc_id, pos) and
-    * the rebuild an ordered listagg, so the parquet round-trip is
-    * exact and a cache race is only wasted work. */
-  private[graft] def buildSpanRemoval(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val out = graft.core.Scratch.tempDir("graft-spanrm") + "/rewrite.parquet"
+  /** The span-removal rewrite, persisted as `rewrite`: q378 reports it
+    * and q380 packs it, so [[removeCrossDocSpans]] runs once per (JVM,
+    * corpus) instead of once per gate. Deterministic: keep-first is a
+    * total order on (doc_id, pos) and the rebuild an ordered listagg. */
+  lazy val SpanRm: Substrate = Substrate("span_rm") { (s, dir, out) =>
     removeCrossDocSpans(Tables.documents(s, dir))
-      .write.mode("overwrite").parquet(out)
-    out
+      .write.mode("overwrite").parquet(out + "/rewrite.parquet")
   }
-
-  /** Pre-build (idempotent) the q378/q380 substrate — Bench's
-    * `span_rm` line. */
-  private[graft] def warmSpanRemoval(s: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    spanRemovalBase(s, dir); ()
-  }
-
-  private def spanRemovalBase(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val key = graft.core.Scratch.corpusKey(dir)
-    val cached = spanRmCache.get(key)
-    if (cached != null) cached else {
-      val built = buildSpanRemoval(s, dir)
-      Option(spanRmCache.putIfAbsent(key, built)).getOrElse(built)
-    }
-  }
-
-  /** The cached span-removal rewrite — cache contract as the
-    * Components substrates: corpus dirs immutable per JVM, scratch
-    * deleted on exit, no build under the map lock. */
-  private def spanRemoval(s: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    s.read.parquet(spanRemovalBase(s, dir))
 
   /** The q378 rule in DuckDB, as a CTE chain through `ke` (kept
     * tokens) — shared by q378's rebuild oracle and q380's composition
@@ -1260,7 +1227,7 @@ object TrainPrep {
       // readout of the cached rewrite substrate (r18 — VERDICT r17
       // #4): the build is charged once as Bench's span_rm line and
       // q380 packs the same frame
-      (s, d) => spanRemoval(s, d).orderBy("doc_id"),
+      (s, d) => SpanRm.read(s, d, "rewrite").orderBy("doc_id"),
       Some(spanRemovalCtes + """
              |SELECT t.doc_id,
              |  CAST(len(t.w) AS BIGINT) AS n_tok,
@@ -1272,7 +1239,8 @@ object TrainPrep {
              |  USING (doc_id)
              |LEFT JOIN (SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS txt
              |           FROM ke GROUP BY 1) k USING (doc_id)
-             |ORDER BY doc_id""".stripMargin)),
+             |ORDER BY doc_id""".stripMargin),
+      uses = Seq(SpanRm)),
 
     // The REWRITE composed downstream (✚ — the q89 composition shape
     // for the r17 removal family): span-removal dedup → fully-cut docs
@@ -1286,7 +1254,7 @@ object TrainPrep {
         val docs = Tables.documents(s, d)
         // the same cached rewrite q378 reports (r18): this gate
         // measures the packing composition, not a substrate rebuild
-        val rewritten = spanRemoval(s, d)
+        val rewritten = SpanRm.read(s, d, "rewrite")
           .where(col("n_kept") > 0)
           .select(col("doc_id"), col("text_dedup").as("text"))
         packSequences(rewritten.join(docs.select("doc_id", "source"),
@@ -1309,7 +1277,8 @@ object TrainPrep {
              |SELECT source, COUNT(*) AS n_docs,
              |  CAST(MAX(begin_tok // 256) + 1 AS BIGINT) AS n_seqs,
              |  CAST(SUM(n_tok) AS BIGINT) AS n_toks
-             |FROM p GROUP BY source ORDER BY source""".stripMargin)),
+             |FROM p GROUP BY source ORDER BY source""".stripMargin),
+      uses = Seq(SpanRm)),
 
     // Token-level SUFFIX ARRAYS by distributed prefix doubling (✚ —
     // algorithm notes at [[suffixArrays]]): the data structure the
@@ -1320,7 +1289,7 @@ object TrainPrep {
     // as a token LIST and lets lexicographic list ordering rank it —
     // a direct O(n²·L) re-derivation against the O(n log n) doubling.
     QueryDef("q366_suffix_array",
-      // readout of the cached [[perDocSa]] substrate (r17: one per-doc
+      // readout of the cached [[PerDocSa]] substrate (r17: one per-doc
       // ladder build per JVM/corpus, charged once in bench; q367 reads
       // the same)
       (s, d) => perDocSa(s, d)._1.withColumnRenamed("r", "sa_rank")
@@ -1334,7 +1303,8 @@ object TrainPrep {
              |SELECT doc_id, off,
              |  CAST(ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY suf)
              |    AS BIGINT) AS sa_rank
-             |FROM s ORDER BY doc_id, off""".stripMargin)),
+             |FROM s ORDER BY doc_id, off""".stripMargin),
+      uses = Seq(PerDocSa)),
 
     // Longest repeated substring per document (✚ — algorithm notes at
     // [[longestRepeats]]): the SA-adjacent-LCP theorem over q366's
@@ -1378,7 +1348,8 @@ object TrainPrep {
              |  CAST(COALESCE(arg.lrs_len, 0) AS BIGINT) AS lrs_len,
              |  arg.o1 AS off_a, arg.o2 AS off_b
              |FROM documents d LEFT JOIN arg ON arg.doc_id = d.doc_id
-             |ORDER BY d.doc_id""".stripMargin)),
+             |ORDER BY d.doc_id""".stripMargin),
+      uses = Seq(PerDocSa)),
 
     // The longest CROSS-DOCUMENT repeated token span, exact at any
     // length (✚ — algorithm notes at [[crossDocRepeat]]: the global-
@@ -1389,9 +1360,9 @@ object TrainPrep {
     // the O(Σ L²)-class check against the O(n log L) ladder — then the
     // identical (len desc, pair asc) argmax.
     QueryDef("q374_cross_doc_repeat",
-      // readout of the cached [[globalSa]] substrate (one ladder build
+      // readout of the cached [[GlobalSa]] substrate (one ladder build
       // per JVM/corpus, charged once in bench; q375 reads the same)
-      (s, d) => crossDocRepeatFromAdj(globalSaAdj(s, d)._2),
+      (s, d) => crossDocRepeatFromAdj(GlobalSa.read(s, d, "adj")),
       Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w
              |          FROM documents),
              |i AS (SELECT doc_id, unnest(range(1, len(w) + 1)) AS i FROM t),
@@ -1412,7 +1383,8 @@ object TrainPrep {
              |SELECT CAST(c.lcp AS BIGINT) AS repeat_len,
              |  da AS doc_a, oa AS off_a, db AS doc_b, ob AS off_b
              |FROM c, mx WHERE c.lcp = mx.m
-             |ORDER BY doc_a, off_a, doc_b, off_b LIMIT 1""".stripMargin)),
+             |ORDER BY doc_a, off_a, doc_b, off_b LIMIT 1""".stripMargin),
+      uses = Seq(GlobalSa)),
 
     // Per-document cross-doc match statistics (✚ — algorithm notes at
     // [[crossDocCoverage]]: q374 quantified per document — max shared
@@ -1421,8 +1393,8 @@ object TrainPrep {
     // by direct token comparison, then the identical run/running-min
     // construction in window SQL.
     QueryDef("q375_cross_doc_coverage",
-      (s, d) => { val (idx, adj) = globalSaAdj(s, d)
-        crossDocCoverageFromAdj(idx, adj, 50, Materialize.local) },
+      (s, d) => crossDocCoverageFromAdj(GlobalSa.read(s, d, "idx"),
+        GlobalSa.read(s, d, "adj"), 50, Materialize.local),
       Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w
              |          FROM documents),
              |ix AS (SELECT doc_id, unnest(range(1, len(w) + 1)) AS i FROM t),
@@ -1465,7 +1437,8 @@ object TrainPrep {
              |    AS BIGINT) AS max_cross_lcp,
              |  CAST(SUM(CASE WHEN cdv >= 50 THEN 1 ELSE 0 END) AS BIGINT)
              |    AS n_starts_ge_min
-             |FROM cd GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+             |FROM cd GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+      uses = Seq(GlobalSa)),
 
     // Eval-set contamination spans (✚ — algorithm notes at
     // [[contaminationFrom]]: q375's matching statistics with the eval
@@ -1475,9 +1448,9 @@ object TrainPrep {
     // forward running count of eval rows, the identical nulled-entry /
     // reverse-min window construction.
     QueryDef("q377_contamination_spans",
-      (s, d) => { val (idx, adj) = globalSaAdj(s, d)
-        contaminationFromAdj(idx, adj, evalMod = 41L, minLen = 20,
-          Materialize.local) },
+      (s, d) => contaminationFromAdj(GlobalSa.read(s, d, "idx"),
+        GlobalSa.read(s, d, "adj"), evalMod = 41L, minLen = 20,
+        Materialize.local),
       Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w
              |          FROM documents),
              |ix AS (SELECT doc_id, unnest(range(1, len(w) + 1)) AS i FROM t),
@@ -1521,7 +1494,8 @@ object TrainPrep {
              |    AS BIGINT) AS max_eval_lcp,
              |  CAST(SUM(CASE WHEN cdv >= 20 THEN 1 ELSE 0 END) AS BIGINT)
              |    AS n_starts_ge_min
-             |FROM cd GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+             |FROM cd GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+      uses = Seq(GlobalSa)),
 
     // Weighted sample without replacement, k=100 biased by n_chars —
     // the A-ES key ranking with the md5-slice uniform; oracle derives
@@ -1661,7 +1635,8 @@ object TrainPrep {
              |SELECT split, n_clusters, n_docs, n_chars, leak_docs_cluster,
              |  n_docs_naive, leak_docs_naive
              |FROM ac FULL OUTER JOIN an USING (split)
-             |ORDER BY split""".stripMargin)),
+             |ORDER BY split""".stripMargin),
+      uses = Seq(Components.DupPairs)),
 
     // Per-source nucleus (top-p) selection (✚, the within-domain twin
     // of q121's global token budget: inside each source, keep the
@@ -1999,7 +1974,7 @@ object TrainPrep {
   }
 
   /** [[longestRepeats]] over an ALREADY-BUILT rank ladder — the
-    * readout half, split out so the cached [[perDocSa]] substrate can
+    * readout half, split out so the cached [[PerDocSa]] substrate can
     * feed it (r17: q366 and q367 each rebuilt the same per-doc ladder,
     * the last un-shared substrate in the suffix family). */
   private[ops] def longestRepeatsFrom(docs: DataFrame, sa: DataFrame,
@@ -2042,55 +2017,25 @@ object TrainPrep {
         col("off_a"), col("off_b"))
   }
 
-  private val perDocSaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Build the PER-DOCUMENT rank-ladder substrate for `dir` UNCACHED
-    * into fresh scratch parquet (r17 — VERDICT r16 #2): q366 and q367
-    * each ran [[saWithTables]] over the same corpus, rebuilding the
-    * identical per-doc prefix-doubling ladder per gate. One build per
-    * (JVM, corpus), charged once in bench's `substrates` section with
-    * its own cold/cold law — the exact contract of [[buildGlobalSa]].
-    * Persists the final rank frame plus every rung (the LCP jump in
-    * [[longestRepeatsFrom]] needs them all). */
-  private[graft] def buildPerDocSa(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val out = graft.core.Scratch.tempDir("graft-pdsa")
+  /** The per-document rank ladder that q366 and q367 both read: the
+    * final rank frame `sa` plus every prefix-doubling rung `tab_<w>`
+    * (the LCP jump in [[longestRepeatsFrom]] needs them all). */
+  lazy val PerDocSa: Substrate = Substrate("per_doc_sa") { (s, dir, out) =>
     val (sa, tables, _) = saWithTables(Tables.documents(s, dir),
       earlyExit = true, Materialize.local)
     sa.write.mode("overwrite").parquet(out + "/sa.parquet")
     tables.foreach { case (w, t) =>
       t.write.mode("overwrite").parquet(out + s"/tab_$w.parquet") }
-    java.nio.file.Files.write(java.nio.file.Paths.get(out, "widths.txt"),
-      tables.map(_._1).mkString(",").getBytes("UTF-8"))
-    out
   }
 
-  /** Pre-build (idempotent) the q366/q367 substrate. */
-  private[graft] def warmPerDocSa(s: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = { perDocSaBase(s, dir); () }
-
-  private def perDocSaBase(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val key = graft.core.Scratch.corpusKey(dir)
-    val cached = perDocSaCache.get(key)
-    if (cached != null) cached else {
-      val built = buildPerDocSa(s, dir)
-      Option(perDocSaCache.putIfAbsent(key, built)).getOrElse(built)
-    }
-  }
-
-  /** The cached per-doc rank ladder (cache contract as [[globalSa]]:
-    * corpus dirs immutable per JVM, scratch deleted on exit, no build
-    * under the map lock). */
+  /** The cached per-doc rank ladder: (rank frame, rungs by width). */
   private[graft] def perDocSa(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, Seq[(Long, DataFrame)]) = {
-    val base = perDocSaBase(s, dir)
-    val widths = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(base, "widths.txt")), "UTF-8")
-      .split(",").map(_.toLong).toSeq
-    (s.read.parquet(base + "/sa.parquet"),
-      widths.map(w => w -> s.read.parquet(base + s"/tab_$w.parquet")))
+    val widths = Substrate.artifacts(PerDocSa.root(s, dir))
+      .collect { case a if a.startsWith("tab_") => a.stripPrefix("tab_").toLong }
+      .sorted
+    (PerDocSa.read(s, dir, "sa"),
+      widths.map(w => w -> PerDocSa.read(s, dir, s"tab_$w")))
   }
 
   /** Distributed DENSE RANK of the whole frame by `keys` — the
@@ -2179,7 +2124,7 @@ object TrainPrep {
     * identical suffixes), slen the suffix length — plus every genuine
     * capped-width rank table for the LCP jump. */
   /** Test hook: the ladder on an arbitrary frame (specs hand-build
-    * corpora that exist in no corpus dir, so the [[globalSa]] cache
+    * corpora that exist in no corpus dir, so the [[GlobalSa]] cache
     * does not apply). */
   private[ops] def globalSaLadderForTest(docs: DataFrame)
       : (DataFrame, Seq[(Long, DataFrame)]) =
@@ -2274,33 +2219,19 @@ object TrainPrep {
       col("lcp"))
   }
 
-  private val globalSaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Build the GLOBAL-SUFFIX-ORDER substrate for `dir` UNCACHED into
-    * fresh scratch parquet — the rank frame plus every jump rung —
-    * returning the scratch root. q374 and q375 read the SAME ladder
-    * (each used to build its own: 2 × ~14 s of identical work per
-    * suite run); the build is charged once in the bench `substrates`
-    * section with its own cold/cold law, the same contract as
-    * [[graft.ops.Components]]'s dup-pairs/MST/slink substrates.
-    * Deterministic: ranks are a pure function of the corpus (the
-    * distributed dense rank is boundary-placement-independent). */
-  private[graft] def buildGlobalSa(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val out = graft.core.Scratch.tempDir("graft-gsa")
+  /** The corpus-global suffix order that q374/q375/q377 read: the rank
+    * frame `sa` and every jump rung `tab_<w>`, plus the indexed order
+    * `idx` and adjacent-LCP walk `adj` derived from the PERSISTED ladder
+    * (read-back, not lineage: all artifacts are views of one build).
+    * The gates read only idx/adj. Deterministic: ranks are a pure
+    * function of the corpus (the distributed dense rank is
+    * boundary-placement-independent). */
+  lazy val GlobalSa: Substrate = Substrate("global_sa") { (s, dir, out) =>
     val (sa, tables) = globalSaLadder(Tables.documents(s, dir),
       Materialize.local)
     sa.write.mode("overwrite").parquet(out + "/sa.parquet")
     tables.foreach { case (w, t) =>
       t.write.mode("overwrite").parquet(out + s"/tab_$w.parquet") }
-    java.nio.file.Files.write(java.nio.file.Paths.get(out, "widths.txt"),
-      tables.map(_._1).mkString(",").getBytes("UTF-8"))
-    // the indexed order + adjacent-LCP walk is the build's THIRD
-    // artifact (r17): q374/q375/q377 each re-ran the identical full
-    // walk per gate; it now runs once here, derived from the PERSISTED
-    // ladder (read-back, not lineage — all artifacts are views of one
-    // build) and charged to the substrate line
     val persisted = s.read.parquet(out + "/sa.parquet")
     val pTables = tables.map { case (w, _) =>
       w -> s.read.parquet(out + s"/tab_$w.parquet") }
@@ -2308,35 +2239,6 @@ object TrainPrep {
       Materialize.local)
     idx.write.mode("overwrite").parquet(out + "/idx.parquet")
     adj.write.mode("overwrite").parquet(out + "/adj.parquet")
-    out
-  }
-
-  /** Pre-build (idempotent) the q374/q375 substrate. */
-  private[graft] def warmGlobalSa(s: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = { globalSaBase(s, dir); () }
-
-  private def globalSaBase(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val key = graft.core.Scratch.corpusKey(dir)
-    val cached = globalSaCache.get(key)
-    if (cached != null) cached else {
-      val built = buildGlobalSa(s, dir)
-      Option(globalSaCache.putIfAbsent(key, built)).getOrElse(built)
-    }
-  }
-
-  /** The cached indexed order + adjacent-LCP frame — the substrate
-    * artifact every q374/q375/q377 readout consumes (r17; the raw
-    * sa/rung artifacts stay on disk for inspection and the widths file
-    * documents the kept rungs, but no gate reads them back anymore —
-    * the one full walk happens inside [[buildGlobalSa]]). Cache
-    * contract as the Components substrates: corpus dirs immutable per
-    * JVM, scratch deleted on exit, no build under the map lock. */
-  private def globalSaAdj(s: org.apache.spark.sql.SparkSession,
-      dir: String): (DataFrame, DataFrame) = {
-    val base = globalSaBase(s, dir)
-    (s.read.parquet(base + "/idx.parquet"),
-      s.read.parquet(base + "/adj.parquet"))
   }
 
   def crossDocRepeat(docs: DataFrame,

@@ -39,7 +39,7 @@ object SubstrateProbe {
     // level-encoded single-linkage label pass) for job attribution
     def slinkSplit(): Unit = {
       import org.apache.spark.sql.functions.col
-      val base = graft.ops.Components.buildEpsPairs(spark, sfDir)
+      val base = graft.ops.Components.EpsPairs.buildCold(spark, sfDir)
       val ids = spark.read.parquet(base + "/ids.parquet")
       val pairs = spark.read.parquet(base + "/pairs.parquet")
       val edges = pairs.where(col("ia") < col("ib"))
@@ -54,15 +54,10 @@ object SubstrateProbe {
       println(f"SPLIT boruvka wall=${(t1 - t0) / 1e9}%7.2fs jobs=${j1 - j0}%4d")
       println(f"SPLIT sl_labels wall=${(t2 - t1) / 1e9}%7.2fs jobs=${j2 - j1}%4d")
     }
-    val phases: Seq[(String, () => Unit)] = Seq(
-      ("slink_split", () => slinkSplit()),
-      ("eps_pairs", () => graft.ops.Components.warmEpsPairs(spark, sfDir)),
-      ("eps_slink", () => graft.ops.Components.warmEpsSlink(spark, sfDir)),
-      ("eps_tree", () => graft.ops.Components.warmCondTree(spark, sfDir, "eps")),
-      ("mr_slink", () => graft.ops.Components.warmMrSlink(spark, sfDir)),
-      ("mr_tree", () => graft.ops.Components.warmCondTree(spark, sfDir, "mr")),
-      ("global_sa", () => graft.ops.TrainPrep.warmGlobalSa(spark, sfDir)),
-      ("per_doc_sa", () => graft.ops.TrainPrep.warmPerDocSa(spark, sfDir)))
+    val phases: Seq[(String, () => Unit)] =
+      ("slink_split", () => slinkSplit()) +:
+        graft.core.Substrate.all.map(sub =>
+          (sub.name, () => { sub.root(spark, sfDir); () }))
     val sel = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     phases.filter(p => sel.forall(_.contains(p._1))).foreach { case (name, run) =>

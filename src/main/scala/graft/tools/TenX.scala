@@ -1,15 +1,15 @@
 package graft.tools
 
 import graft.{ScaleGen, Sessions, SparkEntry}
-import org.apache.spark.sql.SparkSession
+import graft.core.Substrate
 
 /** The SCALE.md 10× study as a reusable main: generates (or reuses via
   * SPARK_GRAFT_TENX_DIR) a deterministic ×10 ScaleGen replica of the
-  * base corpus, pre-warms the shared substrates on BOTH fixtures for
-  * substrate-backed gates (the ScaleLawSpec warm/warm convention —
-  * each gate meters its own readout; the builds are timed separately
-  * where they first run), and prints min-of-2 warm wall seconds per
-  * gate per fixture plus the ratio.
+  * base corpus, pre-builds each gate's declared substrates on BOTH
+  * fixtures (the ScaleLawSpec warm/warm convention — each gate meters
+  * its own readout; the builds are timed separately where they first
+  * run), and prints min-of-2 warm wall seconds per gate per fixture
+  * plus the ratio.
   *
   *   java -cp ... graft.tools.TenX q363_cophenetic q364_optics_order
   *
@@ -17,41 +17,6 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_CPUS, SPARK_GRAFT_TENX_DIR (reuse a generated replica),
   * SPARK_GRAFT_TENX_REPS (default 10). */
 object TenX {
-  private val warmers: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    ("q348", graft.ops.Components.warmDupMst _),
-    ("q353", graft.ops.Components.warmDupMst _),
-    ("q358", graft.ops.Components.warmEpsSlink _),
-    ("q359", graft.ops.Components.warmEpsSlink _),
-    ("q362", graft.ops.Components.warmEpsSlink _),
-    ("q363", graft.ops.Components.warmEpsSlink _),
-    ("q360", graft.ops.Components.warmMrSlink _),
-    ("q364", graft.ops.Components.warmMrSlink _),
-    ("q373", graft.ops.Components.warmMrSlink _),
-    // the r16 dup-pairs substrate feeds the whole graph-gate family
-    ("q74", graft.ops.Components.warmDupPairs _),
-    ("q84", graft.ops.Components.warmDupPairs _),
-    ("q85", graft.ops.Components.warmDupPairs _),
-    ("q90", graft.ops.Components.warmDupPairs _),
-    ("q98", graft.ops.Components.warmDupPairs _),
-    ("q111", graft.ops.Components.warmDupPairs _),
-    ("q112", graft.ops.Components.warmDupPairs _),
-    ("q119", graft.ops.Components.warmDupPairs _),
-    ("q129", graft.ops.Components.warmDupPairs _),
-    ("q130", graft.ops.Components.warmDupPairs _),
-    ("q147", graft.ops.Components.warmDupPairs _),
-    ("q176", graft.ops.Components.warmDupPairs _),
-    ("q209", graft.ops.Components.warmDupPairs _),
-    ("q259", graft.ops.Components.warmDupPairs _),
-    ("q266", graft.ops.Components.warmDupPairs _),
-    ("q313", graft.ops.Components.warmDupPairs _),
-    ("q370", graft.ops.Components.warmDupPairs _),
-    ("q371", graft.ops.Components.warmDupPairs _),
-    ("q372", graft.ops.Components.warmDupPairs _),
-    // r16: the global suffix ladder feeds q374/q375
-    ("q374", graft.ops.TrainPrep.warmGlobalSa _),
-    ("q375", graft.ops.TrainPrep.warmGlobalSa _),
-    ("q377", graft.ops.TrainPrep.warmGlobalSa _))
-
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: TenX <queryName>...")
     val unknown = args.toSet -- SparkEntry.queries.keySet
@@ -77,8 +42,8 @@ object TenX {
       math.min(once(), once())
     }
     args.foreach { name =>
-      warmers.collect { case (p, w) if name.startsWith(p) => w }
-        .foreach { w => w(spark, base); w(spark, big) }
+      Substrate.closure(SparkEntry.defs.filter(_.name == name).flatMap(_.uses))
+        .foreach { sub => sub.root(spark, base); sub.root(spark, big) }
       val (s, l) = (minOf2(name, base), minOf2(name, big))
       println(f"$name%-24s base $s%7.2f s   x$reps $l%7.2f s   ratio ${l / s}%.2f")
     }

@@ -12,16 +12,26 @@ import org.scalatest.funsuite.AnyFunSuite
   * second-largest block in the `sbt test` wall clock. The shards
   * partition the query set deterministically by name hash, so the
   * parallel test groups (build.sbt) can run them concurrently; every
-  * query still executes exactly once per `sbt test`. */
+  * query still executes exactly once per `sbt test`.
+  *
+  * Each run also checks the gate's declared `uses`: every substrate it
+  * reaches while constructing and counting must lie in the closure of
+  * that list, because Bench charges (and TenX/ScaleLawSpec warm) exactly
+  * that closure. */
 abstract class QueriesSpecBase(shard: Int, of: Int) extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
-       if math.abs(name.hashCode) % of == shard) {
-    test(s"$name executes at sf0.001") {
-      val df = fn(spark, TestSpark.sf0001)
-      assert(df.columns.nonEmpty)
-      df.count() // must not throw
+  for (q <- SparkEntry.defs.sortBy(_.name)
+       if Math.floorMod(q.name.hashCode, of) == shard) {
+    test(s"${q.name} executes at sf0.001") {
+      val touched = core.Substrate.touchedBy {
+        val df = q.fn(spark, TestSpark.sf0001)
+        assert(df.columns.nonEmpty)
+        df.count() // must not throw
+      }
+      val undeclared = touched -- core.Substrate.closure(q.uses)
+      assert(undeclared.isEmpty,
+        s"${q.name} reads substrates missing from its uses: $undeclared")
     }
   }
 }

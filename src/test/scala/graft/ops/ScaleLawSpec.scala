@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Materialize, ScaleGen, SparkEntry, Tables, TestSpark}
+import graft.core.Substrate
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, element_at, slice}
@@ -149,22 +150,21 @@ class ScaleLawSpec extends AnyFunSuite {
           f"(x${large.toDouble / math.max(small, 1)}%.1f, bound x$maxRatio)")
     }
 
-  /** Cold/cold law on a substrate BUILD itself (VERDICT r14 #1): the
-    * builders bypass the JVM-wide cache, so both sides meter the full
-    * dedup/grid → MST → label pipeline regardless of what any earlier
+  /** Cold/cold law on a substrate BUILD itself (VERDICT r14 #1):
+    * [[graft.core.Substrate.buildCold]] bypasses the JVM-wide cache, so
+    * both sides meter the full build regardless of what any earlier
     * test warmed — this is the law that still catches a super-linear
     * MST/CC regression now that the gate laws meter readouts. */
   private def substrateLaw(what: String, maxRatio: Double, pinRatio: Double,
-      warm: (String => Unit) = _ => ())(
-      build: String => Unit): Unit =
+      sub: Substrate): Unit =
     test(s"substrate $what: COLD build shuffle records ≤ ×$maxRatio and " +
         s"pinned bytes ≤ ×$pinRatio at ×3 data") {
-      // a build may itself consume an UPSTREAM substrate (dup-MST reads
-      // the dup-pairs parquet since r16) — warm that on both fixtures
-      // OUTSIDE the measure so the law meters this build's own work
-      warm(TestSpark.sf0001); warm(big)
-      val (sRec, sPin) = measure { build(TestSpark.sf0001) }
-      val (lRec, lPin) = measure { build(big) }
+      // a build may consume UPSTREAM substrates (its deps) — warm them
+      // on both fixtures OUTSIDE the measure so the law meters this
+      // build's own work
+      sub.deps.foreach { d => d.root(spark, TestSpark.sf0001); d.root(spark, big) }
+      val (sRec, sPin) = measure { sub.buildCold(spark, TestSpark.sf0001) }
+      val (lRec, lPin) = measure { sub.buildCold(spark, big) }
       info(f"records $sRec -> $lRec (x${lRec.toDouble / math.max(sRec, 1)}%.1f), " +
         f"pinned $sPin -> $lPin bytes (x${lPin.toDouble / math.max(sPin, 1)}%.1f)")
       assert(lRec <= sRec * maxRatio + 20000,
@@ -189,21 +189,14 @@ class ScaleLawSpec extends AnyFunSuite {
   law("q347_source_cover", 5.0)
   // substrate-backed gates: warmed both sides (readout law); the
   // builds have their own cold/cold laws below
-  private val warmDup: String => Unit =
-    dir => Components.warmDupMst(spark, dir)
-  private val warmPairs: String => Unit =
-    dir => Components.warmDupPairs(spark, dir)
-  private val warmSlink: String => Unit =
-    dir => Components.warmEpsSlink(spark, dir)
-  private val warmPhash: String => Unit =
-    dir => { graft.multimodal.Multimodal.phashMediaTable(spark, dir); () }
-  lawOn("q348_mst_clusters", 6.0, big, "namespace", warmDup)
-  lawOn("q353_dendrogram_cut", 6.0, big, "namespace", warmDup)
+  lawOn("q348_mst_clusters", 6.0, big, "namespace", Components.DupMst.root(spark, _))
+  lawOn("q353_dendrogram_cut", 6.0, big, "namespace", Components.DupMst.root(spark, _))
   law("q354_blocklist_scan", 5.0) // one automaton pass per row
   law("q355_stream_blocklist", 5.0) // streamed twin: stateless scan + bounded state
   // media fixture warmed both sides so cross-suite ordering can't put
   // the one-off encode on one side of the ratio (ADVICE r14)
-  lawOn("q356_image_phash", 5.0, big, "namespace", warmPhash)
+  lawOn("q356_image_phash", 5.0, big, "namespace",
+    graft.multimodal.Multimodal.phashMediaTable(spark, _))
   law("q349_kn_perplexity", 5.0)
   law("q350_source_ablation", 5.0)
   law("q351_embed_whitening", 5.0)
@@ -222,26 +215,20 @@ class ScaleLawSpec extends AnyFunSuite {
   // r18: the tree quartet reads the cached CONDENSED-TREE substrate —
   // warm it both sides so the laws meter each gate's readout joins;
   // the tree build has its own cold/cold law below
-  private val warmTreeEps: String => Unit =
-    dir => Components.warmCondTree(spark, dir, "eps")
-  lawOn("q358_hdbscan", 6.0, big, "namespace", warmTreeEps) // sel⋈cl readout of the warmed tree
-  lawOn("q359_glosh_outliers", 6.0, big, "namespace", warmTreeEps) // att⋈dm readout
+  lawOn("q358_hdbscan", 6.0, big, "namespace", Components.EpsTree.root(spark, _)) // sel⋈cl readout of the warmed tree
+  lawOn("q359_glosh_outliers", 6.0, big, "namespace", Components.EpsTree.root(spark, _)) // att⋈dm readout
   // r15: mutual-reachability HDBSCAN rides its own substrate
-  private val warmMr: String => Unit =
-    dir => Components.warmMrSlink(spark, dir)
-  private val warmTreeMr: String => Unit =
-    dir => Components.warmCondTree(spark, dir, "mr")
-  lawOn("q360_hdbscan_mreach", 6.0, big, "namespace", warmTreeMr)
-  lawOn("q362_soft_membership", 6.0, big, "namespace", warmTreeEps) // att⋈sela⋈dm readout
+  lawOn("q360_hdbscan_mreach", 6.0, big, "namespace", Components.MrTree.root(spark, _))
+  lawOn("q362_soft_membership", 6.0, big, "namespace", Components.EpsTree.root(spark, _)) // att⋈sela⋈dm readout
   // r18: the published-form (mutual-reachability) GLOSH/membership
   // pair — same readout joins over the mr tree's artifacts
-  lawOn("q381_glosh_mreach", 6.0, big, "namespace", warmTreeMr)
-  lawOn("q382_soft_membership_mreach", 6.0, big, "namespace", warmTreeMr)
+  lawOn("q381_glosh_mreach", 6.0, big, "namespace", Components.MrTree.root(spark, _))
+  lawOn("q382_soft_membership_mreach", 6.0, big, "namespace", Components.MrTree.root(spark, _))
   // r15: cophenetic runs its OWN grid ε-pass over the pair table,
   // which densifies ~quadratically under replication-with-jitter —
   // q345's workload belt, not a plan defect (labels ride the warmed
   // scaffold; the pairs are the gate's input by definition)
-  lawOn("q363_cophenetic", 12.0, big, "namespace", warmSlink)
+  lawOn("q363_cophenetic", 12.0, big, "namespace", Components.EpsSlink.root(spark, _))
   // r16 (VERDICT r15 #7): the ×12 belt above absorbs the fixture's
   // ε-pair densification (the replica plane packs ~quadratically more
   // candidate pairs); THIS law divides the same records by the
@@ -251,7 +238,8 @@ class ScaleLawSpec extends AnyFunSuite {
   // lands here even though the absolute belt would absorb it.
   test("q363_cophenetic: shuffle records PER CANDIDATE PAIR stay " +
       "≤ ×2 at ×3 namespace data") {
-    warmSlink(TestSpark.sf0001); warmSlink(big)
+    Components.EpsSlink.root(spark, TestSpark.sf0001)
+    Components.EpsSlink.root(spark, big)
     def pairsOf(dir: String): Long = {
       val pts = Tables.embeddings(spark, dir).select(
         col("vec_id").as("id"),
@@ -277,17 +265,15 @@ class ScaleLawSpec extends AnyFunSuite {
   // r15: Euler-tour list ranking is O(n log n) on the TREE (n−1 edges
   // regardless of candidate density): ×3 nodes ⇒ ×3 arcs × (+~1.6
   // doubling rounds over ~12) ≈ ×3.5 records
-  lawOn("q364_optics_order", 6.0, big, "namespace", warmMr)
+  lawOn("q364_optics_order", 6.0, big, "namespace", Components.MrSlink.root(spark, _))
   // r16: flat-cluster extraction is one window + one keyed aggregate
   // over the q364 plot (substrate-backed like its parent)
-  lawOn("q373_optics_clusters", 6.0, big, "namespace", warmMr)
+  lawOn("q373_optics_clusters", 6.0, big, "namespace", Components.MrSlink.root(spark, _))
   // r16: the global suffix ladder is a substrate (one build per
   // JVM/corpus, cold/cold law below); the gates meter their readouts —
   // adjacent/boundary pair frames + the jump, all n-row shuffles
-  private val warmGsa: String => Unit =
-    dir => TrainPrep.warmGlobalSa(spark, dir)
-  lawOn("q374_cross_doc_repeat", 5.0, big, "namespace", warmGsa)
-  lawOn("q375_cross_doc_coverage", 5.0, big, "namespace", warmGsa)
+  lawOn("q374_cross_doc_repeat", 5.0, big, "namespace", TrainPrep.GlobalSa.root(spark, _))
+  lawOn("q375_cross_doc_coverage", 5.0, big, "namespace", TrainPrep.GlobalSa.root(spark, _))
   // r16: the train × eval pair frame is corpus-linear ONCE THE EVAL
   // CAP SATURATES — but at these tiny fixtures the %37 eval sample
   // itself grows 14 → 32 before hitting its 32 cap, multiplying the
@@ -301,11 +287,9 @@ class ScaleLawSpec extends AnyFunSuite {
   // cold/cold law below — the ×12 sample-growth belt lives THERE);
   // both gates are readouts: q376 a sorted read of the value frame,
   // q379 the two two-phase running sums over the doc frame
-  private val warmShap: String => Unit =
-    dir => DataSelect.warmShapley(spark, dir)
-  lawOn("q376_knn_shapley", 5.0, big, "namespace", warmShap)
-  lawOn("q379_value_select", 5.0, big, "namespace", warmShap)
-  pinLaw("q379_value_select", 5.0, warmShap)
+  lawOn("q376_knn_shapley", 5.0, big, "namespace", DataSelect.Shapley.root(spark, _))
+  lawOn("q379_value_select", 5.0, big, "namespace", DataSelect.Shapley.root(spark, _))
+  pinLaw("q379_value_select", 5.0, DataSelect.Shapley.root(spark, _))
   // r17 (VERDICT r16 #6): the ×12 belt on the substrate build absorbs
   // the eval-sample growth term (14 → 32 queries between the tiny
   // fixtures); THIS law compares COLD builds on ×3 vs ×9 replicas,
@@ -315,23 +299,21 @@ class ScaleLawSpec extends AnyFunSuite {
   // real 100 TB cost.
   test("knn-shapley build: with the 32-query cap binding on both sides, " +
       "shuffle records grow ≤ ×5 at ×3 data (corpus-linear term alone)") {
-    val sRec = measure { DataSelect.buildShapley(spark, big); () }._1
-    val lRec = measure { DataSelect.buildShapley(spark, big9); () }._1
+    val sRec = measure { DataSelect.Shapley.buildCold(spark, big); () }._1
+    val lRec = measure { DataSelect.Shapley.buildCold(spark, big9); () }._1
     assert(lRec <= sRec * 5.0 + 20000,
       f"shapley build shuffled $sRec -> $lRec records at x3 cap-bound " +
         f"data (x${lRec.toDouble / math.max(sRec, 1)}%.1f, bound x5.0)")
   }
-  lawOn("q377_contamination_spans", 5.0, big, "namespace", warmGsa)
+  lawOn("q377_contamination_spans", 5.0, big, "namespace", TrainPrep.GlobalSa.root(spark, _))
   // r15: one map-side-combined corpus groupBy; the EG iteration runs
   // on the K-row domain frame only
   law("q365_doremi_weights", 5.0)
   // r17: the per-doc rank ladder is a substrate (one build per
   // JVM/corpus, cold/cold law below); q366's readout is a rename of
   // the cached rank frame, q367's the pair frame + LCP jump
-  private val warmPdsa: String => Unit =
-    dir => TrainPrep.warmPerDocSa(spark, dir)
-  lawOn("q366_suffix_array", 5.0, big, "namespace", warmPdsa)
-  lawOn("q367_longest_repeat", 5.0, big, "namespace", warmPdsa)
+  lawOn("q366_suffix_array", 5.0, big, "namespace", TrainPrep.PerDocSa.root(spark, _))
+  lawOn("q367_longest_repeat", 5.0, big, "namespace", TrainPrep.PerDocSa.root(spark, _))
   // r15: vocab-sized per-lang model broadcast + one per-doc sum + one
   // per-lang tercile window
   law("q368_ccnet_buckets", 5.0)
@@ -344,12 +326,12 @@ class ScaleLawSpec extends AnyFunSuite {
   // r16: the graph-gate family rides the dup-pairs substrate (readout
   // laws, warmed both sides; the pipeline+LPA build has its own
   // cold/cold law below) — community-keyed aggregates only
-  lawOn("q370_modularity", 5.0, big, "namespace", warmPairs)
-  lawOn("q371_conductance", 5.0, big, "namespace", warmPairs) // same shape as q370
+  lawOn("q370_modularity", 5.0, big, "namespace", Components.DupPairs.root(spark, _))
+  lawOn("q371_conductance", 5.0, big, "namespace", Components.DupPairs.root(spark, _)) // same shape as q370
   // r15: degree-ordered wedge joins per peel round over the dup graph
   // (edge-linear rounds; the dup graph's wedges stay bounded by the
   // verified-pair df-caps)
-  lawOn("q372_ktruss", 5.0, big, "namespace", warmPairs)
+  lawOn("q372_ktruss", 5.0, big, "namespace", Components.DupPairs.root(spark, _))
   // r15: exhaustive stride-1 gram dedup — namespaced replicas never
   // share grams, so diagonals replicate linearly; a real super-linear
   // defect (occurrence PAIRS instead of distinct diagonals) lands ×9
@@ -358,10 +340,8 @@ class ScaleLawSpec extends AnyFunSuite {
   // sides so each law meters its readout (q378: the parquet scan;
   // q380: the two-phase packer); the rewrite build has its own
   // cold/cold law below
-  private val warmSpanRm: String => Unit =
-    dir => TrainPrep.warmSpanRemoval(spark, dir)
-  lawOn("q378_span_removal", 5.0, big, "namespace", warmSpanRm)
-  lawOn("q380_dedup_pack_e2e", 5.0, big, "namespace", warmSpanRm)
+  lawOn("q378_span_removal", 5.0, big, "namespace", TrainPrep.SpanRm.root(spark, _))
+  lawOn("q380_dedup_pack_e2e", 5.0, big, "namespace", TrainPrep.SpanRm.root(spark, _))
 
   // r15 (VERDICT r14 #1): cold/cold laws on the substrate BUILDS —
   // the full dedup/grid → Borůvka → label pipelines, cache-bypassed.
@@ -374,58 +354,50 @@ class ScaleLawSpec extends AnyFunSuite {
   // dup-pairs + LPA: the whole graph-gate family's shared input —
   // LSH bands + verification are near-linear by construction (df-caps,
   // banded buckets) and LPA shuffles edge-linear rounds
-  substrateLaw("dup-pairs + LPA (graph-gate family)", 6.0, 6.0)(
-    dir => { Components.buildDupPairs(spark, dir); () })
+  substrateLaw("dup-pairs + LPA (graph-gate family)", 6.0, 6.0,
+    Components.DupPairs)
   // dup-MST consumes the dup-pairs parquet since r16 — pairs warmed
   // both sides so this law meters the Borůvka election alone
-  substrateLaw("dup-MST (q348/q353)", 6.0, 6.0, warmPairs)(
-    dir => { Components.buildDupMst(spark, dir); () })
+  substrateLaw("dup-MST (q348/q353)", 6.0, 6.0, Components.DupMst)
   // the slink family's shared candidate table (r17): the grid ε-join
   // itself, which densifies ~quadratically under replication-with-
   // jitter (the q345 workload law — SCALE.md round 12)
-  private val warmEps: String => Unit =
-    dir => Components.warmEpsPairs(spark, dir)
-  substrateLaw("eps candidate pairs (slink family)", 12.0, 12.0)(
-    dir => { Components.buildEpsPairs(spark, dir); () })
+  substrateLaw("eps candidate pairs (slink family)", 12.0, 12.0,
+    Components.EpsPairs)
   // both elections consume the persisted candidate table since r17 —
   // pairs warmed both sides so each law meters its own Borůvka; edge
   // work is pair-linear, so the densified workload still sets the belt
-  substrateLaw("eps-slink labels (q358/q359)", 12.0, 12.0, warmEps)(
-    dir => { Components.buildSlinkLabels(spark, dir); () })
-  substrateLaw("mreach-slink labels (q360)", 12.0, 12.0, warmEps)(
-    dir => { Components.buildMrSlinkLabels(spark, dir); () })
+  substrateLaw("eps-slink labels (q358/q359)", 12.0, 12.0, Components.EpsSlink)
+  substrateLaw("mreach-slink labels (q360)", 12.0, 12.0, Components.MrSlink)
   // the condensed-tree builds consume the slink label substrates —
   // labels warmed both sides so each law meters the tree construction
   // alone (instance tables + k-step cid/selection/attachment passes):
   // the per-point membership/attachment joins are label-frame-linear,
   // everything else is cluster-count-sized, so the ×6 point belt holds
-  substrateLaw("eps condensed tree (q358/q359/q362)", 6.0, 6.0, warmSlink)(
-    dir => { Components.buildCondTree(spark, dir, "eps"); () })
-  substrateLaw("mr condensed tree (q360)", 6.0, 6.0, warmMr)(
-    dir => { Components.buildCondTree(spark, dir, "mr"); () })
+  substrateLaw("eps condensed tree (q358/q359/q362)", 6.0, 6.0,
+    Components.EpsTree)
+  substrateLaw("mr condensed tree (q360)", 6.0, 6.0, Components.MrTree)
   // global suffix ladder: per round one (doc, off)-keyed join + one
   // distributed dense rank — n-row shuffles × a round count that
   // namespace replication holds constant (doc lengths preserved)
-  substrateLaw("global suffix ladder (q374/q375)", 5.0, 5.0)(
-    dir => { TrainPrep.buildGlobalSa(spark, dir); () })
+  substrateLaw("global suffix ladder (q374/q375)", 5.0, 5.0, TrainPrep.GlobalSa)
   // per-doc rank ladder: per round one (doc, off)-keyed join + one
   // per-doc dense-rank window — n-row shuffles × a round count that
   // namespace replication holds constant (doc lengths preserved)
-  substrateLaw("per-doc suffix ladder (q366/q367)", 5.0, 5.0)(
-    dir => { TrainPrep.buildPerDocSa(spark, dir); () })
+  substrateLaw("per-doc suffix ladder (q366/q367)", 5.0, 5.0,
+    TrainPrep.PerDocSa)
   // KNN-Shapley valuation: the %37 eval sample grows 14 → 32 between
   // the tiny fixtures before saturating its cap, multiplying the pair
   // frame beyond the data growth (the q345 workload class; the
   // cap-bound ×3-vs-×9 law above meters the corpus-linear term) —
   // the ×12 belt still catches a capless all-pairs regression at ×9
-  substrateLaw("knn-shapley valuation (q376/q379)", 12.0, 12.0)(
-    dir => { DataSelect.buildShapley(spark, dir); () })
+  substrateLaw("knn-shapley valuation (q376/q379)", 12.0, 12.0,
+    DataSelect.Shapley)
   // span-removal rewrite (r18): hash pass is window-linear, candidate
   // window TEXT replicates with the duplicate mass (namespace
   // replication holds it linear); a corpus-wide gram-text shuffle
   // regression lands ×50 of the hash pass
-  substrateLaw("span-removal rewrite (q378/q380)", 5.0, 5.0)(
-    dir => { TrainPrep.buildSpanRemoval(spark, dir); () })
+  substrateLaw("span-removal rewrite (q378/q380)", 5.0, 5.0, TrainPrep.SpanRm)
   // r18 (VERDICT r17 #2): the q378 df-cap bounds the candidate-window
   // exchange. On a mass-boilerplate corpus (every doc IS the same
   // boilerplate, repeated — all windows over-cap) the uncapped plan
@@ -477,26 +449,26 @@ class ScaleLawSpec extends AnyFunSuite {
 
   // r14: width laws for the checkpoint-carrying gates (the q351 class)
   pinLaw("q347_source_cover", 5.0)
-  pinLaw("q348_mst_clusters", 6.0, warmDup)
+  pinLaw("q348_mst_clusters", 6.0, Components.DupMst.root(spark, _))
   pinLaw("q349_kn_perplexity", 5.0)
   pinLaw("q351_embed_whitening", 5.0)
-  pinLaw("q353_dendrogram_cut", 6.0, warmDup)
+  pinLaw("q353_dendrogram_cut", 6.0, Components.DupMst.root(spark, _))
   pinLaw("q357_kn_topv", 5.0)
-  pinLaw("q358_hdbscan", 6.0, warmTreeEps)
-  pinLaw("q359_glosh_outliers", 6.0, warmTreeEps)
-  pinLaw("q360_hdbscan_mreach", 6.0, warmTreeMr)
-  pinLaw("q362_soft_membership", 6.0, warmTreeEps)
-  pinLaw("q381_glosh_mreach", 6.0, warmTreeMr)
-  pinLaw("q382_soft_membership_mreach", 6.0, warmTreeMr)
-  pinLaw("q363_cophenetic", 12.0, warmSlink) // pins the ε-pair table (q345-class workload)
-  pinLaw("q364_optics_order", 6.0, warmMr) // pins tree-sized arc states per doubling round
-  pinLaw("q373_optics_clusters", 6.0, warmMr) // plot-sized window input
-  pinLaw("q374_cross_doc_repeat", 5.0, warmGsa) // pair frames per jump rung
-  pinLaw("q375_cross_doc_coverage", 5.0, warmGsa) // adjacent-pair + run frames
-  pinLaw("q376_knn_shapley", 5.0, warmShap) // readout of the cached value frame (the sample-growth term lives in the substrate's cold/cold law)
-  pinLaw("q377_contamination_spans", 5.0, warmGsa) // adjacent-pair + seg frames
-  pinLaw("q366_suffix_array", 5.0, warmPdsa) // pins the cached rank frame readout
-  pinLaw("q367_longest_repeat", 5.0, warmPdsa) // pins the pair frame per jump rung
+  pinLaw("q358_hdbscan", 6.0, Components.EpsTree.root(spark, _))
+  pinLaw("q359_glosh_outliers", 6.0, Components.EpsTree.root(spark, _))
+  pinLaw("q360_hdbscan_mreach", 6.0, Components.MrTree.root(spark, _))
+  pinLaw("q362_soft_membership", 6.0, Components.EpsTree.root(spark, _))
+  pinLaw("q381_glosh_mreach", 6.0, Components.MrTree.root(spark, _))
+  pinLaw("q382_soft_membership_mreach", 6.0, Components.MrTree.root(spark, _))
+  pinLaw("q363_cophenetic", 12.0, Components.EpsSlink.root(spark, _)) // pins the ε-pair table (q345-class workload)
+  pinLaw("q364_optics_order", 6.0, Components.MrSlink.root(spark, _)) // pins tree-sized arc states per doubling round
+  pinLaw("q373_optics_clusters", 6.0, Components.MrSlink.root(spark, _)) // plot-sized window input
+  pinLaw("q374_cross_doc_repeat", 5.0, TrainPrep.GlobalSa.root(spark, _)) // pair frames per jump rung
+  pinLaw("q375_cross_doc_coverage", 5.0, TrainPrep.GlobalSa.root(spark, _)) // adjacent-pair + run frames
+  pinLaw("q376_knn_shapley", 5.0, DataSelect.Shapley.root(spark, _)) // readout of the cached value frame (the sample-growth term lives in the substrate's cold/cold law)
+  pinLaw("q377_contamination_spans", 5.0, TrainPrep.GlobalSa.root(spark, _)) // adjacent-pair + seg frames
+  pinLaw("q366_suffix_array", 5.0, TrainPrep.PerDocSa.root(spark, _)) // pins the cached rank frame readout
+  pinLaw("q367_longest_repeat", 5.0, TrainPrep.PerDocSa.root(spark, _)) // pins the pair frame per jump rung
 
   test("the pin probe detects a deliberately re-introduced wide pin " +
       "(q351's defect class: checkpoint 64 dims, read 8)") {
