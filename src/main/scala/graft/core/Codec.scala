@@ -130,17 +130,18 @@ object Codec {
     }
   }
 
-  /** Register a native-resource release with the enclosing Spark task,
-    * so PARTIAL consumption (a `limit`/`take` above an inflate stage
-    * abandons the iterator mid-stream) and exceptions mid-decode still
-    * free the ~256 KB native zlib/zstd context — the exhaustion-path
+  /** Register a resource release with the enclosing Spark task, so
+    * PARTIAL consumption (a `limit`/`take` above an inflate stage or a
+    * file/url read abandons the iterator mid-stream) and exceptions
+    * mid-decode still free the ~256 KB native zlib/zstd context or the
+    * open file or socket — the exhaustion-path
     * `close()`/`end()` alone covers only fully-drained iterators. The
     * release calls are idempotent (JDK Inflater.end and the codec
     * streams' close are no-ops on a released resource), so running
     * after a normal exhaustion close is safe. Outside a task (plain
     * driver-side use, unit tests) there is no hook; those call sites
     * drain fully. */
-  private def onTaskEnd(release: () => Unit): Unit = {
+  private[core] def onTaskEnd(release: () => Unit): Unit = {
     val tc = org.apache.spark.TaskContext.get()
     if (tc != null) tc.addTaskCompletionListener[Unit] { _ =>
       try release() catch { case _: Exception => () }
@@ -225,8 +226,10 @@ object Codec {
       def nextElement(): InputStream = new ByteArrayInputStream(chunks.next())
     })
 
-  private def readChunks(in: InputStream, chunkSize: Int,
-                         closeAtEnd: Boolean = false): Iterator[Array[Byte]] =
+  /** Lazily reads `in` as `chunkSize`-byte chunks (the last one may be
+    * short; an empty stream yields none). */
+  private[core] def readChunks(in: InputStream, chunkSize: Int,
+                               closeAtEnd: Boolean = false): Iterator[Array[Byte]] =
     Iterator.continually {
       val buf = new Array[Byte](chunkSize)
       var off = 0

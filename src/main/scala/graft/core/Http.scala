@@ -162,31 +162,10 @@ object Http {
     // iterator mid-stream: release the socket with the task, exactly
     // like Codec frees its native contexts. close() is idempotent, so
     // running after the exhaustion-path close is safe.
-    val tc = org.apache.spark.TaskContext.get()
-    if (tc != null) tc.addTaskCompletionListener[Unit] { _ =>
-      try in.close() catch { case _: Exception => () }
-    }
-    new Iterator[Array[Byte]] {
-      private var chunk: Array[Byte] = _
-      private var done = false
-      private def advance(): Unit = if (!done && chunk == null) {
-        val buf = new Array[Byte](chunkSize)
-        var off = 0
-        var n = 0
-        while (off < chunkSize &&
-               { n = in.read(buf, off, chunkSize - off); n >= 0 }) off += n
-        if (off == 0) {
-          done = true
-          try checkTruncation() finally in.close()
-        } else chunk = if (off == chunkSize) buf
-          else java.util.Arrays.copyOf(buf, off)
-      }
-      def hasNext: Boolean = { advance(); chunk != null }
-      def next(): Array[Byte] = {
-        advance()
-        if (chunk == null) throw new NoSuchElementException("exhausted")
-        val c = chunk; chunk = null; c
-      }
+    Codec.onTaskEnd(() => in.close())
+    Codec.readChunks(in, chunkSize) ++ {
+      try checkTruncation() finally in.close()
+      Iterator.empty
     }
   }
 }

@@ -107,16 +107,15 @@ object CodecOps {
     // from the two stages above: 8 real .tar.gz files (USTAR archives,
     // gzip members; a bounded 400-doc fixture slice, assembled driver-
     // side exactly like q144 plants its scratch files) are read back
-    // DISTRIBUTED — binaryFile scan → per-partition multi-member
-    // inflate → per-partition validating untar (header checksums) —
-    // and every extracted member must match the original document
-    // byte-for-byte (id parsed from the member name; per-row length +
-    // md5-prefix digest vs the oracle's arithmetic over `documents`).
-    // Partitions may hold several archive files; the seam-tolerant
-    // parsers make concatenation a non-event. The READ side is the
-    // 100 TB shape: one task per archive group, O(member) memory,
-    // nothing driver-side. localCheckpoint before scratch cleanup
-    // (q144's hygiene).
+    // DISTRIBUTED — one partition per archive file, streamed in 64 KB
+    // chunks → per-partition multi-member inflate → per-partition
+    // validating untar (header checksums) — and every extracted member
+    // must match the original document byte-for-byte (id parsed from
+    // the member name; per-row length + md5-prefix digest vs the
+    // oracle's arithmetic over `documents`). The READ side is the
+    // 100 TB shape: one task per archive, no shuffle, O(member) memory,
+    // nothing driver-side beyond the sorted file list. localCheckpoint
+    // before scratch cleanup (q144's hygiene).
     QueryDef("q323_archive_extract",
       (s, d) => {
         import s.implicits._
@@ -165,11 +164,11 @@ object CodecOps {
     // partition; the flatMap that splits a row into its members runs
     // AFTER the shard repartition, so a sample's members are adjacent
     // in partition order by construction — the WebDataset contract).
-    // The READ side is the q323 path (binaryFile → zstd inflate →
-    // validating untar) plus sample reassembly by basename; the
-    // oracle re-derives text digest + class field per doc, so a
-    // dropped member, a broken adjacency split mid-sample, or any
-    // codec slip breaks rows. Scratch hygiene: localCheckpoint before
+    // The READ side is the q323 path (one chunked stream per shard →
+    // zstd inflate → validating untar) plus sample reassembly by
+    // basename; the oracle re-derives text digest + class field per
+    // doc, so a dropped member, a broken adjacency split mid-sample, or
+    // any codec slip breaks rows. Scratch hygiene: localCheckpoint before
     // cleanup (q144).
     QueryDef("q327_webdataset_roundtrip",
       (s, d) => {

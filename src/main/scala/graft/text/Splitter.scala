@@ -1,7 +1,5 @@
 package graft.text
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Separator-splitting with the reference engine's exact semantics
   * (flod `Splitter`/`byLine`, reference `range.d:359-508`):
   *
@@ -74,37 +72,53 @@ object Splitter {
   }
 
   /** Incremental splitter over a stream of chunks (the flod peek/consume
-    * loop re-expressed as an iterator transform): buffers the remainder
-    * across chunk boundaries so separators spanning two chunks are found.
+    * loop re-expressed as an iterator transform): a lazy cursor over one
+    * buffer holding the unconsumed remainder, so separators spanning two
+    * chunks are found. Each segment costs one `indexOf` scan and one
+    * `substring`, i.e. O(segment), like flod's slices of its window; the
+    * consumed prefix is dropped only when the next chunk is appended.
     * Use inside `mapPartitions` — correct whenever one partition holds one
     * ordered stream (flod pipelines are single streams by construction).
     */
   def incremental(sep: String, keepSeparator: Boolean = false)
                  (chunks: Iterator[String]): Iterator[String] = {
-    val buf = new StringBuilder
-    val pending = new ArrayBuffer[String]
-
-    def drain(): Unit = {
-      var start = 0
-      var i = buf.indexOf(sep, start)
-      while (i >= 0) {
-        pending += (if (keepSeparator) buf.substring(start, i + sep.length)
-                    else buf.substring(start, i))
-        start = i + sep.length
-        i = buf.indexOf(sep, start)
-      }
-      if (start > 0) buf.delete(0, start)
-    }
-
+    require(sep.nonEmpty, "separator must be non-empty")
     new Iterator[String] {
+      private val buf = new java.lang.StringBuilder
+      private var start = 0 // first char of the current segment
+      // no separator starts in [start, from): the search resumes here
+      private var from = 0
+      private var ready: String = null
+
+      @annotation.tailrec
+      private def cut(): String = {
+        val i = buf.indexOf(sep, from)
+        if (i >= 0) {
+          val end = i + sep.length
+          val seg = buf.substring(start, if (keepSeparator) end else i)
+          start = end; from = end
+          seg
+        } else if (!chunks.hasNext) {
+          if (start == buf.length) null
+          else { val tail = buf.substring(start); start = buf.length; tail }
+        } else {
+          buf.delete(0, start)
+          start = 0
+          // a separator straddling the append starts at most
+          // sep.length - 1 chars before the old end
+          from = math.max(0, buf.length - sep.length + 1)
+          buf.append(chunks.next())
+          cut()
+        }
+      }
+
       def hasNext: Boolean = {
-        while (pending.isEmpty && chunks.hasNext) { buf ++= chunks.next(); drain() }
-        if (pending.isEmpty && buf.nonEmpty) { pending += buf.result(); buf.clear() }
-        pending.nonEmpty
+        if (ready == null) ready = cut()
+        ready != null
       }
       def next(): String = {
         if (!hasNext) throw new NoSuchElementException
-        pending.remove(0)
+        val r = ready; ready = null; r
       }
     }
   }

@@ -87,6 +87,60 @@ class FlowSpec extends AnyFunSuite {
     } finally java.nio.file.Files.deleteIfExists(tmp)
   }
 
+  private def withFiles[A](files: (String, Array[Byte])*)(body: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_rb")
+    try {
+      files.foreach { case (n, b) => java.nio.file.Files.write(dir.resolve(n), b) }
+      body(dir.toString)
+    } finally {
+      java.nio.file.Files.list(dir).forEach(p => java.nio.file.Files.delete(p))
+      java.nio.file.Files.delete(dir)
+    }
+  }
+
+  private def utf8(s: String): Array[Byte] = s.getBytes("UTF-8")
+
+  test("readBytes: chunks concatenate to the files in path order, one partition each") {
+    val rnd = new scala.util.Random(3)
+    def blob(n: Int) = Array.fill(n)(rnd.nextInt(256).toByte)
+    // written largest-in-the-middle, so size order and write order are not path order
+    val files = Seq("c.bin" -> blob(70000), "a.bin" -> blob(150001), "b.bin" -> blob(10))
+    withFiles(files: _*) { dir =>
+      val flow = Flow.readBytes(spark, dir + "/*.bin")
+      assert(flow.ds.rdd.getNumPartitions == 3)
+      val chunks = flow.toArray
+      assert(chunks.forall(_.length <= (1 << 16)))
+      assert(chunks.toArray.flatten.sameElements(
+        files.sortBy(_._1).flatMap(_._2.toSeq)))
+    }
+  }
+
+  test("readBytes: each file is its own stream, whatever the shuffle partitions") {
+    val files = Seq("f0.txt" -> "x1\nx2", "f1.txt" -> "y1", "f2.txt" -> "z1\nz2\nz3")
+    withFiles(files.map { case (n, t) => n -> utf8(t) }: _*) { dir =>
+      val key = "spark.sql.shuffle.partitions"
+      val saved = spark.conf.get(key)
+      try for (parts <- Seq("1", "8")) {
+        spark.conf.set(key, parts)
+        val got = Flow.readBytes(spark, dir + "/f*.txt").decodeChars().byLine().toArray
+        assert(got == Seq("x1", "x2", "y1", "z1", "z2", "z3"), s"$key=$parts")
+      } finally spark.conf.set(key, saved)
+    }
+  }
+
+  test("readBytes: an empty file contributes no chunks") {
+    withFiles("a.txt" -> Array.emptyByteArray, "b.txt" -> utf8("hi")) { dir =>
+      assert(Flow.readBytes(spark, dir).toArray.map(new String(_, "UTF-8")) == Seq("hi"))
+      assert(Flow.readBytes(spark, dir + "/a.txt").toArray.isEmpty)
+    }
+  }
+
+  test("readBytes: a pattern matching nothing throws") {
+    withFiles("a.txt" -> utf8("hi")) { dir =>
+      intercept[org.apache.spark.sql.AnalysisException](Flow.readBytes(spark, dir + "/*.gz"))
+    }
+  }
+
   test("readLines splits files distributed (K7 at scale)") {
     val tmp = java.nio.file.Files.createTempFile("graft", ".txt")
     try {

@@ -77,4 +77,16 @@ class SplitterSpec extends AnyFunSuite {
         s"chunkSize=$chunkSize sep=${sep.replace("\r", "\\r").replace("\n", "\\n")} keep=$keep")
     }
   }
+
+  test("incremental splitter is linear in the segments of one chunk") {
+    // 1M lines in a single chunk: a splitter that re-shifts its pending
+    // segments per line is quadratic here (about a minute); linear is ~0.1 s
+    val n = 1000000
+    val t0 = System.nanoTime()
+    val got = Splitter.incremental("\n")(Iterator.single("a\n" * n)).toVector
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(got.size == n)
+    assert(got.forall(_ == "a"))
+    assert(secs < 10.0, f"1M-line chunk took $secs%.1f s")
+  }
 }
