@@ -1,8 +1,7 @@
 package graft.stream
 
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.catalyst.plans.logical._
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -10,10 +9,15 @@ import scala.collection.mutable.ArrayBuffer
   * (`pass!E`, flod range.d:211-237; DriveMode.source, SURVEY.md §3.3):
   * external code pushes chunks in, the pipeline runs sink-ward.
   *
-  * Spark mapping: `MemoryStream[T]` + a Structured Streaming query; each
-  * `put` is processed synchronously at micro-batch granularity (the
-  * documented fidelity bound, SURVEY.md §7.4 — flod's fiber switch is
-  * per-buffer, ours is per-batch).
+  * Spark mapping: each `put` is one batch job over a one-partition
+  * Dataset of the chunk, run on the calling thread (the documented
+  * fidelity bound, SURVEY.md §7.4 — flod's fiber switch is per-buffer,
+  * ours is per-put job). No streaming query runs, so a put pays no WAL,
+  * commit log or trigger coordination. That is exact only because the
+  * transform must be row-local (map, filter, flatMap, select): its output
+  * cannot depend on where one put ends and the next begins. A transform
+  * that would carry state across puts (dedup, limit, aggregation) is
+  * rejected when the pipeline is built; stateful streams use [[StreamOps]].
   *
   * Backpressure: flod halts the driving loop when a sink accepts a short
   * count (adapter.d:110-113). `Push.take(n)` reproduces that contract:
@@ -22,45 +26,39 @@ import scala.collection.mutable.ArrayBuffer
   */
 final class Push[T: Encoder, U](spark: SparkSession,
                                 transform: Dataset[T] => Dataset[U],
-                                limit: Option[Long] = None) {
-
-  private val source = MemoryStream[T](spark)
+                                limit: Option[Long] = None) extends PushHandle[T](spark) {
+  Push.requireRowLocal(spark, transform)
   private val sink = ArrayBuffer.empty[U]
-  @volatile private var accepted = 0L
-
-  private val query: StreamingQuery =
-    transform(source.toDS())
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[U], _: Long) =>
-        val rows = batch.collect()
-        sink.synchronized {
-          val room = limit.map(l => (l - sink.length).max(0L).toInt).getOrElse(rows.length)
-          sink ++= rows.take(room)
-        }
-        ()
-      }
-      .start()
 
   /** Push one chunk; returns how many further elements the pipeline will
     * accept (0 = stop, short-write backpressure). */
-  def put(chunk: Seq[T]): Long = {
-    source.addData(chunk)
-    query.processAllAvailable()
-    accepted += chunk.length
+  def put(chunk: Seq[T]): Long = run(chunk) { ds =>
+    val rows = transform(ds).collect()
     limit match {
-      case Some(l) =>
-        val filled: Int = sink.synchronized(sink.length)
-        val room: Long = l - filled.toLong
-        if (room > 0L) room else 0L
-      case None => Long.MaxValue
+      case Some(l) => Push.fill(sink, rows, l)
+      case None => sink ++= rows; Long.MaxValue
     }
   }
 
   /** Elements that reached the sink, in arrival order. */
-  def result: Seq[U] = sink.synchronized(sink.toVector)
+  def result: Seq[U] = synchronized(sink.toVector)
+}
 
-  def close(): Unit = query.stop()
+/** What every push handle shares: puts run one at a time on the calling
+  * thread, each over a one-partition Dataset of its chunk, and a put on a
+  * closed handle fails instead of dropping the chunk. One partition, not
+  * a `LocalRelation` (which splits a put across partitions), so a
+  * `mapPartitions` transform sees each put whole. */
+sealed abstract class PushHandle[T: Encoder](spark: SparkSession) {
+  private var closed = false
+
+  protected final def run[R](chunk: Seq[T])(body: Dataset[T] => R): R = synchronized {
+    if (closed) throw new IllegalStateException("put on a closed push pipeline")
+    body(spark.createDataset(
+      spark.sparkContext.parallelize(chunk, 1)(implicitly[Encoder[T]].clsTag)))
+  }
+
+  def close(): Unit = synchronized { closed = true }
 }
 
 object Push {
@@ -68,7 +66,7 @@ object Push {
   def pass[T: Encoder](spark: SparkSession): Push[T, T] =
     new Push[T, T](spark, identity)
 
-  /** Push pipeline with a transform stage. */
+  /** Push pipeline with a row-local transform stage. */
   def apply[T: Encoder, U](spark: SparkSession)(f: Dataset[T] => Dataset[U]): Push[T, U] =
     new Push[T, U](spark, f)
 
@@ -87,39 +85,57 @@ object Push {
     try { producer(p.put); p.result } finally p.close()
   }
 
-  /** Push pipeline with a DISTRIBUTED file sink: each micro-batch is
-    * written by the executors (append-mode parquet), nothing is
-    * collected to the driver — the production counterpart of the
-    * driver-side collector sinks above, which mirror flod's
-    * single-threaded terminals. Returns a handle whose `put` pushes a
-    * chunk synchronously; read the sink directory when done. */
-  def toPath[T: Encoder, U](spark: SparkSession, path: String)
-                           (transform: Dataset[T] => Dataset[U]): PushSink[T] = {
-    val source = MemoryStream[T](spark)
-    val query = transform(source.toDS())
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[U], _: Long) =>
-        batch.write.mode("append").parquet(path)
-        ()
-      }
-      .start()
-    new PushSink[T](source, query)
+  /** Fails unless `f` is row-local: applied to an empty input, every node
+    * of its analyzed plan maps, filters or reshapes single rows, and its
+    * only leaf is that input. Only then does running `f` once per put
+    * give the same rows as running it over the whole pushed stream. */
+  private def requireRowLocal[T: Encoder, U](spark: SparkSession,
+                                             f: Dataset[T] => Dataset[U]): Unit = {
+    val input = spark.emptyDataset[T]
+    val leaf = input.queryExecution.analyzed
+    val stateful = f(input).queryExecution.analyzed.flatMap {
+      case _: Project | _: Filter | _: TypedFilter | _: MapElements | _: MapPartitions |
+           _: SerializeFromObject | _: DeserializeToObject | _: AppendColumns |
+           _: Generate | _: SubqueryAlias => None
+      case p if p eq leaf => None
+      case p => Some(p.nodeName)
+    }.distinct
+    require(stateful.isEmpty, s"a push transform must be row-local (map, filter, " +
+      s"flatMap, select); ${stateful.mkString(", ")} would span puts — use StreamOps")
   }
 
-  /** Handle for [[toPath]]: synchronous put + close. */
-  final class PushSink[T] private[Push] (source: MemoryStream[T], query: StreamingQuery) {
-    def put(chunk: Seq[T]): Unit = { source.addData(chunk); query.processAllAvailable() }
-    def close(): Unit = query.stop()
+  /** Appends what fits of `rows` under `limit` and returns the room left. */
+  private def fill[E](sink: ArrayBuffer[E], rows: Array[E], limit: Long): Long = {
+    val room = (limit - sink.length).max(0L)
+    sink ++= rows.take(room.min(rows.length.toLong).toInt)
+    (limit - sink.length).max(0L)
+  }
+
+  /** Push pipeline with a DISTRIBUTED file sink: each put is written by
+    * the executors (append-mode parquet), nothing is collected to the
+    * driver — the production counterpart of the driver-side collector
+    * sinks above, which mirror flod's single-threaded terminals. Returns
+    * a handle whose `put` pushes a chunk synchronously; read the sink
+    * directory when done. */
+  def toPath[T: Encoder, U](spark: SparkSession, path: String)
+                           (transform: Dataset[T] => Dataset[U]): PushSink[T] = {
+    requireRowLocal(spark, transform)
+    new PushSink[T](spark, transform(_).write.mode("append").parquet(path))
+  }
+
+  /** Handle for [[toPath]] and [[teeToPath]]: synchronous put + close. */
+  final class PushSink[T: Encoder] private[Push] (spark: SparkSession, write: Dataset[T] => Unit)
+      extends PushHandle[T](spark) {
+    def put(chunk: Seq[T]): Unit = run(chunk)(write)
   }
 
   /** Fan-out push pipeline (demux/multicast) — the push-mode face of
     * flod's own roadmap item (README.md:46-47, "multiplexing and
-    * demultiplexing streams"): ONE MemoryStream source, ONE streaming
-    * query, TWO collector sinks with independent capacity limits and
-    * independent route transforms (overlapping routes multicast,
-    * disjoint ones demux). Each micro-batch is pinned (`persist`) so
-    * both routes observe identical rows.
+    * demultiplexing streams"): each put routes the SAME chunk through two
+    * row-local route transforms into TWO collector sinks with
+    * independent capacity limits (overlapping routes multicast, disjoint
+    * ones demux). Both routes read the driver's chunk, so they observe
+    * identical rows.
     *
     * Backpressure: `put` returns the MINIMUM remaining room across the
     * two sinks — flod's short-write halt contract (adapter.d:110-113)
@@ -127,43 +143,20 @@ object Push {
     * branch is full, else that branch drops data. 0 = stop. */
   final class PushTee[T: Encoder] private[Push] (spark: SparkSession,
       routeA: Dataset[T] => Dataset[T], limitA: Long,
-      routeB: Dataset[T] => Dataset[T], limitB: Long) {
-    private val source = MemoryStream[T](spark)
+      routeB: Dataset[T] => Dataset[T], limitB: Long) extends PushHandle[T](spark) {
+    requireRowLocal(spark, routeA)
+    requireRowLocal(spark, routeB)
     private val sinkA = ArrayBuffer.empty[T]
     private val sinkB = ArrayBuffer.empty[T]
 
-    private val query: StreamingQuery =
-      source.toDS().writeStream.outputMode("append")
-        .foreachBatch { (batch: Dataset[T], _: Long) =>
-          batch.persist()
-          try {
-            val ra = routeA(batch).collect()
-            val rb = routeB(batch).collect()
-            sinkA.synchronized {
-              sinkA ++= ra.take((limitA - sinkA.length).max(0L).toInt) }
-            sinkB.synchronized {
-              sinkB ++= rb.take((limitB - sinkB.length).max(0L).toInt) }
-          } finally { batch.unpersist(); () }
-          ()
-        }
-        .start()
-
     /** Push one chunk; returns min remaining room across both sinks. */
-    def put(chunk: Seq[T]): Long = {
-      source.addData(chunk)
-      query.processAllAvailable()
-      // int locals first: inlining the synchronized-block result into
-      // the long subtraction trips a scalac bytecode-verifier bug
-      val lenA: Int = sinkA.synchronized(sinkA.length)
-      val lenB: Int = sinkB.synchronized(sinkB.length)
-      val roomA = limitA - lenA.toLong
-      val roomB = limitB - lenB.toLong
-      math.max(0L, math.min(roomA, roomB))
+    def put(chunk: Seq[T]): Long = run(chunk) { ds =>
+      val roomA = fill(sinkA, routeA(ds).collect(), limitA)
+      math.min(roomA, fill(sinkB, routeB(ds).collect(), limitB))
     }
 
-    def resultA: Seq[T] = sinkA.synchronized(sinkA.toVector)
-    def resultB: Seq[T] = sinkB.synchronized(sinkB.toVector)
-    def close(): Unit = query.stop()
+    def resultA: Seq[T] = synchronized(sinkA.toVector)
+    def resultB: Seq[T] = synchronized(sinkB.toVector)
   }
 
   /** Build a [[PushTee]]: two routed, capacity-limited sinks off one
@@ -176,26 +169,19 @@ object Push {
   /** Demux with DISTRIBUTED sinks — the production face of [[tee]]:
     * [[PushTee]]'s collector sinks are driver-side by contract (they
     * mirror flod's single-threaded terminals), so at scale a demux
-    * needs this variant instead: ONE source, ONE streaming query, each
-    * micro-batch pinned (`persist`) and routed to TWO executor-written
-    * append-parquet sinks — rows never stage through the driver, and
-    * both routes observe the identical pinned batch (no recompute
-    * divergence between branches). No capacity limits: file sinks
-    * don't fill; backpressure is the durable store's problem. */
+    * needs this variant instead: each put routes the same chunk to TWO
+    * executor-written append-parquet sinks — rows never stage through
+    * the driver, and both routes read the identical chunk. No capacity
+    * limits: file sinks don't fill; backpressure is the durable store's
+    * problem. */
   def teeToPath[T: Encoder](spark: SparkSession,
                             routeA: Dataset[T] => Dataset[T], pathA: String,
                             routeB: Dataset[T] => Dataset[T], pathB: String): PushSink[T] = {
-    val source = MemoryStream[T](spark)
-    val query = source.toDS().writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[T], _: Long) =>
-        batch.persist()
-        try {
-          routeA(batch).write.mode("append").parquet(pathA)
-          routeB(batch).write.mode("append").parquet(pathB)
-        } finally { batch.unpersist(); () }
-        ()
-      }
-      .start()
-    new PushSink[T](source, query)
+    requireRowLocal(spark, routeA)
+    requireRowLocal(spark, routeB)
+    new PushSink[T](spark, { ds =>
+      routeA(ds).write.mode("append").parquet(pathA)
+      routeB(ds).write.mode("append").parquet(pathB)
+    })
   }
 }

@@ -47,20 +47,20 @@ class CombinatorialSpec extends AnyFunSuite {
   }
 
   // ---- the second drive-mode axis (reference pipeline.d:1352): the SAME
-  // chains × output lengths driven push-mode (DriveMode.source) through
-  // MemoryStream micro-batches, asserting byte-identical output to the
-  // batch run. Stream length and chunk size are mutually prime so chunk
-  // boundaries sweep all phases; n is smaller than the batch axis because
-  // each (chain, k) run is a full streaming query (micro-batch fidelity,
-  // SURVEY §7.4), not because semantics differ.
+  // chains × output lengths driven push-mode (DriveMode.source), one
+  // batch job per put, asserting byte-identical output to the batch run.
+  // Stream length and chunk size are mutually prime so chunk boundaries
+  // sweep all phases; n is smaller than the batch axis because every put
+  // is its own Spark job (per-put fidelity, SURVEY §7.4), not because
+  // semantics differ.
   private val pushN = 2503L
   private val pushChunk = 617
   private val pushLengths = Seq(0L, pushN / 3, pushN - 1, pushN, pushN + 1, 5 * pushN)
 
   // ---- third axis: the SAME chains driven push-mode into the
   // DISTRIBUTED file sink (Push.toPath) — executors write every
-  // micro-batch, nothing reaches the driver. The file sink makes no
-  // cross-batch ordering promise (order is a property of the collector
+  // put, nothing reaches the driver. The file sink makes no
+  // cross-put ordering promise (order is a property of the collector
   // sinks, which mirror flod's single-threaded terminals), so the
   // assertion is multiset equality of the full output.
   for ((cname, chain, expectFn) <- chains) {

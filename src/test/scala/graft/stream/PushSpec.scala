@@ -4,7 +4,7 @@ import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Push-mode (DriveMode.source) semantics — flod `pass!E` output-range
-  * pipelines (range.d:211-292) at micro-batch granularity. */
+  * pipelines (range.d:211-292), one batch job per put. */
 class PushSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -117,6 +117,65 @@ class PushSpec extends AnyFunSuite {
     val a = spark.read.parquet(dirA).collect().map(_.getLong(0)).sorted.toSeq
     val b = spark.read.parquet(dirB).collect().map(_.getLong(0)).sorted.toSeq
     assert(a == b && a == Seq(10L, 11L, 12L))
+  }
+
+  test("put on a closed Push fails instead of dropping the chunk") {
+    val p = Push.pass[Long](spark)
+    p.put(Seq(1L))
+    p.close()
+    intercept[IllegalStateException](p.put(Seq(2L, 3L)))
+    assert(p.result == Seq(1L))
+  }
+
+  test("put on a closed PushTee fails instead of dropping the chunk") {
+    val p = Push.tee[Long](spark, identity, 10L, identity, 10L)
+    p.put(Seq(1L))
+    p.close()
+    intercept[IllegalStateException](p.put(Seq(2L)))
+    assert(p.resultA == Seq(1L) && p.resultB == Seq(1L))
+  }
+
+  test("put on a closed PushSink fails instead of dropping the chunk") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pushclosed").toString + "/out"
+    val sink = Push.toPath[Long, Long](spark, dir)(identity)
+    sink.put(Seq(1L))
+    sink.close()
+    intercept[IllegalStateException](sink.put(Seq(2L)))
+    assert(spark.read.parquet(dir).collect().map(_.getLong(0)).toSeq == Seq(1L))
+  }
+
+  test("transforms that would keep state across puts are rejected at construction") {
+    def rejected(op: String)(build: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](build)
+      assert(e.getMessage.contains(op), e.getMessage)
+    }
+    rejected("Deduplicate")(Push[Long, Long](spark)(_.dropDuplicates()))
+    rejected("GlobalLimit")(Push[Long, Long](spark)(_.limit(3)))
+    rejected("Aggregate")(Push[Long, org.apache.spark.sql.Row](spark)(_.groupBy().count()))
+    rejected("Deduplicate")(Push.tee[Long](spark, identity, 1L, _.dropDuplicates(), 1L))
+    val dir = java.nio.file.Files.createTempDirectory("graft_pushreject").toString
+    rejected("GlobalLimit")(Push.toPath[Long, Long](spark, dir + "/out")(_.limit(3)))
+    rejected("Aggregate")(Push.teeToPath[Long](spark,
+      identity, dir + "/a", _.groupBy("value").count().as[(Long, Long)].map(_._1), dir + "/b"))
+  }
+
+  test("an open Push starts no streaming query") {
+    val before = spark.streams.active.map(_.id).toSet
+    val p = Push[Long, Long](spark)(_.map(_ + 1))
+    try {
+      p.put(Seq(1L, 2L))
+      assert(spark.streams.active.map(_.id).toSet == before)
+      assert(p.result == Seq(2L, 3L))
+    } finally p.close()
+  }
+
+  test("each put is one partition: mapPartitions sees every put whole") {
+    val p = Push[Long, Long](spark)(_.mapPartitions(it => Iterator(it.size.toLong)))
+    try {
+      p.put(0L until 10000L)
+      p.put(0L until 7L)
+      assert(p.result == Seq(10000L, 7L))
+    } finally p.close()
   }
 
   test("firstSeen streaming dedup drops repeats across micro-batches") {
