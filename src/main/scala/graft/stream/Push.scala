@@ -1,23 +1,31 @@
 package graft.stream
 
+import org.apache.spark.{Partition, SparkContext, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
 
 import scala.collection.mutable.ArrayBuffer
+import scala.reflect.ClassTag
 
 /** Push-mode pipelines — the reference's output-range front-end
   * (`pass!E`, flod range.d:211-237; DriveMode.source, SURVEY.md §3.3):
   * external code pushes chunks in, the pipeline runs sink-ward.
   *
-  * Spark mapping: each `put` is one batch job over a one-partition
-  * Dataset of the chunk, run on the calling thread (the documented
-  * fidelity bound, SURVEY.md §7.4 — flod's fiber switch is per-buffer,
-  * ours is per-put job). No streaming query runs, so a put pays no WAL,
-  * commit log or trigger coordination. That is exact only because the
-  * transform must be row-local (map, filter, flatMap, select): its output
-  * cannot depend on where one put ends and the next begins. A transform
-  * that would carry state across puts (dedup, limit, aggregation) is
-  * rejected when the pipeline is built; stateful streams use [[StreamOps]].
+  * Spark mapping: the transform is planned once, when the pipeline is
+  * built; each `put` binds its chunk to a one-partition source and runs
+  * that plan's job on the calling thread (the documented fidelity bound,
+  * SURVEY.md §7.4 — flod's fiber switch is per-buffer, ours is per-put
+  * job). A put pays no analysis, optimization or codegen, and no streaming
+  * query runs. That is exact only because the transform must be row-local
+  * (map, filter, flatMap, select), so its output cannot depend on where one
+  * put ends and the next begins, and deterministic, so the one plan gives
+  * every put what a fresh plan would. A stateful transform (dedup, limit,
+  * aggregation) or one the planner would freeze (`rand()`, `uuid()`,
+  * `current_timestamp()`) is rejected when the pipeline is built; stateful
+  * streams use [[StreamOps]].
   *
   * Backpressure: flod halts the driving loop when a sink accepts a short
   * count (adapter.d:110-113). `Push.take(n)` reproduces that contract:
@@ -27,13 +35,13 @@ import scala.collection.mutable.ArrayBuffer
 final class Push[T: Encoder, U](spark: SparkSession,
                                 transform: Dataset[T] => Dataset[U],
                                 limit: Option[Long] = None) extends PushHandle[T](spark) {
-  Push.requireRowLocal(spark, transform)
+  private val job = Push.job(planOnce(transform))
   private val sink = ArrayBuffer.empty[U]
 
   /** Push one chunk; returns how many further elements the pipeline will
     * accept (0 = stop, short-write backpressure). */
-  def put(chunk: Seq[T]): Long = run(chunk) { ds =>
-    val rows = transform(ds).collect()
+  def put(chunk: Seq[T]): Long = run(chunk) {
+    val rows = job()
     limit match {
       case Some(l) => Push.fill(sink, rows, l)
       case None => sink ++= rows; Long.MaxValue
@@ -44,21 +52,71 @@ final class Push[T: Encoder, U](spark: SparkSession,
   def result: Seq[U] = synchronized(sink.toVector)
 }
 
-/** What every push handle shares: puts run one at a time on the calling
-  * thread, each over a one-partition Dataset of its chunk, and a put on a
-  * closed handle fails instead of dropping the chunk. One partition, not
-  * a `LocalRelation` (which splits a put across partitions), so a
-  * `mapPartitions` transform sees each put whole. */
+/** What every push handle shares: `input`, a Dataset over a one-partition
+  * source that a put binds to its chunk, so a `mapPartitions` transform
+  * sees each put whole. Puts run one at a time on the calling thread, and
+  * a put on a closed handle fails instead of dropping the chunk. */
 sealed abstract class PushHandle[T: Encoder](spark: SparkSession) {
+  private val source = new ChunkRDD[T](spark.sparkContext)(implicitly[Encoder[T]].clsTag)
+  private val input = spark.createDataset(source)
   private var closed = false
 
-  protected final def run[R](chunk: Seq[T])(body: Dataset[T] => R): R = synchronized {
+  /** Runs `body` with `chunk` bound to `input`. The slot is cleared even
+    * when the job fails, so an idle handle does not hold its last chunk. */
+  protected final def run[R](chunk: Seq[T])(body: => R): R = synchronized {
     if (closed) throw new IllegalStateException("put on a closed push pipeline")
-    body(spark.createDataset(
-      spark.sparkContext.parallelize(chunk, 1)(implicitly[Encoder[T]].clsTag)))
+    source.part.chunk = chunk
+    try body finally source.part.chunk = Nil
+  }
+
+  /** `f` over the bound input, once it is shown that one plan serves
+    * every put. Every node between `f`'s output and the input must map,
+    * filter or reshape single rows, so running it per put gives the rows
+    * it would give over the whole pushed stream. And no expression may be
+    * one the planner fixes at planning time — a random seed, the clock, a
+    * subquery's result — since the plan is never made again. */
+  protected final def planOnce[U](f: Dataset[T] => Dataset[U]): Dataset[U] = {
+    val leaf = input.queryExecution.analyzed
+    val ds = f(input)
+    val plan = ds.queryExecution.analyzed
+    def spans(p: LogicalPlan): Seq[String] = if (p eq leaf) Nil else (p match {
+      case _: Project | _: Filter | _: TypedFilter | _: MapElements | _: MapPartitions |
+           _: SerializeFromObject | _: DeserializeToObject | _: AppendColumns |
+           _: Generate | _: SubqueryAlias => Nil
+      case _ => Seq(p.nodeName)
+    }) ++ p.children.flatMap(spans)
+    val stateful = spans(plan).distinct
+    require(stateful.isEmpty, s"a push transform must be row-local (map, filter, " +
+      s"flatMap, select); ${stateful.mkString(", ")} would span puts — use StreamOps")
+    def frozen(e: Expression): Boolean = e match {
+      case _: SubqueryExpression => true
+      case _ => (!e.deterministic && e.children.forall(_.deterministic)) ||
+        (e.containsPattern(CURRENT_LIKE) && !e.children.exists(_.containsPattern(CURRENT_LIKE)))
+    }
+    val fixed = plan.flatMap(_.expressions.flatMap(_.collect {
+      case e if frozen(e) => e.prettyName
+    })).distinct
+    require(fixed.isEmpty, s"a push transform is planned once, when the pipeline is built, " +
+      s"so it must be deterministic; ${fixed.mkString(", ")} would repeat that plan's value on every put")
+    ds
   }
 
   def close(): Unit = synchronized { closed = true }
+}
+
+/** The push source. The chunk rides in the partition, which is serialized
+  * into each task as `parallelize`'s is, not in the RDD, which every job
+  * broadcasts in its task binary. */
+private[stream] final class ChunkRDD[T: ClassTag](sc: SparkContext) extends RDD[T](sc, Nil) {
+  @transient private[stream] val part = new ChunkPartition[T]
+  override protected def getPartitions: Array[Partition] = Array(part)
+  override def compute(split: Partition, context: TaskContext): Iterator[T] =
+    split.asInstanceOf[ChunkPartition[T]].chunk.iterator
+}
+
+private[stream] final class ChunkPartition[T] extends Partition {
+  @volatile var chunk: Seq[T] = Nil
+  override def index: Int = 0
 }
 
 object Push {
@@ -85,23 +143,14 @@ object Push {
     try { producer(p.put); p.result } finally p.close()
   }
 
-  /** Fails unless `f` is row-local: applied to an empty input, every node
-    * of its analyzed plan maps, filters or reshapes single rows, and its
-    * only leaf is that input. Only then does running `f` once per put
-    * give the same rows as running it over the whole pushed stream. */
-  private def requireRowLocal[T: Encoder, U](spark: SparkSession,
-                                             f: Dataset[T] => Dataset[U]): Unit = {
-    val input = spark.emptyDataset[T]
-    val leaf = input.queryExecution.analyzed
-    val stateful = f(input).queryExecution.analyzed.flatMap {
-      case _: Project | _: Filter | _: TypedFilter | _: MapElements | _: MapPartitions |
-           _: SerializeFromObject | _: DeserializeToObject | _: AppendColumns |
-           _: Generate | _: SubqueryAlias => None
-      case p if p eq leaf => None
-      case p => Some(p.nodeName)
-    }.distinct
-    require(stateful.isEmpty, s"a push transform must be row-local (map, filter, " +
-      s"flatMap, select); ${stateful.mkString(", ")} would span puts — use StreamOps")
+  /** `ds`'s lineage, built once, as a job that returns its rows. It runs
+    * through `runJob` rather than `RDD.collect`, whose per-call operation
+    * scope costs 3–5 ms of each put. */
+  private def job[E](ds: Dataset[E]): () => Array[E] = {
+    val rdd = ds.rdd
+    implicit val ct: ClassTag[E] = ds.encoder.clsTag
+    val all = (it: Iterator[E]) => it.toArray
+    () => rdd.sparkContext.runJob(rdd, all).head
   }
 
   /** Appends what fits of `rows` under `limit` and returns the room left. */
@@ -118,15 +167,18 @@ object Push {
     * a handle whose `put` pushes a chunk synchronously; read the sink
     * directory when done. */
   def toPath[T: Encoder, U](spark: SparkSession, path: String)
-                           (transform: Dataset[T] => Dataset[U]): PushSink[T] = {
-    requireRowLocal(spark, transform)
-    new PushSink[T](spark, transform(_).write.mode("append").parquet(path))
-  }
+                           (transform: Dataset[T] => Dataset[U]): PushSink[T] =
+    new PushSink[T](spark, Seq(transform -> path))
 
-  /** Handle for [[toPath]] and [[teeToPath]]: synchronous put + close. */
-  final class PushSink[T: Encoder] private[Push] (spark: SparkSession, write: Dataset[T] => Unit)
-      extends PushHandle[T](spark) {
-    def put(chunk: Seq[T]): Unit = run(chunk)(write)
+  /** Handle for [[toPath]] and [[teeToPath]]: synchronous put + close. Each
+    * route is planned once; a put appends every route's rows to its path. */
+  final class PushSink[T: Encoder] private[Push] (spark: SparkSession,
+      routes: Seq[(Dataset[T] => Dataset[_], String)]) extends PushHandle[T](spark) {
+    private val writes = routes.map { case (f, path) => planOnce(f.andThen(_.toDF())) -> path }
+
+    def put(chunk: Seq[T]): Unit = run(chunk) {
+      writes.foreach { case (ds, path) => ds.write.mode("append").parquet(path) }
+    }
   }
 
   /** Fan-out push pipeline (demux/multicast) — the push-mode face of
@@ -134,7 +186,7 @@ object Push {
     * demultiplexing streams"): each put routes the SAME chunk through two
     * row-local route transforms into TWO collector sinks with
     * independent capacity limits (overlapping routes multicast, disjoint
-    * ones demux). Both routes read the driver's chunk, so they observe
+    * ones demux). Both routes read the bound chunk, so they observe
     * identical rows.
     *
     * Backpressure: `put` returns the MINIMUM remaining room across the
@@ -144,15 +196,15 @@ object Push {
   final class PushTee[T: Encoder] private[Push] (spark: SparkSession,
       routeA: Dataset[T] => Dataset[T], limitA: Long,
       routeB: Dataset[T] => Dataset[T], limitB: Long) extends PushHandle[T](spark) {
-    requireRowLocal(spark, routeA)
-    requireRowLocal(spark, routeB)
+    private val jobA = job(planOnce(routeA))
+    private val jobB = job(planOnce(routeB))
     private val sinkA = ArrayBuffer.empty[T]
     private val sinkB = ArrayBuffer.empty[T]
 
     /** Push one chunk; returns min remaining room across both sinks. */
-    def put(chunk: Seq[T]): Long = run(chunk) { ds =>
-      val roomA = fill(sinkA, routeA(ds).collect(), limitA)
-      math.min(roomA, fill(sinkB, routeB(ds).collect(), limitB))
+    def put(chunk: Seq[T]): Long = run(chunk) {
+      val roomA = fill(sinkA, jobA(), limitA)
+      math.min(roomA, fill(sinkB, jobB(), limitB))
     }
 
     def resultA: Seq[T] = synchronized(sinkA.toVector)
@@ -176,12 +228,6 @@ object Push {
     * problem. */
   def teeToPath[T: Encoder](spark: SparkSession,
                             routeA: Dataset[T] => Dataset[T], pathA: String,
-                            routeB: Dataset[T] => Dataset[T], pathB: String): PushSink[T] = {
-    requireRowLocal(spark, routeA)
-    requireRowLocal(spark, routeB)
-    new PushSink[T](spark, { ds =>
-      routeA(ds).write.mode("append").parquet(pathA)
-      routeB(ds).write.mode("append").parquet(pathB)
-    })
-  }
+                            routeB: Dataset[T] => Dataset[T], pathB: String): PushSink[T] =
+    new PushSink[T](spark, Seq(routeA -> pathA, routeB -> pathB))
 }

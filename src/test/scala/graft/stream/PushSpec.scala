@@ -1,10 +1,11 @@
 package graft.stream
 
 import graft.TestSpark
+import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Push-mode (DriveMode.source) semantics — flod `pass!E` output-range
-  * pipelines (range.d:211-292), one batch job per put. */
+  * pipelines (range.d:211-292), planned once and run as one job per put. */
 class PushSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -157,6 +158,71 @@ class PushSpec extends AnyFunSuite {
     rejected("GlobalLimit")(Push.toPath[Long, Long](spark, dir + "/out")(_.limit(3)))
     rejected("Aggregate")(Push.teeToPath[Long](spark,
       identity, dir + "/a", _.groupBy("value").count().as[(Long, Long)].map(_._1), dir + "/b"))
+  }
+
+  test("transforms whose values the planner would freeze are rejected at construction") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{current_timestamp, expr, lit, rand}
+    def rejected(name: String)(build: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](build)
+      assert(e.getMessage.contains(name), e.getMessage)
+    }
+    def route(f: Dataset[Long] => DataFrame): Dataset[Long] => Dataset[Long] =
+      ds => f(ds).select(lit(1L).as("value")).as[Long]
+    val dir = java.nio.file.Files.createTempDirectory("graft_pushfrozen").toString
+    for ((name, f) <- Seq[(String, Dataset[Long] => DataFrame)](
+           "rand" -> (_.select(rand())),
+           "uuid" -> (_.select(expr("uuid()"))),
+           "current_timestamp" -> (_.select(current_timestamp())))) {
+      rejected(name)(Push[Long, org.apache.spark.sql.Row](spark)(f))
+      rejected(name)(Push.tee[Long](spark, identity, 1L, route(f), 1L))
+      rejected(name)(Push.toPath[Long, org.apache.spark.sql.Row](spark, s"$dir/$name")(f))
+      rejected(name)(Push.teeToPath[Long](spark, route(f), s"$dir/$name-a", identity, s"$dir/$name-b"))
+    }
+    rejected("scalarsubquery")(Push[Long, Long](spark)(
+      _.filter(expr("value > (SELECT max(id) FROM range(3))"))))
+  }
+
+  test("a failed put propagates, and the handle stays usable with only the next chunk bound") {
+    val p = Push[Long, Long](spark)(_.map(x => if (x == 13L) sys.error("boom") else x))
+    try {
+      p.put(Seq(1L, 2L))
+      val e = intercept[Exception](p.put(Seq(12L, 13L)))
+      assert(e.getMessage.contains("boom"), e.getMessage)
+      p.put(Seq(14L))
+      assert(p.result == Seq(1L, 2L, 14L))
+    } finally p.close()
+  }
+
+  test("two handles on one session keep separate, ordered results") {
+    val a = Push[Long, Long](spark)(_.map(_ + 100))
+    val b = Push[Long, Long](spark)(_.map(_ * -1))
+    try {
+      a.put(Seq(1L, 2L)); b.put(Seq(3L)); a.put(Seq(4L)); b.put(Seq(5L, 6L))
+      assert(a.result == Seq(101L, 102L, 104L))
+      assert(b.result == Seq(-3L, -5L, -6L))
+      // and from two threads at once: each handle binds only its own source
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val runs = Seq(a -> 10L, b -> 20L).map { case (h, base) =>
+        Future((0L until 8L).foreach(i => h.put(Seq(base + i))))
+      }
+      runs.foreach(Await.result(_, scala.concurrent.duration.Duration(120, "s")))
+      assert(a.result.drop(3) == (110L until 118L))
+      assert(b.result.drop(3) == (20L until 28L).map(-_))
+    } finally { a.close(); b.close() }
+  }
+
+  test("an empty put after a non-empty one adds nothing") {
+    val p = Push[Long, Long](spark)(_.map(_ * 10))
+    val t = Push.tee[Long](spark, identity, 10L, identity, 10L)
+    try {
+      assert(p.put(Seq(1L, 2L)) == Long.MaxValue)
+      assert(p.put(Nil) == Long.MaxValue)
+      assert(p.result == Seq(10L, 20L))
+      t.put(Seq(1L)); assert(t.put(Nil) == 9L)
+      assert(t.resultA == Seq(1L) && t.resultB == Seq(1L))
+    } finally { p.close(); t.close() }
   }
 
   test("an open Push starts no streaming query") {
