@@ -98,7 +98,7 @@ object Bench {
       }
       val err = runs.collectFirst { case (_, Some(e)) => e }
       // Drop THIS gate's debris before the next one runs: gates pin
-      // intermediates via localCheckpoint (RDD blocks in the block
+      // intermediates via Materialize.pin (RDD blocks in the block
       // manager) and some register temp views/cached relations — across
       // 350+ gates in one JVM the accumulation turns the late
       // alphabetical tail into a storage-eviction storm (measured r13:

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: dump the formatted physical plan of every declared query
   * (and the flagship) for plan review — pushdown, pruning, join strategy,

@@ -2,46 +2,40 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Pluggable materialization strategy for the iterative and diamond
-  * plans (connected components, shingle/signature tables, sketch cells):
-  * every operator that must pin an intermediate result takes a
-  * `materialize: Materialize.Strategy` parameter instead of hard-coding
-  * `localCheckpoint()`, so the single-box default and the 100 TB
-  * durability story are the SAME code path with a different argument.
+/** The one place graft pins an intermediate result: iterate-loop state
+  * (connected components, PageRank, suffix-array ladders), diamond
+  * tables read by several consumers (shingle/signature tables, sketch
+  * cells) and range-partitioned tables whose phases must agree on the
+  * same sampled boundaries (TrainPrep.packSequences). Every operator
+  * calls [[pin]]; none calls `localCheckpoint()` or `checkpoint()`.
   *
-  * - [[local]] (the default): `localCheckpoint()` — executor-memory/disk
-  *   blocks, no HDFS round-trip. Fast, but blocks die with their
-  *   executor: on a real cluster a single executor loss mid-iteration
-  *   restarts the whole lineage-truncated computation.
-  * - [[reliable]]: `checkpoint()` against
-  *   `spark.sparkContext.setCheckpointDir(...)` — survives executor
-  *   loss; the right strategy for multi-hour 100 TB runs. Requires the
-  *   caller to have set a checkpoint dir (ComponentsSpec exercises it).
-  * - Any other `DataFrame => DataFrame` works — e.g. write-then-read of
-  *   a parquet table for cross-job reuse of a signature table. The
-  *   contract: the returned frame must be PINNED (same rows on every
-  *   consumption) and its lineage truncated; a pass-through identity
-  *   breaks operators whose phases must agree on sampled partition
-  *   boundaries (TrainPrep.packSequences) and re-executes diamond
-  *   lineages (measured: ReuseExchange does not fire across AQE's
-  *   broadcast conversion, SCALE.md round 3).
+  * How durable a pin is follows from the session, not from an option:
+  * - a checkpoint dir is set (`spark.checkpoint.dir`, or
+  *   `sparkContext.setCheckpointDir`): `checkpoint()`. The blocks are
+  *   files in that dir and survive executor loss, which a multi-hour
+  *   100 TB run needs.
+  * - no checkpoint dir: `localCheckpoint()`. Executor-memory/disk
+  *   blocks, no file-system round-trip; they die with their executor,
+  *   so on a cluster one executor loss mid-iteration recomputes the
+  *   truncated lineage.
+  *
+  * Either way the returned frame is PINNED (same rows on every
+  * consumption) and its lineage truncated. A pass-through identity
+  * would break operators whose phases must agree on sampled partition
+  * boundaries and re-execute diamond lineages (measured: ReuseExchange
+  * does not fire across AQE's broadcast conversion, SCALE.md round 3).
   */
 object Materialize {
-  type Strategy = DataFrame => DataFrame
-
-  // Both strategies pass the checkpointed frame through
-  // [[org.apache.spark.sql.GraftStatsReset]]: checkpoints carry the
-  // origin plan's ESTIMATED stats, which compound multiplicatively
-  // across iterate-loop rounds until the planner wedges in BigInteger
-  // arithmetic (see GraftStatsReset's header for the mechanism and the
-  // q358 incident). The reset caps the carried estimate; the pinned
-  // blocks and lineage truncation are untouched.
-
-  /** Executor-memory blocks; the single-process default. */
-  val local: Strategy =
-    df => org.apache.spark.sql.GraftStatsReset(df.localCheckpoint())
-
-  /** Durable checkpoint — survives executor loss; needs a checkpoint dir. */
-  val reliable: Strategy =
-    df => org.apache.spark.sql.GraftStatsReset(df.checkpoint())
+  /** Eagerly pin `df`, then pass it through
+    * [[org.apache.spark.sql.GraftStatsReset]]: checkpoints carry the
+    * origin plan's ESTIMATED stats, which compound multiplicatively
+    * across iterate-loop rounds until the planner wedges in BigInteger
+    * arithmetic (see GraftStatsReset's header for the mechanism and the
+    * q358 incident). The reset caps the carried estimate; the pinned
+    * blocks and lineage truncation are untouched. */
+  def pin(df: DataFrame): DataFrame = {
+    val durable = df.sparkSession.sparkContext.getCheckpointDir.isDefined
+    org.apache.spark.sql.GraftStatsReset(
+      if (durable) df.checkpoint() else df.localCheckpoint())
+  }
 }

@@ -225,10 +225,8 @@ object Flow {
 
   /** Text-file line source — the scalable byLine: the text source splits
     * on lineSep inside the (splittable) scan itself. */
-  def readLines(spark: SparkSession, path: String, lineSep: String = "\n"): Flow[String] = {
-    implicit val e: Encoder[String] = org.apache.spark.sql.Encoders.STRING
+  def readLines(spark: SparkSession, path: String, lineSep: String = "\n"): Flow[String] =
     new Flow(spark.read.option("lineSep", lineSep).textFile(path))
-  }
 
   /** S5, arrival-driven — the STREAMING analog of readLines (reference
     * push mode, where the source drives the pipeline as data arrives:

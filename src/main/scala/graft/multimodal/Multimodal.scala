@@ -435,7 +435,6 @@ object Multimodal {
   /** A binary media table derived deterministically from `documents`
     * (the corpus ships no real media; payload = UTF-8 text bytes). */
   def mediaTable(s: SparkSession, dir: String): Dataset[MediaRow] = {
-    import s.implicits._
     graft.Tables.documents(s, dir)
       .select(col("doc_id").as("media_id"), col("text").cast("binary").as("content"))
       .as[MediaRow]
@@ -542,7 +541,6 @@ object Multimodal {
     * blocks, kept = ceil(nb/3); kept bytes = 64·kept minus the shortfall
     * when the final partial block happens to be sampled. */
   def frameStats(s: SparkSession, dir: String, every: Int = 3): DataFrame = {
-    import s.implicits._
     mediaTable(s, dir).mapPartitions { it =>
       it.map { r =>
         val frames = StubCodec.sampleFrames(r.content, every)
@@ -753,7 +751,6 @@ object Multimodal {
 
   private def mediaFixture(s: SparkSession, dir: String, kind: String)
       (build: => Dataset[MediaRow]): Dataset[MediaRow] = {
-    import s.implicits._
     val path = mediaMemos(kind)(dir) {
       val out = graft.core.Scratch.tempDir(s"graft-$kind-media") +
         "/media.parquet"
@@ -906,7 +903,6 @@ object Multimodal {
     // dimension off) breaks the row hash — the video twin of q135.
     graft.QueryDef("q194_video_meta",
       (s, d) => {
-        import s.implicits._
         videoTable(s, d).mapPartitions(_.map { r =>
           val (w, h, n, delay) = GifCodec.frameInfo(r.content)
           VideoMetaRow(r.media_id, "video/gif", w, h, n.toLong, delay)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{QueryDef, Tables}
+import graft.Materialize.pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -118,7 +119,7 @@ object Ann {
     val e = embeddings
       .withColumn("cell", cellCol(col("v"), cents))
       .withColumn("nrm", Vectors.norm2(col("v")))
-      .localCheckpoint()
+      .transform(pin)
     val q = e.where(queryFilter)
       .select(explode(probeCells(col("v"), cents, nprobe)).as("cell"),
         col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
@@ -166,7 +167,7 @@ object Ann {
   /** Bucket-assignment table (vec_id, v, bucket, nrm) over a prepared
     * embedding frame — q69's pre-materialization lineage, exposed as a
     * named builder so PlanSpec's anti-pattern audit can see the subtree
-    * that localCheckpoint truncates out of the declared query's plan. */
+    * that the pin truncates out of the declared query's plan. */
   def bucketTable(embeddings: DataFrame, dim: Int,
                   nBits: Int = 8, seed: Long = 42L): DataFrame =
     embeddings
@@ -540,7 +541,7 @@ object Ann {
           Tables.embeddings(s, d)
             .select(col("vec_id"), Vectors.asDouble(col("embedding")).as("v")),
           dim = 64, nBits = 8, seed = 42L)
-          .localCheckpoint()
+          .transform(pin)
         val a = e.select(col("bucket"), col("vec_id").as("id_a"),
           col("v").as("va"), col("nrm").as("na"))
         val b = e.select(col("bucket"), col("vec_id").as("id_b"),

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{QueryDef, Tables}
+import graft.Materialize.pin
 import graft.core.{Codec, Flow, Tar}
 import org.apache.spark.sql.functions._
 
@@ -114,7 +115,7 @@ object CodecOps {
     // the member name; per-row length + md5-prefix digest vs the
     // oracle's arithmetic over `documents`). The READ side is the
     // 100 TB shape: one task per archive, no shuffle, O(member) memory,
-    // nothing driver-side beyond the sorted file list. localCheckpoint
+    // nothing driver-side beyond the sorted file list. Pin
     // before scratch cleanup (q144's hygiene).
     QueryDef("q323_archive_extract",
       (s, d) => {
@@ -145,7 +146,7 @@ object CodecOps {
               conv(substring(md5(col("dec").cast("binary")), 1, 8), 16, 10)
                 .cast("long").as("digest"))
             .orderBy("doc_id")
-            .localCheckpoint()
+            .transform(pin)
         } finally {
           java.nio.file.Files.list(dir).forEach(p => java.nio.file.Files.delete(p))
           java.nio.file.Files.delete(dir)
@@ -168,7 +169,7 @@ object CodecOps {
     // zstd inflate → validating untar) plus sample reassembly by
     // basename; the oracle re-derives text digest + class field per
     // doc, so a dropped member, a broken adjacency split mid-sample, or
-    // any codec slip breaks rows. Scratch hygiene: localCheckpoint before
+    // any codec slip breaks rows. Scratch hygiene: pin before
     // cleanup (q144).
     QueryDef("q327_webdataset_roundtrip",
       (s, d) => {
@@ -204,7 +205,7 @@ object CodecOps {
                   .cast("long"))).as("digest"),
               max(when(col("ext") === "cls", col("payload"))).as("lang"))
             .orderBy("doc_id")
-            .localCheckpoint()
+            .transform(pin)
         } finally {
           java.nio.file.Files.list(java.nio.file.Paths.get(dir))
             .forEach(p => java.nio.file.Files.delete(p))
@@ -232,7 +233,7 @@ object CodecOps {
     // prefix digest vs the oracle's arithmetic over `documents`), with
     // the shard attribution proving which url carried it. At 100 TB
     // this is the ingest shape: n urls → n tasks, O(chunk) memory,
-    // nothing through the driver. localCheckpoint before the server
+    // nothing through the driver. Pin before the server
     // stops (the q144 hygiene — the result must not depend on scratch
     // infrastructure outliving query construction).
     QueryDef("q352_http_fetch",
@@ -279,7 +280,7 @@ object CodecOps {
               conv(substring(md5(col("dec").cast("binary")), 1, 8), 16, 10)
                 .cast("long").as("digest"))
             .orderBy("doc_id")
-            .localCheckpoint()
+            .transform(pin)
         } finally {
           server.stop(0)
           pool.shutdown()

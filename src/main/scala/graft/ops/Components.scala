@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{Materialize, QueryDef, Tables}
+import graft.{QueryDef, Tables}
+import graft.Materialize.pin
 import graft.core.Substrate
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -46,10 +47,10 @@ import org.apache.spark.sql.functions._
   * small-star (Kiveris et al., MapReduce CC) — more rounds in
   * practice, same contraction idea.
   *
-  * Durability: every per-round pin goes through the injectable
-  * `materialize` strategy (graft.Materialize) — `local` for single-box,
-  * `reliable` for clusters where an executor loss in round 12 must not
-  * restart the whole iteration (ComponentsSpec proves the swap).
+  * Durability: every per-round pin is `graft.Materialize.pin`, a
+  * reliable checkpoint when the session has a checkpoint dir (so an
+  * executor loss in round 12 does not restart the whole iteration) and
+  * a local one otherwise; ComponentsSpec runs both and compares.
   */
 object Components {
 
@@ -58,13 +59,12 @@ object Components {
     * including isolated ones); `pairs`: columns `id_a`, `id_b`
     * (undirected, need not be deduplicated). Returns (`node`, `lbl`). */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
-                          maxIter: Int = 25,
-                          materialize: Materialize.Strategy = Materialize.local): DataFrame = {
-    var labels = materialize(
+                          maxIter: Int = 25): DataFrame = {
+    var labels = pin(
       nodes.select(col("id").as("node"), col("id").as("lbl")))
     // contracted edge table in supernode (current-label) space:
     // symmetric, loop-free, dedup'd; round 1 sees the raw edges
-    var e = materialize(
+    var e = pin(
       pairs.select(col("id_a").as("u"), col("id_b").as("v"))
         .unionByName(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
         .where(col("u") =!= col("v")).distinct())
@@ -73,18 +73,18 @@ object Components {
     while (!converged && iter < maxIter) {
       // 1. merge map: every supernode → min({itself} ∪ neighbors);
       // movers only, so the map is a strictly-decreasing function
-      var t = materialize(e.groupBy("u").agg(min(col("v")).as("m"))
+      var t = pin(e.groupBy("u").agg(min(col("v")).as("m"))
         .select(col("u").as("s"), least(col("u"), col("m")).as("t"))
         .where(col("s") =!= col("t")))
       // 2. path-compress T to its fixpoint (T ← T∘T, log₂(chain)
       // compositions of a supernode-sized table).
-      t = compressMap(t, materialize)
+      t = compressMap(t)
       // 3. apply: rewrite node labels (the round's one corpus-sized
       // join) and contract the edge table through the compressed map
-      labels = materialize(labels
+      labels = pin(labels
         .join(t.select(col("s").as("lbl"), col("t")), Seq("lbl"), "left")
         .select(col("node"), coalesce(col("t"), col("lbl")).as("lbl")))
-      e = materialize(e
+      e = pin(e
         .join(t.select(col("s").as("u"), col("t").as("tu")), Seq("u"), "left")
         .join(t.select(col("s").as("v"), col("t").as("tv")), Seq("v"), "left")
         .select(coalesce(col("tu"), col("u")).as("u"),
@@ -104,8 +104,7 @@ object Components {
     * each probe a semi-join limit-1. Shared by [[connectedComponents]]'
     * strictly-decreasing merge maps and [[boruvkaMst]]'s 2-cycle-broken
     * pseudo-forest. */
-  private def compressMap(t0: DataFrame,
-      materialize: Materialize.Strategy): DataFrame = {
+  private def compressMap(t0: DataFrame): DataFrame = {
     var t = t0
     var comp = 0
     while (t.select(col("t").as("s")).join(t, Seq("s"), "left_semi")
@@ -113,7 +112,7 @@ object Components {
       require(comp < 64, "compressMap: no fixpoint in 64 squarings — " +
         "impossible for an acyclic functional map; " +
         "indicates a corrupt edge table")
-      t = materialize(t.as("a")
+      t = pin(t.as("a")
         .join(t.select(col("s").as("cs"), col("t").as("ct")),
           col("a.t") === col("cs"), "left")
         .select(col("a.s").as("s"), coalesce(col("ct"), col("a.t")).as("t")))
@@ -126,14 +125,11 @@ object Components {
     * connected components → every document labeled with its canonical
     * (minimum) doc_id and its cluster size. Survivor set = rows where
     * doc_id == canonical_id. */
-  def dedupClusters(docs: DataFrame,
-                    materialize: Materialize.Strategy = Materialize.local,
-                    pairs: Option[DataFrame] = None): DataFrame = {
+  def dedupClusters(docs: DataFrame, pairs: Option[DataFrame] = None): DataFrame = {
     val lab = connectedComponents(
       docs.select(col("doc_id").as("id")),
-      pairs.getOrElse(Dedup.dedupPipeline(docs, materialize = materialize))
-        .select("id_a", "id_b"),
-      materialize = materialize)
+      pairs.getOrElse(Dedup.dedupPipeline(docs))
+        .select("id_a", "id_b"))
     val sizes = lab.groupBy("lbl").agg(count(lit(1)).as("cluster_size"))
     lab.join(sizes, "lbl")
       .select(col("node").as("doc_id"), col("lbl").as("canonical_id"),
@@ -152,9 +148,8 @@ object Components {
     * exactly the hot key partial-agg absorbs). The representative
     * table then joins back on the 8-byte cluster key. */
   def canonicalize(docs: DataFrame,
-                   materialize: Materialize.Strategy = Materialize.local,
                    pairs: Option[DataFrame] = None): DataFrame = {
-    val clusters = materialize(dedupClusters(docs, materialize, pairs))
+    val clusters = pin(dedupClusters(docs, pairs))
     val withLen = clusters
       .join(docs.select(col("doc_id"), col("n_chars")), "doc_id")
     val rep = withLen.groupBy("canonical_id")
@@ -183,26 +178,25 @@ object Components {
     * u, contribution sum keyed by v, dangling anti-join — every key an
     * 8-byte id; the dangling mass is a 1-row broadcast, N a driver
     * literal (corpus-independent size). Each round's scores go through
-    * `materialize` (two consumers: contribution join + dangling sum). */
+    * `pin` (two consumers: contribution join + dangling sum). */
   def pageRank(nodes: DataFrame, pairs: DataFrame, iters: Int = 5,
-               materialize: Materialize.Strategy = Materialize.local,
                weightCol: Option[String] = None): DataFrame = {
     // weighted form: s(u) splits over out-edges ∝ edge weight (here the
     // verified jaccard — a strong near-dup tie carries more centrality
     // than a borderline one); w = 1.0 recovers the classic uniform
     // split bit-exactly (score·1.0/Σ1.0 ≡ score/deg in IEEE terms)
     val w = weightCol.map(col).getOrElse(lit(1.0)).as("w")
-    val edges = materialize(
+    val edges = pin(
       pairs.select(col("id_a").as("u"), col("id_b").as("v"), w)
         .unionByName(pairs.select(col("id_b").as("u"), col("id_a").as("v"), w)))
     // deg and the node base are probed EVERY round (contrib join,
     // dangling anti-join, final attach) — pin them once or each of the
     // 5 rounds re-runs the degree aggregation and the node scan
-    val deg = materialize(
+    val deg = pin(
       edges.groupBy("u").agg(sum(col("w")).as("deg")))
-    val base = materialize(nodes.select(col("id").as("node")))
+    val base = pin(nodes.select(col("id").as("node")))
     val n = base.count().toDouble
-    var scores = materialize(base.withColumn("score", lit(1.0 / n)))
+    var scores = pin(base.withColumn("score", lit(1.0 / n)))
     for (_ <- 1 to iters) {
       val contrib = scores
         .join(edges, scores("node") === edges("u"))
@@ -212,7 +206,7 @@ object Components {
       val dangling = scores
         .join(deg.select(col("u").as("node")), Seq("node"), "left_anti")
         .agg(coalesce(sum(col("score")), lit(0.0)).as("dm"))
-      scores = materialize(base
+      scores = pin(base
         .join(contrib, Seq("node"), "left")
         .crossJoin(broadcast(dangling))
         .select(col("node"),
@@ -231,10 +225,8 @@ object Components {
     * projection keyed by 8-byte doc_id, then a ≤ #sources-key
     * aggregation with map-side combine. Rate rounded to 6 dp for
     * cross-engine determinism (same rationale as mixtureWeights). */
-  def dedupReport(docs: DataFrame,
-      materialize: Materialize.Strategy = Materialize.local,
-      pairs: Option[DataFrame] = None): DataFrame =
-    dedupClusters(docs, materialize, pairs)
+  def dedupReport(docs: DataFrame, pairs: Option[DataFrame] = None): DataFrame =
+    dedupClusters(docs, pairs)
       .join(docs.select(col("doc_id"), col("source")), "doc_id")
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
@@ -301,15 +293,14 @@ object Components {
     * the symmetrized edges, one (node, label) count whose partial
     * aggregation collapses heavy labels map-side, one argmin via
     * min(struct) (no window, no per-node sort). Labels go through
-    * `materialize` per round (two consumers + lineage truncation). */
-  def labelPropagation(nodes: DataFrame, pairs: DataFrame, iters: Int = 4,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
-    val edges = materialize(
+    * `pin` per round (two consumers + lineage truncation). */
+  def labelPropagation(nodes: DataFrame, pairs: DataFrame, iters: Int = 4): DataFrame = {
+    val edges = pin(
       pairs.select(col("id_a").as("u"), col("id_b").as("v"))
         .unionByName(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
         .where(col("u") =!= col("v")).distinct())
-    val base = materialize(nodes.select(col("id").as("node")))
-    var labels = materialize(base.withColumn("lbl", col("node")))
+    val base = pin(nodes.select(col("id").as("node")))
+    var labels = pin(base.withColumn("lbl", col("node")))
     for (_ <- 1 to iters) {
       val votes = labels
         .join(edges, labels("node") === edges("u"))
@@ -321,7 +312,7 @@ object Components {
           .getField("l").as("next"))
       // labels always carries exactly base's node set, so joining base
       // back in would be an identity join — pick attaches directly
-      labels = materialize(labels
+      labels = pin(labels
         .join(pick, Seq("node"), "left")
         .select(col("node"), coalesce(col("next"), col("lbl")).as("lbl")))
     }
@@ -339,19 +330,18 @@ object Components {
     * lineage (the CC/LPA discipline). `rounds` bounds the explored
     * radius; unreached nodes keep the 999 sentinel. */
   def bfsHops(nodes: DataFrame, pairs: DataFrame, seed: org.apache.spark.sql.Column,
-      rounds: Int = 4,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
-    val edges = materialize(
+      rounds: Int = 4): DataFrame = {
+    val edges = pin(
       pairs.select(col("id_a").as("u"), col("id_b").as("v"))
         .unionByName(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
         .where(col("u") =!= col("v")).distinct())
-    var dist = materialize(nodes.select(col("id").as("node"))
+    var dist = pin(nodes.select(col("id").as("node"))
       .withColumn("dist", when(seed, lit(0L)).otherwise(lit(999L))))
     for (_ <- 1 to rounds) {
       val relax = dist.join(edges, dist("node") === edges("u"))
         .groupBy(col("v").as("node2"))
         .agg(min(col("dist") + lit(1L)).as("via"))
-      dist = materialize(dist.join(relax, dist("node") === col("node2"), "left")
+      dist = pin(dist.join(relax, dist("node") === col("node2"), "left")
         .select(col("node"),
           least(col("dist"), coalesce(col("via"), lit(999L))).as("dist")))
     }
@@ -403,11 +393,10 @@ object Components {
     * EXACT Σd_c² decimal moment rather than a sum of per-community
     * doubles. One edge pass for degrees, one labeled-both-ends join
     * for e_c, community-keyed aggregates after that. */
-  def modularity(communities: DataFrame, pairs: DataFrame,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
-    val lab = materialize(communities.select(col("doc_id").as("node"),
+  def modularity(communities: DataFrame, pairs: DataFrame): DataFrame = {
+    val lab = pin(communities.select(col("doc_id").as("node"),
       col("community")))
-    val und = materialize(pairs.where(col("id_a") =!= col("id_b"))
+    val und = pin(pairs.where(col("id_a") =!= col("id_b"))
       .select(least(col("id_a"), col("id_b")).as("u"),
         greatest(col("id_a"), col("id_b")).as("v"))
       .distinct())
@@ -487,11 +476,10 @@ object Components {
     * volume, and φ_c = cut/min(vol, 2m − vol); NULL where the
     * denominator degenerates. Same relational shape as [[modularity]]
     * — one edge pass, community-keyed aggregates. */
-  def conductance(communities: DataFrame, pairs: DataFrame,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
-    val lab = materialize(communities.select(col("doc_id").as("node"),
+  def conductance(communities: DataFrame, pairs: DataFrame): DataFrame = {
+    val lab = pin(communities.select(col("doc_id").as("node"),
       col("community")))
-    val und = materialize(pairs.where(col("id_a") =!= col("id_b"))
+    val und = pin(pairs.where(col("id_a") =!= col("id_b"))
       .select(least(col("id_a"), col("id_b")).as("u"),
         greatest(col("id_a"), col("id_b")).as("v"))
       .distinct())
@@ -542,19 +530,18 @@ object Components {
     * partial-agg collapses hubs map-side), the wedge self-join on the
     * oriented source, and the closing probe of the id-canonical edge
     * set. `canon`/`oriented` feed two consumers each and are pinned via
-    * `materialize` (the Dedup/CC diamond discipline). */
-  def triangles(pairs: DataFrame,
-                materialize: Materialize.Strategy = Materialize.local): DataFrame = {
-    val canon = materialize(pairs
+    * `pin` (the Dedup/CC diamond discipline). */
+  def triangles(pairs: DataFrame): DataFrame = {
+    val canon = pin(pairs
       .select(least(col("id_a"), col("id_b")).as("a"),
         greatest(col("id_a"), col("id_b")).as("b"))
       .where(col("a") =!= col("b")).distinct())
     // deg feeds TWO join consumers (the da and db attachments) — pin it
     // like canon/oriented or the union+aggregation lineage runs twice
-    val deg = materialize(canon.select(col("a").as("id"))
+    val deg = pin(canon.select(col("a").as("id"))
       .unionAll(canon.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("dg")))
-    val oriented = materialize(canon
+    val oriented = pin(canon
       .join(deg.select(col("id").as("a"), col("dg").as("da")), "a")
       .join(deg.select(col("id").as("b"), col("dg").as("db")), "b")
       .select(when(col("da") < col("db") ||
@@ -598,16 +585,15 @@ object Components {
     * failure, not a truncation. Returns the truss edges with their
     * final supports (Batch25Spec pins the multi-round cascade against
     * the re-enumerating oracle on a handcrafted fan-plus-clique). */
-  def kTruss(pairs: DataFrame, k: Int, maxIter: Int = 20,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+  def kTruss(pairs: DataFrame, k: Int, maxIter: Int = 20): DataFrame = {
     require(k >= 3, s"kTruss needs k >= 3 (got $k)")
-    val e0 = materialize(pairs
+    val e0 = pin(pairs
       .select(least(col("id_a"), col("id_b")).as("a"),
         greatest(col("id_a"), col("id_b")).as("b"))
       .where(col("a") =!= col("b")).distinct())
     // one-off full enumeration: initial per-edge support, with
     // triangle-less edges kept at 0 so the peel filter can see them
-    val deg = materialize(e0.select(col("a").as("id"))
+    val deg = pin(e0.select(col("a").as("id"))
       .unionAll(e0.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("dg")))
     val oriented = e0
@@ -629,13 +615,13 @@ object Components {
         greatest(col("b"), col("c")).as("b")))
     val counted = triEdges.groupBy("a", "b").agg(count(lit(1)).as("support"))
     // (a, b, support) — THE loop state; edges are its key set
-    var sup = materialize(e0.join(counted, Seq("a", "b"), "left")
+    var sup = pin(e0.join(counted, Seq("a", "b"), "left")
       .select(col("a"), col("b"),
         coalesce(col("support"), lit(0L)).as("support")))
     var iter = 0
     var done = false
     while (!done && iter < maxIter) {
-      val removed = materialize(sup.where(col("support") < k - 2)
+      val removed = pin(sup.where(col("support") < k - 2)
         .select(col("a"), col("b")))
       if (removed.limit(1).count() == 0L) done = true
       else {
@@ -678,7 +664,7 @@ object Components {
           .unionAll(charged.where(!col("r2"))
             .select(col("e2a").as("a"), col("e2b").as("b")))
           .groupBy("a", "b").agg(count(lit(1)).as("dec"))
-        sup = materialize(sup
+        sup = pin(sup
           .join(removed, Seq("a", "b"), "left_anti")
           .join(dec, Seq("a", "b"), "left")
           .select(col("a"), col("b"),
@@ -704,16 +690,15 @@ object Components {
     * from the already-pinned `deg` table; the final join is keyed by
     * id. The coefficient divides exact integers, so both engines
     * compute the identical double. */
-  def clusteringCoefficient(pairs: DataFrame,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
-    val canon = materialize(pairs
+  def clusteringCoefficient(pairs: DataFrame): DataFrame = {
+    val canon = pin(pairs
       .select(least(col("id_a"), col("id_b")).as("a"),
         greatest(col("id_a"), col("id_b")).as("b"))
       .where(col("a") =!= col("b")).distinct())
-    val deg = materialize(canon.select(col("a").as("id"))
+    val deg = pin(canon.select(col("a").as("id"))
       .unionAll(canon.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("dg")))
-    val oriented = materialize(canon
+    val oriented = pin(canon
       .join(deg.select(col("id").as("a"), col("dg").as("da")), "a")
       .join(deg.select(col("id").as("b"), col("dg").as("db")), "b")
       .select(when(col("da") < col("db") ||
@@ -751,9 +736,8 @@ object Components {
     * hubs) and two semi-joins of the edge list against the surviving
     * ids — the iterate-materialize shape shared with CC/PageRank;
     * rounds are bounded, never corpus-sized state. */
-  def kCore(pairs: DataFrame, k: Int = 2, rounds: Int = 4,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
-    var edges = materialize(pairs
+  def kCore(pairs: DataFrame, k: Int = 2, rounds: Int = 4): DataFrame = {
+    var edges = pin(pairs
       .select(col("id_a").as("u"), col("id_b").as("v"))
       .where(col("u") =!= col("v")).distinct()
       .select(explode(array(struct(col("u"), col("v")),
@@ -762,7 +746,7 @@ object Components {
     for (_ <- 1 to rounds) {
       val alive = edges.groupBy("u").agg(count(lit(1)).as("dg"))
         .where(col("dg") >= k).select("u")
-      edges = materialize(edges
+      edges = pin(edges
         .join(alive, "u")
         .join(alive.select(col("u").as("v")), "v"))
     }
@@ -793,18 +777,17 @@ object Components {
     * shares — [[dbscan]] consumes it for degree counting, and
     * [[hdbscanClusters]] takes the a<b half as its weighted edge set —
     * and the reason none of them is an all-pairs join at scale. */
-  def gridEpsPairs(pts0: DataFrame, eps: Double, eps2: Double,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame =
-    gridEpsPairsWithPts(pts0, eps, eps2, materialize)._2
+  def gridEpsPairs(pts0: DataFrame, eps: Double, eps2: Double): DataFrame =
+    gridEpsPairsWithPts(pts0, eps, eps2)._2
 
   /** [[gridEpsPairs]] plus the PINNED point frame it built the grid
     * over — callers that scan the point set again ([[dbscan]]'s noise
     * anti-joins) read the checkpoint instead of re-executing the
     * caller's upstream lineage (ADVICE r14). */
   private[ops] def gridEpsPairsWithPts(pts0: DataFrame, eps: Double,
-      eps2: Double, materialize: Materialize.Strategy = Materialize.local)
+      eps2: Double)
       : (DataFrame, DataFrame) = {
-    val pts = materialize(pts0
+    val pts = pin(pts0
       .withColumn("cx", floor(col("x") / eps).cast("long"))
       .withColumn("cy", floor(col("y") / eps).cast("long")))
     val offs = array((for { dx <- -1 to 1; dy <- -1 to 1 } yield
@@ -848,22 +831,19 @@ object Components {
     * the SELECTED VALUE (row_number breaks them, but equal w is equal
     * core). */
   def mutualReachEdges(pts: DataFrame, eps: Double, eps2: Double,
-      minPts: Int,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame =
-    mutualReachEdgesFrom(gridEpsPairs(pts, eps, eps2, materialize),
-      minPts, materialize)
+      minPts: Int): DataFrame =
+    mutualReachEdgesFrom(gridEpsPairs(pts, eps, eps2), minPts)
 
   /** [[mutualReachEdges]] over an ALREADY-BUILT directed candidate
     * pair table (`ia`, `ib`, `w`) — the readout half, split out so the
     * shared eps-pairs substrate can feed the q360/q364 build without
     * re-running the grid join (r17). */
-  private[ops] def mutualReachEdgesFrom(pairs0: DataFrame, minPts: Int,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+  private[ops] def mutualReachEdgesFrom(pairs0: DataFrame, minPts: Int): DataFrame = {
     require(minPts >= 2, s"mutualReachEdges requires minPts >= 2 (got $minPts)")
-    val pairs = materialize(pairs0)
+    val pairs = pin(pairs0)
     val wspec = org.apache.spark.sql.expressions.Window
       .partitionBy("ia").orderBy("w", "ib")
-    val core = materialize(pairs
+    val core = pin(pairs
       .withColumn("rn", row_number().over(wspec))
       .where(col("rn") === minPts - 1)
       .select(col("ia").as("id"), col("w").as("core")))
@@ -874,14 +854,13 @@ object Components {
         greatest(col("w"), col("ca"), col("cb")).as("w"))
   }
 
-  def dbscan(pts0: DataFrame, eps: Double, eps2: Double, minPts: Int,
-             materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+  def dbscan(pts0: DataFrame, eps: Double, eps2: Double, minPts: Int): DataFrame = {
     require(minPts >= 2,
       s"dbscan requires minPts >= 2 (got $minPts): cores derive from the " +
         "pairs table, so zero-neighbor points can never be core")
-    val (pts, rawPairs) = gridEpsPairsWithPts(pts0, eps, eps2, materialize)
-    val pairs = materialize(rawPairs.select("ia", "ib"))
-    val core = materialize(pairs.groupBy(col("ia").as("id"))
+    val (pts, rawPairs) = gridEpsPairsWithPts(pts0, eps, eps2)
+    val pairs = pin(rawPairs.select("ia", "ib"))
+    val core = pin(pairs.groupBy(col("ia").as("id"))
       .agg(count(lit(1)).as("n"))
       .where(col("n") >= minPts - 1).select("id"))
     val coreEdges = pairs
@@ -889,7 +868,7 @@ object Components {
       .join(core.select(col("id").as("ib")), "ib")
       .where(col("ia") < col("ib"))
       .select(col("ia").as("id_a"), col("ib").as("id_b"))
-    val lab = connectedComponents(core, coreEdges, materialize = materialize)
+    val lab = connectedComponents(core, coreEdges)
     val coreOut = core.join(lab, col("id") === col("node"))
       .select(col("id"), lit("core").as("role"), col("lbl").as("cluster"))
     val bord = pairs
@@ -936,9 +915,9 @@ object Components {
     * attach per endpoint) and aggregates map-side to ≤|components|
     * rows; the merge-graph CC and the relabel join ride component-id
     * keys. Nothing is ever driver-side except the loop counter. */
-  def boruvkaMstForest(nodes: DataFrame, edges0: DataFrame, maxIter: Int = 12,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
-    val (mst, labels) = boruvkaMst(nodes, edges0, maxIter, materialize)
+  def boruvkaMstForest(nodes: DataFrame, edges0: DataFrame,
+      maxIter: Int = 12): DataFrame = {
+    val (mst, labels) = boruvkaMst(nodes, edges0, maxIter)
     mstForestStats(mst, labels)
   }
 
@@ -1006,9 +985,9 @@ object Components {
     * operators that consume the TREE rather than per-component stats:
     * [[boruvkaMstForest]] (stats) and [[singleLinkageCuts]] (dendrogram
     * levels) both build on this. */
-  def boruvkaMst(nodes: DataFrame, edges0: DataFrame, maxIter: Int = 12,
-      materialize: Materialize.Strategy = Materialize.local): (DataFrame, DataFrame) = {
-    var labels = materialize(nodes.select(col("id").as("node"), col("id").as("comp")))
+  def boruvkaMst(nodes: DataFrame, edges0: DataFrame,
+      maxIter: Int = 12): (DataFrame, DataFrame) = {
+    var labels = pin(nodes.select(col("id").as("node"), col("id").as("comp")))
     // EDGE CONTRACTION (r19 — VERDICT r18 #3, §2.4): the loop used to
     // re-join the FULL original edge table against the current labels
     // every round — 12 corpus-scale scans of a table that is mostly
@@ -1020,7 +999,7 @@ object Components {
     // the same discipline connectedComponents already applies to its
     // contracted edge table. (w, a, b) identities ride along, so the
     // elected MST is unchanged.
-    var rem = materialize(edges0.select(col("a"), col("b"), col("w"))
+    var rem = pin(edges0.select(col("a"), col("b"), col("w"))
       .where(col("a") =!= col("b"))
       .select(col("a"), col("b"), col("w"),
         col("a").as("ca"), col("b").as("cb")))
@@ -1034,9 +1013,9 @@ object Components {
       // (r19 note: a persist()+count() fusion of this pin and the
       // emptiness probe was tried and MEASURED SLOWER — Dataset.persist
       // caches COLUMNAR with per-read decode, far heavier than the
-      // localCheckpoint row blocks every consumer below scans. The
-      // probe job on pinned blocks is cheap; keep the materialize.)
-      val minE = materialize(rem.select(col("ca").as("c"), k.as("k"))
+      // pinned row blocks every consumer below scans. The
+      // probe job on pinned blocks is cheap; keep the pin.)
+      val minE = pin(rem.select(col("ca").as("c"), k.as("k"))
         .unionByName(rem.select(col("cb").as("c"), k.as("k")))
         .groupBy("c").agg(min(col("k")).as("k")))
       if (minE.limit(1).count() == 0L) done = true
@@ -1075,7 +1054,7 @@ object Components {
             when(col("mt") === col("x.s"), least(col("x.s"), col("x.t")))
               .otherwise(col("x.t")).as("t"))
           .where(col("s") =!= col("t"))
-        val comp = compressMap(p, materialize)
+        val comp = compressMap(p)
         // comp resolves every mover to its group's 2-CYCLE min — which
         // need not be the GROUP min: a tree-hanging component can carry
         // a smaller id than the cycle it merges into, and the labels
@@ -1089,11 +1068,11 @@ object Components {
           .select(col("r"), least(col("r"), col("ms")).as("m"))
         // pinned: three consumers since the r19 contraction (the labels
         // relabel plus both endpoint relabels of `rem`)
-        val merged = materialize(comp.join(gm, col("t") === col("r"))
+        val merged = pin(comp.join(gm, col("t") === col("r"))
           .select(col("s"), col("m").as("t"))
           .unionByName(gm.where(col("r") =!= col("m"))
             .select(col("r").as("s"), col("m").as("t"))))
-        labels = materialize(labels
+        labels = pin(labels
           .join(merged.select(col("s").as("comp"), col("t")), Seq("comp"), "left")
           .select(col("node"), coalesce(col("t"), col("comp")).as("comp")))
         // contract the remainder through the same merge map: relabel
@@ -1101,7 +1080,7 @@ object Components {
         // intra-component. An edge with ca' = cb' can never re-enter
         // (components only merge), so the filter is safe and `rem`
         // shrinks monotonically.
-        rem = materialize(rem
+        rem = pin(rem
           .join(merged.select(col("s").as("ca"), col("t").as("ta")),
             Seq("ca"), "left")
           .join(merged.select(col("s").as("cb"), col("t").as("tb")),
@@ -1142,11 +1121,10 @@ object Components {
     * reachability over the FULL ≤t edge set — a different algorithm on
     * a different edge set that must produce the identical partition. */
   def singleLinkageCuts(mstEdges: DataFrame, cuts: Seq[Double],
-      maxIter: Int = 25,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+      maxIter: Int = 25): DataFrame = {
     val ts = cuts.sorted
     val k = ts.length
-    val labels = singleLinkageLabels(mstEdges, cuts, maxIter, materialize)
+    val labels = singleLinkageLabels(mstEdges, cuts, maxIter)
     (0 until k).map { j =>
       labels.where(col("nlvl") <= j)
         .groupBy(col(s"l$j")).agg(count(lit(1)).as("sz"))
@@ -1183,19 +1161,18 @@ object Components {
     * 60+ rounds, unconverged, on the sf0.001 ε-graph MST; the
     * dup-graph trees it was built on have diameter ≤4). */
   def singleLinkageLabels(mstEdges: DataFrame, cuts: Seq[Double],
-      maxIter: Int = 25,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+      maxIter: Int = 25): DataFrame = {
     require(cuts.nonEmpty, "need at least one cut height")
     val ts = cuts.sorted
     val k = ts.length
     // first cut index where the edge is active (= #cuts below w)
     val lvlExpr = ts.map(t => when(col("w") > t, 1).otherwise(0))
       .reduce(_ + _)
-    val e0 = materialize(mstEdges.where(col("w") <= ts.last)
+    val e0 = pin(mstEdges.where(col("w") <= ts.last)
       .select(col("a"), col("b"), lvlExpr.as("lvl")))
     // per-node first level of participation: membership at cut j is
     // nlvl ≤ j (a node outside every ≤t edge is a singleton, not a row)
-    val nodeLvl = materialize(
+    val nodeLvl = pin(
       e0.select(col("a").as("node"), col("lvl"))
         .unionByName(e0.select(col("b").as("node"), col("lvl")))
         .groupBy("node").agg(min(col("lvl")).as("nlvl")))
@@ -1207,7 +1184,7 @@ object Components {
         explode(sequence(col("lvl"), lit(k - 1))).as("j"))
       .select((col("a") * k + col("j")).as("id_a"),
         (col("b") * k + col("j")).as("id_b"))
-    val cc = connectedComponents(encNodes, encEdges, maxIter, materialize)
+    val cc = connectedComponents(encNodes, encEdges, maxIter)
     val dec = cc.select((col("node") % k).cast("int").as("j"),
       expr(s"node div $k").as("node"), expr(s"lbl div $k").as("lbl"))
     // pivot back to the k-wide frame in ONE conditional aggregation;
@@ -1269,12 +1246,11 @@ object Components {
     *    and the condensed parent pointer (null at roots).
     * Algorithm notes at [[hdbscanClusters]]. */
   private[ops] def condensedTree(mstEdges: DataFrame, cuts: Seq[Double],
-      lambdas: Seq[Long], minSize: Int, maxIter: Int,
-      materialize: Materialize.Strategy)
+      lambdas: Seq[Long], minSize: Int, maxIter: Int)
       : (DataFrame, DataFrame, DataFrame) = {
-    val labels = materialize(
-      singleLinkageLabels(mstEdges, cuts.sorted, maxIter, materialize))
-    condensedTreeFromLabels(labels, cuts, lambdas, minSize, materialize)
+    val labels = pin(
+      singleLinkageLabels(mstEdges, cuts.sorted, maxIter))
+    condensedTreeFromLabels(labels, cuts, lambdas, minSize)
   }
 
   /** [[condensedTree]] over a PRECOMPUTED (possibly cached) label
@@ -1282,8 +1258,7 @@ object Components {
     * substrate is built once and read by cluster selection (q358) AND
     * outlier scoring (q359). */
   private[ops] def condensedTreeFromLabels(labels: DataFrame,
-      cuts: Seq[Double], lambdas: Seq[Long], minSize: Int,
-      materialize: Materialize.Strategy)
+      cuts: Seq[Double], lambdas: Seq[Long], minSize: Int)
       : (DataFrame, DataFrame, DataFrame) = {
     require(cuts.length >= 2 && cuts.length == lambdas.length,
       "need ≥2 cut levels with matching lambdas")
@@ -1316,7 +1291,7 @@ object Components {
     val kd = withPar.where(col("j") < k - 1)
       .groupBy((col("j") + 1).as("pj"), col("p").as("pc"))
       .agg(count(lit(1)).as("nk"))
-    val born = materialize(withPar
+    val born = pin(withPar
       .join(kd, col("pj") === col("j") + 1 && col("pc") === col("p"), "left")
       .select(col("j"), col("c"), col("sz"), col("p"),
         (col("j") === k - 1 || coalesce(col("nk"), lit(0L)) >= 2)
@@ -1338,7 +1313,7 @@ object Components {
           when(col("isborn"), lit(j)).otherwise(col("ubj")).as("bj"),
           when(col("isborn"), col("c")).otherwise(col("ubc")).as("bc"))
     }
-    val cida = materialize(resolved.reduce(_ unionByName _))
+    val cida = pin(resolved.reduce(_ unionByName _))
     // discrete stability: instances BELOW the birth level contribute
     // sz · gap(j); the birth instance contributes 0 (keeps clusters
     // with no sub-birth presence in the output at S = 0)
@@ -1354,7 +1329,7 @@ object Components {
     val birthInst = cida.where(col("j") === col("bj") && col("c") === col("bc"))
       .select(col("bj"), col("bc"), col("sz").as("n_birth"))
     // condensed parent pointer: the cid of the birth instance's parent
-    val cl = materialize(stab
+    val cl = pin(stab
       .join(birthInst, Seq("bj", "bc"))
       .join(born.where(col("isborn"))
         .select(col("j").as("bj"), col("c").as("bc"), col("p")),
@@ -1368,26 +1343,23 @@ object Components {
   }
 
   def hdbscanClusters(mstEdges: DataFrame, cuts: Seq[Double],
-      lambdas: Seq[Long], minSize: Int, maxIter: Int = 50,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+      lambdas: Seq[Long], minSize: Int, maxIter: Int = 50): DataFrame = {
     val (_, _, cl) =
-      condensedTree(mstEdges, cuts, lambdas, minSize, maxIter, materialize)
-    hdbscanSelection(cl, cuts, materialize)
+      condensedTree(mstEdges, cuts, lambdas, minSize, maxIter)
+    hdbscanSelection(cl, cuts)
   }
 
   /** [[hdbscanClusters]] over a precomputed label frame (see
     * [[condensedTreeFromLabels]]). */
   def hdbscanClustersFromLabels(labels: DataFrame, cuts: Seq[Double],
-      lambdas: Seq[Long], minSize: Int,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+      lambdas: Seq[Long], minSize: Int): DataFrame = {
     val (_, _, cl) =
-      condensedTreeFromLabels(labels, cuts, lambdas, minSize, materialize)
-    hdbscanSelection(cl, cuts, materialize)
+      condensedTreeFromLabels(labels, cuts, lambdas, minSize)
+    hdbscanSelection(cl, cuts)
   }
 
-  private def hdbscanSelection(cl: DataFrame, cuts: Seq[Double],
-      materialize: Materialize.Strategy): DataFrame =
-    hdbscanReadout(selectionFrame(cl, cuts.length, materialize), cl, cuts)
+  private def hdbscanSelection(cl: DataFrame, cuts: Seq[Double]): DataFrame =
+    hdbscanReadout(selectionFrame(cl, cuts.length), cl, cuts)
 
   /** The pure READOUT half of [[hdbscanSelection]] — one keyed join of
     * the (cluster-count-sized) selection frame against the cluster
@@ -1416,8 +1388,7 @@ object Components {
     * `selected`) behind [[hdbscanSelection]] — factored out so q362's
     * soft memberships can resolve each point's SELECTED ancestor
     * without re-deriving the cluster-level readout. */
-  private def selectionFrame(cl: DataFrame, k: Int,
-      materialize: Materialize.Strategy): DataFrame = {
+  private def selectionFrame(cl: DataFrame, k: Int): DataFrame = {
     // Both k-level passes used to materialize PER LEVEL (2k scheduler-
     // floor jobs over cluster-count-sized tables — the dominant cost of
     // the eps_tree/mr_tree builds, VERDICT r18 #4). Each pass now folds
@@ -1450,7 +1421,7 @@ object Components {
       vParts ::= lvlV
     }
     // pinned: the top-down pass filters va once per level (k consumers)
-    val va = materialize(vParts.reduce(_ unionByName _))
+    val va = pin(vParts.reduce(_ unionByName _))
     // top-down: selected = chosen ∧ no chosen-unblocked ancestor;
     // blocked(C) = blocked(parent) ∨ chosen(C) propagates the veto
     var sParts = List.empty[DataFrame]
@@ -1473,7 +1444,7 @@ object Components {
       }
       sParts ::= lvlS
     }
-    materialize(sParts.reduce(_ unionByName _).select("bj", "bc", "selected"))
+    pin(sParts.reduce(_ unionByName _).select("bj", "bc", "selected"))
   }
 
   /** GLOSH outlier scores (Campello et al.'s Global-Local Outlier
@@ -1503,21 +1474,19 @@ object Components {
     * tree, one score join — nothing corpus-sized beyond the label
     * frame the scaffold already carries. */
   def gloshScores(mstEdges: DataFrame, cuts: Seq[Double],
-      lambdas: Seq[Long], minSize: Int, maxIter: Int = 50,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+      lambdas: Seq[Long], minSize: Int, maxIter: Int = 50): DataFrame = {
     val (labels, cida, cl) =
-      condensedTree(mstEdges, cuts, lambdas, minSize, maxIter, materialize)
-    gloshBody(labels, cida, cl, cuts.length, lambdas, materialize)
+      condensedTree(mstEdges, cuts, lambdas, minSize, maxIter)
+    gloshBody(labels, cida, cl, cuts.length, lambdas)
   }
 
   /** [[gloshScores]] over a precomputed label frame (see
     * [[condensedTreeFromLabels]]). */
   def gloshScoresFromLabels(labels: DataFrame, cuts: Seq[Double],
-      lambdas: Seq[Long], minSize: Int,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+      lambdas: Seq[Long], minSize: Int): DataFrame = {
     val (lab, cida, cl) =
-      condensedTreeFromLabels(labels, cuts, lambdas, minSize, materialize)
-    gloshBody(lab, cida, cl, cuts.length, lambdas, materialize)
+      condensedTreeFromLabels(labels, cuts, lambdas, minSize)
+    gloshBody(lab, cida, cl, cuts.length, lambdas)
   }
 
   /** The discrete λ of a level-index column — `when(c === j,
@@ -1553,13 +1522,12 @@ object Components {
   /** Deepest level reached anywhere in each condensed cluster's
     * SUBTREE — own instances' min, then min over (already-final)
     * children, bottom-up by birth level. Returns (bj, bc, dm). */
-  private def subtreeDeepest(cida: DataFrame, cl: DataFrame, k: Int,
-      materialize: Materialize.Strategy): DataFrame = {
+  private def subtreeDeepest(cida: DataFrame, cl: DataFrame, k: Int): DataFrame = {
     // `own` is pinned once (the lazy k-level fold below references it
     // ~2^k times; without the pin each reference re-runs the cida
     // aggregation shuffle), then the bottom-up min fold stays LAZY —
     // k per-level materialize jobs dropped (r19, VERDICT r18 #4).
-    val own = materialize(
+    val own = pin(
       cida.groupBy("bj", "bc").agg(min(col("j")).as("dmin"))
         .join(cl.select(col("bj"), col("bc"), col("pbj"), col("pbc")),
           Seq("bj", "bc")))
@@ -1583,10 +1551,9 @@ object Components {
   }
 
   private def gloshBody(labels: DataFrame, cida: DataFrame, cl: DataFrame,
-      k: Int, lambdas: Seq[Long],
-      materialize: Materialize.Strategy): DataFrame =
+      k: Int, lambdas: Seq[Long]): DataFrame =
     gloshReadout(attachments(labels, cida, k),
-      subtreeDeepest(cida, cl, k, materialize), lambdas)
+      subtreeDeepest(cida, cl, k), lambdas)
 
   /** The pure READOUT half of [[gloshBody]] — one keyed join of the
     * per-point attachment frame against the subtree-deepest frame,
@@ -1622,15 +1589,14 @@ object Components {
     * joins over CLUSTER-count-sized tables; the only corpus-sized work
     * is the attachment join the q359 scaffold already pays. */
   def softMembershipsFromLabels(labels0: DataFrame, cuts: Seq[Double],
-      lambdas: Seq[Long], minSize: Int,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+      lambdas: Seq[Long], minSize: Int): DataFrame = {
     val (labels, cida, cl) =
-      condensedTreeFromLabels(labels0, cuts, lambdas, minSize, materialize)
+      condensedTreeFromLabels(labels0, cuts, lambdas, minSize)
     val k = cuts.length
-    val sel = selectionFrame(cl, k, materialize)
-    val sela = selectedAncestors(sel, cl, k, materialize)
+    val sel = selectionFrame(cl, k)
+    val sela = selectedAncestors(sel, cl, k)
     val att = attachments(labels, cida, k)
-    val dm = subtreeDeepest(cida, cl, k, materialize)
+    val dm = subtreeDeepest(cida, cl, k)
     softMembershipReadout(att, sela, dm, lambdas)
   }
 
@@ -1640,8 +1606,7 @@ object Components {
     * abj, abc) on cluster-count-sized tables. Factored out of
     * [[softMembershipsFromLabels]] in r18 so the condensed-tree
     * substrate ([[EpsTree]], [[MrTree]]) can persist it once. */
-  private def selectedAncestors(sel: DataFrame, cl: DataFrame, k: Int,
-      materialize: Materialize.Strategy): DataFrame = {
+  private def selectedAncestors(sel: DataFrame, cl: DataFrame, k: Int): DataFrame = {
     var aParts = List.empty[DataFrame]
     for (b <- k - 1 to 0 by -1) {
       val lvl = sel.where(col("bj") === b)
@@ -1760,20 +1725,18 @@ object Components {
       out: String): Unit = {
     val k = HdbCuts.length
     val (labels, cida, cl) = condensedTreeFromLabels(
-      slink.read(s, dir, "labels"), HdbCuts, HdbLambdas, HdbMinSize,
-      Materialize.local)
+      slink.read(s, dir, "labels"), HdbCuts, HdbLambdas, HdbMinSize)
     cl.write.mode("overwrite").parquet(out + "/cl.parquet")
     // downstream frames derive from the PERSISTED cluster table
     // (read-back, not lineage): the artifacts are views of one tree
     val clP = s.read.parquet(out + "/cl.parquet")
-    val sel = selectionFrame(clP, k, Materialize.local)
+    val sel = selectionFrame(clP, k)
     sel.write.mode("overwrite").parquet(out + "/sel.parquet")
     attachments(labels, cida, k)
       .write.mode("overwrite").parquet(out + "/att.parquet")
-    subtreeDeepest(cida, clP, k, Materialize.local)
+    subtreeDeepest(cida, clP, k)
       .write.mode("overwrite").parquet(out + "/dm.parquet")
-    selectedAncestors(s.read.parquet(out + "/sel.parquet"), clP, k,
-        Materialize.local)
+    selectedAncestors(s.read.parquet(out + "/sel.parquet"), clP, k)
       .write.mode("overwrite").parquet(out + "/sela.parquet")
   }
 
@@ -1810,16 +1773,15 @@ object Components {
     * reappears (path-like trees cost the SAME log rounds). Driver sees
     * only per-round convergence probes. */
   def opticsOrder(mstEdges: DataFrame, maxIter: Int = 34,
-      compLabels: Option[DataFrame] = None,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+      compLabels: Option[DataFrame] = None): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
-    val edges = materialize(mstEdges.select(col("a"), col("b"), col("w")))
+    val edges = pin(mstEdges.select(col("a"), col("b"), col("w")))
     // component labels = min member id = the OPTICS start (root) point;
     // callers holding a precomputed (node, lbl) frame (the cached
     // single-linkage scaffold's top-cut column covers every tree edge
     // by construction) pass it in and skip the CC rounds entirely
     val lab = compLabels.map { lf =>
-      val l = materialize(lf.select(col("node"), col("lbl")))
+      val l = pin(lf.select(col("node"), col("lbl")))
       // tree-sized audit of the caller's frame (ADVICE r15): a COARSER
       // partition fails visibly (no terminal → convergence require),
       // but a FINER one would mark spurious mid-chain terminals and
@@ -1841,9 +1803,9 @@ object Components {
     }.getOrElse {
       val nodes = edges.select(col("a").as("id"))
         .unionByName(edges.select(col("b").as("id"))).distinct()
-      materialize(connectedComponents(nodes,
+      pin(connectedComponents(nodes,
         edges.select(col("a").as("id_a"), col("b").as("id_b")),
-        maxIter, materialize))
+        maxIter))
     }
     val adj = edges.select(col("a").as("node"), col("b").as("nbr"), col("w"))
       .unionByName(edges.select(col("b").as("node"), col("a").as("nbr"), col("w")))
@@ -1862,7 +1824,7 @@ object Components {
       .select(col("nbr").as("u"), col("node").as("v"), col("w"),
         col("comp"), col("nx"), col("wrapped"))
       .withColumn("term", col("wrapped") && col("v") === col("comp"))
-    var st = materialize(arcs.select(col("u"), col("v"), col("w"), col("comp"),
+    var st = pin(arcs.select(col("u"), col("v"), col("w"), col("comp"),
       when(col("term"), col("u")).otherwise(col("v")).as("pu"),
       when(col("term"), col("v")).otherwise(col("nx")).as("pv"),
       when(col("term"), lit(0L)).otherwise(lit(1L)).as("d"),
@@ -1878,7 +1840,7 @@ object Components {
     for (_ <- 0 until rounds.toInt) {
       val y = st.select(col("u").as("yu"), col("v").as("yv"),
         col("pu").as("ypu"), col("pv").as("ypv"), col("d").as("yd"))
-      st = materialize(st
+      st = pin(st
         .join(y, col("pu") === col("yu") && col("pv") === col("yv"))
         .select(col("u"), col("v"), col("w"), col("comp"),
           col("ypu").as("pu"), col("ypv").as("pv"),
@@ -2750,14 +2712,14 @@ object Components {
         val pairs = dupPairs(s, d).select("id_a", "id_b")
         val edges = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
           .unionByName(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
-          .where(col("u") =!= col("v")).distinct().localCheckpoint()
+          .where(col("u") =!= col("v")).distinct().transform(pin)
         val seeds = broadcast(edges.select(col("u").as("seed"))
           .distinct().orderBy("seed").limit(3))
         var dist = docs.select(col("doc_id").as("node"))
           .crossJoin(seeds)
           .withColumn("dist",
             when(col("node") === col("seed"), lit(0L)).otherwise(lit(999L)))
-          .localCheckpoint()
+          .transform(pin)
         for (_ <- 1 to 4) {
           val relax = dist.join(edges, dist("node") === edges("u"))
             .groupBy(col("seed").as("seed2"), col("v").as("node2"))
@@ -2767,7 +2729,7 @@ object Components {
               "left")
             .select(col("seed"), col("node"),
               least(col("dist"), coalesce(col("via"), lit(999L))).as("dist"))
-            .localCheckpoint()
+            .transform(pin)
         }
         dist.where(col("dist") < 999L)
           .groupBy(col("seed").as("seed_id"))
@@ -2947,7 +2909,7 @@ object Components {
         val pairs = dupPairs(s, d).select("id_a", "id_b")
         val edges = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
           .unionByName(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
-          .where(col("u") =!= col("v")).distinct().localCheckpoint()
+          .where(col("u") =!= col("v")).distinct().transform(pin)
         val deg = edges.groupBy(col("u").as("node"))
           .agg(count(lit(1)).as("dg"))
         val withDeg = edges
@@ -3027,11 +2989,11 @@ object Components {
           .withColumn("cost", expr("1000000 div w"))
         val edges = pairs.select(col("pa").as("u"), col("pb").as("v"), col("cost"))
           .unionByName(pairs.select(col("pb").as("u"), col("pa").as("v"), col("cost")))
-          .localCheckpoint()
+          .transform(pin)
         var dist = Tables.part(s, d).select(col("p_partkey").as("node"))
           .withColumn("dist",
             when(pmod(col("node"), lit(37)) === 0, lit(0L)).otherwise(lit(INF)))
-          .localCheckpoint()
+          .transform(pin)
         for (_ <- 1 to 4) {
           val relax = dist.join(edges, dist("node") === edges("u"))
             .groupBy(col("v").as("node2"))
@@ -3039,7 +3001,7 @@ object Components {
           dist = dist.join(relax, dist("node") === col("node2"), "left")
             .select(col("node"),
               least(col("dist"), coalesce(col("via"), lit(INF))).as("dist"))
-            .localCheckpoint()
+            .transform(pin)
         }
         dist.select(col("node").as("p_partkey"),
             when(col("dist") >= INF, lit(-1L)).otherwise(col("dist")).as("cost4"))
@@ -3095,18 +3057,17 @@ object Components {
       (s, d) => {
         val docs = Tables.documents(s, d)
         val pairs = dupPairs(s, d).select("id_a", "id_b")
-        val m = Materialize.local
-        val edges = m(
+        val edges = pin(
           pairs.select(col("id_a").as("u"), col("id_b").as("v"))
             .unionByName(pairs.select(col("id_b").as("u"),
               col("id_a").as("v"))))
-        val deg = m(edges.groupBy("u")
+        val deg = pin(edges.groupBy("u")
           .agg(count(lit(1)).cast("double").as("deg")))
-        val base = m(docs.select(col("doc_id").as("node"),
+        val base = pin(docs.select(col("doc_id").as("node"),
           (col("doc_id") % 100 === 0).as("seed")))
         val ns = base.where(col("seed")).count().toDouble
         val restart = when(col("seed"), lit(1.0 / ns)).otherwise(lit(0.0))
-        var scores = m(base.withColumn("score", restart))
+        var scores = pin(base.withColumn("score", restart))
         for (_ <- 1 to 5) {
           val contrib = scores
             .join(edges, scores("node") === edges("u"))
@@ -3116,7 +3077,7 @@ object Components {
           val dangling = scores
             .join(deg.select(col("u").as("node")), Seq("node"), "left_anti")
             .agg(coalesce(sum(col("score")), lit(0.0)).as("dm"))
-          scores = m(base
+          scores = pin(base
             .join(contrib, Seq("node"), "left")
             .crossJoin(broadcast(dangling))
             .select(col("node"), col("seed"),

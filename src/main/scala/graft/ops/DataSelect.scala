@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{Materialize, QueryDef, Tables}
+import graft.{QueryDef, Tables}
+import graft.Materialize.pin
 import graft.core.Substrate
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -54,8 +55,7 @@ object DataSelect {
     * codegen'd argmin as IVF ([[Ann.cellCol]]); one materialization
     * pins it so the self-join's two sides share one computation. */
   def semDedup(emb: DataFrame, cents: Array[Array[Double]], tau: Double,
-               roundDp: Int = 6,
-               materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+               roundDp: Int = 6): DataFrame = {
     // Phase 0 — exact-duplicate collapse (always on, value-identical):
     // byte-identical vectors land in the same cell by construction, so
     // each exact-dup group enters the pair join as its lowest-id
@@ -65,7 +65,7 @@ object DataSelect {
     // cost is Σ|distinct vectors per cell|², bounded by sizing k to
     // the corpus (SemDeDup's own k≈100k-at-web-scale rule) with AQE
     // skew-join splitting hot cells.
-    val evg = materialize(
+    val evg = pin(
       emb.withColumn("cell", Ann.cellCol(col("v"), cents))
         .withColumn("nrm", Vectors.norm2(col("v")))
         .withColumn("rep",
@@ -185,22 +185,19 @@ object DataSelect {
     * pair-count aggregation — no driver data beyond the 1-row argmax.
     * A production trainer amortizes rounds by batching non-conflicting
     * merges per pass; the per-round plan here is that batch's unit. */
-  def bpeTrain(docs: DataFrame, rounds: Int,
-               materialize: Materialize.Strategy = Materialize.local): DataFrame =
-    bpeLoop(docs, rounds, materialize)._1.reduce(_.unionByName(_)).orderBy("rnd")
+  def bpeTrain(docs: DataFrame, rounds: Int): DataFrame =
+    bpeLoop(docs, rounds)._1.reduce(_.unionByName(_)).orderBy("rnd")
 
   /** The corpus token stream AFTER applying the `rounds` learned
     * merges — (doc_id, pos, tok), the input a tokenizer-aware
     * downstream (compression audits, packing) consumes. */
-  def bpeFinalState(docs: DataFrame, rounds: Int,
-                    materialize: Materialize.Strategy = Materialize.local): DataFrame =
-    bpeLoop(docs, rounds, materialize)._2
+  def bpeFinalState(docs: DataFrame, rounds: Int): DataFrame =
+    bpeLoop(docs, rounds)._2
 
-  private def bpeLoop(docs: DataFrame, rounds: Int,
-                      materialize: Materialize.Strategy): (Seq[DataFrame], DataFrame) = {
+  private def bpeLoop(docs: DataFrame, rounds: Int): (Seq[DataFrame], DataFrame) = {
     val wDoc = Window.partitionBy("doc_id").orderBy("pos")
     val wCum = wDoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    var state = materialize(
+    var state = pin(
       docs.select(col("doc_id"), posexplode(split(col("text"), " ")))
         .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"),
           col("col").as("tok")))
@@ -224,7 +221,7 @@ object DataSelect {
         .select(col("doc_id"), col("pos"),
           when(col("mg"), concat(col("tok"), col("nxt"))).otherwise(col("tok")).as("tok"))
         .withColumn("pos", row_number().over(wDoc).cast("long"))
-      state = materialize(merged)
+      state = pin(merged)
       rows += state.agg(count(lit(1)).as("tokens_after"))
         .select(lit(r).as("rnd"), lit(t1).as("t1"), lit(t2).as("t2"),
           lit(cnt).as("cnt"), col("tokens_after"))
@@ -774,7 +771,7 @@ object DataSelect {
           .select(col("bucket"), col("n"),
             round(col("ssum").cast("double") / col("n"), 6).as("conf"),
             round(col("ysum").cast("double") / col("n"), 6).as("acc"))
-          .localCheckpoint() // bounded (≤10 rows); feeds rows + the ECE fold
+          .transform(pin) // bounded (≤10 rows); feeds rows + the ECE fold
         val total = buckets
           .agg(sum(col("n")).as("nt"),
             sum(abs(round(col("acc") - col("conf"), 6)
@@ -834,7 +831,7 @@ object DataSelect {
         val k = 6
         val pts = Tables.embeddings(s, d)
           .select(col("vec_id"), Vectors.asDouble(col("embedding")).as("v"))
-          .localCheckpoint()
+          .transform(pin)
         val first = pts.orderBy("vec_id").limit(1)
           .select(col("vec_id"), col("v")).head
         var centers = Vector[(Long, Seq[Double], Double)](
@@ -1063,27 +1060,25 @@ object DataSelect {
     * Docs without a valuation (the eval rows themselves) are not
     * selectable: training on eval is the q377 contamination defect. */
   def shapleyBudgetSelect(docs: DataFrame, embs: DataFrame,
-      budget: Long = 20000L, k: Int = 5, nQueries: Int = 32,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame =
+      budget: Long = 20000L, k: Int = 5, nQueries: Int = 32): DataFrame =
     shapleyBudgetSelectFrom(docs,
-      knnShapley(embs, k, nQueries, materialize), budget, materialize)
+      knnShapley(embs, k, nQueries), budget)
 
   /** [[shapleyBudgetSelect]] over an ALREADY-COMPUTED valuation frame
     * — the readout half, split out so the cached [[Shapley]]
     * substrate can feed both q376 and q379 from one build. */
   private[ops] def shapleyBudgetSelectFrom(docs: DataFrame,
-      values: DataFrame, budget: Long = 20000L,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+      values: DataFrame, budget: Long = 20000L): DataFrame = {
     val sv = values.select(col("vec_id").as("doc_id"), col("shapley"))
     val sized = docs.select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tok"))
       .join(sv, "doc_id")
     val withCum = Scale.globalRunningSum(sized,
-      Seq(col("shapley").desc, col("doc_id")), col("n_tok"), materialize)
+      Seq(col("shapley").desc, col("doc_id")), col("n_tok"))
     val withVal = TrainPrep.runningSumGlobal(
       withCum.withColumn("nshap", -col("shapley"))
         .withColumn("sdec", col("shapley").cast("decimal(38,6)")),
-      Seq("nshap", "doc_id"), "sdec", "cumv", materialize)
+      Seq("nshap", "doc_id"), "sdec", "cumv")
     // the running sum is EXACT in decimal; the output casts it to
     // double (identical on both engines for the same decimal value)
     withVal.where(col("cum") <= budget)
@@ -1100,9 +1095,8 @@ object DataSelect {
     * max(struct(cos, −id)) elects (cos DESC, id ASC) map-side, so the
     * shuffle carries one partial row per (anchor, polarity). */
   def tripletMining(emb: DataFrame, cents: Array[Array[Double]],
-      roundDp: Int = 6,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
-    val ev = materialize(emb
+      roundDp: Int = 6): DataFrame = {
+    val ev = pin(emb
       .withColumn("cell", Ann.cellCol(col("v"), cents))
       .withColumn("nrm", Vectors.norm2(col("v"))))
     val a = ev.select(col("cell"), col("vec_id"), col("v").as("va"),
@@ -1146,10 +1140,9 @@ object DataSelect {
     * doubles — O(rounds · K · ulp) ≈ 1e-15 drift, six orders below the
     * @6 output round. */
   def groupDroWeights(perDomain: DataFrame, eta: Double, rounds: Int,
-      smooth: Double,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+      smooth: Double): DataFrame = {
     val kk = perDomain.agg(count(lit(1)).cast("double").as("kk"))
-    var w = materialize(perDomain.crossJoin(broadcast(kk))
+    var w = pin(perDomain.crossJoin(broadcast(kk))
       .select(col("source"), col("m"), col("kk"),
         (lit(1.0) / col("kk")).as("a")))
     for (_ <- 0 until rounds) {
@@ -1158,7 +1151,7 @@ object DataSelect {
         .select(col("source"), col("m"), col("kk"),
           (col("a") * exp(lit(eta) * (col("m") - col("mix")))).as("u"))
       val sTot = x.agg(sum(col("u")).as("s"))
-      w = materialize(x.crossJoin(broadcast(sTot))
+      w = pin(x.crossJoin(broadcast(sTot))
         .select(col("source"), col("m"), col("kk"),
           (lit(1.0 - smooth) * col("u") / col("s") +
             lit(smooth) / col("kk")).as("a")))
@@ -1257,17 +1250,14 @@ object DataSelect {
     * argmax-marginal-gain over the remaining `(source, g)` pair table,
     * then an anti-join removes the pick's covered items. The remainder
     * is corpus-sized and consumed twice per round (argmax + anti-join
-    * filter side), so each round PINS it through the injectable
-    * `materialize` strategy — [[Materialize.local]] by default, and
-    * [[Materialize.reliable]] on a real cluster so the k-round loop
-    * survives executor loss instead of dying with `localCheckpoint`
-    * blocks (the same contract as every other iterative operator:
-    * Components, Dedup, TrainPrep). Driver state is the k picks only;
+    * filter side), so each round PINS it with `graft.Materialize.pin`:
+    * with a checkpoint dir set the k-round loop survives executor loss
+    * instead of dying with local checkpoint blocks (the same contract
+    * as every other iterative operator). Driver state is the k picks only;
     * a round with no remaining sources ends the trace early. */
-  def sourceCover(s: SparkSession, pairs: DataFrame, k: Int,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+  def sourceCover(s: SparkSession, pairs: DataFrame, k: Int): DataFrame = {
     import s.implicits._
-    var remaining = materialize(pairs)
+    var remaining = pin(pairs)
     var total = 0L
     val picks = scala.collection.mutable.ListBuffer[(Long, String, Long, Long)]()
     var i = 0
@@ -1279,7 +1269,7 @@ object DataSelect {
         val (src, gain) = (top(0).getString(0), top(0).getLong(1))
         total += gain
         picks += ((picks.size + 1L, src, gain, total))
-        remaining = materialize(remaining
+        remaining = pin(remaining
           .join(remaining.where(col("source") === src).select("g"),
             Seq("g"), "left_anti"))
         i += 1
@@ -1434,8 +1424,7 @@ object DataSelect {
     * (the q118 discipline), so the cumulative sums are order-
     * independent and bit-equal across engines; distances round @6 with
     * t_id tiebreak so the rank order is total. */
-  def knnShapley(embs: DataFrame, k: Int = 5, nQueries: Int = 32,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+  def knnShapley(embs: DataFrame, k: Int = 5, nQueries: Int = 32): DataFrame = {
     import embs.sparkSession.implicits._
     val e = embs.select(col("vec_id"), col("label"),
       Vectors.asDouble(col("embedding")).as("v"))
@@ -1449,11 +1438,11 @@ object DataSelect {
     val pairs = t.crossJoin(qs)
       .select(col("q_id"), col("q_lbl"), col("t_id"), col("t_lbl"),
         round(Vectors.l2sq(col("tv"), col("qv")), 6).as("d2"))
-    val gi = materialize(TrainPrep.globalOrderIndex(pairs,
-      Seq("q_id", "d2", "t_id"), "gi", materialize))
+    val gi = pin(TrainPrep.globalOrderIndex(pairs,
+      Seq("q_id", "d2", "t_id"), "gi"))
     val base = gi.groupBy("q_id").agg(min(col("gi")).as("g0"),
       count(lit(1)).as("n"))
-    val ranked = materialize(gi.join(broadcast(base), "q_id")
+    val ranked = pin(gi.join(broadcast(base), "q_id")
       .select(col("q_id"), col("t_id"),
         (col("gi") - col("g0") + 1L).as("rank"), col("n"),
         when(col("t_lbl") === col("q_lbl"), 1.0).otherwise(0.0).as("ym")))
@@ -1461,7 +1450,7 @@ object DataSelect {
     // are dense per query, so this IS `lead` without the window
     val nxt = ranked.select(col("q_id"), (col("rank") - 1L).as("rank"),
       col("ym").as("ym_next"))
-    val terms = materialize(ranked.join(nxt, Seq("q_id", "rank"), "left")
+    val terms = pin(ranked.join(nxt, Seq("q_id", "rank"), "left")
       .select(col("q_id"), col("t_id"), col("rank"), col("n"), col("ym"),
         round(when(col("rank") === col("n"), lit(0.0))
           .otherwise((col("ym") - col("ym_next")) /
@@ -1469,7 +1458,7 @@ object DataSelect {
           .cast("decimal(38,12)").as("term")))
     val rs = TrainPrep.runningSumGlobal(
       terms.withColumn("nrank", -col("rank")),
-      Seq("q_id", "nrank"), "term", "rcg", materialize)
+      Seq("q_id", "nrank"), "term", "rcg")
     // earlier-queries offsets: ≤ nQueries rows, driver prefix sum
     val qTot = terms.groupBy("q_id").agg(sum(col("term")).as("qt"))
       .collect().map(r => (r.getLong(0),

@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{Materialize, QueryDef, Tables}
+import graft.{QueryDef, Tables}
+import graft.Materialize.pin
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,10 +44,7 @@ object Dedup {
     // drift on tokenization or the short-document fallback
     TrainPrep.ngramsOf(docs, 3).withColumnRenamed("g", "sh")
 
-  private def shingles(s: SparkSession, d: String): DataFrame =
-    shinglesOf(Tables.documents(s, d))
-
-  /** SQL twin of [[shingles]] (DuckDB list indexing is 1-based like
+  /** SQL twin of [[shinglesOf]] (DuckDB list indexing is 1-based like
     * element_at; range(n) is [0, n)); parameterized over the source
     * relation so composed pipelines (q56) can shingle a CTE. */
   private[ops] def shinglesSqlFrom(src: String): String =
@@ -104,12 +102,11 @@ object Dedup {
     * across tasks. The previous collect_list-per-block formulation put a
     * whole block into ONE row (unbounded single-task array at 100 TB);
     * a join never materializes a block in memory. */
-  def simhashNearDup(docs: DataFrame, radius: Int = 8,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+  def simhashNearDup(docs: DataFrame, radius: Int = 8): DataFrame = {
     // both self-join sides would re-run the whole sketch aggregation
     // (ReuseExchange measured not to fire across AQE broadcast
     // conversion); one sketch row per doc — materialize once
-    val sk = materialize(
+    val sk = pin(
       simhashOf(docs).withColumn("blk", shiftright(col("simhash"), 16)))
     val a = sk.select(col("blk"), col("doc_id").as("id_a"), col("simhash").as("sh_a"))
     val b = sk.select(col("blk"), col("doc_id").as("id_b"), col("simhash").as("sh_b"))
@@ -127,9 +124,8 @@ object Dedup {
     * standard recall/cost dial, same skew story as q49 (a hot block is
     * a hot JOIN partition, AQE-splittable). */
   def simhashNearDupMulti(docs: DataFrame, radius: Int = 8,
-                          nBlocks: Int = 4,
-                          materialize: Materialize.Strategy = Materialize.local): DataFrame = {
-    val sk = materialize(simhashOf(docs))
+                          nBlocks: Int = 4): DataFrame = {
+    val sk = pin(simhashOf(docs))
     val mask = (1L << simBits) - 1
     val blocks = (0 until nBlocks).map { i =>
       val r = 8 * i
@@ -202,13 +198,12 @@ object Dedup {
     * count().over(Window.partitionBy(sh)), which would buffer a hot
     * shingle's whole posting list in one task (the exact hotspot the cap
     * exists to eliminate). */
-  def cappedShinglesOf(docs: DataFrame, cap: Int = dfCap,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+  def cappedShinglesOf(docs: DataFrame, cap: Int = dfCap): DataFrame = {
     // scan→explode→distinct is the expensive stage and BOTH the df
     // aggregation and the anti-join probe consume it; without
     // materialization the whole tree executes twice (ReuseExchange does
     // not collapse the two uses — measured, same diamond as shingleTable)
-    val dsh = materialize(shinglesOf(docs)
+    val dsh = pin(shinglesOf(docs)
       .select(col("doc_id"), substring(md5(col("sh")), 1, 16).as("sh"))
       .distinct())
     val hot = dsh.groupBy("sh").agg(count(lit(1)).as("df"))
@@ -263,12 +258,11 @@ object Dedup {
     * runtime, ReuseExchange does NOT collapse them (AQE's broadcast
     * conversion on one side breaks exchange-level reuse: 10 scans,
     * 0 reused). This is the production shape too: a 100 TB dedup run
-    * writes its shingle/signature table once and reuses it (pass
-    * Materialize.reliable, or a write-then-read strategy, there). */
-  private def shingleTable(docs: DataFrame, cap: Int,
-      materialize: Materialize.Strategy): DataFrame = {
+    * writes its shingle/signature table once and reuses it (with a
+    * checkpoint dir set, `pin` writes it as reliable checkpoint files). */
+  private def shingleTable(docs: DataFrame, cap: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    materialize(cappedShinglesOf(docs, cap, materialize)
+    pin(cappedShinglesOf(docs, cap)
       .withColumn("n", count(lit(1)).over(Window.partitionBy("doc_id"))))
   }
 
@@ -283,9 +277,8 @@ object Dedup {
 
   /** Shingle-Jaccard near-dup pairs (θ=0.5) via inverted-index self-join
     * on df-capped distinct shingles, plus the mass-dup fallback. */
-  def jaccardPairs(docs: DataFrame, cap: Int = dfCap,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
-    val tn = shingleTable(docs, cap, materialize)
+  def jaccardPairs(docs: DataFrame, cap: Int = dfCap): DataFrame = {
+    val tn = shingleTable(docs, cap)
     val a = tn.select(col("doc_id").as("id_a"), col("sh"), col("n").as("na"))
     val b = tn.select(col("doc_id").as("id_b"), col("sh"), col("n").as("nb"))
     jaccardScore(a.join(b, "sh").where(col("id_a") < col("id_b")))
@@ -301,8 +294,7 @@ object Dedup {
 
   /** LSH banding candidate pairs (the scalable generator behind q26/q51):
     * all-pairs within small band buckets, star pairs within over-cap ones. */
-  def lshCandidatesOf(docs: DataFrame, cap: Int = bucketCap,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+  def lshCandidatesOf(docs: DataFrame, cap: Int = bucketCap): DataFrame = {
     // explode-unpivot keeps ONE signature lineage (a union of two
     // selects doubles the scan+shuffle tree); the band self-join's
     // identical exchanges are then deduped by ReuseExchange.
@@ -313,7 +305,7 @@ object Dedup {
       .select(col("doc_id"), col("e.band").as("band"), col("e.bh").as("bh"))
     // 3 consumers (stats + both self-join sides); materialize once —
     // see jaccardPairs for the measured ReuseExchange=0 rationale
-    val bandsM = materialize(bands)
+    val bandsM = pin(bands)
     val stats = bandsM.groupBy("band", "bh")
       .agg(count(lit(1)).as("bn"), min(col("doc_id")).as("rep"))
     val wb = bandsM.join(stats, Seq("band", "bh"))
@@ -349,10 +341,9 @@ object Dedup {
     * verifies ONLY those pairs — candidate-driven joins instead of the
     * full inverted-index self-join; fully-capped docs take the same
     * exact-hash star fallback as q27. */
-  def dedupPipeline(docs: DataFrame, cap: Int = dfCap,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
-    val cand = lshCandidatesOf(docs, materialize = materialize)
-    val tn = shingleTable(docs, cap, materialize) // same materialized diamond as jaccardPairs
+  def dedupPipeline(docs: DataFrame, cap: Int = dfCap): DataFrame = {
+    val cand = lshCandidatesOf(docs)
+    val tn = shingleTable(docs, cap) // same materialized diamond as jaccardPairs
     // candidate-driven: pairs × a-side shingles, then match b-side on
     // (id_b, sh) — cost O(|candidates| · shingles/doc), independent of
     // corpus-wide shingle collision counts.
@@ -375,11 +366,9 @@ object Dedup {
     * two joins keyed by 8-byte doc_id against a 2-column projection of
     * the corpus, and the final aggregation's key space is ≤ sources²
     * — partial-agg collapses it map-side. */
-  def sourceOverlap(docs: DataFrame,
-      materialize: Materialize.Strategy = Materialize.local,
-      pairs: Option[DataFrame] = None): DataFrame = {
+  def sourceOverlap(docs: DataFrame, pairs: Option[DataFrame] = None): DataFrame = {
     val src = docs.select(col("doc_id"), col("source"))
-    pairs.getOrElse(dedupPipeline(docs, materialize = materialize))
+    pairs.getOrElse(dedupPipeline(docs))
       .join(src.select(col("doc_id").as("id_a"), col("source").as("sa")), "id_a")
       .join(src.select(col("doc_id").as("id_b"), col("source").as("sb")), "id_b")
       .groupBy(least(col("sa"), col("sb")).as("source_a"),
@@ -439,8 +428,7 @@ object Dedup {
     * pair's two shingle arrays), no shingle table, no second shuffle.
     * Production would carry shingle digests instead of text through the
     * rank join; the gate carries text to keep the verify exact. */
-  def sortedNeighborhood(docs: DataFrame, window: Int = 4, tau: Double = 0.5,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+  def sortedNeighborhood(docs: DataFrame, window: Int = 4, tau: Double = 0.5): DataFrame = {
     // Shingle each doc exactly ONCE, on a hash-repartitioned stream.
     // Two measured pathologies this layout avoids (sf0.1 numbers in
     // SCALE.md): (1) lambda HOFs (transform) are interpreted, not
@@ -452,12 +440,12 @@ object Dedup {
     // times per doc because CSE cannot see through lambdas. The
     // repartition makes the interpreted build use every core, and the
     // rank then moves only (key, doc_id) — arrays join back by id.
-    val sh = materialize(docs.repartition(col("doc_id"))
+    val sh = pin(docs.repartition(col("doc_id"))
       .select(col("doc_id"), shingleArr(col("text")).as("sh")))
     val keyed = docs.select(col("doc_id"),
       substring(col("text"), 1, 32).as("key"))
     val ranked = Scale.globalRowNumber(keyed,
-      Seq(col("key"), col("doc_id")), materialize)
+      Seq(col("key"), col("doc_id")))
     val left = ranked.select(col("rn"), col("doc_id").as("id_l"))
       .withColumn("_k", explode(array((1 until window).map(lit): _*)))
       .withColumn("rn2", col("rn") + col("_k")).drop("_k")
@@ -785,7 +773,7 @@ object Dedup {
         val sets = ranked.groupBy("doc_id").agg(
           sort_array(collect_list(col("r"))).as("toks"),
           count(lit(1)).as("n"))
-          .localCheckpoint()
+          .transform(pin)
         // prefix length for τ = 9/10: n - ceil(9n/10) + 1, in INTEGER
         // arithmetic ((9n+9) div 10 = ceil(9n/10)) — float ceil(n*0.9)
         // can round across the integer boundary and silently shorten

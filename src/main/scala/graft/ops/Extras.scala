@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{QueryDef, Tables}
+import graft.Materialize.pin
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -770,7 +771,7 @@ object Extras {
             floor(col("c_acctbal") / 1000.0).cast("long").as("band"))
           .groupBy("nation", "segment", "band")
           .agg(count(lit(1)).as("c"))
-          .localCheckpoint() // pinned: grid, globals, and scalars read it
+          .transform(pin) // pinned: grid, globals, and scalars read it
         val bigN = cells.agg(sum(col("c"))).head.getLong(0)
         val nBands = cells.select("band").distinct().count()
         val grid = cells.select("nation", "segment").distinct()
@@ -1075,7 +1076,7 @@ object Extras {
           .groupBy(col("o_orderpriority").as("priority"),
                    col("o_orderstatus").as("status"))
           .agg(count(lit(1)).as("n"))
-          .localCheckpoint()
+          .transform(pin)
         val rt = ct.groupBy("priority").agg(sum("n").as("rn"))
         val colt = ct.groupBy("status").agg(sum("n").as("cn"))
         val tot = ct.agg(sum("n").as("nn"))
@@ -1087,7 +1088,7 @@ object Extras {
           .withColumn("contrib",
             round((col("n") - col("expected")) * (col("n") - col("expected"))
               / col("expected"), 6))
-          .localCheckpoint()
+          .transform(pin)
         val chi2 = cells.agg(
           sum(col("contrib").cast("decimal(18,6)")).cast("double").as("chi2"))
         val dof = rt.agg(count(lit(1)).as("npr"))
@@ -1232,7 +1233,7 @@ object Extras {
         val ev = Tables.events(s, d)
           .where(col("event_type").isin("view", "click"))
           .select(col("event_type").as("seg"), col("value").as("v"))
-          .localCheckpoint()
+          .transform(pin)
         val bounds = ev.agg(min("v").as("lo"), max("v").as("hi"))
         val counts = ev.crossJoin(broadcast(bounds))
           .withColumn("bin", least(
@@ -1241,7 +1242,7 @@ object Extras {
           .groupBy("bin").agg(
             sum(when(col("seg") === "view", 1L).otherwise(0L)).as("na"),
             sum(when(col("seg") === "click", 1L).otherwise(0L)).as("nb"))
-          .localCheckpoint()
+          .transform(pin)
         val tot = counts.agg(sum("na").as("ta"), sum("nb").as("tb"))
         val terms = counts.crossJoin(broadcast(tot))
           .withColumn("pa",
@@ -1250,7 +1251,7 @@ object Extras {
             greatest(col("nb").cast("double") / col("tb"), lit(1e-6)))
           .withColumn("contrib",
             round((col("pa") - col("pb")) * log(col("pa") / col("pb")), 6))
-          .localCheckpoint()
+          .transform(pin)
         val total = terms.agg(
           sum(col("contrib").cast("decimal(18,6)")).cast("double").as("psi_total"))
         terms.select(col("bin"), col("na"), col("nb"), col("contrib"))
@@ -1621,7 +1622,7 @@ object Extras {
         val li = Tables.lineitem(s, d).select("l_orderkey", "l_partkey").distinct()
         val sizes = li.groupBy("l_orderkey").agg(count(lit(1)).as("k"))
         val small = li.join(sizes.where(col("k") <= 20), "l_orderkey")
-          .localCheckpoint()
+          .transform(pin)
         val nb = small.select("l_orderkey").distinct().count()
         val ic = small.groupBy(col("l_partkey")).agg(count(lit(1)).as("ni"))
         val a = small.select(col("l_orderkey"), col("l_partkey").as("pa"))
@@ -2403,7 +2404,6 @@ object Extras {
     // each table one anti-join — content never shuffles.
     QueryDef("q230_cascade_delete",
       (s, d) => {
-        import s.implicits._
         val cust = Tables.customer(s, d)
         val ord = Tables.orders(s, d)
         val li = Tables.lineitem(s, d)
@@ -2658,7 +2658,7 @@ object Extras {
             col("sx").cast("double") * col("sx") / col("nh")) /
             (col("nh") - lit(1L))))
           .withColumn("w", col("nh").cast("double") * col("sd"))
-          .localCheckpoint()
+          .transform(pin)
         val wtot = g.agg(sum(round(col("w"), 9).cast("decimal(38,9)"))
           .cast("double")).first().getDouble(0)
         val shares = g.withColumn("share", col("w") * B / wtot)
@@ -2955,7 +2955,7 @@ object Extras {
       (s, d) => {
         val ev = Tables.events(s, d)
           .select(col("user_id"), unix_micros(col("ts")).as("tsu"))
-          .localCheckpoint()
+          .transform(pin)
         val mm = ev.agg(min("tsu"), max("tsu")).first()
         val mid = mm.getLong(0) + (mm.getLong(1) - mm.getLong(0)) / 2
         val w1 = ev.where(col("tsu") < mid).select("user_id").distinct()
@@ -3002,7 +3002,7 @@ object Extras {
             (year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
               .cast("long").as("mk"),
             QueryDef.dec(col("o_totalprice")).as("rev"))
-          .localCheckpoint()
+          .transform(pin)
         val cohort = o.groupBy("cust").agg(min("mk").as("c0"))
         val sizes = cohort.groupBy("c0").agg(count(lit(1)).as("n_cust"))
         val cells = o.join(cohort, "cust")
@@ -3111,7 +3111,7 @@ object Extras {
         val hourly = Tables.events(s, d)
           .select(expr("unix_micros(ts) div 3600000000").as("h"))
           .groupBy("h").agg(count(lit(1)).as("cnt"))
-          .localCheckpoint()
+          .transform(pin)
         val st = hourly.agg(count(lit(1)), sum("cnt"),
           sum(col("cnt") * col("cnt"))).first()
         val n = st.getLong(0)
@@ -3213,7 +3213,7 @@ object Extras {
             when(col("nw") === 25, sum(col("cnt")).over(wMa).cast("double") / 25.0))
           .where(col("trend").isNotNull)
           .withColumn("det", col("cnt").cast("double") - col("trend"))
-          .localCheckpoint()
+          .transform(pin)
         val seas = tr.groupBy(pmod(col("h"), lit(24)).as("hod"))
           .agg(count(lit(1)).as("n_obs"),
             (sum(round(col("det"), 9).cast("decimal(38,9)")).cast("double") /
@@ -3331,7 +3331,7 @@ object Extras {
         val hourly = Tables.events(s, d)
           .select(expr("unix_micros(ts) div 3600000000").as("h"))
           .groupBy("h").agg(count(lit(1)).as("cnt"))
-          .localCheckpoint()
+          .transform(pin)
         val st = hourly.agg(count(lit(1)), sum("cnt")).first()
         val m = st.getLong(1).toDouble / st.getLong(0)
         val dec9 = (c: org.apache.spark.sql.Column) =>
@@ -3393,7 +3393,7 @@ object Extras {
           .groupBy("user_id", "session_id")
           .agg(min(unix_micros(col("ts"))).as("st"),
             max(unix_micros(col("ts"))).as("en"))
-          .localCheckpoint()
+          .transform(pin)
         val pts = sess.select(col("user_id"), col("session_id"),
             col("st").as("tsu"), lit(1L).as("delta"))
           .unionByName(sess.select(col("user_id"), col("session_id"),
@@ -3404,7 +3404,7 @@ object Extras {
         val cum = Scale.globalRunningSum(sorted,
             Seq(col("tsu"), col("nd"), col("user_id"), col("session_id")),
             col("delta"))
-          .localCheckpoint()
+          .transform(pin)
         val area = cum.join(
             cum.select((col("rn") - 1L).as("rn0"), col("tsu").as("nxt")),
             col("rn") === col("rn0"))
@@ -3756,10 +3756,9 @@ object Extras {
     // the fold's (−score, id) cap — a total order both engines see.
     QueryDef("q284_copurchase_recs",
       (s, d) => {
-        import s.implicits._
         val b = Tables.lineitem(s, d)
           .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct().localCheckpoint()
+          .distinct().transform(pin)
         val cnt = b.groupBy("pk").agg(count(lit(1)).as("np"))
         val pr = b.select(col("ok"), col("pk").as("pa"))
           .join(b.select(col("ok"), col("pk").as("pb")), "ok")
@@ -3885,7 +3884,7 @@ object Extras {
               "div 604800000000 AS BIGINT)").as("wk"),
             round(col("l_extendedprice") * 100, 0).cast("long").as("cents"))
           .groupBy("wk").agg(sum(col("cents")).as("rc"))
-          .localCheckpoint()
+          .transform(pin)
         val nW = wkly.count()
         val nP = nW * (nW - 1) / 2
         val slopes = wkly.select(col("wk").as("wa"), col("rc").as("ra"))
@@ -3958,7 +3957,7 @@ object Extras {
               .as("hr"),
             round(col("value") * 100, 0).cast("long").as("cents"))
           .groupBy("hr").agg(sum(col("cents")).as("vc"))
-          .localCheckpoint()
+          .transform(pin)
         val j = hourly
           .join(hourly.select((col("hr") + 24).as("hr"),
             col("vc").as("v24")), "hr")
@@ -4013,7 +4012,7 @@ object Extras {
             expr("CAST(unix_micros(ts) div 3600000000 AS BIGINT)").as("hr"),
             round(col("value") * 100, 0).cast("long").as("c"))
           .groupBy("t", "hr").agg(sum(col("c")).as("v"))
-          .localCheckpoint()
+          .transform(pin)
         val lags = (0 to 6).toDF("lag")
         val a = ser.select(col("t").as("ta"), col("hr"), col("v").as("x"))
           .crossJoin(broadcast(lags))
@@ -4101,7 +4100,7 @@ object Extras {
           .where(col("tsu") > col("tv"))
           .groupBy("user_id").agg((min(col("tsu")) - min(col("tv")))
             .as("lat"))
-          .localCheckpoint()
+          .transform(pin)
         val n = lat.count()
         def k(q: Long) = (q * n + 99) / 100
         val qs = OrderStats.selectKths(lat, col("lat"),
@@ -4306,7 +4305,7 @@ object Extras {
           .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long"))
               .as("rc"),
             sum(round(col("l_quantity"), 0).cast("long")).as("v"))
-          .localCheckpoint()
+          .transform(pin)
         val a = per.where(col("period") === "a")
           .select(col("p_type"), col("rc").as("rc_a"), col("v").as("v_a"))
         val b = per.where(col("period") === "b")
@@ -4375,7 +4374,7 @@ object Extras {
           .select(col("user_id"),
             expr("CAST(unix_micros(ts) div 86400000000 AS BIGINT)")
               .as("day"))
-          .distinct().localCheckpoint()
+          .distinct().transform(pin)
         val days = pairs.select(col("day").as("d")).distinct()
         val daily = pairs.groupBy(col("day").as("d"))
           .agg(countDistinct(col("user_id")).as("u1"))
@@ -4424,7 +4423,7 @@ object Extras {
               "div 86400000000 AS BIGINT)").as("day"),
             round(col("l_extendedprice") * 100, 0).cast("long").as("c"))
           .groupBy("day").agg(sum(col("c")).as("v"))
-          .localCheckpoint()
+          .transform(pin)
         val n = daily.count()
         val med = OrderStats.selectKth(daily, col("v"), (n + 1) / 2).toLong
         val dev = daily.select(abs(col("v") - med).as("dv"))
@@ -4494,7 +4493,7 @@ object Extras {
             "n_regionkey")
           .groupBy("r_name", "n_name")
           .agg(sum(col("oc")).as("rc"))
-          .localCheckpoint()
+          .transform(pin)
         val reg = leaf.groupBy(col("r_name").as("r2"))
           .agg(sum(col("rc")).as("rrc"))
         val tot = leaf.agg(sum(col("rc")).as("trc"))
@@ -4556,7 +4555,7 @@ object Extras {
           df.select(lit(n).as("cname"),
             df.columns.headOption.map(c => col(c)).get.cast("string").as("v"))
             .where(col("v").isNotNull).distinct()
-        }.reduce(_.unionAll(_)).localCheckpoint()
+        }.reduce(_.unionAll(_)).transform(pin)
         val sizes = sets.groupBy("cname").agg(count(lit(1)).as("sz"))
         val inter = sets.select(col("cname").as("ca"), col("v"))
           .join(sets.select(col("cname").as("cb"), col("v")), "v")
@@ -4631,7 +4630,7 @@ object Extras {
           .select(col("ck"), col("rc").as("rb"))
         val scored = a.join(b, Seq("ck"), "left")
           .select(col("ck"), col("sa"), coalesce(col("rb"), lit(0L)).as("rb"))
-          .localCheckpoint()
+          .transform(pin)
         val n = scored.count()
         val rn = graft.ops.Scale.globalRowNumber(scored,
           Seq((-col("sa")).as("nsa"), col("ck")))
@@ -4893,7 +4892,7 @@ object Extras {
         val ev = Tables.events(s, d)
           .select(col("user_id"), col("event_type"),
             unix_micros(col("ts")).as("tsu"))
-          .localCheckpoint()
+          .transform(pin)
         def typed(t: String, a: String) = ev
           .where(col("event_type") === t)
           .select(col("user_id"), col("tsu").as(a))
@@ -4970,7 +4969,7 @@ object Extras {
           .where(col("t").isin(pairsToScreen.flatMap(p =>
             Seq(p._1, p._2)).distinct.map(x => x: Any): _*))
           .groupBy("t", "x").agg(count(lit(1)).as("c"))
-          .localCheckpoint()
+          .transform(pin)
         val counts = ev.groupBy("t").agg(sum(col("c")).as("n"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         val out = pairsToScreen.map { case (ta, tb) =>
@@ -5048,7 +5047,7 @@ object Extras {
         val wk = expr("CAST(unix_micros(ts) div 604800000000 AS BIGINT)")
         val pairs = Tables.events(s, d)
           .select(col("user_id"), wk.as("w"))
-          .distinct().localCheckpoint()
+          .distinct().transform(pin)
         val cohort = pairs.groupBy("user_id").agg(min(col("w")).as("c0"))
         val sizes = cohort.groupBy(col("c0")).agg(count(lit(1)).as("n0"))
         pairs.join(cohort, "user_id")
@@ -5097,7 +5096,7 @@ object Extras {
           .groupBy("l_orderkey")
           .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long"))
             .as("oc"))
-          .localCheckpoint()
+          .transform(pin)
         val n = perOrder.count()
         val z = 1.959964
         val lo = math.max(1L,
@@ -5164,7 +5163,7 @@ object Extras {
             .select(col("r_regionkey").as("n_regionkey"), col("r_name"))),
             "n_regionkey")
           .select(col("r_name"), col("n_name"), col("o_custkey"))
-          .distinct().localCheckpoint()
+          .distinct().transform(pin)
         val leaf = triples.groupBy("r_name", "n_name")
           .agg(countDistinct(col("o_custkey")).as("n_customers"))
         val regionLvl = triples.groupBy("r_name")

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{QueryDef, Tables}
+import graft.Materialize.pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -47,7 +48,7 @@ object OrderStats {
                 buckets: Int = 1024, exactThreshold: Long = 65536): Double = {
     require(k >= 1, s"rank k=$k must be >= 1")
     val vals = df.select(c.cast("double").as("v")).where(col("v").isNotNull)
-    var bounds = vals.agg(min(col("v")), max(col("v"))).first()
+    val bounds = vals.agg(min(col("v")), max(col("v"))).first()
     require(!bounds.isNullAt(0), "selectKth over an empty or all-null column")
     var lo = bounds.getDouble(0)
     var hi = bounds.getDouble(1)
@@ -119,7 +120,7 @@ object OrderStats {
     val spark = df.sparkSession
     import spark.implicits._
     val vals = df.select(c.cast("double").as("v")).where(col("v").isNotNull)
-      .localCheckpoint() // scanned every round — pin the lineage
+      .transform(pin) // scanned every round — pin the lineage
     val bounds0 = vals.agg(min(col("v")), max(col("v")), count(lit(1))).first()
     require(!bounds0.isNullAt(0), "selectKths over an empty or all-null column")
     val total = bounds0.getLong(2)
@@ -241,11 +242,10 @@ object OrderStats {
     *
     * Returns (g, n, kth). */
   def quantileDiscByGroup(df: DataFrame, key: Column, value: Column, p: Double,
-      buckets: Int = 256, exactThreshold: Long = 4096,
-      materialize: graft.Materialize.Strategy = graft.Materialize.local): DataFrame = {
+      buckets: Int = 256, exactThreshold: Long = 4096): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val vals = materialize(df
+    val vals = pin(df
       .select(key.cast("string").as("g"), value.cast("double").as("v"))
       .where(col("v").isNotNull)) // scanned once per round — pin the lineage
     final class St(val n: Long, val k: Long, var lo: Double, var hi: Double,
@@ -530,7 +530,7 @@ object OrderStats {
           count(lit(1)).as("freq"),
           coalesce(sum(when(col("event_type") === "purchase",
             QueryDef.dec(col("value")))).cast("double"), lit(0.0)).as("monet"))
-          .localCheckpoint()
+          .transform(pin)
         val n = m.count()
         // one selectKths refinement per metric column (4 cuts each in
         // ~4 shared jobs) instead of 12 sequential selectKth series
@@ -787,7 +787,7 @@ object OrderStats {
           .where(col("rn") === greatest(lit(1L),
             ceil(col("n").cast("double") * 0.9).cast("long")))
           .select(col("user_id"), col("value").as("p90"))
-          .localCheckpoint()
+          .transform(pin)
         val nu = per.count()
         val ps = Seq(0.05, 0.25, 0.5, 0.75, 0.95)
         val ranks = ps.map(p => math.max(1L, math.ceil(p * nu).toLong))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{QueryDef, Tables}
+import graft.Materialize.pin
 import graft.QueryDef.{dec, dsum, dsumSql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -665,7 +666,7 @@ object Relational {
     // once, cross-joined with the format labels). Doubles survive the
     // text formats because Spark writes shortest-repr and Java's
     // parse(shortest(d)) == d round-trip guarantee holds; dates are
-    // text-exact by construction. The union is localCheckpoint-ed so
+    // text-exact by construction. The union is pinned so
     // the temp files can be deleted before the driver consumes the
     // result (the query must not depend on scratch files outliving
     // its construction).
@@ -697,7 +698,7 @@ object Relational {
             .select("fmt", "l_returnflag", "n", "sum_qty", "sum_price",
               "max_ship")
             .orderBy("fmt", "l_returnflag")
-            .localCheckpoint()
+            .transform(pin)
         } finally {
           def rm(f: java.io.File): Unit = {
             Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
@@ -727,7 +728,7 @@ object Relational {
     // the file schemas, and null-fill the missing column in old files
     // — the null surfaced as an explicit pre-schema label, never
     // silently conflated with a real value. Same scratch-dir hygiene
-    // as q144 (localCheckpoint before cleanup).
+    // as q144 (pin before cleanup).
     QueryDef("q161_schema_evolution",
       (s, d) => {
         val docs = Tables.documents(s, d)
@@ -743,7 +744,7 @@ object Relational {
               coalesce(col("lang"), lit("(pre-schema)")).as("lang"))
             .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("n_chars"))
             .orderBy("gen", "lang")
-            .localCheckpoint()
+            .transform(pin)
         } finally {
           def rm(f: java.io.File): Unit = {
             Option(f.listFiles).foreach(_.foreach(rm)); f.delete()

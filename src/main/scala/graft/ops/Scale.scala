@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{QueryDef, Tables}
+import graft.Materialize.pin
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -134,15 +135,13 @@ object Scale {
     * add each partition's prefix offset to a bounded per-partition
     * row_number. Every task sorts only its own range slice.
     *
-    * `materialize` must PIN the range-partitioned table: its sampled
-    * boundaries feed both the count pass and the numbering pass, and a
-    * recomputed lineage could resample different boundaries (default
-    * localCheckpoint; `_.checkpoint()` on a real cluster). The sort
-    * key list must be a total order (append a unique id) or numbering
-    * within ties is partition-dependent. */
-  def globalRowNumber(df: DataFrame, sort: Seq[Column],
-      materialize: graft.Materialize.Strategy = graft.Materialize.local): DataFrame =
-    globalRunningSum(df, sort, lit(1L), materialize).withColumnRenamed("cum", "rn")
+    * The range-partitioned table is PINNED (`Materialize.pin`): its
+    * sampled boundaries feed both the count pass and the numbering
+    * pass, and a recomputed lineage could resample different
+    * boundaries. The sort key list must be a total order (append a
+    * unique id) or numbering within ties is partition-dependent. */
+  def globalRowNumber(df: DataFrame, sort: Seq[Column]): DataFrame =
+    globalRunningSum(df, sort, lit(1L)).withColumnRenamed("cum", "rn")
 
   /** Global running sum of `value` over a total order — same two-phase
     * shape as [[globalRowNumber]] (which is this with value = 1): per-
@@ -150,9 +149,8 @@ object Scale {
     * prefix offsets folded into a literal CASE chain, bounded
     * per-partition windows. The inclusive running sum at each row is
     * its partition's offset plus the within-partition running sum. */
-  def globalRunningSum(df: DataFrame, sort: Seq[Column], value: Column,
-      materialize: graft.Materialize.Strategy = graft.Materialize.local): DataFrame = {
-    val ranged = materialize(df.withColumn("_v", value)
+  def globalRunningSum(df: DataFrame, sort: Seq[Column], value: Column): DataFrame = {
+    val ranged = pin(df.withColumn("_v", value)
       .repartitionByRange(sort: _*)
       .withColumn("_pid", spark_partition_id()))
     val subs = ranged.groupBy("_pid").agg(sum(col("_v")).as("_s"))
@@ -181,19 +179,16 @@ object Scale {
     * per-partition minima (one long each) to the driver, EXCLUSIVE
     * prefix minima rebroadcast, bounded per-partition windows combined
     * via least(). Appends column "cum" (the inclusive running min). */
-  def globalRunningMin(df: DataFrame, sort: Seq[Column], value: Column,
-      materialize: graft.Materialize.Strategy = graft.Materialize.local): DataFrame =
-    globalRunningExtremum(df, sort, value, isMin = true, materialize)
+  def globalRunningMin(df: DataFrame, sort: Seq[Column], value: Column): DataFrame =
+    globalRunningExtremum(df, sort, value, isMin = true)
 
   /** Running maximum twin of [[globalRunningMin]]. */
-  def globalRunningMax(df: DataFrame, sort: Seq[Column], value: Column,
-      materialize: graft.Materialize.Strategy = graft.Materialize.local): DataFrame =
-    globalRunningExtremum(df, sort, value, isMin = false, materialize)
+  def globalRunningMax(df: DataFrame, sort: Seq[Column], value: Column): DataFrame =
+    globalRunningExtremum(df, sort, value, isMin = false)
 
   private def globalRunningExtremum(df: DataFrame, sort: Seq[Column],
-      value: Column, isMin: Boolean,
-      materialize: graft.Materialize.Strategy): DataFrame = {
-    val ranged = materialize(df.withColumn("_v", value)
+      value: Column, isMin: Boolean): DataFrame = {
+    val ranged = pin(df.withColumn("_v", value)
       .repartitionByRange(sort: _*)
       .withColumn("_pid", spark_partition_id()))
     val aggOf = (c: Column) => if (isMin) min(c) else max(c)
@@ -228,9 +223,8 @@ object Scale {
     * plain ascending columns (the head lookup orders by their struct),
     * and `value` must be non-null (a null value is indistinguishable
     * from the end-of-partition marker the boundary stitch replaces). */
-  def globalLead(df: DataFrame, sort: Seq[Column], value: Column,
-      materialize: graft.Materialize.Strategy = graft.Materialize.local): DataFrame = {
-    val ranged = materialize(df.withColumn("_v", value)
+  def globalLead(df: DataFrame, sort: Seq[Column], value: Column): DataFrame = {
+    val ranged = pin(df.withColumn("_v", value)
       .repartitionByRange(sort: _*)
       .withColumn("_pid", spark_partition_id()))
     val heads = ranged.groupBy("_pid")
@@ -318,11 +312,10 @@ object Scale {
     * Returns the input columns + `prev` (the previous ts within the
     * row's key, null for each key's first row). */
   def distributedLag(df: DataFrame, key: Column, ts: Column, tie: Column,
-      partitions: Int = 32,
-      materialize: graft.Materialize.Strategy = graft.Materialize.local): DataFrame = {
+      partitions: Int = 32): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val ranged = materialize(df
+    val ranged = pin(df
       .withColumn("_k", key).withColumn("_ts", ts).withColumn("_tie", tie)
       .repartitionByRange(partitions, col("_k"), col("_ts"), col("_tie"))
       .withColumn("_pid", spark_partition_id()))
@@ -502,7 +495,7 @@ object Scale {
         import s.implicits._
         def report(name: String, df: DataFrame, key: Column) = {
           val counts = df.groupBy(key.as("k")).agg(count(lit(1)).as("n"))
-            .localCheckpoint()
+            .transform(pin)
           val r = counts.agg(sum("n").cast("long"), count(lit(1)), max("n")).first()
           val (nRows, nKeys, maxN) = (r.getLong(0), r.getLong(1), r.getLong(2))
           val p50 = OrderStats.selectKth(counts, col("n"),
@@ -831,7 +824,7 @@ object Scale {
         val act = Tables.events(s, d)
           .groupBy("user_id").agg(count(lit(1)).as("x"))
         val top = act.orderBy(col("x").desc, col("user_id")).limit(k)
-          .localCheckpoint()
+          .transform(pin)
         val xk = top.agg(min("x")).first().getLong(0)
         top.agg(sum(round(log(col("x").cast("double") / xk), 9)
             .cast("decimal(38,9)")).cast("double").as("slog"))
@@ -957,7 +950,7 @@ object Scale {
         val freq = Tables.lineitem(s, d)
           .groupBy(col("l_partkey").as("pk"))
           .agg(count(lit(1)).as("cnt"))
-          .localCheckpoint()
+          .transform(pin)
         val nk = freq.count()
         val k50 = (nk + 1) / 2
         val k99 = (99 * nk + 99) / 100
@@ -1028,7 +1021,7 @@ object Scale {
           val ranged = base
             .repartitionByRange(32, sort: _*)
             .withColumn("_pid", spark_partition_id())
-            .localCheckpoint()
+            .transform(pin)
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy("_pid").orderBy(sort: _*)
           val within = ranged
@@ -1149,7 +1142,7 @@ object Scale {
             (conv(substring(md5(concat_ws("|",
               col("l_orderkey"), col("l_linenumber"), col("l_partkey"))),
               1, 8), 16, 10).cast("long") % 20).as("h"))
-          .localCheckpoint()
+          .transform(pin)
         val n = li.count()
         val exact = OrderStats.selectKth(li, col("c"), (n + 1) / 2).toLong
         val samp = li.where(col("h") === 0)
@@ -1205,7 +1198,7 @@ object Scale {
         val files = Tables.orders(s, d)
           .groupBy((col("o_orderkey") % 199).as("file_id"))
           .agg(sum(round(col("o_totalprice") * 100, 0).cast("long")).as("bytes"))
-          .localCheckpoint() // pinned: the target scalar + the plan both read it
+          .transform(pin) // pinned: the target scalar + the plan both read it
         // merge-group target = total/25 — data-derived (sf-independent
         // packing ratio ~8 files/bin), BIGINT-exact on both engines;
         // one 8-byte driver scalar, the q319 precedent

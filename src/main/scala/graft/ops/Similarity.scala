@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{QueryDef, Tables}
+import graft.Materialize.pin
 import graft.functions.Vectors
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -481,7 +482,7 @@ object Similarity {
         val pts = Tables.embeddings(s, d).select(
             element_at(Vectors.asDouble(col("embedding")), 1).as("x"),
             element_at(Vectors.asDouble(col("embedding")), 2).as("y"))
-          .localCheckpoint()
+          .transform(pin)
         def r9(x: Double) = BigDecimal.valueOf(x)
           .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
         val c0 = pts.agg(

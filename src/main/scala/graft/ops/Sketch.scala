@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{Materialize, QueryDef, Tables}
+import graft.{QueryDef, Tables}
+import graft.Materialize.pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -90,10 +91,9 @@ object Sketch {
     * exact-count ONLY the admitted tokens — the exact aggregation's key
     * space is the candidate set, never the vocabulary. Sketch false
     * positives are then dropped exactly (`n ≥ frac·total`). */
-  def heavyHitters(docs: DataFrame, frac: Double = 0.02,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+  def heavyHitters(docs: DataFrame, frac: Double = 0.02): DataFrame = {
     val toks = docs.select(explode(split(col("text"), " ")).as("tok"))
-    val cells = materialize(countMinCellsOf(toks)) // probed d times below
+    val cells = pin(countMinCellsOf(toks)) // probed d times below
     val est = (0 until depth).foldLeft(toks) { (df, i) =>
       df.join(broadcast(cells.where(col("row") === i)
           .select(col("bucket").as(s"b$i"), col("cell").as(s"c$i"))),
@@ -182,7 +182,7 @@ object Sketch {
     // error at this corpus/width ratio.
     QueryDef("q79_countmin",
       (s, d) => {
-        val tc = tokenCounts(Tables.documents(s, d)).localCheckpoint()
+        val tc = tokenCounts(Tables.documents(s, d)).transform(pin)
         val top = tc.orderBy(col("n").desc, col("tok")).limit(20)
         top.join(estimate(countMinCells(tc), top.select("tok")), "tok")
           .select(col("tok"), col("n"), col("est_n"))
@@ -337,7 +337,7 @@ object Sketch {
         val merged = countMinCells(tokenCounts(prior))
           .unionByName(countMinCells(tokenCounts(delta)))
           .groupBy("row", "bucket").agg(sum(col("cell")).as("cell"))
-        val tcAll = tokenCounts(docs).localCheckpoint()
+        val tcAll = tokenCounts(docs).transform(pin)
         val top = tcAll.orderBy(col("n").desc, col("tok")).limit(10)
           .select("tok")
         estimate(merged, top)
@@ -391,7 +391,7 @@ object Sketch {
         val li = Tables.lineitem(s, d).select(col("l_orderkey"),
           col("l_returnflag").as("g"), col("l_extendedprice").cast("double").as("v"))
         val bounds = li.groupBy("g").agg(min("v").as("lo"), max("v").as("hi"),
-          count(lit(1)).as("n")).localCheckpoint()
+          count(lit(1)).as("n")).transform(pin)
         val wdt = (col("hi") - col("lo")) / B
         def hist(df: DataFrame) =
           df.join(broadcast(bounds.select("g", "lo", "hi")), "g")
@@ -400,10 +400,10 @@ object Sketch {
                 greatest(least(floor((col("v") - col("lo")) / wdt), lit(B - 1)),
                   lit(0)).cast("int")).as("b"))
             .groupBy("g", "b").agg(count(lit(1)).as("c"))
-        val full = hist(li).localCheckpoint()
+        val full = hist(li).transform(pin)
         val merged = hist(li.where(col("l_orderkey") % 4 =!= 0))
           .unionByName(hist(li.where(col("l_orderkey") % 4 === 0)))
-          .groupBy("g", "b").agg(sum(col("c")).as("c")).localCheckpoint()
+          .groupBy("g", "b").agg(sum(col("c")).as("c")).transform(pin)
         // BOTH quantiles from one cumulative pass per histogram (the
         // oracle's conditional-min shape): 2 windows total, each over
         // a ≤ keys×B bin table
@@ -488,11 +488,11 @@ object Sketch {
             .groupBy("row").agg(sum(col("ca") * col("cb")).as("ip"))
             .agg(min(col("ip")).as("est_size"))
         val lp = keyCounts(Tables.lineitem(s, d), col("l_partkey"))
-          .localCheckpoint()
+          .transform(pin)
         val oc = keyCounts(Tables.orders(s, d), col("o_custkey"))
-          .localCheckpoint()
+          .transform(pin)
         val eu = keyCounts(Tables.events(s, d), col("user_id"))
-          .localCheckpoint()
+          .transform(pin)
         val selfRow = lp.agg(sum(col("n") * col("n")).as("exact_size"))
           .crossJoin(broadcast(inner(countMinCells(lp, w), countMinCells(lp, w))))
           .select(lit("lineitem.l_partkey self-join").as("join_key"),
@@ -568,7 +568,7 @@ object Sketch {
           .where(col("event_type").isin("click", "purchase") &&
             col("value") > 150.0)
           .select(col("event_type"), col("user_id").cast("string").as("item"))
-          .localCheckpoint()
+          .transform(pin)
         def pop(t: String, k: String) = ev.where(col("event_type") === t)
           .select(lit(k).as("key"), col("item"))
         val keyed = pop("click", "a").unionAll(pop("purchase", "b"))

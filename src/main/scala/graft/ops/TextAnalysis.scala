@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{QueryDef, Tables}
+import graft.Materialize.pin
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -59,7 +60,7 @@ object TextAnalysis {
 
   /** Per-(doc_id, trigram) counts — q72's pre-materialization lineage,
     * exposed as a named builder so PlanSpec's anti-pattern audit can
-    * see the subtree that localCheckpoint truncates out of the
+    * see the subtree that the pin truncates out of the
     * declared query's plan. */
   def trigramCounts(docs: DataFrame): DataFrame =
     docs.where(length(col("text")) >= 3)
@@ -97,11 +98,10 @@ object TextAnalysis {
     * index (the q65 layout q134 summarizes): a phrase query scans just
     * its terms' buckets. The filtered postings table is materialized
     * once and shared by every phrase's join chain. */
-  def phraseSearch(docs: DataFrame, phrases: Seq[String],
-      materialize: graft.Materialize.Strategy = graft.Materialize.local)
+  def phraseSearch(docs: DataFrame, phrases: Seq[String])
       : DataFrame = {
     val vocab = phrases.flatMap(_.split(" ")).distinct
-    val postings = materialize(
+    val postings = pin(
       docs.where(col("text").isNotNull && length(col("text")) > 0)
         .select(col("doc_id"),
           posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
@@ -193,7 +193,7 @@ object TextAnalysis {
     val cnt = docs
       .groupBy(col("source"), col("n_chars").as("v"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .transform(pin)
     val vals = cnt.select("v").distinct()
     val srcs = cnt.groupBy("source").agg(sum(col("c")).as("n"))
     val grid = vals.crossJoin(broadcast(srcs))
@@ -532,12 +532,12 @@ object TextAnalysis {
         // materialized ONCE: the hot-df aggregation and the anti-join
         // probe both consume it — the same double-lineage diamond fixed
         // in Dedup.cappedShinglesOf (ReuseExchange does not collapse it)
-        val w = winnowTable(s, d).localCheckpoint()
+        val w = winnowTable(s, d).transform(pin)
         val hot = w.groupBy("fp").agg(count(lit(1)).as("df"))
           .where(col("df") > fpCap).select("fp")
         val t = w.join(hot, Seq("fp"), "left_anti")
           .withColumn("n", count(lit(1)).over(Window.partitionBy("doc_id")))
-          .localCheckpoint()
+          .transform(pin)
         val a = t.select(col("doc_id").as("id_a"), col("fp"), col("n").as("na"))
         val b = t.select(col("doc_id").as("id_b"), col("fp"), col("n").as("nb"))
         a.join(b, "fp").where(col("id_a") < col("id_b"))
@@ -623,7 +623,7 @@ object TextAnalysis {
         // two consumers (corpus freq + the weighted join probe; the
         // ReuseExchange diamond again). Weighting by the count
         // preserves exact position-level semantics at count-level cost.
-        val tgc = trigramCounts(Tables.documents(s, d)).localCheckpoint()
+        val tgc = trigramCounts(Tables.documents(s, d)).transform(pin)
         val freq = tgc.groupBy("tg").agg(sum(col("c")).as("cf"))
         tgc.join(freq, "tg")
           .groupBy("doc_id")
@@ -873,12 +873,12 @@ object TextAnalysis {
       (s, d) => {
         val dt = Tables.documents(s, d)
           .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-          .distinct().localCheckpoint() // 3 consumers: n, df, pair stream
+          .distinct().transform(pin) // 3 consumers: n, df, pair stream
         val n = dt.agg(countDistinct(col("doc_id")).as("n"))
         val fi = dt.groupBy("tok").agg(count(lit(1)).as("df"))
           .crossJoin(broadcast(n))
           .where(col("df") >= col("n") * 0.25).select("tok", "df")
-          .localCheckpoint() // 3 consumers: prune, df_a, df_b
+          .transform(pin) // 3 consumers: prune, df_a, df_b
         val dtf = dt.join(broadcast(fi.select("tok")), "tok")
         val pairs = dtf.as("a").join(dtf.as("b"),
             col("a.doc_id") === col("b.doc_id") && col("a.tok") < col("b.tok"))
@@ -970,7 +970,7 @@ object TextAnalysis {
         val c = Tables.documents(s, d)
           .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
           .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
-          .localCheckpoint()
+          .transform(pin)
         val stats = c.groupBy("tok")
           .agg(count(lit(1)).as("df"), sum(col("c")).as("cf"))
         val topk = new graft.functions.Folds.TopK(5)
@@ -1135,7 +1135,7 @@ object TextAnalysis {
       (s, d) => {
         val t = Tables.documents(s, d)
           .select(col("source"), explode(split(col("text"), " ")).as("tok"))
-          .distinct().localCheckpoint()
+          .distinct().transform(pin)
         val sz = t.groupBy("source").agg(count(lit(1)).as("nv"))
         val shared = t.select(col("source").as("source_a"), col("tok"))
           .join(t.select(col("source").as("source_b"), col("tok")), Seq("tok"))
@@ -1698,7 +1698,7 @@ object TextAnalysis {
     // values both engines computed identically.
     QueryDef("q274_ks_significance",
       (s, d) => {
-        val m = ksMatrix(Tables.documents(s, d)).localCheckpoint()
+        val m = ksMatrix(Tables.documents(s, d)).transform(pin)
         val nPairs = m.count()
         val alphaSidak = 1.0 - math.pow(0.95, 1.0 / nPairs)
         m.withColumn("n_eff",
@@ -1750,7 +1750,7 @@ object TextAnalysis {
             lit(false))).as("tok"))
           .groupBy("tok").agg(count(lit(1)).as("r"))
         val sr = tc.groupBy("r").agg(count(lit(1)).as("s_r"))
-          .localCheckpoint()
+          .transform(pin)
         val n = tc.agg(sum("r")).first().getLong(0)
         val s1 = sr.where(col("r") === 1L).select("s_r")
           .collect().headOption.map(_.getLong(0)).getOrElse(0L)
@@ -1932,7 +1932,7 @@ object TextAnalysis {
         val tf = Tables.documents(s, d)
           .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
           .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-          .localCheckpoint()
+          .transform(pin)
         val nDocs = Tables.documents(s, d).count()
         val dfr = tf.groupBy("token").agg(count(lit(1)).as("dfreq"))
         val scored = tf.join(dfr, "token")
@@ -2213,9 +2213,9 @@ object TextAnalysis {
   private def knScore(bi: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val dbc = bi.groupBy("doc_id", "u", "w").agg(count(lit(1)).as("c"))
-          .localCheckpoint() // 2 consumers: the model and the scorer
+          .transform(pin) // 2 consumers: the model and the scorer
         val cb = dbc.groupBy("u", "w").agg(sum(col("c")).as("cb"))
-          .localCheckpoint() // 4 consumers: cu, nsucc, npred, T
+          .transform(pin) // 4 consumers: cu, nsucc, npred, T
         val cu = cb.groupBy("u").agg(sum(col("cb")).as("cu"),
           count(lit(1)).as("nsucc"))
         val npred = cb.groupBy("w").agg(count(lit(1)).as("npred"))
@@ -2239,7 +2239,7 @@ object TextAnalysis {
           .crossJoin(broadcast(types))
           .select(col("u"), col("w"), col("cb"),
             round(log(p), 9).cast("decimal(18,9)").as("lp"))
-          .localCheckpoint() // 2 consumers: per-doc scoring + corpus CE
+          .transform(pin) // 2 consumers: per-doc scoring + corpus CE
         val perDoc = dbc.join(lp.select("u", "w", "lp"), Seq("u", "w"))
           .groupBy("doc_id")
           .agg(sum(col("lp") * col("c").cast("decimal(10,0)")).as("slp"),

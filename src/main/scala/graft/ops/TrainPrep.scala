@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{Materialize, QueryDef, Tables}
+import graft.{QueryDef, Tables}
+import graft.Materialize.pin
 import graft.core.Substrate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -117,17 +118,15 @@ object TrainPrep {
     * Range partitioning on (source, doc_id) makes the partition id
     * monotone in doc_id within each source, which is exactly what makes
     * the per-source prefix over subtotals the correct group offset.
-    * `materialize` must PIN the range-partitioned table (default
-    * localCheckpoint; pass `_.checkpoint()` on a real cluster): its
+    * The range-partitioned table is PINNED (`Materialize.pin`): its
     * sampled boundaries feed BOTH phases, and a recomputed lineage
     * could resample different boundaries, mismatching offsets against
     * rows. seq arithmetic is integer (`div`), exact at any corpus size
     * — floor(x / budget) over doubles drifts past 2^53 tokens. */
-  def packSequences(docs: DataFrame, budget: Int = 256,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+  def packSequences(docs: DataFrame, budget: Int = 256): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val sized = materialize(docs
+    val sized = pin(docs
       .select(col("doc_id"), col("source"),
         size(split(col("text"), " ")).cast("long").as("n_tok"))
       .repartitionByRange(col("source"), col("doc_id"))
@@ -161,10 +160,9 @@ object TrainPrep {
     *
     * Scale: packSequences' bounded two-phase shape plus one per-row
     * explode whose fan-out is ceil(n_tok/budget)+1 — no new shuffle. */
-  def packSpans(docs: DataFrame, budget: Int = 256,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+  def packSpans(docs: DataFrame, budget: Int = 256): DataFrame = {
     val b = lit(budget.toLong)
-    packSequences(docs, budget, materialize)
+    packSequences(docs, budget)
       .where(col("n_tok") > 0)
       .withColumn("seq_id",
         explode(sequence(col("seq_id"), expr(s"(begin_tok + n_tok - 1) div $budget"))))
@@ -181,8 +179,7 @@ object TrainPrep {
     * (min (doc_id, pos)); each document is rebuilt from its surviving
     * blocks in order. Documents reduced to nothing stay present with
     * clean_text = '' so the output is total over the corpus. */
-  def blockDedup(docs: DataFrame, blockTokens: Int = 10,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+  def blockDedup(docs: DataFrame, blockTokens: Int = 10): DataFrame = {
     val w = col("w")
     val nb = ceil(size(w) / lit(blockTokens.toDouble)).cast("int")
     // one corpus pass: the block table feeds the argmin aggregation,
@@ -195,7 +192,7 @@ object TrainPrep {
         posexplode(transform(sequence(lit(0), nb - 1),
           i => concat_ws(" ", slice(w, i * blockTokens + 1, lit(blockTokens))))))
       .toDF("doc_id", "pos", "blk")
-    val blocks = materialize(blocksRaw)
+    val blocks = pin(blocksRaw)
     val first = blocks.groupBy("blk")
       .agg(min(struct(col("doc_id"), col("pos"))).as("f"))
     val kept = blocks.join(first, "blk")
@@ -239,11 +236,10 @@ object TrainPrep {
     * narrowing option as q77, kept exact for oracle parity). The
     * window-hash is the md5-slice family shared with MinHash/CMS so
     * the oracle mirrors it verbatim. */
-  def cdcChunkDedup(docs: DataFrame, n: Int = 4, m: Int = 8,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+  def cdcChunkDedup(docs: DataFrame, n: Int = 4, m: Int = 8): DataFrame = {
     val chunksArr = call_function("graft_cdc_chunks",
       col("text"), lit(n), lit(m))
-    val chunks = materialize(docs.repartition(col("doc_id"))
+    val chunks = pin(docs.repartition(col("doc_id"))
       .select(col("doc_id"), posexplode(chunksArr).as(Seq("pos", "chunk"))))
     val first = chunks.groupBy("chunk")
       .agg(min(struct(col("doc_id"), col("pos"))).as("f"))
@@ -273,13 +269,12 @@ object TrainPrep {
     * rounded to 6 dp: pow/sum association may differ by ulps across
     * engines, and the rounding makes the value deterministic without
     * changing any sampling decision. */
-  def mixtureWeights(docs: DataFrame, alpha: Double = 0.7,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+  def mixtureWeights(docs: DataFrame, alpha: Double = 0.7): DataFrame = {
     // the per-lang count table is THE corpus aggregation — materialize
     // it so the total/normalizer/final subtrees (4 consumers) read a
     // handful of rows instead of re-running the corpus scan (the
     // ReuseExchange-vs-broadcast diamond, SCALE.md round 3)
-    val counts = materialize(
+    val counts = pin(
       docs.groupBy("lang").agg(count(lit(1)).as("n_docs")))
     val total = counts.agg(sum(col("n_docs")).as("n_total"))
     val scored = counts.crossJoin(broadcast(total))
@@ -306,10 +301,9 @@ object TrainPrep {
     * with map-side combine. floor, not round: round's half-up vs
     * half-even tie rule differs across engines, while floor over the
     * same 6-dp weight is tie-free deterministic. */
-  def sampledCounts(docs: DataFrame, alpha: Double = 0.7,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame =
+  def sampledCounts(docs: DataFrame, alpha: Double = 0.7): DataFrame =
     docs.join(
-        broadcast(mixtureWeights(docs, alpha, materialize)
+        broadcast(mixtureWeights(docs, alpha)
           .select(col("lang"), col("upsample"))),
         "lang")
       .groupBy("source", "lang")
@@ -329,14 +323,13 @@ object TrainPrep {
     * Scale: broadcast weight attach + per-row hash + explode — the
     * corpus side never shuffles; the output size is the resampled
     * corpus itself, the irreducible cost of materialization. */
-  def resample(docs: DataFrame, alpha: Double = 0.7,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+  def resample(docs: DataFrame, alpha: Double = 0.7): DataFrame = {
     val up = col("upsample")
     // 32 md5 bits → uniform [0,1): both engines compute the identical
     // BIGINT / 2^32 double, so the < comparison can never disagree
     val u = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
       .cast("double") / lit(4294967296.0)
-    docs.join(broadcast(mixtureWeights(docs, alpha, materialize)
+    docs.join(broadcast(mixtureWeights(docs, alpha)
         .select(col("lang"), col("upsample"))), "lang")
       .withColumn("n_copies",
         (floor(up) + when(u < up - floor(up), 1L).otherwise(0L)).cast("long"))
@@ -377,9 +370,8 @@ object TrainPrep {
     * With concat-then-chunk packing only each shard's FINAL sequence
     * can be partial, so fill → 1 as shards grow; a low fill flags a
     * mis-sharded corpus (many tiny sources). */
-  def packingReport(docs: DataFrame, budget: Int = 256,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame =
-    packSpans(docs, budget, materialize)
+  def packingReport(docs: DataFrame, budget: Int = 256): DataFrame =
+    packSpans(docs, budget)
       .groupBy("source")
       .agg(
         (max(col("seq_id")) + 1L).as("n_seqs"),
@@ -436,7 +428,6 @@ object TrainPrep {
     * collects to the driver.
     */
   def splitAudit(docs: DataFrame, trainPct: Int = 8, valPct: Int = 1,
-      materialize: Materialize.Strategy = Materialize.local,
       pairs: Option[DataFrame] = None): DataFrame = {
     def bucket(c: Column): Column =
       conv(substring(md5(concat(lit("q147|"), c.cast("string"))), 1, 8), 16, 10)
@@ -444,12 +435,12 @@ object TrainPrep {
     def name(b: Column): Column =
       when(b < trainPct, "train")
         .when(b < trainPct + valPct, "val").otherwise("test")
-    val lab = Components.dedupClusters(docs, materialize, pairs)
+    val lab = Components.dedupClusters(docs, pairs)
       .select("doc_id", "canonical_id")
     // pinned: the per-cluster distinct-split counts AND the two final
     // per-split rollups all consume it (ReuseExchange does not
     // collapse the diamond — the q67 lesson)
-    val withSplits = materialize(
+    val withSplits = pin(
       docs.select(col("doc_id"), col("n_chars")).join(lab, "doc_id")
         .withColumn("cluster_split", name(bucket(col("canonical_id"))))
         .withColumn("naive_split", name(bucket(col("doc_id")))))
@@ -557,10 +548,9 @@ object TrainPrep {
     * (`n_tok`, `n_removed`, `n_kept`, `text_dedup`) — conservation
     * n_tok = n_removed + n_kept holds row by row. */
   def removeCrossDocSpans(docs: DataFrame, minLen: Int = 50,
-      dfCap: Int = spanDfCap,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+      dfCap: Int = spanDfCap): DataFrame = {
     val L = minLen
-    val removeStarts = spanRemovalStarts(docs, minLen, dfCap, materialize)
+    val removeStarts = spanRemovalStarts(docs, minLen, dfCap)
     val toks = docs.repartition(col("doc_id"))
       .select(col("doc_id"),
         posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
@@ -612,15 +602,15 @@ object TrainPrep {
   }
 
   private[ops] def spanRemovalStarts(docs: DataFrame, minLen: Int,
-      dfCap: Int, materialize: Materialize.Strategy): DataFrame = {
+      dfCap: Int): DataFrame = {
     val L = minLen
     val w = split(col("text"), " ")
     val (eligible, grams0) = windowHashGrams(docs, L)
-    val grams = materialize(grams0)
+    val grams = pin(grams0)
     // pinned: dup-hash-count-sized, and consumed by THREE plans below
     // (dupH twice, hotH once) — unpinned, each would re-run the full
     // grams countDistinct
-    val dupAll = materialize(grams.groupBy("h")
+    val dupAll = pin(grams.groupBy("h")
       .agg(countDistinct(col("doc_id")).as("nd"))
       .where(col("nd") > 1))
     // ≤ cap: the text-verified path; > cap: the hash-only fallback
@@ -1001,7 +991,7 @@ object TrainPrep {
               sequence(lit(0), size(w) - spanW, lit(stride)),
               p => md5(array_join(slice(w, p + 1, lit(spanW)), " "))))
               .as(Seq("pos", "fp")))
-          .localCheckpoint() // 2 consumers: occurrence counts + report
+          .transform(pin) // 2 consumers: occurrence counts + report
         val occ = spans.groupBy("fp")
           .agg(count(lit(1)).as("n_occ"),
             countDistinct(col("doc_id")).as("n_docs"))
@@ -1068,7 +1058,6 @@ object TrainPrep {
     // >cap docs (boilerplate) with the non-silent fallback report.
     QueryDef("q192_longspan_dedup",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val L = 25; val K = 8; val WIN = L - K + 1 // 18
         val w = split(col("text"), " ")
         // k-gram hash array, bound ONCE as a lambda variable (transform
@@ -1090,7 +1079,7 @@ object TrainPrep {
         val anchors = base
           .select(col("doc_id"), explode(anchorArr).as("an"))
           .select(col("doc_id"), col("an.apos").as("apos"), col("an.h").as("h"))
-          .localCheckpoint() // consumed twice (both sides of the self-join)
+          .transform(pin) // consumed twice (both sides of the self-join)
         val cand = anchors.select(col("doc_id").as("a"), col("apos").as("pa"), col("h"))
           .join(anchors.select(col("doc_id").as("b"), col("apos").as("pb"), col("h")), "h")
           .where(col("a") < col("b"))
@@ -1101,7 +1090,7 @@ object TrainPrep {
         val toks = base
           .select(col("doc_id"), posexplode(w).as(Seq("pos", "tok")))
           .join(candDocs, Seq("doc_id"), "left_semi")
-          .localCheckpoint() // consumed twice (A and B sides)
+          .transform(pin) // consumed twice (A and B sides)
         diagonalSpanIntervals(cand, toks, L)
           .groupBy("doc_id")
           .agg(count(lit(1)).as("n_runs"),
@@ -1173,7 +1162,7 @@ object TrainPrep {
             posexplode(transform(sequence(lit(0), size(w) - L),
               p => xxhash64(array_join(slice(w, p + 1, lit(L)), " "))))
               .as(Seq("pos", "h")))
-          .localCheckpoint() // both sides of the self-join
+          .transform(pin) // both sides of the self-join
         val cand = grams
           .select(col("doc_id").as("a"), col("pos").as("pa"), col("h"))
           .join(grams.select(col("doc_id").as("b"), col("pos").as("pb"),
@@ -1186,7 +1175,7 @@ object TrainPrep {
         val toks = base
           .select(col("doc_id"), posexplode(w).as(Seq("pos", "tok")))
           .join(candDocs, Seq("doc_id"), "left_semi")
-          .localCheckpoint() // consumed twice (A and B sides)
+          .transform(pin) // consumed twice (A and B sides)
         diagonalSpanIntervals(cand, toks, L)
           .select(col("doc_id"), col("ist").cast("long").as("span_start"),
             (col("ien") - col("ist")).cast("long").as("span_len"))
@@ -1315,8 +1304,7 @@ object TrainPrep {
     // O(Σ L²)-class check against the O(n log L) ladder.
     QueryDef("q367_longest_repeat",
       (s, d) => { val (sa, t) = perDocSa(s, d)
-        longestRepeatsFrom(Tables.documents(s, d), sa, t,
-          Materialize.local).orderBy("doc_id") },
+        longestRepeatsFrom(Tables.documents(s, d), sa, t).orderBy("doc_id") },
       Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w
              |          FROM documents),
              |i AS (SELECT doc_id, unnest(range(1, len(w) + 1)) AS i FROM t),
@@ -1394,7 +1382,7 @@ object TrainPrep {
     // construction in window SQL.
     QueryDef("q375_cross_doc_coverage",
       (s, d) => crossDocCoverageFromAdj(GlobalSa.read(s, d, "idx"),
-        GlobalSa.read(s, d, "adj"), 50, Materialize.local),
+        GlobalSa.read(s, d, "adj"), 50),
       Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w
              |          FROM documents),
              |ix AS (SELECT doc_id, unnest(range(1, len(w) + 1)) AS i FROM t),
@@ -1449,8 +1437,7 @@ object TrainPrep {
     // reverse-min window construction.
     QueryDef("q377_contamination_spans",
       (s, d) => contaminationFromAdj(GlobalSa.read(s, d, "idx"),
-        GlobalSa.read(s, d, "adj"), evalMod = 41L, minLen = 20,
-        Materialize.local),
+        GlobalSa.read(s, d, "adj"), evalMod = 41L, minLen = 20),
       Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w
              |          FROM documents),
              |ix AS (SELECT doc_id, unnest(range(1, len(w) + 1)) AS i FROM t),
@@ -1892,9 +1879,8 @@ object TrainPrep {
     * missing right-halves rank −1 (a proper-prefix suffix sorts before
     * every extension, the list-lexicographic rule the oracle applies
     * directly). */
-  def suffixArrays(docs: DataFrame,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame =
-    saWithTables(docs, earlyExit = true, materialize)._1
+  def suffixArrays(docs: DataFrame): DataFrame =
+    saWithTables(docs, earlyExit = true)._1
       .withColumnRenamed("r", "sa_rank")
 
   /** The prefix-doubling core behind [[suffixArrays]] and
@@ -1914,15 +1900,14 @@ object TrainPrep {
     * remaining rungs (S/2 + S/4 + … + 1 = S−1); the rung-S probe
     * itself can never fire since no two positions share a width-S
     * rank. */
-  private[ops] def saWithTables(docs: DataFrame, earlyExit: Boolean,
-      materialize: Materialize.Strategy = Materialize.local)
+  private[ops] def saWithTables(docs: DataFrame, earlyExit: Boolean)
       : (DataFrame, Seq[(Long, DataFrame)], Long) = {
-    val toks = materialize(docs
+    val toks = pin(docs
       .select(col("doc_id"), posexplode(split(col("text"), " ")))
       .select(col("doc_id"), col("pos").cast("long").as("off"),
         col("col").as("tok")))
     val byDoc = Window.partitionBy("doc_id")
-    var r = materialize(toks.select(col("doc_id"), col("off"),
+    var r = pin(toks.select(col("doc_id"), col("off"),
       dense_rank().over(byDoc.orderBy("tok")).cast("long").as("r")))
     val tables = scala.collection.mutable.ListBuffer[(Long, DataFrame)](1L -> r)
     val mlRow = toks.groupBy("doc_id").count()
@@ -1938,7 +1923,7 @@ object TrainPrep {
     while (shift < maxLen && !totalOrder()) {
       val right = r.select(col("doc_id"),
         (col("off") - shift).as("off"), col("r").as("r2"))
-      r = materialize(r.join(right, Seq("doc_id", "off"), "left")
+      r = pin(r.join(right, Seq("doc_id", "off"), "left")
         .select(col("doc_id"), col("off"),
           dense_rank().over(byDoc.orderBy(col("r"),
             coalesce(col("r2"), lit(-1L)))).cast("long").as("r")))
@@ -1964,13 +1949,12 @@ object TrainPrep {
     * Output: one row per document — (`lrs_len`, `off_a` < `off_b` the
     * lexicographically smallest offset pair achieving it; single-token
     * docs have no pair: lrs_len 0, NULL offsets). */
-  def longestRepeats(docs: DataFrame,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
+  def longestRepeats(docs: DataFrame): DataFrame = {
     // earlyExit is sound for the jump — see [[saWithTables]] (r16):
     // exit at width S bounds every LCP below S, and rungs ≤ S/2
     // decompose any such value; measured 10.0 → ~6 s at sf0.1
-    val (sa, tables, _) = saWithTables(docs, earlyExit = true, materialize)
-    longestRepeatsFrom(docs, sa, tables, materialize)
+    val (sa, tables, _) = saWithTables(docs, earlyExit = true)
+    longestRepeatsFrom(docs, sa, tables)
   }
 
   /** [[longestRepeats]] over an ALREADY-BUILT rank ladder — the
@@ -1978,14 +1962,13 @@ object TrainPrep {
     * feed it (r17: q366 and q367 each rebuilt the same per-doc ladder,
     * the last un-shared substrate in the suffix family). */
   private[ops] def longestRepeatsFrom(docs: DataFrame, sa: DataFrame,
-      tables: Seq[(Long, DataFrame)],
-      materialize: Materialize.Strategy): DataFrame = {
+      tables: Seq[(Long, DataFrame)]): DataFrame = {
     val bySa = Window.partitionBy("doc_id").orderBy("r")
     val pairs = sa
       .withColumn("off_b", lead("off", 1).over(bySa))
       .where(col("off_b").isNotNull)
       .select(col("doc_id"), col("off").as("off_a"), col("off_b"))
-    var st = materialize(pairs.select(col("doc_id"), col("off_a"),
+    var st = pin(pairs.select(col("doc_id"), col("off_a"),
       col("off_b"), lit(0L).as("lcp"),
       col("off_a").as("ca"), col("off_b").as("cb")))
     tables.sortBy(-_._1).foreach { case (w, t) =>
@@ -1993,7 +1976,7 @@ object TrainPrep {
       val tb = t.select(col("doc_id"), col("off").as("cb"), col("r").as("rb"))
       val hit = col("ra").isNotNull && col("rb").isNotNull &&
         col("ra") === col("rb")
-      st = materialize(st.join(ta, Seq("doc_id", "ca"), "left")
+      st = pin(st.join(ta, Seq("doc_id", "ca"), "left")
         .join(tb, Seq("doc_id", "cb"), "left")
         .select(col("doc_id"), col("off_a"), col("off_b"),
           when(hit, col("lcp") + w).otherwise(col("lcp")).as("lcp"),
@@ -2022,7 +2005,7 @@ object TrainPrep {
     * (the LCP jump in [[longestRepeatsFrom]] needs them all). */
   lazy val PerDocSa: Substrate = Substrate("per_doc_sa") { (s, dir, out) =>
     val (sa, tables, _) = saWithTables(Tables.documents(s, dir),
-      earlyExit = true, Materialize.local)
+      earlyExit = true)
     sa.write.mode("overwrite").parquet(out + "/sa.parquet")
     tables.foreach { case (w, t) =>
       t.write.mode("overwrite").parquet(out + s"/tab_$w.parquet") }
@@ -2038,9 +2021,10 @@ object TrainPrep {
       widths.map(w => w -> PerDocSa.read(s, dir, s"tab_$w")))
   }
 
-  /** Distributed DENSE RANK of the whole frame by `keys` — the
-    * primitive a CORPUS-global suffix order needs, built without the
-    * partition-less window that would sort everything in one task:
+  /** Distributed DENSE RANK of the whole frame by `keys`, plus the
+    * TOTAL group count — the primitive a CORPUS-global suffix order
+    * needs, built without the partition-less window that would sort
+    * everything in one task:
     * range-repartition on the keys (Spark's distributed-sort shape;
     * equal keys never straddle a partition boundary), dense-rank
     * WITHIN each partition, then lift every rank by its partition's
@@ -2048,25 +2032,19 @@ object TrainPrep {
     * counts, a #partitions-row driver reduction (bounded by config,
     * never by data). The result is independent of where the sampled
     * range boundaries fall, so it is deterministic even though
-    * RangePartitioner samples. */
-  private def denseRankGlobal(df: DataFrame, keys: Seq[String],
-      out: String, materialize: Materialize.Strategy): DataFrame =
-    denseRankGlobalCounted(df, keys, out, materialize)._1
-
-  /** [[denseRankGlobal]] plus the TOTAL group count — already computed
-    * by the driver prefix sum, so callers that need it (the
-    * convergence exit in [[crossDocRepeat]]) pay no extra action. */
+    * RangePartitioner samples. The group count is the driver prefix
+    * sum's total, so callers that need it (the convergence exit in
+    * [[crossDocRepeat]]) pay no extra action. */
   private def denseRankGlobalCounted(df: DataFrame, keys: Seq[String],
-      out: String, materialize: Materialize.Strategy)
-      : (DataFrame, Long) = {
+      out: String): (DataFrame, Long) = {
     val s = df.sparkSession
     val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val kc = keys.map(col)
     // (r19 note: a persist()+fused-collect variant was tried here and
     // MEASURED 3× SLOWER on the global_sa build — Dataset.persist
     // caches COLUMNAR with per-read decode, and every rung is re-read
-    // by joins each round; localCheckpoint row blocks stay.)
-    val local = materialize(df.repartitionByRange(np, kc: _*)
+    // by joins each round; pinned row blocks stay.)
+    val local = pin(df.repartitionByRange(np, kc: _*)
       .withColumn("__pid", spark_partition_id())
       .withColumn("__lr",
         dense_rank().over(Window.partitionBy("__pid").orderBy(kc: _*))
@@ -2090,7 +2068,7 @@ object TrainPrep {
     *
     * Construction: the same prefix-doubling ladder as [[saWithTables]]
     * but with DOC-AGNOSTIC rank tables — every round ranks all corpus
-    * suffixes together via [[denseRankGlobal]] (capped-prefix
+    * suffixes together via [[denseRankGlobalCounted]] (capped-prefix
     * convention unchanged: a proper prefix sorts before every
     * extension), so suffixes of different documents are directly
     * comparable at every width. By the classic distinct-docs argument,
@@ -2122,29 +2100,23 @@ object TrainPrep {
     * [[crossDocCoverage]]: returns the final rank frame
     * (doc_id, off, r, slen) — r the corpus-wide suffix rank (ties ⟺
     * identical suffixes), slen the suffix length — plus every genuine
-    * capped-width rank table for the LCP jump. */
-  /** Test hook: the ladder on an arbitrary frame (specs hand-build
-    * corpora that exist in no corpus dir, so the [[GlobalSa]] cache
-    * does not apply). */
-  private[ops] def globalSaLadderForTest(docs: DataFrame)
-      : (DataFrame, Seq[(Long, DataFrame)]) =
-    globalSaLadder(docs, Materialize.local)
-
-  private def globalSaLadder(docs: DataFrame,
-      materialize: Materialize.Strategy)
+    * capped-width rank table for the LCP jump. Specs call it on
+    * hand-built frames that exist in no corpus dir, so the [[GlobalSa]]
+    * cache does not apply there. */
+  private[ops] def globalSaLadder(docs: DataFrame)
       : (DataFrame, Seq[(Long, DataFrame)]) = {
-    val toks = materialize(docs
+    val toks = pin(docs
       .select(col("doc_id"), posexplode(split(col("text"), " ")))
       .select(col("doc_id"), col("pos").cast("long").as("off"),
         col("col").as("tok")))
-    val lens = materialize(toks.groupBy("doc_id")
+    val lens = pin(toks.groupBy("doc_id")
       .agg(count(lit(1)).as("dlen")))
     // every rung is a LAZY one-hop projection of its round's PINNED
     // per-partition rank frame (denseRankGlobalCounted materializes
     // it) — the former per-round materialize re-wrote the whole n-row
     // frame a second time for nothing (r19, VERDICT r18 #5)
     val (r0, g0) =
-      denseRankGlobalCounted(toks, Seq("tok"), "r", materialize)
+      denseRankGlobalCounted(toks, Seq("tok"), "r")
     var r = r0.select(col("doc_id"), col("off"), col("r"))
     val tables = scala.collection.mutable.ListBuffer[(Long, DataFrame)](1L -> r)
     val mlRow = lens.agg(max(col("dlen"))).collect()(0)
@@ -2172,7 +2144,7 @@ object TrainPrep {
         .select(col("doc_id"), col("off"), col("r").as("r1"),
           coalesce(col("rr"), lit(-1L)).as("r2"))
       val (rNext, g2) =
-        denseRankGlobalCounted(joined, Seq("r1", "r2"), "r", materialize)
+        denseRankGlobalCounted(joined, Seq("r1", "r2"), "r")
       if (g2 == groups) converged = true
       else {
         r = rNext.select(col("doc_id"), col("off"), col("r"))
@@ -2196,9 +2168,8 @@ object TrainPrep {
     * the jump a same-rank hit on the top rung would overshoot), which
     * also guarantees every hit here is a true w-token match. */
   private def ladderJumpLcp(pairs: DataFrame,
-      tables: Seq[(Long, DataFrame)],
-      materialize: Materialize.Strategy): DataFrame = {
-    var st = materialize(pairs.select(col("i"), col("da"), col("oa"),
+      tables: Seq[(Long, DataFrame)]): DataFrame = {
+    var st = pin(pairs.select(col("i"), col("da"), col("oa"),
       col("db"), col("ob"), lit(0L).as("lcp"),
       col("oa").as("ca"), col("ob").as("cb")))
     tables.sortBy(-_._1).foreach { case (w, t) =>
@@ -2208,7 +2179,7 @@ object TrainPrep {
         col("r").as("rb"))
       val hit = col("ra").isNotNull && col("rb").isNotNull &&
         col("ra") === col("rb")
-      st = materialize(st.join(ta, Seq("da", "ca"), "left")
+      st = pin(st.join(ta, Seq("da", "ca"), "left")
         .join(tb, Seq("db", "cb"), "left")
         .select(col("i"), col("da"), col("oa"), col("db"), col("ob"),
           when(hit, col("lcp") + w).otherwise(col("lcp")).as("lcp"),
@@ -2227,34 +2198,30 @@ object TrainPrep {
     * function of the corpus (the distributed dense rank is
     * boundary-placement-independent). */
   lazy val GlobalSa: Substrate = Substrate("global_sa") { (s, dir, out) =>
-    val (sa, tables) = globalSaLadder(Tables.documents(s, dir),
-      Materialize.local)
+    val (sa, tables) = globalSaLadder(Tables.documents(s, dir))
     sa.write.mode("overwrite").parquet(out + "/sa.parquet")
     tables.foreach { case (w, t) =>
       t.write.mode("overwrite").parquet(out + s"/tab_$w.parquet") }
     val persisted = s.read.parquet(out + "/sa.parquet")
     val pTables = tables.map { case (w, _) =>
       w -> s.read.parquet(out + s"/tab_$w.parquet") }
-    val (idx, adj) = indexedAdjacentLcps(persisted, pTables,
-      Materialize.local)
+    val (idx, adj) = indexedAdjacentLcps(persisted, pTables)
     idx.write.mode("overwrite").parquet(out + "/idx.parquet")
     adj.write.mode("overwrite").parquet(out + "/adj.parquet")
   }
 
-  def crossDocRepeat(docs: DataFrame,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
-    val (sa, tables) = globalSaLadder(docs, materialize)
-    crossDocRepeatFrom(sa, tables, materialize)
+  def crossDocRepeat(docs: DataFrame): DataFrame = {
+    val (sa, tables) = globalSaLadder(docs)
+    crossDocRepeatFrom(sa, tables)
   }
 
   private[ops] def crossDocRepeatFrom(sa: DataFrame,
-      tables: Seq[(Long, DataFrame)],
-      materialize: Materialize.Strategy): DataFrame =
+      tables: Seq[(Long, DataFrame)]): DataFrame =
     // dedicated direct-call path (ADVICE r17): the argmax only ever
     // reads DOC-CHANGING adjacent pairs, so same-doc pairs are dropped
     // BEFORE the ladder walk instead of after it — the cached-substrate
     // consumers keep the unfiltered frame (q375/q377 need every pair)
-    crossDocRepeatFromAdj(indexedAdjacentLcps(sa, tables, materialize,
+    crossDocRepeatFromAdj(indexedAdjacentLcps(sa, tables,
       pairFilter = col("da") =!= col("db"))._2)
 
   /** q374's readout over the cached adjacent-LCP frame (r17): the max
@@ -2278,11 +2245,11 @@ object TrainPrep {
     * row_number, partition-count prefix sum), 0-based. Shared by the
     * suffix-order machinery and DataSelect's KNN-Shapley ranks. */
   private[ops] def globalOrderIndex(df: DataFrame, keys: Seq[String],
-      out: String, materialize: Materialize.Strategy): DataFrame = {
+      out: String): DataFrame = {
     val s = df.sparkSession
     val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val kc = keys.map(col)
-    val local = materialize(df.repartitionByRange(np, kc: _*)
+    val local = pin(df.repartitionByRange(np, kc: _*)
       .withColumn("__pid", spark_partition_id())
       .withColumn("__lr",
         row_number().over(Window.partitionBy("__pid").orderBy(kc: _*))
@@ -2303,12 +2270,11 @@ object TrainPrep {
     * the order key, per-partition cumulative window, driver prefix sum
     * of per-partition totals. */
   private[ops] def runningSumGlobal(df: DataFrame, orderCols: Seq[String],
-      valueCol: String, out: String,
-      materialize: Materialize.Strategy): DataFrame = {
+      valueCol: String, out: String): DataFrame = {
     val s = df.sparkSession
     val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val kc = orderCols.map(col)
-    val local = materialize(df.repartitionByRange(np, kc: _*)
+    val local = pin(df.repartitionByRange(np, kc: _*)
       .withColumn("__pid", spark_partition_id())
       .withColumn("__ls",
         sum(col(valueCol)).over(Window.partitionBy("__pid")
@@ -2368,10 +2334,9 @@ object TrainPrep {
     * structure, not corpus size). Output per document: position count,
     * the maximum cross-doc span length, and how many positions start a
     * span of ≥ `minLen` tokens shared with another document. */
-  def crossDocCoverage(docs: DataFrame, minLen: Int = 50,
-      materialize: Materialize.Strategy = Materialize.local): DataFrame = {
-    val (sa, tables) = globalSaLadder(docs, materialize)
-    crossDocCoverageFrom(sa, tables, minLen, materialize)
+  def crossDocCoverage(docs: DataFrame, minLen: Int = 50): DataFrame = {
+    val (sa, tables) = globalSaLadder(docs)
+    crossDocCoverageFrom(sa, tables, minLen)
   }
 
   /** The indexed global order + ALL adjacent-pair LCPs — the ONE walk
@@ -2383,10 +2348,9 @@ object TrainPrep {
     * length); distinct ranks walk the ladder. */
   private def indexedAdjacentLcps(sa: DataFrame,
       tables: Seq[(Long, DataFrame)],
-      materialize: Materialize.Strategy,
       pairFilter: Column = lit(true)): (DataFrame, DataFrame) = {
-    val idx = materialize(globalOrderIndex(sa,
-      Seq("r", "doc_id", "off"), "i", materialize))
+    val idx = pin(globalOrderIndex(sa,
+      Seq("r", "doc_id", "off"), "i"))
     val aSide = idx.select(col("i"), col("doc_id").as("da"),
       col("off").as("oa"), col("r").as("ra"), col("slen").as("sla"))
     val bSide = idx.select((col("i") - 1L).as("i"),
@@ -2398,21 +2362,20 @@ object TrainPrep {
     val diffR = ladderJumpLcp(
       adj0.where(col("ra") =!= col("rb"))
         .select(col("i"), col("da"), col("oa"), col("db"), col("ob")),
-      tables, materialize)
+      tables)
       .select(col("i"), col("da"), col("oa"), col("db"), col("ob"),
         col("lcp"))
-    (idx, materialize(sameR.unionByName(diffR)))
+    (idx, pin(sameR.unionByName(diffR)))
   }
 
   private[ops] def crossDocCoverageFrom(sa: DataFrame,
-      tables: Seq[(Long, DataFrame)], minLen: Int,
-      materialize: Materialize.Strategy): DataFrame = {
-    val (idx, adj) = indexedAdjacentLcps(sa, tables, materialize)
-    crossDocCoverageFromAdj(idx, adj, minLen, materialize)
+      tables: Seq[(Long, DataFrame)], minLen: Int): DataFrame = {
+    val (idx, adj) = indexedAdjacentLcps(sa, tables)
+    crossDocCoverageFromAdj(idx, adj, minLen)
   }
 
   private[ops] def crossDocCoverageFromAdj(idx: DataFrame, adj: DataFrame,
-      minLen: Int, materialize: Materialize.Strategy): DataFrame = {
+      minLen: Int): DataFrame = {
     // row i's entering pair is adj(i−1); its leaving pair is adj(i)
     val marked = idx
       .join(adj.select((col("i") + 1L).as("i"),
@@ -2422,8 +2385,7 @@ object TrainPrep {
       .select(col("i"), col("doc_id"),
         coalesce(col("chg"), lit(0L)).as("chg"),
         col("lcp_in"), col("lcp_out"))
-    val withRun = materialize(runningSumGlobal(marked, Seq("i"), "chg", "run",
-      materialize))
+    val withRun = pin(runningSumGlobal(marked, Seq("i"), "chg", "run"))
     val maxRunRow = withRun.agg(max(col("run"))).collect()(0)
     val maxRun = if (maxRunRow.isNullAt(0)) 0L else maxRunRow.getLong(0)
     val wUp = Window.partitionBy("run").orderBy("i")
@@ -2471,15 +2433,13 @@ object TrainPrep {
     * doc, position count, max shared-with-eval span, ≥ `minLen` span
     * starts. */
   private[ops] def contaminationFrom(sa: DataFrame,
-      tables: Seq[(Long, DataFrame)], evalMod: Long, minLen: Int,
-      materialize: Materialize.Strategy): DataFrame = {
-    val (idx, adj) = indexedAdjacentLcps(sa, tables, materialize)
-    contaminationFromAdj(idx, adj, evalMod, minLen, materialize)
+      tables: Seq[(Long, DataFrame)], evalMod: Long, minLen: Int): DataFrame = {
+    val (idx, adj) = indexedAdjacentLcps(sa, tables)
+    contaminationFromAdj(idx, adj, evalMod, minLen)
   }
 
   private[ops] def contaminationFromAdj(idx: DataFrame, adj: DataFrame,
-      evalMod: Long, minLen: Int,
-      materialize: Materialize.Strategy): DataFrame = {
+      evalMod: Long, minLen: Int): DataFrame = {
     val isEval = (col("doc_id") % evalMod) === 0
     val marked = idx
       .join(adj.select((col("i") + 1L).as("i"), col("lcp").as("lcp_in")),
@@ -2489,8 +2449,7 @@ object TrainPrep {
         isEval.cast("long").as("ev"),
         when(isEval, lit(null)).otherwise(col("lcp_in")).as("lcp_in"),
         col("lcp_out"))
-    val withSeg = materialize(runningSumGlobal(marked, Seq("i"), "ev", "seg",
-      materialize))
+    val withSeg = pin(runningSumGlobal(marked, Seq("i"), "ev", "seg"))
     val totalEvalRow = withSeg.agg(max(col("seg"))).collect()(0)
     val totalEval = if (totalEvalRow.isNullAt(0)) 0L else totalEvalRow.getLong(0)
     val wUp = Window.partitionBy("seg").orderBy("i")

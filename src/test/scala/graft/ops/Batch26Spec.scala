@@ -160,9 +160,8 @@ class Batch26Spec extends AnyFunSuite {
     def run(docs: Seq[(Long, String)], evalMod: Long, minLen: Int)
         : Map[Long, (Long, Long)] = {
       val df = docs.toDF("doc_id", "text")
-      val (sa, t) = TrainPrep.globalSaLadderForTest(df)
-      TrainPrep.contaminationFrom(sa, t, evalMod, minLen,
-          graft.Materialize.local)
+      val (sa, t) = TrainPrep.globalSaLadder(df)
+      TrainPrep.contaminationFrom(sa, t, evalMod, minLen)
         .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getLong(3)))
         .toMap
     }

@@ -232,7 +232,7 @@ class Batch27Spec extends AnyFunSuite {
     }
     val docs = (1L to 6L).map(doc)
     val df = docs.toDF("doc_id", "text")
-    val (_, tables) = TrainPrep.globalSaLadderForTest(df)
+    val (_, tables) = TrainPrep.globalSaLadder(df)
     val widths = tables.map(_._1)
     // exit fired: the full ladder on 200-token docs is widths 1..256
     // (9 rungs); the repeat structure dies at width 8
@@ -260,7 +260,7 @@ class Batch27Spec extends AnyFunSuite {
         id -> t.mkString(" ")
       }
       val df = docs.toDF("doc_id", "text")
-      val (_, tables) = TrainPrep.globalSaLadderForTest(df)
+      val (_, tables) = TrainPrep.globalSaLadder(df)
       val maxLen = docs.map(_._2.split(" ", -1).length).max
       assert(tables.map(_._1).max < maxLen,
         s"seed $seed: exit never fired (rungs ${tables.map(_._1)})")

@@ -58,30 +58,22 @@ class ComponentsSpec extends AnyFunSuite {
   }
 
   test("reliable-checkpoint strategy is a drop-in swap for localCheckpoint") {
-    // the 100 TB durability story as tested code, not a comment: run the
-    // same iterative CC with Materialize.reliable against a real
-    // checkpoint dir and require identical labels. Restores the prior
-    // checkpoint dir afterwards so other suites are unaffected.
-    val sc = spark.sparkContext
-    val prior = sc.getCheckpointDir
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    sc.setCheckpointDir(dir)
-    try {
-      val nodes = (0L to 15L).toDF("id")
-      val edges = (0L until 15L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-      val durable = Components.connectedComponents(nodes, edges, maxIter = 6,
-          materialize = graft.Materialize.reliable)
-        .as[(Long, Long)].collect().toMap
-      assert(durable == (0L to 15L).map(_ -> 0L).toMap)
-      assert(new java.io.File(dir).listFiles.nonEmpty,
-        "reliable strategy must actually write checkpoint data")
-    } finally {
-      prior.foreach(sc.setCheckpointDir)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(new java.io.File(dir))
+    // the 100 TB durability story as tested code, not a comment: the
+    // same iterative CC with no checkpoint dir (local pins) and with one
+    // set (durable pins) must give identical labels.
+    val nodes = (0L to 15L).toDF("id")
+    val edges = (0L until 15L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    def labels() = Components.connectedComponents(nodes, edges, maxIter = 6)
+      .as[(Long, Long)].collect().toMap
+    val local = labels()
+    val durable = TestSpark.withCheckpointDir { dir =>
+      val l = labels()
+      assert(dir.listFiles.nonEmpty,
+        "durable pins must actually write checkpoint data")
+      l
     }
+    assert(local == (0L to 15L).map(_ -> 0L).toMap)
+    assert(durable == local)
   }
 
   test("dedupReport: survivors count one per cluster, rates consistent") {

@@ -19,7 +19,7 @@ class CurationShareSpec extends AnyFunSuite {
   test("one pinned pair table reproduces overlap, report, pagerank and triangles") {
     val docs = Tables.documents(spark, TestSpark.sf0001)
     // the single computation a production run would persist
-    val pairs = Materialize.local(Dedup.dedupPipeline(docs))
+    val pairs = Materialize.pin(Dedup.dedupPipeline(docs))
 
     assert(rows(Dedup.sourceOverlap(docs, pairs = Some(pairs)))
       == rows(Dedup.sourceOverlap(docs)), "source overlap")
@@ -43,7 +43,7 @@ class CurationShareSpec extends AnyFunSuite {
     val sp = Components.dupPairs(spark, TestSpark.sf0001)
     val sl = Components.lpaCommunities(spark, TestSpark.sf0001)
     // the from-scratch twins the gates used to declare inline
-    val fp = Materialize.local(Dedup.dedupPipeline(docs))
+    val fp = Materialize.pin(Dedup.dedupPipeline(docs))
     val fl = Components.labelPropagation(
       docs.select(docs("doc_id").as("id")), fp.select("id_a", "id_b"))
 

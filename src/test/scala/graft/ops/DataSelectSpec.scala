@@ -173,35 +173,25 @@ class DataSelectSpec extends AnyFunSuite {
 
   test("sourceCover: reliable checkpoint is a drop-in swap and the trace ends early when coverage dries up") {
     import spark.implicits._
-    val sc = spark.sparkContext
-    val prior = sc.getCheckpointDir
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-cover").toString
-    sc.setCheckpointDir(dir)
-    try {
-      // s1 covers 3 bigrams, s2 adds 1 (e f), s3 adds 1 (g h) — tie
-      // with s2 broken source-asc; k=5 but round 4 finds nothing left,
-      // so the trace must stop at 3 picks on BOTH strategies.
-      val pairs = Seq(
-        ("s1", "a b"), ("s1", "b c"), ("s1", "c d"),
-        ("s2", "a b"), ("s2", "e f"),
-        ("s3", "g h")).toDF("source", "g")
-      val local = DataSelect.sourceCover(spark, pairs, 5)
-        .collect().map(_.toSeq).toSeq
-      val durable = DataSelect.sourceCover(spark, pairs, 5,
-          materialize = graft.Materialize.reliable)
-        .collect().map(_.toSeq).toSeq
-      assert(durable == local, "reliable strategy must not change the trace")
-      assert(local == Seq(
-        Seq(1L, "s1", 3L, 3L), Seq(2L, "s2", 1L, 4L), Seq(3L, "s3", 1L, 5L)))
-      assert(new java.io.File(dir).listFiles.nonEmpty,
-        "reliable strategy must actually write checkpoint data")
-    } finally {
-      prior.foreach(sc.setCheckpointDir)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(new java.io.File(dir))
+    // s1 covers 3 bigrams, s2 adds 1 (e f), s3 adds 1 (g h) — tie
+    // with s2 broken source-asc; k=5 but round 4 finds nothing left,
+    // so the trace must stop at 3 picks with local and durable pins.
+    val pairs = Seq(
+      ("s1", "a b"), ("s1", "b c"), ("s1", "c d"),
+      ("s2", "a b"), ("s2", "e f"),
+      ("s3", "g h")).toDF("source", "g")
+    def trace() = DataSelect.sourceCover(spark, pairs, 5)
+      .collect().map(_.toSeq).toSeq
+    val local = trace()
+    val durable = TestSpark.withCheckpointDir { dir =>
+      val t = trace()
+      assert(dir.listFiles.nonEmpty,
+        "durable pins must actually write checkpoint data")
+      t
     }
+    assert(durable == local, "durable pins must not change the trace")
+    assert(local == Seq(
+      Seq(1L, "s1", 3L, 3L), Seq(2L, "s2", 1L, 4L), Seq(3L, "s3", 1L, 5L)))
   }
 
   test("sourceAblation: singular ablations emit NULLs, never NaN/Inf") {

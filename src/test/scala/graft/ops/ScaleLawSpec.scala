@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Materialize, ScaleGen, SparkEntry, Tables, TestSpark}
+import graft.{ScaleGen, SparkEntry, Tables, TestSpark}
 import graft.core.Substrate
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
@@ -429,10 +429,10 @@ class ScaleLawSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try {
       val (cappedRec, _) = measure {
-        TrainPrep.spanRemovalStarts(docs, 50, 20, Materialize.local)
+        TrainPrep.spanRemovalStarts(docs, 50, 20)
           .collect() }
       val (uncappedRec, _) = measure {
-        TrainPrep.spanRemovalStarts(docs, 50, 1000000, Materialize.local)
+        TrainPrep.spanRemovalStarts(docs, 50, 1000000)
           .collect() }
       info(s"candidate-stage records capped $cappedRec vs uncapped $uncappedRec")
       assert(cappedRec <= (uncappedRec * 0.7).toLong,

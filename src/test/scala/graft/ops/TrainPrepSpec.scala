@@ -288,27 +288,19 @@ class TrainPrepSpec extends AnyFunSuite {
     // pinning is CORRECTNESS-critical here (both phases must see the
     // same sampled range boundaries) — prove the durable strategy
     // preserves that contract, not just the local default
-    val sc = spark.sparkContext
-    val prior = sc.getCheckpointDir
-    val dir = java.nio.file.Files.createTempDirectory("graft-pack-ckpt").toString
-    sc.setCheckpointDir(dir)
-    try {
-      val docs = (1L to 200L).map { id =>
-        (id, if (id % 3 == 0) "A" else "B", (1 to (1 + (id % 7)).toInt).map(_ => "w").mkString(" "))
-      }.toDF("doc_id", "source", "text").repartition(8)
-      val durable = TrainPrep.packSequences(docs, budget = 32,
-          materialize = graft.Materialize.reliable)
-        .as[(Long, String, Long, Long, Long, Long)].collect().toSet
-      val default = TrainPrep.packSequences(docs, budget = 32)
-        .as[(Long, String, Long, Long, Long, Long)].collect().toSet
-      assert(durable == default)
-    } finally {
-      prior.foreach(sc.setCheckpointDir)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(new java.io.File(dir))
+    val docs = (1L to 200L).map { id =>
+      (id, if (id % 3 == 0) "A" else "B", (1 to (1 + (id % 7)).toInt).map(_ => "w").mkString(" "))
+    }.toDF("doc_id", "source", "text").repartition(8)
+    def packed() = TrainPrep.packSequences(docs, budget = 32)
+      .as[(Long, String, Long, Long, Long, Long)].collect().toSet
+    val default = packed()
+    val durable = TestSpark.withCheckpointDir { dir =>
+      val p = packed()
+      assert(dir.listFiles.nonEmpty,
+        "durable pins must actually write checkpoint data")
+      p
     }
+    assert(durable == default)
   }
 
   test("pack spans tile every sequence exactly: contiguous, gap-free, budget-bounded") {
