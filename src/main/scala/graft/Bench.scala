@@ -23,11 +23,11 @@ object Bench {
     Tables.events(spark, sfDir).count()
     spark.range(1000000).selectExpr("sum(id)").collect()
     // one-time Structured Streaming init (state-store provider classes,
-    // checkpoint plumbing) so streaming queries measure steady state;
-    // runBounded collects its input itself, so the DataFrame goes in as-is
+    // checkpoint plumbing, the file source) so the stream gates measure
+    // steady state
     locally {
       import org.apache.spark.sql.functions.{col, count => cnt, current_timestamp, lit, window}
-      stream.StreamOps.runBounded(spark,
+      stream.StreamOps.replay(spark,
         spark.range(8).select(current_timestamp().as("ts"), col("id")),
         df => df.groupBy(window(col("ts"), "5 minutes")).agg(cnt(lit(1))))
     }
@@ -165,20 +165,12 @@ object Bench {
     // printed as a PRECEDING line and persisted to bench_full.json.
     val line = s"""{"metric":"total","queries":$qs,"iters":$iters,"spread":$spreads,"iters_raw":$itersRaw,"errors":$errs,"substrates":$subsJson,"unit":"sec","sf":"$sfDir","n_errors":$nErr,"value":$total}"""
     println(line)
-    // VERDICT r18 #1: the full line above is ~40 KB and has exceeded
-    // the driver's stdout-tail window since r15 (`BENCH_r15..r18.json`
-    // all carry `parsed: null` — every per-query perf comparison has
-    // been flying blind for four rounds). The FINAL stdout line is now
-    // a COMPACT summary — same schema the driver contract names
-    // (metric/queries/substrates/unit/sf/n_errors/value), medians at
-    // millisecond precision, no spreads/iters_raw/errors maps — ~10 KB
-    // for 381 gates (the query names themselves are the floor; the
-    // contract forbids renaming). Queries stay FIRST so the summary
-    // scalars at the END survive any tail truncation.
-    val qsCompact = results.map { case (k, v, _, err, _) =>
-      "\"" + k + "\":" + (if (err.isDefined) "-1" else f3(v))
-    }.mkString("{", ",", "}")
-    val compact = s"""{"metric":"total","queries":$qsCompact,"substrates":$subsJson,"unit":"sec","sf":"$sfDir","n_errors":$nErr,"value":${f3(total)}}"""
+    // The FINAL stdout line is a compact summary that a reader keeping
+    // only a short tail of stdout can still parse: millisecond medians
+    // for every gate alone are ~10 KB, so it carries only the headline
+    // fields (~300 characters); the per-gate medians stay in the full
+    // line above and in the persisted record.
+    val compact = s"""{"metric":"total","substrates":$subsJson,"unit":"sec","sf":"$sfDir","n_errors":$nErr,"value":${f3(total)}}"""
     // The driver's BENCH_rN.json keeps only a log tail (r7/r8 records
     // retained 51 of 134 per-query entries and no spreads — VERDICT r8
     // "what's wrong" #2, which forced solo re-benching to adjudicate

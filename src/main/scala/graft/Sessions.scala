@@ -26,14 +26,10 @@ object Sessions {
     .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
-    // AQE stays ON in every real entry point. The sys-prop hook exists
-    // only for measurement (r19: SubstrateProbe's A/B established that
-    // disabling AQE for the iterative micro-builds cuts job count 4×
-    // but RAISES wall time — static 32-partition exchanges and
-    // estimate-planned joins cost more than AQE's per-stage jobs);
-    // nothing in the repo sets it.
-    .config("spark.sql.adaptive.enabled",
-      sys.props.getOrElse("graft.probe.aqe", "true"))
+    // disabling AQE for the iterative builds cuts their job count 4×
+    // but raises wall time: static exchanges and estimate-planned joins
+    // cost more than AQE's per-stage jobs
+    .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
     // events.parquet stores TIMESTAMP(NANOS) which Spark cannot represent;

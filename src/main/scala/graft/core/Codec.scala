@@ -245,7 +245,9 @@ object Codec {
     * the last chunk, and continue — the concatenation semantics
     * GZIPInputStream provides natively for gzip. Raw deflate needs the
     * documented extra dummy byte at end-of-input (java.util.zip.Inflater
-    * nowrap contract); it is injected once and never treated as data. */
+    * nowrap contract); it is injected once and never treated as data.
+    * Input that ends inside a member throws EOFException, as gzip's
+    * GZIPInputStream does. */
   private def multiStream(chunks: Iterator[Array[Byte]], nowrap: Boolean,
                           chunkSize: Int): Iterator[Array[Byte]] =
     new Iterator[Array[Byte]] {
@@ -253,13 +255,15 @@ object Codec {
       onTaskEnd(() => inf.end()) // early-stop / mid-decode-throw safety net
       private var lastChunk: Array[Byte] = Array.emptyByteArray
       private var dummyFed = false
+      // whether the current member has been given any real input
+      private var inMember = false
       private var pending: Array[Byte] = null
       // ensure the inflater has input; false once truly exhausted
       private def feed(): Boolean = {
         while (inf.needsInput()) {
           if (chunks.hasNext) {
             val c = chunks.next()
-            if (c.nonEmpty) { lastChunk = c; inf.setInput(c) }
+            if (c.nonEmpty) { lastChunk = c; inf.setInput(c); inMember = true }
           } else if (nowrap && !dummyFed) {
             dummyFed = true
             lastChunk = Array.emptyByteArray // dummy is not data
@@ -283,11 +287,16 @@ object Codec {
               val leftover = java.util.Arrays.copyOfRange(
                 lastChunk, lastChunk.length - tail, lastChunk.length)
               inf.reset()
+              inMember = leftover.nonEmpty
               if (leftover.nonEmpty) { lastChunk = leftover; inf.setInput(leftover) }
               else lastChunk = Array.emptyByteArray
             }
           } else if (inf.needsInput() && !feed()) {
-            done = true // truncated stream: emit what decoded
+            if (inMember) {
+              inf.end()
+              throw new java.io.EOFException("compressed stream ends inside a member")
+            }
+            done = true
           } else {
             val n = inf.inflate(buf, off, chunkSize - off)
             if (n == 0 && inf.needsDictionary())

@@ -162,8 +162,8 @@ object Flow {
     new Flow(spark.range(start, end))
 
   /** S5 — file byte source (file.d:14-34): each file matched by `path`
-    * (a file, directory or glob, resolved as the binaryFile source
-    * resolves it; a pattern matching nothing throws) is one ordered
+    * (a file, directory or glob, resolved as Spark's file sources
+    * resolve it; a pattern matching nothing throws) is one ordered
     * stream of 64 KB chunks in its own partition, partitions in path
     * order — the layout [[readUrls]] uses and [[inflate]]/[[untar]]/
     * [[byLine]] restitch per partition. A file is never run together
@@ -179,15 +179,29 @@ object Flow {
   def readBytes(spark: SparkSession, path: String): Flow[Array[Byte]] = {
     import org.apache.hadoop.fs.{Path => HPath}
     implicit val e: Encoder[Array[Byte]] = org.apache.spark.sql.Encoders.BINARY
-    val files = spark.read.format("binaryFile").load(path).inputFiles
-      .map(f => new HPath(new java.net.URI(f))).sortBy(_.toString)
+    // Listed here, not through a file source, whose metadata-log probe
+    // logs a FileNotFoundException trace for every glob; the rules are
+    // a file source's: each matched directory contributes its own files
+    // (not its subdirectories'), and `_`/`.` file names are skipped
+    val pattern = new HPath(path)
+    val fs = pattern.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val matched = Option(fs.globStatus(pattern)).toSeq.flatten
+    if (matched.isEmpty) throw new org.apache.spark.sql.AnalysisException(
+      "PATH_NOT_FOUND", Map("path" -> fs.makeQualified(pattern).toString))
+    val files = matched
+      .flatMap(st => if (st.isDirectory) fs.listStatus(st.getPath).toSeq else Seq(st))
+      .filter { st =>
+        val n = st.getPath.getName
+        st.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }
+      .map(_.getPath).sortBy(_.toString)
     // Hadoop Configuration is not java-serializable; Spark's Writable
     // envelope ships it, broadcast as Spark's file scans do: a copy in
     // the closure is deserialized by every task (8 small-file tasks
     // paid ~65 ms for it on 4 cores)
     val conf = spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
-    val chunks = spark.sparkContext.parallelize(files.toSeq, math.max(1, files.length))
+    val chunks = spark.sparkContext.parallelize(files, math.max(1, files.length))
       .mapPartitions(_.flatMap { p =>
         val in = p.getFileSystem(conf.value.value).open(p)
         Codec.onTaskEnd(() => in.close())

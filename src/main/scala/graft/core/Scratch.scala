@@ -66,7 +66,9 @@ object Scratch {
     }
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
+  /** Deletes `p` and everything under it. A symlink is removed, never
+    * followed, so nothing outside `p` is touched. */
+  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {
     if (java.nio.file.Files.isDirectory(p,
         java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
       val s = java.nio.file.Files.list(p)

@@ -472,10 +472,8 @@ object DataSelect {
           df.select(col("doc_id"), w.as("w"))
         }
         val input = docs.select("doc_id", "text")
-        val rows = graft.stream.StreamOps.runBoundedFromPath(
+        graft.stream.StreamOps.replay(
           s, input, score, chunks = 3, outputMode = "append")
-        s.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            score(input).schema)
           .orderBy("doc_id")
       },
       Some(s"""WITH gr AS (
@@ -685,10 +683,7 @@ object DataSelect {
               sum(col("score")).as("sum_score"))
         }
         val input = Tables.documents(s, d).select("source", "text")
-        val rows = graft.stream.StreamOps.runBoundedFromPath(
-          s, input, stats, chunks = 3)
-        s.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            stats(input).schema)
+        graft.stream.StreamOps.replay(s, input, stats, chunks = 3)
           .select(col("source"), col("n_docs"), col("n_keep"),
             round(col("sum_score").cast("double") / col("n_docs"), 6).as("avg_score"))
           .orderBy("source")

@@ -2082,11 +2082,7 @@ object TextAnalysis {
             .agg(count(lit(1)).as("n_docs"),
               sum(when(col("blocked"), 1L).otherwise(0L)).as("n_blocked"))
         val input = Tables.documents(s, d).select("source", "text")
-        val rows = graft.stream.StreamOps.runBoundedFromPath(
-          s, input, stats, chunks = 3)
-        s.createDataFrame(
-            new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            stats(input).schema)
+        graft.stream.StreamOps.replay(s, input, stats, chunks = 3)
           .select(col("source"), col("n_docs"), col("n_blocked"),
             (col("n_docs") - col("n_blocked")).as("n_kept"))
           .orderBy("source")

@@ -2060,42 +2060,6 @@ object TrainPrep {
       .drop("__pid", "__lr", "__off"), acc)
   }
 
-  /** The longest token span repeated ACROSS documents, exact at any
-    * length (✚ — the corpus-level statistic of Lee et al.'s exact
-    * substring dedup: q361 finds ≥L-token cross-doc spans at a fixed
-    * depth, q367 is per-document; this is the global "how long is the
-    * worst cross-doc repeat" number, q374's engine).
-    *
-    * Construction: the same prefix-doubling ladder as [[saWithTables]]
-    * but with DOC-AGNOSTIC rank tables — every round ranks all corpus
-    * suffixes together via [[denseRankGlobalCounted]] (capped-prefix
-    * convention unchanged: a proper prefix sorts before every
-    * extension), so suffixes of different documents are directly
-    * comparable at every width. By the classic distinct-docs argument,
-    * the maximum cross-doc LCP is achieved by some CONSECUTIVE pair of
-    * the global suffix order whose documents differ (any farther pair
-    * with LCP m forces every adjacent LCP between them ≥ m, and the
-    * document identity must change somewhere inside the interval), so
-    * the candidates are exactly:
-    *
-    *  - consecutive rows WITHIN a final-rank group in (doc, off) order
-    *    (identical suffixes — LCP = the full common length; the group
-    *    window's skew is bounded by the worst duplication multiplicity,
-    *    and it computes one `lead`, no per-group state), and
-    *  - each group's last row paired with the next group's first row
-    *    (distinct suffixes — LCP by the q367 KMR rank-ladder jump,
-    *    cursors keyed (doc, off) against the GLOBAL width tables; a
-    *    width-w hit between non-identical suffixes is always a true
-    *    w-token match, because both-capped-equal would make the
-    *    suffixes identical and identical suffixes share a final rank).
-    *
-    * Output: ONE row — (repeat_len, doc_a, off_a, doc_b, off_b), the
-    * lexicographically-first consecutive pair achieving the maximum,
-    * pair roles in suffix order. Scale: per round one (doc, off)-keyed
-    * self-join + one distributed dense rank (n-row shuffles,
-    * ⌈log₂ maxDocLen⌉ rounds); the jump is ladder-width joins of the
-    * boundary-pair frame (≤ one pair per rank group); nothing ever
-    * materializes suffix text pairwise. */
   /** The GLOBAL suffix-order ladder shared by [[crossDocRepeat]] and
     * [[crossDocCoverage]]: returns the final rank frame
     * (doc_id, off, r, slen) — r the corpus-wide suffix rank (ties ⟺
@@ -2210,6 +2174,42 @@ object TrainPrep {
     adj.write.mode("overwrite").parquet(out + "/adj.parquet")
   }
 
+  /** The longest token span repeated ACROSS documents, exact at any
+    * length (✚ — the corpus-level statistic of Lee et al.'s exact
+    * substring dedup: q361 finds ≥L-token cross-doc spans at a fixed
+    * depth, q367 is per-document; this is the global "how long is the
+    * worst cross-doc repeat" number, q374's engine).
+    *
+    * Construction: the same prefix-doubling ladder as [[saWithTables]]
+    * but with DOC-AGNOSTIC rank tables — every round ranks all corpus
+    * suffixes together via [[denseRankGlobalCounted]] (capped-prefix
+    * convention unchanged: a proper prefix sorts before every
+    * extension), so suffixes of different documents are directly
+    * comparable at every width. By the classic distinct-docs argument,
+    * the maximum cross-doc LCP is achieved by some CONSECUTIVE pair of
+    * the global suffix order whose documents differ (any farther pair
+    * with LCP m forces every adjacent LCP between them ≥ m, and the
+    * document identity must change somewhere inside the interval), so
+    * the candidates are exactly:
+    *
+    *  - consecutive rows WITHIN a final-rank group in (doc, off) order
+    *    (identical suffixes — LCP = the full common length; the group
+    *    window's skew is bounded by the worst duplication multiplicity,
+    *    and it computes one `lead`, no per-group state), and
+    *  - each group's last row paired with the next group's first row
+    *    (distinct suffixes — LCP by the q367 KMR rank-ladder jump,
+    *    cursors keyed (doc, off) against the GLOBAL width tables; a
+    *    width-w hit between non-identical suffixes is always a true
+    *    w-token match, because both-capped-equal would make the
+    *    suffixes identical and identical suffixes share a final rank).
+    *
+    * Output: ONE row — (repeat_len, doc_a, off_a, doc_b, off_b), the
+    * lexicographically-first consecutive pair achieving the maximum,
+    * pair roles in suffix order. Scale: per round one (doc, off)-keyed
+    * self-join + one distributed dense rank (n-row shuffles,
+    * ⌈log₂ maxDocLen⌉ rounds); the jump is ladder-width joins of the
+    * boundary-pair frame (≤ one pair per rank group); nothing ever
+    * materializes suffix text pairwise. */
   def crossDocRepeat(docs: DataFrame): DataFrame = {
     val (sa, tables) = globalSaLadder(docs)
     crossDocRepeatFrom(sa, tables)

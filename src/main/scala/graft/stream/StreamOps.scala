@@ -1,8 +1,8 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.DataStreamWriter
 import graft.QueryDef
 import graft.QueryDef.{dsum, dsumSql}
 
@@ -44,8 +44,9 @@ final case class BalanceState(b: Long, n: Long, lastShip: Long,
 /** Event-time streaming operators (✚ extensions; the reference's push
   * pipelines are unbounded but have no event time, SURVEY.md §2.7).
   * Each transform works identically on a batch or streaming DataFrame —
-  * the streaming specs replay the same data through MemoryStream and
-  * assert equality with the batch result.
+  * the `_stream_` gates and the streaming specs replay the same data
+  * through [[StreamOps.replay]]'s file source and assert equality with
+  * the batch result.
   */
 object StreamOps {
 
@@ -88,116 +89,126 @@ object StreamOps {
   /** Replay-scratch directory: tmpfs (/dev/shm) when present, else the
     * JVM temp dir. A micro-batch commits an offset-log entry, a commit-
     * log entry, and one state-store delta per partition — dozens of
-    * small synced files per batch, now kept off the disk-backed /tmp.
-    * (Measured effect on this host is within noise — the page cache
-    * absorbs the fsyncs; the replays' cost is micro-batch planning
-    * itself — but the replay scratch no longer depends on /tmp's
-    * backing store or leaves litter on abnormal exit.) Production
-    * checkpoints go to the durable DFS — this shortcut is for BOUNDED
-    * gate replays whose lifetime is one call. */
-  private def scratchDir(prefix: String): String = {
+    * small synced files per batch, kept off the disk-backed /tmp.
+    * Production checkpoints go to the durable DFS — this shortcut is for
+    * BOUNDED replays whose lifetime is one call. */
+  private def scratchDir(): String = {
     val shm = new java.io.File("/dev/shm")
     val base = if (shm.isDirectory && shm.canWrite) shm.toPath
                else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    java.nio.file.Files.createTempDirectory(base, prefix).toString
+    java.nio.file.Files.createTempDirectory(base, "graft-replay").toString
   }
 
-  /** Shared bounded-replay scaffold: start `transform(source)` into a
-    * memory sink, let `feed` push data (no-op for sources whose data
-    * already exists), drain, collect. Stateful streaming creates one
-    * state store per shuffle partition per micro-batch and AQE cannot
-    * coalesce them — the store count is bounded for the replay and the
-    * session setting restored after query START (the conf is bound into
-    * the query at start). */
-  private def collectBounded(spark: SparkSession, source: DataFrame,
-                             transform: DataFrame => DataFrame,
-                             statePartitions: Int,
-                             outputMode: String)
-                            (feed: => Unit): Seq[org.apache.spark.sql.Row] = {
-    val name = s"bounded_${System.identityHashCode(source)}"
-    val ck = scratchDir("graft-ck")
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    val q: StreamingQuery =
-      try transform(source)
-        .writeStream.outputMode(outputMode).format("memory").queryName(name)
-        .option("checkpointLocation", ck).start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+  /** Shuffle partitions of a replay's query. Stateful streaming creates
+    * one state store per shuffle partition per micro-batch and AQE
+    * cannot coalesce them, so the count is pinned for the replay. */
+  private val statePartitions = 8
+
+  /** The bounded-replay scaffold. Each input is staged as `chunks`
+    * parquet files in its own landing directory and re-read through
+    * `spark.readStream` with maxFilesPerTrigger=1, so each file arrives
+    * as its own micro-batch and no input row passes through the driver
+    * — at production scale, a landing-directory pipeline picking up
+    * files as an upstream writer drops them. `query(sources, sink)`
+    * builds the writer (`sink` is a scratch directory it may write
+    * to); it starts with the session's shuffle partitions set to
+    * [[statePartitions]] (the conf is bound into the query at start
+    * and restored right after) and runs until every file is processed.
+    * `result(sink)` is then copied into a local DataFrame with its own
+    * schema, so it outlives the scratch directories, and the query is
+    * stopped.
+    *
+    * Cleanup runs on every exit: the scratch tree is deleted, and the
+    * stopped query's state-store providers are unloaded — their
+    * in-heap version maps reference the deleted checkpoint and would
+    * otherwise live until the 60 s maintenance sweep, slowing every
+    * later replay in a long JVM (`tools/StreamSoak` measures both). */
+  private def replayScaffold(spark: SparkSession, inputs: Seq[DataFrame],
+      chunks: Int, arrivalOrder: Seq[Column])
+      (query: (Seq[DataFrame], String) => DataStreamWriter[Row])
+      (result: String => DataFrame): DataFrame = {
+    val root = scratchDir()
     try {
-      feed
-      q.processAllAvailable()
-      spark.table(name).collect().toSeq
+      val sources = inputs.zipWithIndex.map { case (in, i) =>
+        val dir = s"$root/src$i"
+        writeChunkedOrdered(in, dir, chunks, arrivalOrder)
+        spark.readStream.schema(in.schema)
+          .option("maxFilesPerTrigger", "1").parquet(dir)
+      }
+      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+      val q =
+        try query(sources, s"$root/sink")
+          .option("checkpointLocation", s"$root/checkpoint").start()
+        finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      try {
+        q.processAllAvailable()
+        val out = result(s"$root/sink")
+        spark.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
+      } finally q.stop()
     } finally {
-      q.stop()
-      // Long-JVM hygiene (VERDICT r15 #3 — the in-suite streaming
-      // inflation, mechanism pinned by tools/StreamSoak): every bounded
-      // replay used to leave (a) its memory-sink TEMP VIEW holding the
-      // full result set — +3 views per soak round, 90 live result sets
-      // by round 30, with per-gate times creeping 2-4× in the tail —
-      // and (b) its state-store providers in StateStore.loadedProviders,
-      // whose in-heap version maps reference the checkpoint we delete
-      // below and survive until the 60 s maintenance sweep notices.
-      // Drop the view, unload the providers; a production query owns
-      // its JVM and never needs either.
-      spark.catalog.dropTempView(name)
       // StateStore.unloadAll() is private[sql] in source but public in
       // bytecode — reflection, with a no-op fallback: losing this
-      // cleanup only re-slows the bench tail, never changes results
+      // cleanup only re-slows a long JVM, never changes results
       try {
         val ss = org.apache.spark.sql.execution.streaming.state.StateStore
         ss.getClass.getMethod("unloadAll").invoke(ss)
       } catch { case scala.util.control.NonFatal(_) => }
-      rmTree(new java.io.File(ck))
+      graft.core.Scratch.deleteRecursively(java.nio.file.Paths.get(root))
     }
   }
 
-  /** Run any of the above as a real streaming query over a bounded
-    * in-memory input, synchronously, collecting the complete result.
-    * MemoryStream replay inherently stages rows through the driver —
-    * spec/push-semantics tool; the distributed analog is
-    * [[runBoundedFromPath]]. */
-  def runBounded(spark: SparkSession, input: DataFrame,
-                 transform: DataFrame => DataFrame,
-                 chunks: Int = 2,
-                 statePartitions: Int = 8,
-                 outputMode: String = "complete"): Seq[org.apache.spark.sql.Row] = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.{Encoder, Encoders, Row}
-    implicit val enc: Encoder[Row] = Encoders.row(input.schema)
-    val source = MemoryStream[Row](spark)
-    collectBounded(spark, source.toDF(), transform, statePartitions, outputMode) {
-      val rows = input.collect()
-      rows.grouped(math.max(1, rows.length / chunks)).foreach(source.addData(_))
-    }
+  /** Memory-sink replay of one input: [[replayFanIn]] with one source. */
+  def replay(spark: SparkSession, input: DataFrame,
+             transform: DataFrame => DataFrame,
+             chunks: Int = 2,
+             outputMode: String = "complete",
+             arrivalOrder: Seq[Column] = Nil): DataFrame =
+    replayFanIn(spark, Seq(input), (srcs: Seq[DataFrame]) => transform(srcs.head),
+      chunks, outputMode, arrivalOrder)
+
+  /** Memory-sink replay: `transform` runs as one streaming query over
+    * the file streams of `inputs` and the sink's complete contents come
+    * back as a local DataFrame. With several inputs this is fan-in
+    * (mux), the union side of flod's roadmap item "multiplexing and
+    * demultiplexing streams" (flod README.md:46-47): each input replays
+    * from its own landing directory (independent arrival order, as real
+    * multi-feed ingestion has no global order), and `transform`
+    * receives the raw per-source streams so it can place a watermark on
+    * EACH branch before the union — Spark then advances the query
+    * watermark as the MIN across sources, so a fast feed cannot expire
+    * state a slow feed still needs. The memory sink's temp view is
+    * dropped before returning, so no replay leaves its result set
+    * registered in the session. */
+  def replayFanIn(spark: SparkSession, inputs: Seq[DataFrame],
+                  transform: Seq[DataFrame] => DataFrame,
+                  chunks: Int = 2,
+                  outputMode: String = "complete",
+                  arrivalOrder: Seq[Column] = Nil): DataFrame = {
+    require(inputs.nonEmpty, "a replay needs at least one source")
+    val name = s"bounded_${System.identityHashCode(inputs)}"
+    try replayScaffold(spark, inputs, chunks, arrivalOrder) { (sources, _) =>
+        transform(sources).writeStream.outputMode(outputMode)
+          .format("memory").queryName(name)
+      }(_ => spark.table(name))
+    finally spark.catalog.dropTempView(name)
   }
 
-  /** Bounded replay through a FILE source — the arrival-driven S5 analog
-    * (Flow.readLinesStream's contract) end-to-end: the input is written
-    * as `chunks` parquet files, re-read via `spark.readStream` with
-    * maxFilesPerTrigger=1 so each file arrives as its own micro-batch,
-    * and every byte moves executor-side — the input is never collected
-    * to the driver (the gate-only collect runBounded needs for
-    * MemoryStream replay). At production scale this is exactly a
-    * landing-directory pipeline: files dropped by an upstream writer,
-    * picked up incrementally by the running query. */
-  def runBoundedFromPath(spark: SparkSession, input: DataFrame,
-                         transform: DataFrame => DataFrame,
-                         chunks: Int = 2,
-                         statePartitions: Int = 8,
-                         outputMode: String = "complete",
-                         arrivalOrder: Seq[org.apache.spark.sql.Column] = Nil): Seq[org.apache.spark.sql.Row] = {
-    val dir = scratchDir("graft-stream-src")
-    try {
-      writeChunkedOrdered(input, dir, chunks, arrivalOrder)
-      val source = spark.readStream.schema(input.schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
-      collectBounded(spark, source, transform, statePartitions, outputMode)(())
-    } finally rmTree(new java.io.File(dir))
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(rmTree)); f.delete()
-  }
+  /** foreachBatch replay: ONE streaming query over `input` whose every
+    * micro-batch goes to `write(batch, sink)`, which writes it under the
+    * scratch directory `sink` — executor-side, in as many sinks and
+    * layouts as it likes (the demux side of flod's roadmap item). Once
+    * the stream is drained, `read(sink)` reads the finished sinks back,
+    * and its result is returned as a local DataFrame before the sink
+    * directory is deleted. */
+  def replayForeachBatch(spark: SparkSession, input: DataFrame,
+                         chunks: Int = 3)
+                        (write: (DataFrame, String) => Unit)
+                        (read: String => DataFrame): DataFrame =
+    replayScaffold(spark, Seq(input), chunks, Nil) { (sources, sink) =>
+      sources.head.writeStream.outputMode("append")
+        .foreachBatch { (batch: Dataset[Row], _: Long) => write(batch, sink) }
+    }(read)
 
   /** Write `input` into `dir` as `chunks` parquet file groups for
     * file-source replay. With `arrivalOrder` set, simulates a source
@@ -208,17 +219,13 @@ object StreamOps {
     * (pure aggregations) can skip it — their arithmetic is
     * arrival-order-independent by construction. */
   private def writeChunkedOrdered(input: DataFrame, dir: String, chunks: Int,
-      arrivalOrder: Seq[org.apache.spark.sql.Column]): Unit = {
+      arrivalOrder: Seq[Column]): Unit = {
     if (arrivalOrder.isEmpty)
       input.repartition(chunks).write.mode("overwrite").parquet(dir)
     else {
-      // ONE pass (r19 — the staging probe showed the former shape cost
-      // a localCheckpoint pin plus one full-scan filtered write PER
-      // CHUNK inside every file-source gate): range-partition and
-      // write every chunk in a single partitionBy job, then lift the
-      // files out of their chunk subdirs (driver-side renames of a
-      // bounded file count — ≤ one per chunk) and stamp the mtimes.
-      // Same file contents, same arrival order, two fewer scans.
+      // one pass: range-partition and write every chunk in a single
+      // partitionBy job, then lift the files out of their chunk subdirs
+      // (driver-side renames, at most one per chunk) and stamp mtimes
       input.repartitionByRange(chunks, arrivalOrder: _*)
         .withColumn("_chunk", spark_partition_id())
         .write.partitionBy("_chunk").mode("overwrite").parquet(dir)
@@ -246,110 +253,10 @@ object StreamOps {
               s"cannot pin mtime of $dst — arrival-ordered replay would be " +
                 "nondeterministic on this filesystem")
           }
-        rmTree(sub) // leftover .crc metadata; `_`-prefixed dirs are
-                    // reader-hidden anyway
+        // leftover .crc metadata; `_`-prefixed dirs are reader-hidden anyway
+        graft.core.Scratch.deleteRecursively(sub.toPath)
       }
     }
-  }
-
-  /** Fan-in (mux): N bounded file-stream sources driven through ONE
-    * streaming query — the union side of the reference's own roadmap
-    * item (flod README.md:46-47, "multiplexing and demultiplexing
-    * streams", unchecked upstream). Each input replays from its own
-    * landing directory (independent mtime-pinned arrival order — real
-    * multi-feed ingestion has no global order); `transform` receives
-    * the raw per-source streams so it can place a watermark on EACH
-    * branch before the union — Spark then advances the query watermark
-    * as the MIN across sources, the only safe merge semantics (a fast
-    * feed must not expire state a slow feed still needs).
-    * Scale: the union is a no-shuffle plan node; state cost is the
-    * stateful op's own, unchanged by source count. */
-  def runBoundedFanIn(spark: SparkSession, inputs: Seq[DataFrame],
-                      transform: Seq[DataFrame] => DataFrame,
-                      chunks: Int = 2,
-                      statePartitions: Int = 8,
-                      outputMode: String = "complete",
-                      arrivalOrder: Seq[org.apache.spark.sql.Column] = Nil): Seq[org.apache.spark.sql.Row] = {
-    require(inputs.nonEmpty, "fan-in needs at least one source")
-    val dirs = inputs.map(_ =>
-      scratchDir("graft-fanin-src"))
-    try {
-      inputs.zip(dirs).foreach { case (in, dir) =>
-        writeChunkedOrdered(in, dir, chunks, arrivalOrder) }
-      val sources = inputs.zip(dirs).map { case (in, dir) =>
-        spark.readStream.schema(in.schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir) }
-      collectBounded(spark, sources.head, _ => transform(sources),
-        statePartitions, outputMode)(())
-    } finally dirs.foreach(d => rmTree(new java.io.File(d)))
-  }
-
-  /** Fan-out (demux/multicast): ONE streaming query feeding N sinks with
-    * per-batch-consistent writes — the demux side of flod's roadmap item
-    * (README.md:46-47). `foreachBatch` is Spark's multi-sink primitive:
-    * the micro-batch is pinned (`persist`) so every route observes the
-    * SAME rows — no per-sink recomputation divergence — then each
-    * route's transform is appended to its own parquet sink by the
-    * executors (nothing driver-side). `consume` reads the finished
-    * sinks back; the returned result is materialized BEFORE the sink
-    * directories are deleted. At production scale this is the standing
-    * pattern for one computed stream serving raw-retention + rollup
-    * sinks from a single pass over the source. */
-  def runBoundedFanOut(spark: SparkSession, input: DataFrame,
-                       routes: Seq[(String, DataFrame => DataFrame)],
-                       chunks: Int = 3)
-                      (consume: Map[String, DataFrame] => DataFrame): DataFrame = {
-    val srcDir = scratchDir("graft-fanout-src")
-    val sinkBase = scratchDir("graft-fanout-sink")
-    try {
-      writeChunkedOrdered(input, srcDir, chunks, Nil)
-      val source = spark.readStream.schema(input.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      val q = source.writeStream.outputMode("append")
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batch.persist()
-          try routes.foreach { case (name, f) =>
-            f(batch.toDF()).write.mode("append").parquet(s"$sinkBase/$name")
-          } finally { batch.unpersist(); () }
-          ()
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-      val sinks = routes.map { case (name, _) =>
-        name -> spark.read.parquet(s"$sinkBase/$name") }.toMap
-      val out = consume(sinks)
-      val rows = out.collect()
-      spark.createDataFrame(
-        new java.util.ArrayList(java.util.Arrays.asList(rows: _*)), out.schema)
-    } finally { rmTree(new java.io.File(srcDir)); rmTree(new java.io.File(sinkBase)) }
-  }
-
-  /** Key-routed DEMUX: one streaming query writes every micro-batch
-    * `partitionBy(key)` under a single sink root — the per-key landing
-    * layout independent downstream consumers tail (the true demux
-    * shape, vs [[runBoundedFanOut]]'s different-transform multicast).
-    * `consume` receives a reader for ONE key's partition directory, so
-    * the gate proves PHYSICAL routing: each key's rows are readable
-    * without touching any other key's files. */
-  def runBoundedDemux(spark: SparkSession, input: DataFrame, key: String,
-                      chunks: Int = 3)
-                     (consume: (String => DataFrame) => DataFrame): DataFrame = {
-    val srcDir = scratchDir("graft-demux-src")
-    val sinkRoot = scratchDir("graft-demux-sink")
-    try {
-      writeChunkedOrdered(input, srcDir, chunks, Nil)
-      val source = spark.readStream.schema(input.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      val q = source.writeStream.outputMode("append")
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batch.write.mode("append").partitionBy(key).parquet(sinkRoot)
-          ()
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-      val out = consume(part => spark.read.parquet(s"$sinkRoot/$key=$part"))
-      val rows = out.collect()
-      spark.createDataFrame(
-        new java.util.ArrayList(java.util.Arrays.asList(rows: _*)), out.schema)
-    } finally { rmTree(new java.io.File(srcDir)); rmTree(new java.io.File(sinkRoot)) }
   }
 
   /** Stream-stream interval join: purchases within 30 minutes after a
@@ -734,11 +641,9 @@ object StreamOps {
         val input = graft.Tables.events(s, d)
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("value"), unix_micros(col("ts")).as("ts_us"))
-        val rows = runBoundedFromPath(s, input, ewmaStream(_),
+        replay(s, input, ewmaStream(_),
           chunks = 3, outputMode = "append",
           arrivalOrder = Seq(col("ts_us"), col("event_id")))
-        s.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            org.apache.spark.sql.Encoders.product[EwmaOut].schema)
           .select(col("event_type"), col("b_us"),
             round(col("v"), 2).as("v"), round(col("ewma"), 5).as("ewma"))
           .orderBy("event_type", "b_us")
@@ -785,15 +690,13 @@ object StreamOps {
     QueryDef("q68_stream_sessions",
       (s, d) => {
         val input = graft.Tables.events(s, d)
-        val rows = runBoundedFromPath(s, input, sessions(_))
-        s.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            sessions(input).schema)
+        replay(s, input, sessions(_))
           .orderBy("user_id", "sess_start")
       },
       Some(sessionsOracleSql)),
 
-    // Sliding windows, batch-declared (the streaming twin is exercised in
-    // StreamingSpec via runBounded).
+    // Sliding windows, batch-declared (StreamingSpec replays the
+    // streaming twin through `replay`).
     QueryDef("q32_window_sliding",
       (s, d) => graft.Tables.events(s, d)
         .groupBy(window(col("ts"), "10 minutes", "5 minutes").getField("start").as("w_start"),
@@ -825,10 +728,8 @@ object StreamOps {
           clickToPurchase(df)
             .select(col("c_user").as("user_id"), col("click_ts"),
                     col("purchase_ts"), col("purchase_value"))
-        val rows = runBoundedFromPath(s, input, toPairs,
+        replay(s, input, toPairs,
           chunks = 3, outputMode = "append", arrivalOrder = Seq(col("ts")))
-        s.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            toPairs(input).schema)
           .orderBy("user_id", "click_ts", "purchase_ts", "purchase_value")
       },
       Some("""SELECT c.user_id, c.ts AS click_ts, p.ts AS purchase_ts,
@@ -857,9 +758,7 @@ object StreamOps {
               df.select(explode(split(col("text"), " ")).as("tok")))
             .select(col("row").cast("long").as("row"),
                     col("bucket"), col("cell"))
-        val rows = runBoundedFromPath(s, input, toCells, chunks = 3)
-        s.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            toCells(input).schema)
+        replay(s, input, toCells, chunks = 3)
           .orderBy("row", "bucket")
       },
       Some("""WITH toks AS (
@@ -883,11 +782,9 @@ object StreamOps {
         val input = graft.Tables.documents(s, d).select(col("doc_id"),
           substring(col("text"), 1, 32).as("key"),
           graft.ops.Dedup.shingleArr(col("text")).as("sh"))
-        val rows = runBoundedFromPath(s, input, snmPairsStream(_),
+        replay(s, input, snmPairsStream(_),
           chunks = 3, outputMode = "append",
           arrivalOrder = Seq(col("key"), col("doc_id")))
-        s.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            org.apache.spark.sql.Encoders.product[SnmPair].schema)
           .orderBy("id_a", "id_b")
       },
       Some("""WITH k AS (SELECT doc_id, substr(text, 1, 32) AS key, text
@@ -931,11 +828,9 @@ object StreamOps {
         val input = graft.Tables.events(s, d)
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("value"), unix_micros(col("ts")).as("ts_us"))
-        val rows = runBoundedFromPath(s, input, rollingAnomalyStream(_),
+        replay(s, input, rollingAnomalyStream(_),
           chunks = 3, outputMode = "append",
           arrivalOrder = Seq(col("ts_us"), col("event_id")))
-        s.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            org.apache.spark.sql.Encoders.product[AnomFlag].schema)
           .orderBy("event_id")
       },
       // identical to q149's oracle: the stream twin must flag the
@@ -969,11 +864,9 @@ object StreamOps {
         val input = graft.Tables.events(s, d)
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("value"), unix_micros(col("ts")).as("ts_us"))
-        val rows = runBoundedFromPath(s, input, rangeFeaturesStream(_),
+        replay(s, input, rangeFeaturesStream(_),
           chunks = 3, outputMode = "append",
           arrivalOrder = Seq(col("ts_us"), col("event_id")))
-        s.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            org.apache.spark.sql.Encoders.product[RangeFeat].schema)
           .orderBy("event_id")
       },
       // identical to q158's oracle
@@ -1006,9 +899,7 @@ object StreamOps {
               unix_micros(col("m.ts")).as("ts_us"),
               col("m.event_id").as("event_id"),
               col("m.value").as("value"), col("n_versions"))
-        val rows = runBoundedFromPath(s, input, compact, chunks = 3)
-        s.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            compact(input).schema)
+        replay(s, input, compact, chunks = 3)
           .orderBy("user_id", "event_type")
       },
       // identical to q156's oracle — the stream state must converge to
@@ -1035,11 +926,7 @@ object StreamOps {
         val input = graft.Tables.lineitem(s, d)
           .select(col("l_returnflag").as("key"),
                   col("l_partkey").cast("string").as("item"))
-        val toRegs = (df: org.apache.spark.sql.DataFrame) =>
-          graft.ops.Sketch.hllRegisters(df)
-        val rows = runBoundedFromPath(s, input, toRegs, chunks = 3)
-        s.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            toRegs(input).schema)
+        replay(s, input, graft.ops.Sketch.hllRegisters(_), chunks = 3)
           .orderBy("key", "j")
       },
       Some("""WITH it AS (
@@ -1060,9 +947,7 @@ object StreamOps {
     QueryDef("q39_stream_tumble",
       (s, d) => {
         val input = graft.Tables.events(s, d)
-        val rows = runBoundedFromPath(s, input, tumbling(_))
-        s.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            tumbling(input).schema)
+        replay(s, input, tumbling(_))
           .orderBy("w_start", "event_type")
       },
       Some(s"""SELECT make_timestamp((epoch_us(ts) // 300000000) * 300000000) AS w_start,
@@ -1092,9 +977,7 @@ object StreamOps {
             .groupBy("c_mktsegment")
             .agg(count(lit(1)).as("n_events"),
               graft.QueryDef.dsum(col("value")).as("sum_value"))
-        val rows = runBoundedFromPath(s, input, enrich, chunks = 3)
-        s.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            enrich(input).schema)
+        replay(s, input, enrich, chunks = 3)
           .orderBy("c_mktsegment")
       },
       Some(s"""SELECT c_mktsegment, COUNT(*) AS n_events,
@@ -1118,9 +1001,7 @@ object StreamOps {
         val topk = (df: org.apache.spark.sql.DataFrame) =>
           df.groupBy("l_partkey").agg(count(lit(1)).as("n"))
             .orderBy(col("n").desc, col("l_partkey")).limit(10)
-        val rows = runBoundedFromPath(s, input, topk, chunks = 3)
-        s.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            topk(input).schema)
+        replay(s, input, topk, chunks = 3)
           .orderBy(col("n").desc, col("l_partkey"))
       },
       Some("""SELECT l_partkey, COUNT(*) AS n
@@ -1155,10 +1036,8 @@ object StreamOps {
           df.withWatermark("ts", "4 hours")
             .dropDuplicatesWithinWatermark("fp")
             .select(col("fp"))
-        val rows = runBoundedFromPath(s, input, dedup, chunks = 3,
+        replay(s, input, dedup, chunks = 3,
           outputMode = "append", arrivalOrder = Seq(col("ts")))
-        s.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            dedup(input).schema)
           .orderBy("fp")
       },
       Some("""SELECT DISTINCT md5(text) AS fp FROM documents
@@ -1210,10 +1089,8 @@ object StreamOps {
                 out.result().iterator
             }.toDF()
         }
-        val rows = runBoundedFromPath(s, input, union, chunks = 3,
+        replay(s, input, union, chunks = 3,
           outputMode = "append", arrivalOrder = Seq(col("st"), col("event_id")))
-        s.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            org.apache.spark.sql.Encoders.product[IvUpd].schema)
           .groupBy("user_id")
           .agg(max(struct(col("k"), col("n_islands"), col("covered_us"))).as("m"))
           .select(col("user_id"), col("m.n_islands").as("n_islands"),
@@ -1260,9 +1137,11 @@ object StreamOps {
         val input = graft.Tables.events(s, d)
           .select(col("event_id"), col("event_type"), col("value"))
         val keys = Seq("click", "error", "purchase", "signup", "view")
-        runBoundedDemux(s, input, "event_type", chunks = 3) { readPart =>
+        replayForeachBatch(s, input) { (batch, sink) =>
+          batch.write.mode("append").partitionBy("event_type").parquet(sink)
+        } { sink =>
           keys.map { k =>
-            readPart(k).agg(count(lit(1)).as("n"),
+            s.read.parquet(s"$sink/event_type=$k").agg(count(lit(1)).as("n"),
                 sum(col("event_id")).as("id_sum"),
                 dsum(col("value")).as("sum_value"))
               .withColumn("event_type", lit(k))
@@ -1295,17 +1174,22 @@ object StreamOps {
       (s, d) => {
         val input = graft.Tables.events(s, d)
           .select(col("event_id"), col("event_type"), col("value"))
-        val routes = Seq[(String, DataFrame => DataFrame)](
-          "hot" -> (b => b.where(col("event_type").isin("click", "purchase"))),
-          "digest" -> (b => b.groupBy("event_type")
-            .agg(count(lit(1)).as("n"), sum(col("event_id")).as("id_sum"),
-                 sum(graft.QueryDef.dec(col("value"))).as("v_sum"))))
-        runBoundedFanOut(s, input, routes, chunks = 3) { sinks =>
-          val hotAgg = sinks("hot").groupBy("event_type")
+        replayForeachBatch(s, input) { (batch, sink) =>
+          batch.persist()
+          try {
+            batch.where(col("event_type").isin("click", "purchase"))
+              .write.mode("append").parquet(s"$sink/hot")
+            batch.groupBy("event_type")
+              .agg(count(lit(1)).as("n"), sum(col("event_id")).as("id_sum"),
+                   sum(graft.QueryDef.dec(col("value"))).as("v_sum"))
+              .write.mode("append").parquet(s"$sink/digest")
+          } finally batch.unpersist()
+        } { sink =>
+          val hotAgg = s.read.parquet(s"$sink/hot").groupBy("event_type")
             .agg(count(lit(1)).as("n"), sum(col("event_id")).as("id_sum"),
                  dsum(col("value")).as("sum_value"))
             .withColumn("sink", lit("hot"))
-          val digAgg = sinks("digest").groupBy("event_type")
+          val digAgg = s.read.parquet(s"$sink/digest").groupBy("event_type")
             .agg(sum(col("n")).as("n"), sum(col("id_sum")).as("id_sum"),
                  sum(col("v_sum")).cast("double").as("sum_value"))
             .withColumn("sink", lit("digest"))
@@ -1353,12 +1237,8 @@ object StreamOps {
             .reduce(_.unionByName(_))
             .dropDuplicatesWithinWatermark("fp")
             .select(col("fp"))
-        val rows = runBoundedFanIn(s, Seq(feedA, feedB), dedup, chunks = 3,
+        replayFanIn(s, Seq(feedA, feedB), dedup, chunks = 3,
           outputMode = "append", arrivalOrder = Seq(col("ts")))
-        s.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("fp",
-                org.apache.spark.sql.types.StringType, nullable = true))))
           .orderBy("fp")
       },
       Some("""SELECT DISTINCT md5(text) AS fp FROM documents
@@ -1375,11 +1255,9 @@ object StreamOps {
         val input = graft.Tables.events(s, d)
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("value"), unix_micros(col("ts")).as("ts_us"))
-        val rows = runBoundedFromPath(s, input, twapStream(_),
+        replay(s, input, twapStream(_),
           chunks = 3, outputMode = "append",
           arrivalOrder = Seq(col("ts_us"), col("event_id")))
-        s.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            org.apache.spark.sql.Encoders.product[TwapOut].schema)
           .select(col("user_id"), col("tsu"), col("n_so_far"),
             round(col("twap_run"), 6).as("twap_run"))
           .orderBy("user_id", "n_so_far")
@@ -1421,12 +1299,10 @@ object StreamOps {
             when(pmod(col("l_orderkey"), lit(2)) === 0,
               col("l_quantity").cast("long"))
               .otherwise(-col("l_quantity").cast("long")).as("delta"))
-        val rows = runBoundedFromPath(s, moves, balanceStream(_),
+        replay(s, moves, balanceStream(_),
           chunks = 3, outputMode = "append",
           arrivalOrder = Seq(col("shipUs"), col("okey"), col("lnum"),
             col("pkey"), col("delta")))
-        s.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            org.apache.spark.sql.Encoders.product[BalanceOut].schema)
           .orderBy("sk", "move_idx")
       },
       Some("""WITH led AS (
@@ -1466,9 +1342,7 @@ object StreamOps {
               round(col("o_totalprice") * 100, 0).cast("long").cast("string"),
               1, 1).cast("int").as("digit"))
             .groupBy("digit").agg(count(lit(1)).as("n_d"))
-        val rows = runBoundedFromPath(s, input, hist, chunks = 3)
-        s.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            hist(input).schema)
+        replay(s, input, hist, chunks = 3)
           .orderBy("digit")
       },
       Some("""SELECT CAST(substr(CAST(CAST(round(o_totalprice * 100, 0)
@@ -1500,9 +1374,7 @@ object StreamOps {
               unix_micros(col("m.ts")).as("ts_us"),
               col("m.event_id").as("event_id"),
               col("m.value").as("value"), col("n_versions"))
-        val rows = runBoundedFromPath(s, input, compact, chunks = 3)
-        s.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            compact(input).schema)
+        replay(s, input, compact, chunks = 3)
           .orderBy("user_id", "event_type")
       },
       Some("""SELECT user_id, event_type, epoch_us(ts) AS ts_us, event_id,
@@ -1542,9 +1414,7 @@ object StreamOps {
               round(col("hi").cast("double") / 100, 2).as("high"),
               round(col("lo").cast("double") / 100, 2).as("low"),
               round(col("cl.c").cast("double") / 100, 2).as("close"))
-        val rows = runBoundedFromPath(s, input, bars, chunks = 3)
-        s.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            bars(input).schema)
+        replay(s, input, bars, chunks = 3)
           .orderBy("hr")
       },
       Some("""WITH ev AS (
@@ -1616,10 +1486,8 @@ object StreamOps {
             .select(col("c_user").as("user_id"), col("click_ts"),
               col("purchase_ts"), col("purchase_value"))
         }
-        val rows = runBoundedFromPath(s, input, toPairs,
+        replay(s, input, toPairs,
           chunks = 3, outputMode = "append", arrivalOrder = Seq(col("ts")))
-        s.createDataFrame(new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-            toPairs(input).schema)
           .orderBy("user_id", "click_ts", "purchase_ts", "purchase_value")
       },
       Some("""SELECT c.user_id, c.ts AS click_ts, p.ts AS purchase_ts,

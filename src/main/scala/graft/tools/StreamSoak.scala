@@ -17,8 +17,9 @@ import graft.{Sessions, SparkEntry}
   * q157/q172/q217 regressed driver-to-driver afterwards and their
   * coverage was unproven). Flat temp-view/provider counts across a
   * full-class soak verify every streamed gate really exits through
-  * `collectBounded`'s finally-block — the memory-sink drop and
-  * StateStore unload are per-gate invariants, not per-suspect ones.
+  * `StreamOps.replay`'s cleanup — the memory-sink view drop and the
+  * StateStore unload are per-gate invariants, not per-suspect ones
+  * (StreamingSpec pins them per replay).
   *
   *   java -cp ... graft.tools.StreamSoak <sfDir> [rounds] [gates.csv]
   */

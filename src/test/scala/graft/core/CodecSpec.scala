@@ -86,12 +86,17 @@ class CodecSpec extends AnyFunSuite {
       .sameElements(payloadA ++ payloadB))
   }
 
-  test("truncated zlib/raw stream yields the decodable prefix, not a hang") {
-    for (f <- Seq(Codec.Zlib, Codec.Raw)) {
-      val c = Codec.deflateChunk(payloadA, f)
-      val got = Codec.inflateAll(c.dropRight(6), f)
-      assert(got.length <= payloadA.length, s"$f truncation")
-      assert(payloadA.take(got.length).sameElements(got), s"$f prefix fidelity")
+  test("a stream cut mid-member throws for gzip, zlib and raw, not a prefix or a hang") {
+    for (f <- Seq(Codec.Gzip, Codec.Zlib, Codec.Raw)) {
+      val one = Codec.deflateChunk(payloadA, f)
+      val two = one ++ Codec.deflateChunk(payloadB, f)
+      // cut inside the only member, and inside the second of two
+      for (cut <- Seq(one.dropRight(6), one.take(one.length / 2),
+                      two.dropRight(6), two.take((one.length + two.length) / 2));
+           split <- Seq(7, cut.length)) {
+        intercept[java.io.EOFException](
+          Codec.inflateStream(cut.grouped(split), f, 1000).foreach(_ => ()))
+      }
     }
   }
 

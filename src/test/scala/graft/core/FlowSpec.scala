@@ -90,11 +90,16 @@ class FlowSpec extends AnyFunSuite {
   private def withFiles[A](files: (String, Array[Byte])*)(body: String => A): A = {
     val dir = java.nio.file.Files.createTempDirectory("graft_rb")
     try {
-      files.foreach { case (n, b) => java.nio.file.Files.write(dir.resolve(n), b) }
+      files.foreach { case (n, b) =>
+        java.nio.file.Files.createDirectories(dir.resolve(n).getParent)
+        java.nio.file.Files.write(dir.resolve(n), b)
+      }
       body(dir.toString)
     } finally {
-      java.nio.file.Files.list(dir).forEach(p => java.nio.file.Files.delete(p))
-      java.nio.file.Files.delete(dir)
+      val all = java.nio.file.Files.walk(dir)
+      try all.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.delete(p))
+      finally all.close()
     }
   }
 
@@ -132,6 +137,22 @@ class FlowSpec extends AnyFunSuite {
     withFiles("a.txt" -> Array.emptyByteArray, "b.txt" -> utf8("hi")) { dir =>
       assert(Flow.readBytes(spark, dir).toArray.map(new String(_, "UTF-8")) == Seq("hi"))
       assert(Flow.readBytes(spark, dir + "/a.txt").toArray.isEmpty)
+    }
+  }
+
+  test("readBytes: a file, a directory and a glob resolve as Spark's file sources do") {
+    val files = Seq("b.txt" -> "b", "a.txt" -> "a", "_SUCCESS" -> "x", ".hidden" -> "x",
+      "sub/c.txt" -> "c", "sub/_tmp" -> "x", "_hidden/d.txt" -> "x")
+    withFiles(files.map { case (n, t) => n -> utf8(t) }: _*) { dir =>
+      def read(path: String) = Flow.readBytes(spark, path).toArray.map(new String(_, "UTF-8"))
+      // a directory contributes its own files, not its subdirectories';
+      // `_`/`.` names are skipped; files come in path order
+      assert(read(dir) == Seq("a", "b"))
+      assert(read(dir + "/*.txt") == Seq("a", "b"))
+      assert(read(dir + "/sub/c.txt") == Seq("c"))
+      // a directory a path or glob names is read whatever its name
+      assert(read(dir + "/*") == Seq("x", "a", "b", "c"))
+      assert(read(dir + "/_hidden") == Seq("x"))
     }
   }
 

@@ -85,10 +85,10 @@ class SketchSpec extends AnyFunSuite {
     // through the file source, complete-mode aggregation, no special
     // streaming path in the operator itself
     import org.apache.spark.sql.functions.{col, explode, split}
-    val streamed = graft.stream.StreamOps.runBoundedFromPath(spark, docs,
+    val streamed = graft.stream.StreamOps.replay(spark, docs,
         df => Sketch.countMinCellsOf(
           df.select(explode(split(col("text"), " ")).as("tok"))),
-        chunks = 3)
+        chunks = 3).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
     val batch = Sketch.countMinCellsOf(
         docs.select(explode(split(col("text"), " ")).as("tok")))

@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Row
 
 /** Streaming/batch equivalence: the same event-time transforms produce
-  * identical results replayed through MemoryStream micro-batches as in
-  * one batch pass (SURVEY.md §3.3: push-mode ≙ Structured Streaming). */
+  * identical results replayed through `StreamOps.replay`'s file-source
+  * micro-batches as in one batch pass (SURVEY.md §3.3: push-mode ≙
+  * Structured Streaming), and every replay cleans up after itself. */
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -16,7 +17,7 @@ class StreamingSpec extends AnyFunSuite {
   test("tumbling window: streaming == batch") {
     val events = Tables.events(spark, TestSpark.sf0001)
     val batch = StreamOps.tumbling(events).collect().toSeq
-    val streamed = StreamOps.runBounded(spark, events, StreamOps.tumbling(_))
+    val streamed = StreamOps.replay(spark, events, StreamOps.tumbling(_)).collect().toSeq
     assert(canon(streamed) == canon(batch))
   }
 
@@ -24,7 +25,7 @@ class StreamingSpec extends AnyFunSuite {
     // the production state backend at 100 TB (bounded executor heap,
     // state spills to local disk): same transform, same result. The
     // provider is bound at query start, so setting the session conf
-    // around runBounded is enough.
+    // around the replay is enough.
     val events = Tables.events(spark, TestSpark.sf0001)
     val batch = StreamOps.tumbling(events).collect().toSeq
     val key = "spark.sql.streaming.stateStore.providerClass"
@@ -32,7 +33,7 @@ class StreamingSpec extends AnyFunSuite {
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val streamed = StreamOps.runBounded(spark, events, StreamOps.tumbling(_))
+      val streamed = StreamOps.replay(spark, events, StreamOps.tumbling(_)).collect().toSeq
       assert(canon(streamed) == canon(batch))
     } finally prev match {
       case Some(v) => spark.conf.set(key, v)
@@ -43,14 +44,14 @@ class StreamingSpec extends AnyFunSuite {
   test("session windows: streaming == batch") {
     val events = Tables.events(spark, TestSpark.sf0001)
     val batch = StreamOps.sessions(events).collect().toSeq
-    val streamed = StreamOps.runBounded(spark, events, StreamOps.sessions(_))
+    val streamed = StreamOps.replay(spark, events, StreamOps.sessions(_)).collect().toSeq
     assert(canon(streamed) == canon(batch))
   }
 
   test("sliding window: streaming == batch") {
     val events = Tables.events(spark, TestSpark.sf0001)
     val batch = StreamOps.sliding(events).collect().toSeq
-    val streamed = StreamOps.runBounded(spark, events, StreamOps.sliding(_))
+    val streamed = StreamOps.replay(spark, events, StreamOps.sliding(_)).collect().toSeq
     assert(canon(streamed) == canon(batch))
   }
 
@@ -134,8 +135,10 @@ class StreamingSpec extends AnyFunSuite {
         "-1L AS user_id, 'sentinel' AS event_type, 0.0D AS value, '{}' AS props")
     val input = events.unionByName(sentinelRow)
     val batch = StreamOps.clickToPurchase(events).collect().toSeq
-    val streamed = StreamOps.runBounded(spark, input,
-      StreamOps.clickToPurchase(_), outputMode = "append")
+    // the watermark drops rows that arrive behind it, so the replay
+    // delivers chunks in event-time order
+    val streamed = StreamOps.replay(spark, input, StreamOps.clickToPurchase(_),
+      outputMode = "append", arrivalOrder = Seq(col("ts"))).collect().toSeq
     assert(canon(streamed) == canon(batch))
     assert(batch.nonEmpty, "corpus must contain click->purchase pairs")
   }
@@ -143,7 +146,8 @@ class StreamingSpec extends AnyFunSuite {
   test("tumbling aggregation off a file stream == batch (bounded replay, no driver staging)") {
     val events = Tables.events(spark, TestSpark.sf0001)
     val batch = StreamOps.tumbling(events).collect().toSeq
-    val streamed = StreamOps.runBoundedFromPath(spark, events, StreamOps.tumbling(_), chunks = 3)
+    val streamed = StreamOps.replay(spark, events, StreamOps.tumbling(_), chunks = 3)
+      .collect().toSeq
     assert(canon(streamed) == canon(batch))
   }
 
@@ -200,7 +204,7 @@ class StreamingSpec extends AnyFunSuite {
     val events = Tables.events(spark, TestSpark.sf0001)
       .select("event_type", "value", "event_id")
     val batch = top(events).collect().toSeq
-    val streamed = StreamOps.runBoundedFromPath(spark, events, top, chunks = 4)
+    val streamed = StreamOps.replay(spark, events, top, chunks = 4).collect().toSeq
     assert(canon(streamed) == canon(batch))
     assert(batch.nonEmpty)
   }
@@ -258,7 +262,7 @@ class StreamingSpec extends AnyFunSuite {
         .withColumn("doc_id", col("doc_id") + 200000L))
     val priorIdx = prior.select(md5(col("text")).as("fp")).distinct()
 
-    val streamed = StreamOps.runBoundedFromPath(spark, incoming,
+    val streamed = StreamOps.replay(spark, incoming,
       df => {
         val inc = df.select(col("doc_id"), md5(col("text")).as("fp"))
         val fresh = inc.join(broadcast(priorIdx), Seq("fp"), "left_anti")
@@ -266,7 +270,7 @@ class StreamingSpec extends AnyFunSuite {
         StreamOps.firstSeen[String, (Long, String)](
           fresh.as[(Long, String)], _._2, ttl = None).toDF("doc_id", "fp")
       },
-      chunks = 3, outputMode = "append")
+      chunks = 3, outputMode = "append").collect().toSeq
 
     val batchNew = graft.SparkEntry.queries("q102_incremental_dedup")(spark, d)
       .where(col("status") === "new")
@@ -291,11 +295,50 @@ class StreamingSpec extends AnyFunSuite {
     val input = docs.select(col("doc_id"),
       substring(col("text"), 1, 32).as("key"),
       graft.ops.Dedup.shingleArr(col("text")).as("sh"))
-    val streamed = StreamOps.runBoundedFromPath(spark, input,
+    val streamed = StreamOps.replay(spark, input,
         StreamOps.snmPairsStream(_), chunks = 3, outputMode = "append",
-        arrivalOrder = Seq(col("key"), col("doc_id")))
+        arrivalOrder = Seq(col("key"), col("doc_id"))).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(streamed.size >= 11, "every adjacent pair must clear tau")
     assert(streamed == batch, "streamed pass must equal the batch operator")
+  }
+
+  test("both replay bodies leave no bounded_* view and no running query behind") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    // onQueryStarted runs before start() returns, so no id is missed
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit = { started.add(e.id); () }
+      def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    def views = spark.catalog.listTables().collect()
+      .map(_.name).filter(_.startsWith("bounded_")).toSet
+    def active = spark.streams.active.map(_.id).toSet
+    // compared with the state before each call, so leftovers of other
+    // suites in this JVM cannot fail it
+    def assertClean[A](replay: => A): A = {
+      val (views0, active0) = (views, active)
+      started.clear()
+      val out = replay
+      assert(!started.isEmpty, "the replay must run a streaming query")
+      assert(views == views0, "the memory sink's view must be dropped")
+      assert(active == active0, "the replay's query must be stopped")
+      out
+    }
+    val events = Tables.events(spark, TestSpark.sf0001).select("event_id", "event_type")
+    spark.streams.addListener(listener)
+    try {
+      val counts = assertClean(
+        StreamOps.replay(spark, events, _.groupBy("event_type").count()))
+      val copied = assertClean(
+        StreamOps.replayForeachBatch(spark, events) { (batch, sink) =>
+          batch.write.mode("append").parquet(sink)
+        }(sink => spark.read.parquet(sink)))
+      // the results are local copies that outlive the scratch dirs
+      assert(counts.collect().map(_.getLong(1)).sum == events.count())
+      assert(canon(copied.collect().toSeq) == canon(events.collect().toSeq))
+    } finally spark.streams.removeListener(listener)
   }
 }
