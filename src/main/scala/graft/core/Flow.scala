@@ -163,7 +163,9 @@ object Flow {
 
   /** S5 — file byte source (file.d:14-34): each file matched by `path`
     * (a file, directory or glob, resolved as Spark's file sources
-    * resolve it; a pattern matching nothing throws) is one ordered
+    * resolve a non-partitioned path; a pattern matching nothing throws,
+    * and so does a directory holding `k=v` partition subdirectories,
+    * which are not read) is one ordered
     * stream of 64 KB chunks in its own partition, partitions in path
     * order — the layout [[readUrls]] uses and [[inflate]]/[[untar]]/
     * [[byLine]] restitch per partition. A file is never run together
@@ -181,20 +183,26 @@ object Flow {
     implicit val e: Encoder[Array[Byte]] = org.apache.spark.sql.Encoders.BINARY
     // Listed here, not through a file source, whose metadata-log probe
     // logs a FileNotFoundException trace for every glob; the rules are
-    // a file source's: each matched directory contributes its own files
-    // (not its subdirectories'), and `_`/`.` file names are skipped
+    // a non-partitioned file source's: each matched directory
+    // contributes its own files (not its subdirectories'), and names are
+    // skipped as Spark's HadoopFSUtils.shouldFilterOutPathName skips them
+    def skipped(n: String) =
+      ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")) &&
+        !(n.startsWith("_common_metadata") || n.startsWith("_metadata"))
     val pattern = new HPath(path)
     val fs = pattern.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val matched = Option(fs.globStatus(pattern)).toSeq.flatten
     if (matched.isEmpty) throw new org.apache.spark.sql.AnalysisException(
       "PATH_NOT_FOUND", Map("path" -> fs.makeQualified(pattern).toString))
-    val files = matched
+    val listed = matched
       .flatMap(st => if (st.isDirectory) fs.listStatus(st.getPath).toSeq else Seq(st))
-      .filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      .map(_.getPath).sortBy(_.toString)
+      .filterNot(st => skipped(st.getPath.getName))
+    listed.find(st => st.isDirectory && st.getPath.getName.contains("=")).foreach { st =>
+      throw new UnsupportedOperationException(
+        s"readBytes does not read partitioned layouts: ${st.getPath}")
+    }
+    val files = listed.filter(_.isFile).map(_.getPath).sortBy(_.toString)
     // Hadoop Configuration is not java-serializable; Spark's Writable
     // envelope ships it, broadcast as Spark's file scans do: a copy in
     // the closure is deserialized by every task (8 small-file tasks

@@ -194,18 +194,17 @@ object StreamOps {
     finally spark.catalog.dropTempView(name)
   }
 
-  /** foreachBatch replay: ONE streaming query over `input` whose every
-    * micro-batch goes to `write(batch, sink)`, which writes it under the
-    * scratch directory `sink` — executor-side, in as many sinks and
-    * layouts as it likes (the demux side of flod's roadmap item). Once
-    * the stream is drained, `read(sink)` reads the finished sinks back,
-    * and its result is returned as a local DataFrame before the sink
-    * directory is deleted. */
-  def replayForeachBatch(spark: SparkSession, input: DataFrame,
-                         chunks: Int = 3)
+  /** foreachBatch replay: ONE streaming query over `input`, staged as 3
+    * chunks, whose every micro-batch goes to `write(batch, sink)`, which
+    * writes it under the scratch directory `sink` — executor-side, in
+    * as many sinks and layouts as it likes (the demux side of flod's
+    * roadmap item). Once the stream is drained, `read(sink)` reads the
+    * finished sinks back, and its result is returned as a local
+    * DataFrame before the sink directory is deleted. */
+  def replayForeachBatch(spark: SparkSession, input: DataFrame)
                         (write: (DataFrame, String) => Unit)
                         (read: String => DataFrame): DataFrame =
-    replayScaffold(spark, Seq(input), chunks, Nil) { (sources, sink) =>
+    replayScaffold(spark, Seq(input), 3, Nil) { (sources, sink) =>
       sources.head.writeStream.outputMode("append")
         .foreachBatch { (batch: Dataset[Row], _: Long) => write(batch, sink) }
     }(read)

@@ -142,17 +142,29 @@ class FlowSpec extends AnyFunSuite {
 
   test("readBytes: a file, a directory and a glob resolve as Spark's file sources do") {
     val files = Seq("b.txt" -> "b", "a.txt" -> "a", "_SUCCESS" -> "x", ".hidden" -> "x",
+      "e.txt._COPYING_" -> "x", "_metadata" -> "m", "_common_metadata" -> "n", "_k=1" -> "k",
       "sub/c.txt" -> "c", "sub/_tmp" -> "x", "_hidden/d.txt" -> "x")
     withFiles(files.map { case (n, t) => n -> utf8(t) }: _*) { dir =>
       def read(path: String) = Flow.readBytes(spark, path).toArray.map(new String(_, "UTF-8"))
       // a directory contributes its own files, not its subdirectories';
-      // `_`/`.` names are skipped; files come in path order
-      assert(read(dir) == Seq("a", "b"))
+      // `_`/`.` names and in-progress `._COPYING_` copies are skipped,
+      // `_metadata`, `_common_metadata` and `_k=v` names are kept;
+      // files come in path order
+      assert(read(dir) == Seq("n", "k", "m", "a", "b"))
       assert(read(dir + "/*.txt") == Seq("a", "b"))
       assert(read(dir + "/sub/c.txt") == Seq("c"))
       // a directory a path or glob names is read whatever its name
-      assert(read(dir + "/*") == Seq("x", "a", "b", "c"))
+      assert(read(dir + "/*") == Seq("n", "x", "k", "m", "a", "b", "c"))
       assert(read(dir + "/_hidden") == Seq("x"))
+    }
+  }
+
+  test("readBytes: a partitioned layout throws rather than reading nothing") {
+    withFiles("k=1/a.txt" -> utf8("a"), "k=2/b.txt" -> utf8("b")) { dir =>
+      intercept[UnsupportedOperationException](Flow.readBytes(spark, dir))
+      // a partition directory named directly is an ordinary directory
+      assert(Flow.readBytes(spark, dir + "/k=1").toArray.map(new String(_, "UTF-8")) ==
+        Seq("a"))
     }
   }
 

@@ -17,8 +17,11 @@ class StreamingSpec extends AnyFunSuite {
   test("tumbling window: streaming == batch") {
     val events = Tables.events(spark, TestSpark.sf0001)
     val batch = StreamOps.tumbling(events).collect().toSeq
-    val streamed = StreamOps.replay(spark, events, StreamOps.tumbling(_)).collect().toSeq
-    assert(canon(streamed) == canon(batch))
+    for (chunks <- Seq(2, 3)) {
+      val streamed = StreamOps.replay(spark, events, StreamOps.tumbling(_), chunks)
+        .collect().toSeq
+      assert(canon(streamed) == canon(batch), s"chunks=$chunks")
+    }
   }
 
   test("tumbling window under the RocksDB state store == batch") {
@@ -141,14 +144,6 @@ class StreamingSpec extends AnyFunSuite {
       outputMode = "append", arrivalOrder = Seq(col("ts"))).collect().toSeq
     assert(canon(streamed) == canon(batch))
     assert(batch.nonEmpty, "corpus must contain click->purchase pairs")
-  }
-
-  test("tumbling aggregation off a file stream == batch (bounded replay, no driver staging)") {
-    val events = Tables.events(spark, TestSpark.sf0001)
-    val batch = StreamOps.tumbling(events).collect().toSeq
-    val streamed = StreamOps.replay(spark, events, StreamOps.tumbling(_), chunks = 3)
-      .collect().toSeq
-    assert(canon(streamed) == canon(batch))
   }
 
   test("file stream picks up files written incrementally WHILE the query runs") {
