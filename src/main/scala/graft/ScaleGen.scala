@@ -45,11 +45,7 @@ object ScaleGen {
     val dst  = args(1)
     val reps = if (args.length > 2) args(2).toInt else 10
     val mode = if (args.length > 3) args(3) else "namespace"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.configure(
-        SparkSession.builder().master(s"local[$cpus]"), cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-scalegen")
     generate(spark, src, dst, reps, mode)
     spark.stop()
   }

@@ -38,22 +38,9 @@ object Sql {
 
   val defs: Seq[QueryDef] = Seq(
     textTwin("q195_sqltext_agg_group",
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base_price,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS sum_disc_price,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) / COUNT(*) AS avg_qty,
-        |  COUNT(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+      ops.Relational.aggGroupOracleSql),
     textTwin("q196_sqltext_join_revenue",
-      """SELECT o_orderpriority,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS revenue,
-        |  COUNT(*) AS n_items
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+      ops.Relational.joinRevenueOracleSql),
     textTwin("q197_sqltext_window_rank",
       // CAST(rn AS BIGINT): Spark's ROW_NUMBER is 32-bit, DuckDB's is
       // 64-bit — the shared text pins the wider type on both engines

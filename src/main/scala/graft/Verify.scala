@@ -1,50 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each selected gate's result → parquet,
+  * plus every gate's oracle in oracle_sql.json, for the driver's DuckDB
+  * compare. The driver selects every gate; `SPARK_GRAFT_ONLY` (see
+  * [[Harness.select]]) narrows a dev run. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.configure(
-        SparkSession.builder().master(s"local[$cpus]"), cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = Harness.selected()
+    val spark = Harness.session("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // Dev loop: SPARK_GRAFT_VERIFY_ONLY=q76_seq_pack,q81_… dumps just
-    // those queries (EXACT names). The driver never sets it. A selector
-    // matching nothing is a hard error, not an empty healthy-looking run.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty) // a blank selector means "no restriction", not "nothing"
-    only.foreach { o =>
-      val unknown = o -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"unknown queries in SPARK_GRAFT_VERIFY_ONLY: $unknown")
-    }
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    selected.foreach { q =>
+      try q.fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Harness.quote(k)}: ${Harness.quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -334,6 +334,14 @@ object DataSelect {
   private val semTau = 0.95
   private val dsirBuckets = 128
 
+  /** Oracle of q334_quality_classifier and q340_stream_classifier. */
+  private val classifierOracleSql =
+    s"""WITH $classifierSqlCte
+      |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+      |  CAST(SUM(CASE WHEN score > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
+      |  round(CAST(SUM(score) AS DOUBLE) / COUNT(*), 6) AS avg_score
+      |FROM sc GROUP BY source ORDER BY source""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
 
     // SemDeDup over a deterministic re-crawl corpus: the %7 slice
@@ -590,11 +598,7 @@ object DataSelect {
             round(sum(col("score")).cast("double") / count(lit(1)), 6).as("avg_score"))
           .orderBy("source")
       },
-      Some(s"""WITH $classifierSqlCte
-             |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-             |  CAST(SUM(CASE WHEN score > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
-             |  round(CAST(SUM(score) AS DOUBLE) / COUNT(*), 6) AS avg_score
-             |FROM sc GROUP BY source ORDER BY source""".stripMargin)),
+      Some(classifierOracleSql)),
 
     // Filter AGREEMENT audit (✚, the calibration question a pipeline
     // with several quality filters must answer before chaining them:
@@ -688,13 +692,7 @@ object DataSelect {
             round(col("sum_score").cast("double") / col("n_docs"), 6).as("avg_score"))
           .orderBy("source")
       },
-      // identical to q334's oracle — the streaming state must converge
-      // to the batch classifier stats
-      Some(s"""WITH $classifierSqlCte
-             |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-             |  CAST(SUM(CASE WHEN score > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
-             |  round(CAST(SUM(score) AS DOUBLE) / COUNT(*), 6) AS avg_score
-             |FROM sc GROUP BY source ORDER BY source""".stripMargin)),
+      Some(classifierOracleSql)),
 
     // Filter FUNNEL audit (✚, pipeline observability — "we kept 38% of
     // the crawl: which stage dropped the rest, and does that differ by

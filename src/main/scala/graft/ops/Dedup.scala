@@ -464,6 +464,38 @@ object Dedup {
       .where(col("jac") >= tau)
   }
 
+  /** Oracle of q120_sorted_neighborhood and q139_stream_snm. */
+  val snmOracleSql =
+    """WITH k AS (SELECT doc_id, substr(text, 1, 32) AS key, text
+      |           FROM documents),
+      |r AS (SELECT doc_id, text,
+      |        ROW_NUMBER() OVER (ORDER BY key, doc_id) AS rn
+      |      FROM k),
+      |p AS (SELECT a.doc_id AS id_a, a.text AS ta,
+      |             b.doc_id AS id_b, b.text AS tb
+      |      FROM r a JOIN r b ON b.rn BETWEEN a.rn + 1 AND a.rn + 3),
+      |sh AS (SELECT id_a, id_b,
+      |  list_distinct(CASE WHEN len(string_split(ta, ' ')) >= 3
+      |    THEN list_transform(range(len(string_split(ta, ' ')) - 2),
+      |      i -> string_split(ta, ' ')[i+1] || ' ' ||
+      |           string_split(ta, ' ')[i+2] || ' ' ||
+      |           string_split(ta, ' ')[i+3])
+      |    ELSE [ta] END) AS da,
+      |  list_distinct(CASE WHEN len(string_split(tb, ' ')) >= 3
+      |    THEN list_transform(range(len(string_split(tb, ' ')) - 2),
+      |      i -> string_split(tb, ' ')[i+1] || ' ' ||
+      |           string_split(tb, ' ')[i+2] || ' ' ||
+      |           string_split(tb, ' ')[i+3])
+      |    ELSE [tb] END) AS db
+      |  FROM p),
+      |j AS (SELECT least(id_a, id_b) AS id_a, greatest(id_a, id_b) AS id_b,
+      |  round(CAST(len(list_filter(da, x -> list_contains(db, x))) AS DOUBLE)
+      |    / (len(da) + len(db)
+      |       - len(list_filter(da, x -> list_contains(db, x)))), 6) AS jac
+      |  FROM sh)
+      |SELECT id_a, id_b, jac FROM j WHERE jac >= 0.5
+      |ORDER BY id_a, id_b""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
 
     // Exact dedup: group on the content hash, keep the smallest doc_id.
@@ -569,35 +601,7 @@ object Dedup {
     QueryDef("q120_sorted_neighborhood",
       (s, d) => sortedNeighborhood(Tables.documents(s, d))
         .orderBy("id_a", "id_b"),
-      Some("""WITH k AS (SELECT doc_id, substr(text, 1, 32) AS key, text
-             |           FROM documents),
-             |r AS (SELECT doc_id, text,
-             |        ROW_NUMBER() OVER (ORDER BY key, doc_id) AS rn
-             |      FROM k),
-             |p AS (SELECT a.doc_id AS id_a, a.text AS ta,
-             |             b.doc_id AS id_b, b.text AS tb
-             |      FROM r a JOIN r b ON b.rn BETWEEN a.rn + 1 AND a.rn + 3),
-             |sh AS (SELECT id_a, id_b,
-             |  list_distinct(CASE WHEN len(string_split(ta, ' ')) >= 3
-             |    THEN list_transform(range(len(string_split(ta, ' ')) - 2),
-             |      i -> string_split(ta, ' ')[i+1] || ' ' ||
-             |           string_split(ta, ' ')[i+2] || ' ' ||
-             |           string_split(ta, ' ')[i+3])
-             |    ELSE [ta] END) AS da,
-             |  list_distinct(CASE WHEN len(string_split(tb, ' ')) >= 3
-             |    THEN list_transform(range(len(string_split(tb, ' ')) - 2),
-             |      i -> string_split(tb, ' ')[i+1] || ' ' ||
-             |           string_split(tb, ' ')[i+2] || ' ' ||
-             |           string_split(tb, ' ')[i+3])
-             |    ELSE [tb] END) AS db
-             |  FROM p),
-             |j AS (SELECT least(id_a, id_b) AS id_a, greatest(id_a, id_b) AS id_b,
-             |  round(CAST(len(list_filter(da, x -> list_contains(db, x))) AS DOUBLE)
-             |    / (len(da) + len(db)
-             |       - len(list_filter(da, x -> list_contains(db, x)))), 6) AS jac
-             |  FROM sh)
-             |SELECT id_a, id_b, jac FROM j WHERE jac >= 0.5
-             |ORDER BY id_a, id_b""".stripMargin)),
+      Some(snmOracleSql)),
 
     // Quantized-embedding exact dedup (✚, the vector-store intake
     // screen: re-embedded copies of the same content differ by float

@@ -81,6 +81,18 @@ object Delta {
     * the %13 slice ("removed") and appends an edit marker to the %7
     * slice ("changed"). The oracle mirrors the derivation and the
     * full-outer classification. */
+  /** Oracle of q156_latest_wins and q157_stream_compaction. */
+  val latestWinsOracleSql =
+    """SELECT user_id, event_type, epoch_us(ts) AS ts_us, event_id,
+      |  value, n_versions
+      |FROM (
+      |  SELECT user_id, event_type, ts, event_id, value,
+      |    ROW_NUMBER() OVER (PARTITION BY user_id, event_type
+      |      ORDER BY ts DESC, event_id DESC) AS rn,
+      |    COUNT(*) OVER (PARTITION BY user_id, event_type) AS n_versions
+      |  FROM events) t
+      |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q96_snapshot_diff",
       (s, d) => {
@@ -175,15 +187,7 @@ object Delta {
           unix_micros(col("m.ts")).as("ts_us"), col("m.event_id").as("event_id"),
           col("m.value").as("value"), col("n_versions"))
         .orderBy("user_id", "event_type"),
-      Some("""SELECT user_id, event_type, epoch_us(ts) AS ts_us, event_id,
-             |  value, n_versions
-             |FROM (
-             |  SELECT user_id, event_type, ts, event_id, value,
-             |    ROW_NUMBER() OVER (PARTITION BY user_id, event_type
-             |      ORDER BY ts DESC, event_id DESC) AS rn,
-             |    COUNT(*) OVER (PARTITION BY user_id, event_type) AS n_versions
-             |  FROM events) t
-             |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin)),
+      Some(latestWinsOracleSql)),
 
     // Partition-granular digest manifest + diff localization (✚, the
     // 100 TB answer to "what changed?": q96 compares every row's

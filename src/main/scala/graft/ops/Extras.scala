@@ -79,6 +79,103 @@ object Extras {
       .orderBy("check")
   }
 
+  /** Oracle of q149_rolling_anomaly and q151_stream_anomaly. */
+  val rollingAnomalyOracleSql =
+    """WITH w AS (
+      |  SELECT event_id, user_id, event_type, value,
+      |    count(*) OVER f AS n_hist,
+      |    CAST(sum(CAST(value AS DECIMAL(12,2))) OVER f AS DOUBLE) AS sx,
+      |    CAST(sum(CAST(value AS DECIMAL(12,2)) * CAST(value AS DECIMAL(12,2))) OVER f AS DOUBLE) AS sx2
+      |  FROM events
+      |  WINDOW f AS (PARTITION BY user_id ORDER BY ts, event_id
+      |               ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING)),
+      |z AS (
+      |  SELECT event_id, user_id, event_type, value,
+      |    sx / n_hist AS mean,
+      |    (sx2 - sx*sx/n_hist) / (n_hist - 1) AS var
+      |  FROM w WHERE n_hist >= 10)
+      |SELECT event_id, user_id, event_type, value,
+      |  round((value - mean) / sqrt(var), 6) AS z
+      |FROM z WHERE var > 0
+      |  AND abs(round((value - mean) / sqrt(var), 6)) > 3
+      |ORDER BY event_id""".stripMargin
+
+  /** Oracle of q158_range_features and q159_stream_range_features. */
+  val rangeFeaturesOracleSql =
+    """SELECT event_id, user_id, epoch_us(ts) AS ts_us,
+      |  count(*) OVER f AS n_1h,
+      |  coalesce(CAST(sum(CAST(value AS DECIMAL(12,2))) OVER f AS DOUBLE), 0.0) AS sum_1h
+      |FROM events
+      |WINDOW f AS (PARTITION BY user_id ORDER BY epoch_us(ts)
+      |             RANGE BETWEEN 3600000000 PRECEDING AND 1 PRECEDING)
+      |ORDER BY event_id""".stripMargin
+
+  /** Oracle of q178_interval_union and q187_stream_interval_union. */
+  val intervalUnionOracleSql =
+    """WITH iv AS (
+      |  SELECT user_id, event_id, epoch_us(ts) AS st,
+      |    epoch_us(ts) + 300000000 AS en
+      |  FROM events),
+      |m AS (
+      |  SELECT user_id, event_id, st, en,
+      |    max(en) OVER (PARTITION BY user_id ORDER BY st, event_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_max_en
+      |  FROM iv),
+      |f AS (
+      |  SELECT user_id, st, en,
+      |    sum(CASE WHEN prev_max_en IS NULL OR st > prev_max_en
+      |        THEN 1 ELSE 0 END)
+      |      OVER (PARTITION BY user_id ORDER BY st, event_id
+      |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
+      |  FROM m),
+      |isl AS (
+      |  SELECT user_id, island, min(st) AS ist, max(en) AS ien
+      |  FROM f GROUP BY user_id, island)
+      |SELECT user_id, count(*) AS n_islands,
+      |  CAST(sum(ien - ist) AS BIGINT) AS covered_us
+      |FROM isl GROUP BY user_id ORDER BY user_id""".stripMargin
+
+  /** Hourly OHLC bars of `events` (ts, event_id, value), one row per
+    * hour: every column is a mergeable aggregate (struct MIN/MAX for
+    * open/close), so q316 streams the same transform q315 runs. */
+  def ohlcBars(events: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    events
+      .select(expr("CAST(unix_micros(ts) div 3600000000 AS BIGINT)").as("hr"),
+        unix_micros(col("ts")).as("tsu"), col("event_id"),
+        round(col("value") * 100, 0).cast("long").as("c"))
+      .groupBy("hr")
+      .agg(count(lit(1)).as("n"),
+        min(struct(col("tsu"), col("event_id"), col("c"))).as("o"),
+        max(struct(col("tsu"), col("event_id"), col("c"))).as("cl"),
+        max(col("c")).as("hi"), min(col("c")).as("lo"))
+      .select(col("hr"), col("n"),
+        round(col("o.c").cast("double") / 100, 2).as("open"),
+        round(col("hi").cast("double") / 100, 2).as("high"),
+        round(col("lo").cast("double") / 100, 2).as("low"),
+        round(col("cl.c").cast("double") / 100, 2).as("close"))
+
+  /** Oracle of q315_ohlc and q316_stream_ohlc. */
+  val ohlcOracleSql =
+    """WITH ev AS (
+      |  SELECT epoch_us(ts) // 3600000000 AS hr, epoch_us(ts) AS tsu,
+      |    event_id, CAST(round(value * 100, 0) AS BIGINT) AS c
+      |  FROM events),
+      |r AS (
+      |  SELECT hr, c,
+      |    ROW_NUMBER() OVER (PARTITION BY hr
+      |      ORDER BY tsu, event_id) AS rf,
+      |    ROW_NUMBER() OVER (PARTITION BY hr
+      |      ORDER BY tsu DESC, event_id DESC) AS rl
+      |  FROM ev)
+      |SELECT hr, COUNT(*) AS n,
+      |  round(CAST(MAX(CASE WHEN rf = 1 THEN c END) AS DOUBLE) / 100,
+      |    2) AS open,
+      |  round(CAST(MAX(c) AS DOUBLE) / 100, 2) AS high,
+      |  round(CAST(MIN(c) AS DOUBLE) / 100, 2) AS low,
+      |  round(CAST(MAX(CASE WHEN rl = 1 THEN c END) AS DOUBLE) / 100,
+      |    2) AS close
+      |FROM r GROUP BY hr ORDER BY hr""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
 
     // GROUPING SETS — the general form behind rollup (q35) / cube (q47):
@@ -933,24 +1030,7 @@ object Extras {
           .select("event_id", "user_id", "event_type", "value", "z")
           .orderBy("event_id")
       },
-      Some("""WITH w AS (
-             |  SELECT event_id, user_id, event_type, value,
-             |    count(*) OVER f AS n_hist,
-             |    CAST(sum(CAST(value AS DECIMAL(12,2))) OVER f AS DOUBLE) AS sx,
-             |    CAST(sum(CAST(value AS DECIMAL(12,2)) * CAST(value AS DECIMAL(12,2))) OVER f AS DOUBLE) AS sx2
-             |  FROM events
-             |  WINDOW f AS (PARTITION BY user_id ORDER BY ts, event_id
-             |               ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING)),
-             |z AS (
-             |  SELECT event_id, user_id, event_type, value,
-             |    sx / n_hist AS mean,
-             |    (sx2 - sx*sx/n_hist) / (n_hist - 1) AS var
-             |  FROM w WHERE n_hist >= 10)
-             |SELECT event_id, user_id, event_type, value,
-             |  round((value - mean) / sqrt(var), 6) AS z
-             |FROM z WHERE var > 0
-             |  AND abs(round((value - mean) / sqrt(var), 6)) > 3
-             |ORDER BY event_id""".stripMargin)),
+      Some(rollingAnomalyOracleSql)),
 
     // Referential-integrity + domain audit (✚, see integrityAudit):
     // two constraints genuinely fire on this corpus (257 childless
@@ -1210,13 +1290,7 @@ object Extras {
               .cast("double"), lit(0.0)).as("sum_1h"))
           .orderBy("event_id")
       },
-      Some("""SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-             |  count(*) OVER f AS n_1h,
-             |  coalesce(CAST(sum(CAST(value AS DECIMAL(12,2))) OVER f AS DOUBLE), 0.0) AS sum_1h
-             |FROM events
-             |WINDOW f AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-             |             RANGE BETWEEN 3600000000 PRECEDING AND 1 PRECEDING)
-             |ORDER BY event_id""".stripMargin)),
+      Some(rangeFeaturesOracleSql)),
 
     // Population-stability index (✚, the ML-monitoring drift metric
     // the q140 token-JSD doesn't cover — PSI compares a NUMERIC
@@ -1371,28 +1445,7 @@ object Extras {
             sum(col("ien") - col("ist")).as("covered_us"))
           .orderBy("user_id")
       },
-      Some("""WITH iv AS (
-             |  SELECT user_id, event_id, epoch_us(ts) AS st,
-             |    epoch_us(ts) + 300000000 AS en
-             |  FROM events),
-             |m AS (
-             |  SELECT user_id, event_id, st, en,
-             |    max(en) OVER (PARTITION BY user_id ORDER BY st, event_id
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_max_en
-             |  FROM iv),
-             |f AS (
-             |  SELECT user_id, st, en,
-             |    sum(CASE WHEN prev_max_en IS NULL OR st > prev_max_en
-             |        THEN 1 ELSE 0 END)
-             |      OVER (PARTITION BY user_id ORDER BY st, event_id
-             |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-             |  FROM m),
-             |isl AS (
-             |  SELECT user_id, island, min(st) AS ist, max(en) AS ien
-             |  FROM f GROUP BY user_id, island)
-             |SELECT user_id, count(*) AS n_islands,
-             |  CAST(sum(ien - ist) AS BIGINT) AS covered_us
-             |FROM isl GROUP BY user_id ORDER BY user_id""".stripMargin)),
+      Some(intervalUnionOracleSql)),
 
     // Per-group OLS trend (✚, the segment-level drift line: value vs
     // hour-of-day fitted independently inside every event type — the
@@ -5239,42 +5292,7 @@ object Extras {
     // aggregation keyed by the hour — at 100 TB the only thing that
     // moves is |hours| bars). Cents-exact integers; dollars round@2.
     QueryDef("q315_ohlc",
-      (s, d) => {
-        val bars = Tables.events(s, d)
-          .select(expr("CAST(unix_micros(ts) div 3600000000 AS BIGINT)")
-              .as("hr"),
-            unix_micros(col("ts")).as("tsu"), col("event_id"),
-            round(col("value") * 100, 0).cast("long").as("c"))
-          .groupBy("hr")
-          .agg(count(lit(1)).as("n"),
-            min(struct(col("tsu"), col("event_id"), col("c"))).as("o"),
-            max(struct(col("tsu"), col("event_id"), col("c"))).as("cl"),
-            max(col("c")).as("hi"), min(col("c")).as("lo"))
-        bars.select(col("hr"), col("n"),
-            round(col("o.c").cast("double") / 100, 2).as("open"),
-            round(col("hi").cast("double") / 100, 2).as("high"),
-            round(col("lo").cast("double") / 100, 2).as("low"),
-            round(col("cl.c").cast("double") / 100, 2).as("close"))
-          .orderBy("hr")
-      },
-      Some("""WITH ev AS (
-             |  SELECT epoch_us(ts) // 3600000000 AS hr, epoch_us(ts) AS tsu,
-             |    event_id, CAST(round(value * 100, 0) AS BIGINT) AS c
-             |  FROM events),
-             |r AS (
-             |  SELECT hr, c,
-             |    ROW_NUMBER() OVER (PARTITION BY hr
-             |      ORDER BY tsu, event_id) AS rf,
-             |    ROW_NUMBER() OVER (PARTITION BY hr
-             |      ORDER BY tsu DESC, event_id DESC) AS rl
-             |  FROM ev)
-             |SELECT hr, COUNT(*) AS n,
-             |  round(CAST(MAX(CASE WHEN rf = 1 THEN c END) AS DOUBLE) / 100,
-             |    2) AS open,
-             |  round(CAST(MAX(c) AS DOUBLE) / 100, 2) AS high,
-             |  round(CAST(MIN(c) AS DOUBLE) / 100, 2) AS low,
-             |  round(CAST(MAX(CASE WHEN rl = 1 THEN c END) AS DOUBLE) / 100,
-             |    2) AS close
-             |FROM r GROUP BY hr ORDER BY hr""".stripMargin))
+      (s, d) => ohlcBars(Tables.events(s, d)).orderBy("hr"),
+      Some(ohlcOracleSql))
   )
 }

@@ -50,6 +50,33 @@ object Relational {
        |        LAG(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
        |      FROM events) a) b""".stripMargin
 
+  /** Oracle of q04_agg_group and q195_sqltext_agg_group. */
+  val aggGroupOracleSql =
+    s"""SELECT l_returnflag, l_linestatus,
+      |  ${dsumSql("l_quantity")} AS sum_qty,
+      |  ${dsumSql("l_extendedprice")} AS sum_base_price,
+      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS sum_disc_price,
+      |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) / COUNT(*) AS avg_qty,
+      |  COUNT(*) AS count_order
+      |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+      |GROUP BY l_returnflag, l_linestatus
+      |ORDER BY l_returnflag, l_linestatus""".stripMargin
+
+  /** Oracle of q07_join_revenue, q196_sqltext_join_revenue and q65_bucketed_join. */
+  val joinRevenueOracleSql =
+    """SELECT o_orderpriority,
+      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS revenue,
+      |  COUNT(*) AS n_items
+      |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+      |WHERE l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
+      |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
+
+  /** Oracle of q18_window_tumble and q39_stream_tumble. */
+  val tumbleOracleSql =
+    s"""SELECT make_timestamp((epoch_us(ts) // 300000000) * 300000000) AS w_start,
+      |  event_type, COUNT(*) AS n, ${dsumSql("value")} AS sum_value
+      |FROM events GROUP BY 1, 2 ORDER BY w_start, event_type""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
 
     // S-scan + projection: column pruning reaches the parquet reader
@@ -98,15 +125,7 @@ object Relational {
           (sum(dec(col("l_quantity"))).cast("double") / count(lit(1))).as("avg_qty"),
           count(lit(1)).as("count_order"))
         .orderBy("l_returnflag", "l_linestatus"),
-      Some(s"""SELECT l_returnflag, l_linestatus,
-              |  ${dsumSql("l_quantity")} AS sum_qty,
-              |  ${dsumSql("l_extendedprice")} AS sum_base_price,
-              |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS sum_disc_price,
-              |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) / COUNT(*) AS avg_qty,
-              |  COUNT(*) AS count_order
-              |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-              |GROUP BY l_returnflag, l_linestatus
-              |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+      Some(aggGroupOracleSql)),
 
     // Whole-stream fold (flod `array()`/fold analog, K2): global agg —
     // single-row result via partial aggregation, no data movement.
@@ -152,12 +171,7 @@ object Relational {
             .cast("double").as("revenue"),
           count(lit(1)).as("n_items"))
         .orderBy("o_orderpriority"),
-      Some("""SELECT o_orderpriority,
-             |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS revenue,
-             |  COUNT(*) AS n_items
-             |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-             |WHERE l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-             |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
+      Some(joinRevenueOracleSql)),
 
     // Semi join (EXISTS): orders having a high-quantity line. left_semi
     // ships only the join key of the probe side.
@@ -289,9 +303,7 @@ object Relational {
                  col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
         .orderBy("w_start", "event_type"),
-      Some(s"""SELECT make_timestamp((epoch_us(ts) // 300000000) * 300000000) AS w_start,
-              |  event_type, COUNT(*) AS n, ${dsumSql("value")} AS sum_value
-              |FROM events GROUP BY 1, 2 ORDER BY w_start, event_type""".stripMargin)),
+      Some(tumbleOracleSql)),
 
     // Gap-based sessionization (30-min inactivity) via window functions —
     // one shuffle on user_id; the same logic streams via session_window

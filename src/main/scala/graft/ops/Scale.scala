@@ -371,12 +371,7 @@ object Scale {
             count(lit(1)).as("n_items"))
           .orderBy("o_orderpriority")
       },
-      Some("""SELECT o_orderpriority,
-             |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS revenue,
-             |  COUNT(*) AS n_items
-             |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-             |WHERE l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-             |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
+      Some(Relational.joinRevenueOracleSql)),
 
     // Broadcast Bloom pre-join: revenue of line items belonging to
     // high-value orders. The bloom (built from the ~10% qualifying

@@ -2,7 +2,7 @@ package graft.stream
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import graft.QueryDef
 import graft.QueryDef.{dsum, dsumSql}
 
@@ -112,17 +112,21 @@ object StreamOps {
     * files as an upstream writer drops them. `query(sources, sink)`
     * builds the writer (`sink` is a scratch directory it may write
     * to); it starts with the session's shuffle partitions set to
-    * [[statePartitions]] (the conf is bound into the query at start
-    * and restored right after) and runs until every file is processed.
-    * `result(sink)` is then copied into a local DataFrame with its own
-    * schema, so it outlives the scratch directories, and the query is
-    * stopped.
+    * [[statePartitions]] and AQE off (the session is cloned into the
+    * query at start and both confs are restored right after;
+    * streaming never runs AQE, and with it on every start warns so).
+    * It runs under `Trigger.AvailableNow`, which keeps the one-file
+    * batches and ends the query once every file is processed, so the
+    * stop that follows finds no live query thread whose jobs it would
+    * have to cancel. `result(sink)` is then copied into a local
+    * DataFrame with its own schema, so it outlives the scratch
+    * directories.
     *
     * Cleanup runs on every exit: the scratch tree is deleted, and the
     * stopped query's state-store providers are unloaded — their
     * in-heap version maps reference the deleted checkpoint and would
     * otherwise live until the 60 s maintenance sweep, slowing every
-    * later replay in a long JVM (`tools/StreamSoak` measures both). */
+    * later replay in a long JVM (StreamingSpec checks both). */
   private def replayScaffold(spark: SparkSession, inputs: Seq[DataFrame],
       chunks: Int, arrivalOrder: Seq[Column])
       (query: (Seq[DataFrame], String) => DataStreamWriter[Row])
@@ -135,14 +139,17 @@ object StreamOps {
         spark.readStream.schema(in.schema)
           .option("maxFilesPerTrigger", "1").parquet(dir)
       }
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+      val pinned = Seq("spark.sql.shuffle.partitions" -> statePartitions.toString,
+        "spark.sql.adaptive.enabled" -> "false")
+      val prev = pinned.map { case (k, _) => k -> spark.conf.get(k) }
+      pinned.foreach { case (k, v) => spark.conf.set(k, v) }
       val q =
         try query(sources, s"$root/sink")
-          .option("checkpointLocation", s"$root/checkpoint").start()
-        finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+          .option("checkpointLocation", s"$root/checkpoint")
+          .trigger(Trigger.AvailableNow()).start()
+        finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
       try {
-        q.processAllAvailable()
+        q.awaitTermination()
         val out = result(s"$root/sink")
         spark.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
       } finally q.stop()
@@ -626,6 +633,11 @@ object StreamOps {
       }.toDF()
   }
 
+  /** Oracle of q184_stream_dedup and q191_stream_fanin. */
+  private val distinctFpOracleSql =
+    """SELECT DISTINCT md5(text) AS fp FROM documents
+      |ORDER BY fp""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
     // q201's EWMA THROUGH the streaming engine: same bucket sums, same
     // 12-value frame, same float fold — but the frame state lives in
@@ -786,35 +798,7 @@ object StreamOps {
           arrivalOrder = Seq(col("key"), col("doc_id")))
           .orderBy("id_a", "id_b")
       },
-      Some("""WITH k AS (SELECT doc_id, substr(text, 1, 32) AS key, text
-             |           FROM documents),
-             |r AS (SELECT doc_id, text,
-             |        ROW_NUMBER() OVER (ORDER BY key, doc_id) AS rn
-             |      FROM k),
-             |p AS (SELECT a.doc_id AS id_a, a.text AS ta,
-             |             b.doc_id AS id_b, b.text AS tb
-             |      FROM r a JOIN r b ON b.rn BETWEEN a.rn + 1 AND a.rn + 3),
-             |sh AS (SELECT id_a, id_b,
-             |  list_distinct(CASE WHEN len(string_split(ta, ' ')) >= 3
-             |    THEN list_transform(range(len(string_split(ta, ' ')) - 2),
-             |      i -> string_split(ta, ' ')[i+1] || ' ' ||
-             |           string_split(ta, ' ')[i+2] || ' ' ||
-             |           string_split(ta, ' ')[i+3])
-             |    ELSE [ta] END) AS da,
-             |  list_distinct(CASE WHEN len(string_split(tb, ' ')) >= 3
-             |    THEN list_transform(range(len(string_split(tb, ' ')) - 2),
-             |      i -> string_split(tb, ' ')[i+1] || ' ' ||
-             |           string_split(tb, ' ')[i+2] || ' ' ||
-             |           string_split(tb, ' ')[i+3])
-             |    ELSE [tb] END) AS db
-             |  FROM p),
-             |j AS (SELECT least(id_a, id_b) AS id_a, greatest(id_a, id_b) AS id_b,
-             |  round(CAST(len(list_filter(da, x -> list_contains(db, x))) AS DOUBLE)
-             |    / (len(da) + len(db)
-             |       - len(list_filter(da, x -> list_contains(db, x)))), 6) AS jac
-             |  FROM sh)
-             |SELECT id_a, id_b, jac FROM j WHERE jac >= 0.5
-             |ORDER BY id_a, id_b""".stripMargin)),
+      Some(graft.ops.Dedup.snmOracleSql)),
 
     // Rolling-window anomaly flags THROUGH the streaming engine: the
     // always-on twin of batch q149, same oracle — the trailing-frame
@@ -832,26 +816,7 @@ object StreamOps {
           arrivalOrder = Seq(col("ts_us"), col("event_id")))
           .orderBy("event_id")
       },
-      // identical to q149's oracle: the stream twin must flag the
-      // exact batch row set
-      Some("""WITH w AS (
-             |  SELECT event_id, user_id, event_type, value,
-             |    count(*) OVER f AS n_hist,
-             |    CAST(sum(CAST(value AS DECIMAL(12,2))) OVER f AS DOUBLE) AS sx,
-             |    CAST(sum(CAST(value AS DECIMAL(12,2)) * CAST(value AS DECIMAL(12,2))) OVER f AS DOUBLE) AS sx2
-             |  FROM events
-             |  WINDOW f AS (PARTITION BY user_id ORDER BY ts, event_id
-             |               ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING)),
-             |z AS (
-             |  SELECT event_id, user_id, event_type, value,
-             |    sx / n_hist AS mean,
-             |    (sx2 - sx*sx/n_hist) / (n_hist - 1) AS var
-             |  FROM w WHERE n_hist >= 10)
-             |SELECT event_id, user_id, event_type, value,
-             |  round((value - mean) / sqrt(var), 6) AS z
-             |FROM z WHERE var > 0
-             |  AND abs(round((value - mean) / sqrt(var), 6)) > 3
-             |ORDER BY event_id""".stripMargin)),
+      Some(graft.ops.Extras.rollingAnomalyOracleSql)),
 
     // Trailing time-RANGE features THROUGH the streaming engine
     // (q158's twin): same oracle as batch — the time-evicted per-user
@@ -868,14 +833,7 @@ object StreamOps {
           arrivalOrder = Seq(col("ts_us"), col("event_id")))
           .orderBy("event_id")
       },
-      // identical to q158's oracle
-      Some("""SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-             |  count(*) OVER f AS n_1h,
-             |  coalesce(CAST(sum(CAST(value AS DECIMAL(12,2))) OVER f AS DOUBLE), 0.0) AS sum_1h
-             |FROM events
-             |WINDOW f AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-             |             RANGE BETWEEN 3600000000 PRECEDING AND 1 PRECEDING)
-             |ORDER BY event_id""".stripMargin)),
+      Some(graft.ops.Extras.rangeFeaturesOracleSql)),
 
     // Latest-wins CDC compaction THROUGH the streaming engine (q156's
     // twin): the version log arrives as micro-batches and the per-key
@@ -901,17 +859,7 @@ object StreamOps {
         replay(s, input, compact, chunks = 3)
           .orderBy("user_id", "event_type")
       },
-      // identical to q156's oracle — the stream state must converge to
-      // the batch compaction
-      Some("""SELECT user_id, event_type, epoch_us(ts) AS ts_us, event_id,
-             |  value, n_versions
-             |FROM (
-             |  SELECT user_id, event_type, ts, event_id, value,
-             |    ROW_NUMBER() OVER (PARTITION BY user_id, event_type
-             |      ORDER BY ts DESC, event_id DESC) AS rn,
-             |    COUNT(*) OVER (PARTITION BY user_id, event_type) AS n_versions
-             |  FROM events) t
-             |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin)),
+      Some(graft.ops.Delta.latestWinsOracleSql)),
 
     // HLL registers (q116's structure) maintained THROUGH the streaming
     // engine: lineitem arrives as parquet micro-batches, the per-(key,
@@ -949,9 +897,7 @@ object StreamOps {
         replay(s, input, tumbling(_))
           .orderBy("w_start", "event_type")
       },
-      Some(s"""SELECT make_timestamp((epoch_us(ts) // 300000000) * 300000000) AS w_start,
-              |  event_type, COUNT(*) AS n, ${dsumSql("value")} AS sum_value
-              |FROM events GROUP BY 1, 2 ORDER BY w_start, event_type""".stripMargin)),
+      Some(graft.ops.Relational.tumbleOracleSql)),
 
     // Stream-STATIC enrichment join (✚, the always-on dimension lookup
     // every event pipeline runs — the one join flavor q123's
@@ -1039,8 +985,7 @@ object StreamOps {
           outputMode = "append", arrivalOrder = Seq(col("ts")))
           .orderBy("fp")
       },
-      Some("""SELECT DISTINCT md5(text) AS fp FROM documents
-             |ORDER BY fp""".stripMargin)),
+      Some(distinctFpOracleSql)),
 
     // Streamed interval union (✚, q178's always-on twin through
     // ARBITRARY keyed state — flatMapGroupsWithState carrying each
@@ -1096,30 +1041,7 @@ object StreamOps {
             col("m.covered_us").as("covered_us"))
           .orderBy("user_id")
       },
-      // identical totals to batch q178's oracle — the carried state
-      // must reproduce the batch sweep-line exactly
-      Some("""WITH iv AS (
-             |  SELECT user_id, event_id, epoch_us(ts) AS st,
-             |    epoch_us(ts) + 300000000 AS en
-             |  FROM events),
-             |m AS (
-             |  SELECT user_id, event_id, st, en,
-             |    max(en) OVER (PARTITION BY user_id ORDER BY st, event_id
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_max_en
-             |  FROM iv),
-             |f AS (
-             |  SELECT user_id, st, en,
-             |    sum(CASE WHEN prev_max_en IS NULL OR st > prev_max_en
-             |        THEN 1 ELSE 0 END)
-             |      OVER (PARTITION BY user_id ORDER BY st, event_id
-             |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-             |  FROM m),
-             |isl AS (
-             |  SELECT user_id, island, min(st) AS ist, max(en) AS ien
-             |  FROM f GROUP BY user_id, island)
-             |SELECT user_id, count(*) AS n_islands,
-             |  CAST(sum(ien - ist) AS BIGINT) AS covered_us
-             |FROM isl GROUP BY user_id ORDER BY user_id""".stripMargin)),
+      Some(graft.ops.Extras.intervalUnionOracleSql)),
 
     // Key-routed stream DEMUX (✚, completing the reference's roadmap
     // item alongside q190/q191: q190 multicasts DIFFERENT transforms to
@@ -1240,8 +1162,7 @@ object StreamOps {
           outputMode = "append", arrivalOrder = Seq(col("ts")))
           .orderBy("fp")
       },
-      Some("""SELECT DISTINCT md5(text) AS fp FROM documents
-             |ORDER BY fp""".stripMargin)),
+      Some(distinctFpOracleSql)),
 
     // q234's TWAP through the streaming engine (see twapStream): the
     // RUNNING per-user time-weighted mean at every event, state
@@ -1398,43 +1319,10 @@ object StreamOps {
       (s, d) => {
         val input = graft.Tables.events(s, d)
           .select(col("ts"), col("event_id"), col("value"))
-        val bars = (df: org.apache.spark.sql.DataFrame) =>
-          df.select(expr("CAST(unix_micros(ts) div 3600000000 AS BIGINT)")
-              .as("hr"),
-              unix_micros(col("ts")).as("tsu"), col("event_id"),
-              round(col("value") * 100, 0).cast("long").as("c"))
-            .groupBy("hr")
-            .agg(count(lit(1)).as("n"),
-              min(struct(col("tsu"), col("event_id"), col("c"))).as("o"),
-              max(struct(col("tsu"), col("event_id"), col("c"))).as("cl"),
-              max(col("c")).as("hi"), min(col("c")).as("lo"))
-            .select(col("hr"), col("n"),
-              round(col("o.c").cast("double") / 100, 2).as("open"),
-              round(col("hi").cast("double") / 100, 2).as("high"),
-              round(col("lo").cast("double") / 100, 2).as("low"),
-              round(col("cl.c").cast("double") / 100, 2).as("close"))
-        replay(s, input, bars, chunks = 3)
+        replay(s, input, graft.ops.Extras.ohlcBars(_), chunks = 3)
           .orderBy("hr")
       },
-      Some("""WITH ev AS (
-             |  SELECT epoch_us(ts) // 3600000000 AS hr, epoch_us(ts) AS tsu,
-             |    event_id, CAST(round(value * 100, 0) AS BIGINT) AS c
-             |  FROM events),
-             |r AS (
-             |  SELECT hr, c,
-             |    ROW_NUMBER() OVER (PARTITION BY hr
-             |      ORDER BY tsu, event_id) AS rf,
-             |    ROW_NUMBER() OVER (PARTITION BY hr
-             |      ORDER BY tsu DESC, event_id DESC) AS rl
-             |  FROM ev)
-             |SELECT hr, COUNT(*) AS n,
-             |  round(CAST(MAX(CASE WHEN rf = 1 THEN c END) AS DOUBLE) / 100,
-             |    2) AS open,
-             |  round(CAST(MAX(c) AS DOUBLE) / 100, 2) AS high,
-             |  round(CAST(MIN(c) AS DOUBLE) / 100, 2) AS low,
-             |  round(CAST(MAX(CASE WHEN rl = 1 THEN c END) AS DOUBLE) / 100,
-             |    2) AS close
-             |FROM r GROUP BY hr ORDER BY hr""".stripMargin)),
+      Some(graft.ops.Extras.ohlcOracleSql)),
 
     // Stream-stream LEFT OUTER interval join — q123's click→purchase
     // join with the semantics a funnel monitor actually needs: clicks

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Sessions, Tables}
+import graft.{Harness, Tables}
 import graft.functions.Vectors
 import graft.ops.Ann
 import org.apache.spark.sql.functions._
@@ -22,8 +22,7 @@ object FitCentroids {
     val dir = args.lift(0).getOrElse("/root/testdata/sf0.01")
     val k = args.lift(1).map(_.toInt).getOrElse(8)
     val iters = args.lift(2).map(_.toInt).getOrElse(5)
-    val spark = Sessions.local(4, "fit-centroids")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("fit-centroids")
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), Vectors.asDouble(col("embedding")).as("v"))
     val cents = Ann.kmeansCentroids(emb, k, iters)

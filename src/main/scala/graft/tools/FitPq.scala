@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Sessions, Tables}
+import graft.{Harness, Tables}
 import graft.functions.Vectors
 import graft.ops.Ann
 import org.apache.spark.sql.functions._
@@ -24,8 +24,7 @@ object FitPq {
     val m = args.lift(1).map(_.toInt).getOrElse(8)
     val k = args.lift(2).map(_.toInt).getOrElse(16)
     val iters = args.lift(3).map(_.toInt).getOrElse(5)
-    val spark = Sessions.local(4, "fit-pq")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("fit-pq")
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), Vectors.asDouble(col("embedding")).as("v"))
     val dim = emb.select(size(col("v"))).first().getInt(0)

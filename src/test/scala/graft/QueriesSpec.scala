@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Each run also checks the gate's declared `uses`: every substrate it
   * reaches while constructing and counting must lie in the closure of
-  * that list, because Bench charges (and TenX/ScaleLawSpec warm) exactly
+  * that list, because Bench charges (and ScaleLawSpec warms) exactly
   * that closure. */
 abstract class QueriesSpecBase(shard: Int, of: Int) extends AnyFunSuite {
   private lazy val spark = TestSpark.spark

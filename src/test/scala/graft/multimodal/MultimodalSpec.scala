@@ -56,7 +56,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(one == MediaMeta("video/fake-mp4", 0, 0, 1, 1L))
     val two = StubCodec.decodeMeta("AB".getBytes("UTF-8")) // 66%40+1=27
     assert(two == MediaMeta("video/fake-mp4", 16 * 27, 0, 1, 2L))
-    import spark.implicits._
     val media = spark.createDataset(Seq(
       MediaRow(1L, Array.emptyByteArray),
       MediaRow(2L, "A".getBytes("UTF-8")),
@@ -77,7 +76,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(StubCodec.resize(b, m.width * 2, m.height * 2).length <= b.length)
     assert(StubCodec.resize(Array.emptyByteArray, 8, 8).isEmpty)
     // distributed path preserves ids and applies the same function
-    import spark.implicits._
     val media = mediaTable(spark, sf)
     val resized = resizeAll(media, 32, 32).collect().map(r => r.media_id -> r.content).toMap
     val direct = media.collect().map(r => r.media_id -> StubCodec.resize(r.content, 32, 32)).toMap
@@ -104,7 +102,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(!PngCodec.isPng("not a png".getBytes("UTF-8")))
     assert(PngCodec.encode(20, 10, seed = 1).toSeq == png1.toSeq, "deterministic fixture")
 
-    import spark.implicits._
     val media = spark.createDataset(Seq(
       MediaRow(1L, png1), MediaRow(2L, png2), MediaRow(3L, png3),
       MediaRow(4L, "plain text payload".getBytes("UTF-8")))).repartition(3)
@@ -125,7 +122,6 @@ class MultimodalSpec extends AnyFunSuite {
     val m = decodeMeta(corrupt)
     assert(m.format == "image/png-corrupt" && m.bytes == corrupt.length.toLong)
     assert(resizePayload(corrupt, 2, 2).toSeq == corrupt.toSeq, "quarantine passes through")
-    import spark.implicits._
     val media = spark.createDataset(Seq(
       MediaRow(1L, corrupt), MediaRow(2L, PngCodec.encode(6, 3))))
     val metas = decode(media).collect().map(r => r.media_id -> r.meta.format).toMap
@@ -138,7 +134,6 @@ class MultimodalSpec extends AnyFunSuite {
     val m = PngCodec.decodeMeta(out)
     assert(m.width == 10 && m.height == 6, s"resized PNG must be 10x6, got $m")
     // through the distributed path, dispatched by payload format
-    import spark.implicits._
     val media = spark.createDataset(Seq(MediaRow(9L, src)))
     val resized = resizeAll(media, 10, 6).collect().head
     assert(PngCodec.decodeMeta(resized.content).width == 10)
@@ -156,7 +151,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(!WavCodec.isWav("RIFFnot really".getBytes("UTF-8")))
     assert(WavCodec.encode(1600, 8000, seed = 1).toSeq == wav1.toSeq, "deterministic fixture")
 
-    import spark.implicits._
     val media = spark.createDataset(Seq(
       MediaRow(1L, wav1), MediaRow(2L, wav2),
       MediaRow(3L, PngCodec.encode(5, 4)),
@@ -189,7 +183,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(GifCodec.encode(10, 7, 4, 3, seed = 9).toSeq == gif.toSeq, "deterministic fixture")
     assert(GifCodec.frameInfo(gif) == ((10, 7, 4, 12L)))
 
-    import spark.implicits._
     val media = spark.createDataset(Seq(
       MediaRow(1L, gif), MediaRow(2L, GifCodec.encode(5, 5, 1, 2)),
       MediaRow(3L, PngCodec.encode(5, 4)))).repartition(2)

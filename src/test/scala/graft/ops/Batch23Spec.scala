@@ -167,7 +167,7 @@ class Batch23Spec extends AnyFunSuite {
     // fold intermediate roots' accumulators up to their final root
     val folded = scala.collection.mutable.Map[Long, BigDecimal]()
     for ((r, w) <- wByRoot) folded(find(r)) = folded.getOrElse(find(r), BigDecimal(0)) + w
-    for ((root, n, e, w) <- rows if n > 1) {
+    for ((root, n, _, w) <- rows if n > 1) {
       val want = folded.getOrElse(root, BigDecimal(0)).toDouble
       assert(math.abs(w - want) < 1e-9, s"root $root: $w vs kruskal $want")
     }

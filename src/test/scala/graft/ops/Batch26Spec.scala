@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.TestSpark
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-side SEQUENTIAL cross-checks for the r16 additions — the
@@ -207,7 +206,7 @@ class Batch26Spec extends AnyFunSuite {
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val acc = scala.collection.mutable.Map.empty[Long, BigDecimal]
       .withDefaultValue(BigDecimal(0))
-    for ((qid, qv, ql) <- qs) {
+    for ((_, qv, ql) <- qs) {
       val sorted = ts.map { case (tid, tv, tl) => (d2(tv, qv), tid, tl) }
         .sortBy(t => (t._1, t._2))
       val n = sorted.length
@@ -242,7 +241,6 @@ class Batch26Spec extends AnyFunSuite {
     var done = false
     var sup = Map.empty[(Long, Long), Long]
     while (!done) {
-      def canon(a: Long, b: Long) = (math.min(a, b), math.max(a, b))
       val adj = e.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) }
         .groupBy(_._1).map { case (v, xs) => v -> xs.map(_._2).toSet }
       sup = e.toSeq.map { case (a, b) =>
@@ -251,7 +249,7 @@ class Batch26Spec extends AnyFunSuite {
       val kept = e.filter(ed => sup(ed) >= k - 2)
       if (kept == e) done = true else e = kept
     }
-    sup.filter { case (ed, s) => e(ed) }
+    sup.filter { case (ed, _) => e(ed) }
   }
 
   test("incremental support-decrement kTruss equals the naive " +

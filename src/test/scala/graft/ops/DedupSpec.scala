@@ -50,7 +50,6 @@ class DedupSpec extends AnyFunSuite {
     // (one unbounded array row). The self-join formulation must (a) never
     // materialize a block in a single row — no collect_list in the plan —
     // and (b) produce all n·(n−1)/2 pairs distributed.
-    import spark.implicits._
     val n = 5000
     val docs = spark.range(n).select(
       org.apache.spark.sql.functions.col("id").as("doc_id"),

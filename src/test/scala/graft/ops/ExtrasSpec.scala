@@ -108,7 +108,7 @@ class ExtrasSpec extends AnyFunSuite {
       u -> ((nP, nA))
     }.filter(_._2._1 > 0)
     assert(got == want)
-    assert(got.values.exists { case (np, na) => na > 0 }, "some purchase attributed")
+    assert(got.values.exists { case (_, na) => na > 0 }, "some purchase attributed")
     assert(got.values.exists { case (np, na) => na < np }, "some purchase unattributed")
   }
 

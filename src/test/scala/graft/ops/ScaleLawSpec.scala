@@ -4,7 +4,7 @@ import graft.{ScaleGen, SparkEntry, Tables, TestSpark}
 import graft.core.Substrate
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, element_at, slice}
+import org.apache.spark.sql.functions.{col, element_at}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The SCALE.md scaling study folded into CI as a STANDING gate

@@ -31,7 +31,7 @@ class TextPrepSpec extends AnyFunSuite {
         assert(nTok == want.length.toLong)
       }
       // dropping each chunk's 16-token overlap tail reconstructs the doc
-      val rebuilt = sorted.map { case (_, cid, _, chunk) =>
+      val rebuilt = sorted.map { case (_, _, _, chunk) =>
         chunk.split(" ").take(48)
       }.flatten ++ sorted.last._4.split(" ").drop(48)
       assert(rebuilt.toSeq == toks.toSeq, s"doc $id reconstruction")

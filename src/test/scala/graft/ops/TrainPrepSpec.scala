@@ -219,7 +219,7 @@ class TrainPrepSpec extends AnyFunSuite {
         }
         val firstOf = blocks.groupBy(_._3).map { case (b, occ) =>
           b -> occ.map(o => (o._1, o._2)).min }
-        corpus.map { case (id, text) =>
+        corpus.map { case (id, _) =>
           val mine = blocks.filter(_._1 == id)
           val kept = mine.filter(o => firstOf(o._3) == ((o._1, o._2)))
           (id, kept.sortBy(_._2).map(_._3).mkString(" "),

@@ -182,7 +182,7 @@ class StreamingSpec extends AnyFunSuite {
     // (per-micro-batch partials merged into the state store) than in a
     // batch job — equal results prove the fold is genuinely
     // order-insensitive, not just correct for one merge tree
-    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions._
     def top(df: DataFrame): DataFrame = {
       val spark2 = df.sparkSession
@@ -311,20 +311,32 @@ class StreamingSpec extends AnyFunSuite {
     def views = spark.catalog.listTables().collect()
       .map(_.name).filter(_.startsWith("bounded_")).toSet
     def active = spark.streams.active.map(_.id).toSet
+    // the state-store providers loaded in this JVM; the registry is a
+    // private field, read reflectively so a rename fails loudly
+    def providers: Set[Any] = {
+      val obj = org.apache.spark.sql.execution.streaming.state.StateStore
+      val f = obj.getClass.getDeclaredField("loadedProviders")
+      f.setAccessible(true)
+      val loaded = f.get(obj).asInstanceOf[scala.collection.mutable.HashMap[Any, Any]]
+      loaded.synchronized(loaded.keySet.toSet)
+    }
     // compared with the state before each call, so leftovers of other
     // suites in this JVM cannot fail it
     def assertClean[A](replay: => A): A = {
-      val (views0, active0) = (views, active)
+      val (views0, active0, providers0) = (views, active, providers)
       started.clear()
       val out = replay
       assert(!started.isEmpty, "the replay must run a streaming query")
       assert(views == views0, "the memory sink's view must be dropped")
       assert(active == active0, "the replay's query must be stopped")
+      assert((providers -- providers0).isEmpty,
+        "the replay's state-store providers must be unloaded")
       out
     }
     val events = Tables.events(spark, TestSpark.sf0001).select("event_id", "event_type")
     spark.streams.addListener(listener)
     try {
+      // a streaming aggregation keeps its counts in a state store
       val counts = assertClean(
         StreamOps.replay(spark, events, _.groupBy("event_type").count()))
       val copied = assertClean(

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 
 /** Property tests for Splitter (the reference verifies its splitter with a
