@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one place graft pins an intermediate result: iterate-loop state
   * (connected components, PageRank, suffix-array ladders), diamond
@@ -37,5 +39,19 @@ object Materialize {
     val durable = df.sparkSession.sparkContext.getCheckpointDir.isDefined
     org.apache.spark.sql.GraftStatsReset(
       if (durable) df.checkpoint() else df.localCheckpoint())
+  }
+
+  /** Frees the pinned blocks `df` reads directly now, instead of when
+    * the garbage collector finds them: for a pinned frame (or a lazy
+    * projection of one) that its caller discards. */
+  def release(df: DataFrame): Unit = pinnedRdds(df).foreach(_.unpersist(blocking = false))
+
+  /** The persisted RDDs under the pinned leaves of `df`'s plan. */
+  private[graft] def pinnedRdds(df: DataFrame): Seq[RDD[_]] = {
+    def persisted(r: RDD[_]): Seq[RDD[_]] =
+      if (r.getStorageLevel.isValid) Seq(r)
+      else r.dependencies.flatMap(d => persisted(d.rdd))
+    df.queryExecution.analyzed.collectLeaves()
+      .collect { case l: LogicalRDD => persisted(l.rdd) }.flatten
   }
 }

@@ -59,8 +59,8 @@ object Substrate {
   lazy val all: Seq[Substrate] = {
     import graft.ops.{Components => C, DataSelect, TrainPrep}
     val reg = Seq(C.DupPairs, C.DupMst, C.EpsPairs, C.EpsSlink, C.EpsTree,
-      C.MrSlink, C.MrTree, TrainPrep.GlobalSa, TrainPrep.PerDocSa,
-      DataSelect.Shapley, TrainPrep.SpanRm)
+      C.MrSlink, C.MrTree, TrainPrep.GlobalSa, DataSelect.Shapley,
+      TrainPrep.SpanRm)
     reg.zipWithIndex.foreach { case (sub, i) =>
       val late = sub.deps.filterNot(reg.take(i).contains)
       require(late.isEmpty,

@@ -1045,11 +1045,11 @@ object DataSelect {
     * total fits `budget`. Greedy-by-value IS optimal for the
     * "max total value under a token budget" relaxation the selection
     * literature uses at corpus scale (documents are small next to the
-    * budget), and the running sums are the two-phase primitives — the
-    * token prefix via [[Scale.globalRunningSum]], the value prefix via
-    * [[TrainPrep.runningSumGlobal]] over exact DECIMALs (rounded@6
-    * values summed exactly, so the cumulative value both engines
-    * report is bit-identical) — never a single-task global window.
+    * budget), and both running sums are [[Scale.globalRunningSum]] —
+    * the token prefix in LONG, the value prefix over exact DECIMALs
+    * (rounded@6 values summed exactly, so the cumulative value both
+    * engines report is bit-identical) — never a single-task global
+    * window.
     * Docs without a valuation (the eval rows themselves) are not
     * selectable: training on eval is the q377 contamination defect. */
   def shapleyBudgetSelect(docs: DataFrame, embs: DataFrame,
@@ -1066,18 +1066,16 @@ object DataSelect {
     val sized = docs.select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tok"))
       .join(sv, "doc_id")
-    val withCum = Scale.globalRunningSum(sized,
-      Seq(col("shapley").desc, col("doc_id")), col("n_tok"))
-    val withVal = TrainPrep.runningSumGlobal(
-      withCum.withColumn("nshap", -col("shapley"))
-        .withColumn("sdec", col("shapley").cast("decimal(38,6)")),
-      Seq("nshap", "doc_id"), "sdec", "cumv")
+    val order = Seq(col("shapley").desc, col("doc_id"))
+    val withCum = Scale.globalRunningSum(sized, order, col("n_tok"))
+      .withColumnRenamed("cum", "cum_tok")
+    val withVal = Scale.globalRunningSum(withCum, order,
+      col("shapley").cast("decimal(38,6)"))
     // the running sum is EXACT in decimal; the output casts it to
     // double (identical on both engines for the same decimal value)
-    withVal.where(col("cum") <= budget)
-      .select(col("doc_id"), col("n_tok"), col("shapley"),
-        col("cum").as("cum_tok"),
-        col("cumv").cast("double").as("cum_value"))
+    withVal.where(col("cum_tok") <= budget)
+      .select(col("doc_id"), col("n_tok"), col("shapley"), col("cum_tok"),
+        col("cum").cast("double").as("cum_value"))
       .orderBy("doc_id")
   }
 
@@ -1407,11 +1405,11 @@ object DataSelect {
     * Relational form, no per-test-point sort task: the test set is a
     * FIXED-SIZE deterministic sample (vec_id % 37, first `nQueries` —
     * eval suites are bounded; the train × test pair frame is linear in
-    * the corpus), per-test ranks come from ONE [[TrainPrep
-    * .globalOrderIndex]] over (q_id, d2, t_id) minus each query's base
+    * the corpus), per-test ranks come from ONE [[Scale
+    * .globalRowNumber]] over (q_id, d2, t_id) minus each query's base
     * index, the recursion unrolls into a REVERSE CUMULATIVE SUM of
-    * per-rank terms (computed by [[TrainPrep.runningSumGlobal]] in
-    * (q_id, −rank) order, minus each query's earlier-queries offset —
+    * per-rank terms (computed by [[Scale.globalRunningSum]] in
+    * (q_id, rank desc) order, minus each query's earlier-queries offset —
     * an nQueries-row driver map), and s_(i) = s_(N) + that suffix sum.
     * Terms are rounded @12 into exact DECIMAL(38,12) before summation
     * (the q118 discipline), so the cumulative sums are order-
@@ -1431,13 +1429,13 @@ object DataSelect {
     val pairs = t.crossJoin(qs)
       .select(col("q_id"), col("q_lbl"), col("t_id"), col("t_lbl"),
         round(Vectors.l2sq(col("tv"), col("qv")), 6).as("d2"))
-    val gi = pin(TrainPrep.globalOrderIndex(pairs,
-      Seq("q_id", "d2", "t_id"), "gi"))
-    val base = gi.groupBy("q_id").agg(min(col("gi")).as("g0"),
+    val gi = pin(Scale.globalRowNumber(pairs,
+      Seq(col("q_id"), col("d2"), col("t_id"))))
+    val base = gi.groupBy("q_id").agg(min(col("rn")).as("g0"),
       count(lit(1)).as("n"))
     val ranked = pin(gi.join(broadcast(base), "q_id")
       .select(col("q_id"), col("t_id"),
-        (col("gi") - col("g0") + 1L).as("rank"), col("n"),
+        (col("rn") - col("g0") + 1L).as("rank"), col("n"),
         when(col("t_lbl") === col("q_lbl"), 1.0).otherwise(0.0).as("ym")))
     // row i's successor ym via an equi-join on (q_id, rank+1) — ranks
     // are dense per query, so this IS `lead` without the window
@@ -1449,9 +1447,8 @@ object DataSelect {
           .otherwise((col("ym") - col("ym_next")) /
             greatest(lit(k.toDouble), col("rank").cast("double"))), 12)
           .cast("decimal(38,12)").as("term")))
-    val rs = TrainPrep.runningSumGlobal(
-      terms.withColumn("nrank", -col("rank")),
-      Seq("q_id", "nrank"), "term", "rcg")
+    val rs = Scale.globalRunningSum(terms,
+      Seq(col("q_id"), col("rank").desc), col("term"))
     // earlier-queries offsets: ≤ nQueries rows, driver prefix sum
     val qTot = terms.groupBy("q_id").agg(sum(col("term")).as("qt"))
       .collect().map(r => (r.getLong(0),
@@ -1468,7 +1465,7 @@ object DataSelect {
           .cast("decimal(38,12)").as("s_n"))
     rs.join(qOffDf, "q_id").join(broadcast(sN), "q_id")
       .select(col("t_id"),
-        (col("s_n") + col("rcg") - col("qoff").cast("decimal(38,12)"))
+        (col("s_n") + col("cum") - col("qoff").cast("decimal(38,12)"))
           .as("s_i"))
       .groupBy(col("t_id").as("vec_id"))
       .agg(count(lit(1)).as("n_queries"),

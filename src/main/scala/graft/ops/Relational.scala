@@ -689,7 +689,7 @@ object Relational {
           .select(col("l_orderkey"), col("l_returnflag"),
             col("l_quantity"), col("l_extendedprice"),
             col("l_shipdate").cast("date").as("l_shipdate"))
-        val dir = java.nio.file.Files.createTempDirectory("graft-fmt").toString
+        val dir = java.nio.file.Files.createTempDirectory("graft-fmt")
         def roundTrip(fmt: String): DataFrame = {
           val p = s"$dir/$fmt"
           slice.write.format(fmt).option("header", "true").save(p)
@@ -711,12 +711,7 @@ object Relational {
               "max_ship")
             .orderBy("fmt", "l_returnflag")
             .transform(pin)
-        } finally {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
-          }
-          rm(new java.io.File(dir))
-        }
+        } finally graft.core.Scratch.deleteRecursively(dir)
       },
       Some(s"""WITH slice AS (
              |  SELECT l_returnflag, l_quantity, l_extendedprice,
@@ -744,25 +739,20 @@ object Relational {
     QueryDef("q161_schema_evolution",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val dir = java.nio.file.Files.createTempDirectory("graft-evo").toString
+        val dir = java.nio.file.Files.createTempDirectory("graft-evo")
         try {
           docs.where(col("doc_id") % 2 === 0).select("doc_id", "n_chars")
             .write.parquet(s"$dir/gen=1")
           docs.where(col("doc_id") % 2 === 1)
             .select("doc_id", "n_chars", "lang")
             .write.parquet(s"$dir/gen=2")
-          s.read.option("mergeSchema", "true").parquet(dir)
+          s.read.option("mergeSchema", "true").parquet(dir.toString)
             .groupBy(col("gen").cast("int").as("gen"),
               coalesce(col("lang"), lit("(pre-schema)")).as("lang"))
             .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("n_chars"))
             .orderBy("gen", "lang")
             .transform(pin)
-        } finally {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
-          }
-          rm(new java.io.File(dir))
-        }
+        } finally graft.core.Scratch.deleteRecursively(dir)
       },
       Some("""WITH m AS (
              |  SELECT 1 AS gen, '(pre-schema)' AS lang, n_chars

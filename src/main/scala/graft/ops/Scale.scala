@@ -3,7 +3,9 @@ package graft.ops
 import graft.{QueryDef, Tables}
 import graft.Materialize.pin
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType, ShortType}
 
 /** Scale toolkit: the shuffle-shaping helpers a 100 TB deployment needs
   * beyond AQE's automatic handling — two-phase (salted) aggregation for
@@ -110,108 +112,104 @@ object Scale {
     * so a fresh session's overwrite would otherwise collide. */
   private def dropBucketed(s: SparkSession, table: String): Unit = {
     s.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new java.io.File(
-      new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath, table)
-    if (loc.exists()) {
-      import scala.reflect.io.Directory
-      new Directory(loc).deleteRecursively()
-    }
+    graft.core.Scratch.deleteRecursively(java.nio.file.Paths.get(
+      new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath, table))
   }
 
-  /** Driver-visible gate for the bucketed co-located join: q07's exact
-    * semantics, but the fact tables are first WRITTEN bucketed by the
-    * join key and the join then runs with zero exchange on either side
-    * (plan asserted in PlanSpec; values must equal q07's oracle). The
-    * measured cost intentionally includes the bucketed write — that is
-    * the real amortization decision at 100 TB: pay one layout write,
-    * then every repeated fact⋈fact join on that key skips its shuffle. */
-  // ---- two-phase global row numbering ----
+  // ---- the two-phase global-order scan ----
 
-  /** Global 1-based row_number over a total order WITHOUT the
-    * single-task sort that `Window.orderBy(...)` (no partitionBy)
-    * plans: range-partition on the sort key, count rows per partition
-    * (a tiny aggregate — one long per partition, the same
-    * documented-small driver collect as packSequences' offsets), and
-    * add each partition's prefix offset to a bounded per-partition
-    * row_number. Every task sorts only its own range slice.
-    *
-    * The range-partitioned table is PINNED (`Materialize.pin`): its
-    * sampled boundaries feed both the count pass and the numbering
-    * pass, and a recomputed lineage could resample different
-    * boundaries. The sort key list must be a total order (append a
-    * unique id) or numbering within ties is partition-dependent. */
+  /** How a partition's offset folds the totals of the partitions before
+    * it (`fold` from `identity`), and how that offset meets the
+    * within-partition value (`apply`). */
+  private final case class Combine(identity: BigDecimal,
+      fold: (BigDecimal, BigDecimal) => BigDecimal,
+      apply: (Column, Column) => Column)
+  private val SumOf = Combine(BigDecimal(0), _ + _, _ + _)
+  private val MinOf = Combine(BigDecimal(Long.MaxValue), _ min _, least(_, _))
+
+  /** The one scan behind every global-order operator — a total order
+    * WITHOUT the single-task sort that `Window.orderBy(...)` (no
+    * partitionBy) plans. Range-partition on `sort` (AQE may coalesce
+    * neighbouring ranges, which stay contiguous), compute the bounded
+    * per-partition `within` window and PIN that frame, so every later
+    * pass reads the same sampled boundaries. Then collect one `total`
+    * per partition (a #partitions-row driver reduction, never
+    * data-sized), fold the exclusive prefix of the earlier partitions'
+    * totals in exact BigDecimal, and broadcast those offsets back:
+    * column `out` is `combine.apply(within, offset)`. Also returns the
+    * fold of all totals. The result is independent of where the range
+    * boundaries fall; `sort` must be a total order wherever `within`
+    * breaks ties by position (row numbers, running sums). */
+  private def scan(df: DataFrame, sort: Seq[Column], within: WindowSpec => Column,
+      total: Column, combine: Combine, out: String): (DataFrame, BigDecimal) = {
+    // pinned row blocks, not Dataset.persist: its columnar cache decodes
+    // on every read, and the suffix ladder re-reads each rung in joins
+    // (measured 3× slower on the global_sa build)
+    val local = pin(df.repartitionByRange(sort: _*)
+      .withColumn("_pid", spark_partition_id())
+      .withColumn("_loc", within(Window.partitionBy("_pid").orderBy(sort: _*))))
+    val totals = local.groupBy("_pid").agg(total.as("_tot")).collect()
+      .map(r => r.getInt(0) -> (r.get(1) match {
+        case null => combine.identity
+        case l: java.lang.Long => BigDecimal(l)
+        case d: java.math.BigDecimal => BigDecimal(d)
+      })).sortBy(_._1)
+    val prefix = totals.scanLeft(combine.identity) { case (acc, (_, t)) => combine.fold(acc, t) }
+    val spark = df.sparkSession
+    import spark.implicits._
+    // a BROADCAST table (one row per partition), not a literal CASE
+    // chain, whose expression depth would grow with the partition count;
+    // offsets are whole partition totals, so the cast to the window's
+    // own type is exact
+    val offs = broadcast(totals.map(_._1).zip(prefix).toSeq.toDF("_pid", "_off")
+      .select(col("_pid"), col("_off").cast(local.schema("_loc").dataType)))
+    (local.join(offs, "_pid")
+      .withColumn(out, combine.apply(col("_loc"), col("_off")))
+      .drop("_pid", "_loc", "_off"), prefix.last)
+  }
+
+  // ROWS frame, not the default RANGE: identical under a total order,
+  // but immune to ties if a caller under-specifies the sort
+  private def running(w: WindowSpec): WindowSpec =
+    w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+  /** Global 1-based row number over the total order `sort`, appended as
+    * column `rn`. Every task sorts only its own range slice. */
   def globalRowNumber(df: DataFrame, sort: Seq[Column]): DataFrame =
-    globalRunningSum(df, sort, lit(1L)).withColumnRenamed("cum", "rn")
+    scan(df, sort, row_number().over(_).cast("long"), count(lit(1)), SumOf, "rn")._1
 
-  /** Global running sum of `value` over a total order — same two-phase
-    * shape as [[globalRowNumber]] (which is this with value = 1): per-
-    * partition subtotals (one long per partition to the driver),
-    * prefix offsets folded into a literal CASE chain, bounded
-    * per-partition windows. The inclusive running sum at each row is
-    * its partition's offset plus the within-partition running sum. */
+  /** Global 1-based dense rank by `sort`, appended as column `dr`, and
+    * the number of distinct `sort` values. Equal keys never straddle a
+    * range boundary, so each partition's distinct count is its local
+    * maximum rank; `sort` need not be a total order. */
+  def globalDenseRank(df: DataFrame, sort: Seq[Column]): (DataFrame, Long) = {
+    val (ranked, groups) = scan(df, sort, dense_rank().over(_).cast("long"),
+      max(col("_loc")), SumOf, "dr")
+    (ranked, groups.toLongExact)
+  }
+
+  /** Inclusive global running sum of `value` over the total order
+    * `sort`, appended as column `cum`. Integral values sum as LONG,
+    * DECIMAL values in their own decimal type; the offsets accumulate
+    * exactly either way. Any other value type throws before a job runs:
+    * a floating-point sum would depend on the partition layout. */
   def globalRunningSum(df: DataFrame, sort: Seq[Column], value: Column): DataFrame = {
-    val ranged = pin(df.withColumn("_v", value)
-      .repartitionByRange(sort: _*)
-      .withColumn("_pid", spark_partition_id()))
-    val subs = ranged.groupBy("_pid").agg(sum(col("_v")).as("_s"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    // prefix offsets rejoin via a BROADCAST table (one row per
-    // partition): a literal CASE chain here would grow expression
-    // depth linearly with the cluster's partition count
-    val spark = df.sparkSession
-    import spark.implicits._
-    val offs = broadcast(
-      subs.map(_._1).zip(subs.scanLeft(0L)(_ + _._2)).toSeq
-        .toDF("_pid", "_off"))
-    // ROWS frame, not the default RANGE: identical under a total order,
-    // but immune to ties if a caller under-specifies the sort
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("_pid").orderBy(sort: _*)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    ranged.join(offs, "_pid")
-      .withColumn("cum", sum(col("_v")).over(w) + col("_off"))
-      .drop("_pid", "_v", "_off")
+    val withV = df.withColumn("_v", value)
+    withV.schema("_v").dataType match {
+      case ByteType | ShortType | IntegerType | LongType | _: DecimalType =>
+      case other => throw new IllegalArgumentException(
+        s"globalRunningSum: unsupported value type ${other.simpleString} for " +
+          s"$value — only LONG and DECIMAL sums are exact; cast the column first")
+    }
+    scan(withV, sort, w => sum(col("_v")).over(running(w)),
+      sum(col("_v")), SumOf, "cum")._1.drop("_v")
   }
 
-  /** Global running minimum of a LongType `value` over a total order —
-    * the two-phase [[globalRunningSum]] shape with min in place of sum:
-    * per-partition minima (one long each) to the driver, EXCLUSIVE
-    * prefix minima rebroadcast, bounded per-partition windows combined
-    * via least(). Appends column "cum" (the inclusive running min). */
+  /** Inclusive global running minimum of a LONG `value` over the total
+    * order `sort`, appended as column `cum`. */
   def globalRunningMin(df: DataFrame, sort: Seq[Column], value: Column): DataFrame =
-    globalRunningExtremum(df, sort, value, isMin = true)
-
-  /** Running maximum twin of [[globalRunningMin]]. */
-  def globalRunningMax(df: DataFrame, sort: Seq[Column], value: Column): DataFrame =
-    globalRunningExtremum(df, sort, value, isMin = false)
-
-  private def globalRunningExtremum(df: DataFrame, sort: Seq[Column],
-      value: Column, isMin: Boolean): DataFrame = {
-    val ranged = pin(df.withColumn("_v", value)
-      .repartitionByRange(sort: _*)
-      .withColumn("_pid", spark_partition_id()))
-    val aggOf = (c: Column) => if (isMin) min(c) else max(c)
-    val subs = ranged.groupBy("_pid").agg(aggOf(col("_v")).as("_s"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val init = if (isMin) Long.MaxValue else Long.MinValue
-    val comb: (Long, Long) => Long = if (isMin) math.min else math.max
-    // exclusive prefix extremum: partition p sees the extremum of all
-    // strictly-preceding partitions (init for the first — the identity)
-    val prefix = subs.scanLeft(init) { case (acc, (_, s)) => comb(acc, s) }
-    val spark = df.sparkSession
-    import spark.implicits._
-    val offs = broadcast(subs.map(_._1).zip(prefix).toSeq.toDF("_pid", "_off"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("_pid").orderBy(sort: _*)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    val within = aggOf(col("_v")).over(w)
-    ranged.join(offs, "_pid")
-      .withColumn("cum",
-        if (isMin) least(within, col("_off")) else greatest(within, col("_off")))
-      .drop("_pid", "_v", "_off")
-  }
+    scan(df.withColumn("_v", value), sort, w => min(col("_v")).over(running(w)),
+      min(col("_v")), MinOf, "cum")._1.drop("_v")
 
   /** lead(value, 1) over a total ASCENDING order without a single-task
     * window — the two-phase shape of [[globalRunningSum]] applied to
@@ -244,8 +242,7 @@ object Scale {
         org.apache.spark.sql.types.StructField("_pid",
           org.apache.spark.sql.types.IntegerType, nullable = false),
         org.apache.spark.sql.types.StructField("_nh", vType, nullable = true)))))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("_pid").orderBy(sort: _*)
+    val w = Window.partitionBy("_pid").orderBy(sort: _*)
     ranged.join(offs, "_pid")
       .withColumn("lead", coalesce(lead(col("_v"), 1).over(w), col("_nh")))
       .drop("_pid", "_v", "_nh")
@@ -331,8 +328,7 @@ object Scale {
     val carryDf = broadcast(
       if (carry.isEmpty) Seq.empty[(Int, String, Long)].toDF("_pid", "_k", "_carry")
       else carry.toDF("_pid", "_k", "_carry"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("_k", "_pid").orderBy("_ts", "_tie")
+    val w = Window.partitionBy("_k", "_pid").orderBy("_ts", "_tie")
     ranged
       .withColumn("_prev_in", lag(col("_ts"), 1).over(w))
       .withColumn("_rn", row_number().over(w))
@@ -551,7 +547,6 @@ object Scale {
     // table's rank key.
     QueryDef("q186_quantile_normalize",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val docs = Tables.documents(s, d)
           .select(col("doc_id"), col("source"), col("n_chars"))
         val nGlob = docs.count()
@@ -1017,8 +1012,7 @@ object Scale {
             .repartitionByRange(32, sort: _*)
             .withColumn("_pid", spark_partition_id())
             .transform(pin)
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy("_pid").orderBy(sort: _*)
+          val w = Window.partitionBy("_pid").orderBy(sort: _*)
           val within = ranged
             .select(col("_pid") +: audited.map { c =>
               when(lag(col(c), 1).over(w).isNotNull &&
@@ -1088,25 +1082,27 @@ object Scale {
     // the hash.
     QueryDef("q318_partition_pruned",
       (s, d) => {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-partitioned").toString
-        val ev = Tables.events(s, d)
-          .withColumn("day",
-            expr("CAST(unix_micros(ts) div 86400000000 AS BIGINT)"))
-        ev.write.partitionBy("day").mode("overwrite").parquet(dir)
-        val day0 = ev.agg(min(col("day"))).first().getLong(0)
-        // the partition column comes back with the INFERRED directory
-        // type (int here) — compare with a literal of that type so the
-        // predicate stays a PartitionFilter instead of a cast-wrapped
-        // data filter
-        s.read.parquet(dir)
-          .where(col("day") === lit(day0.toInt))
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"),
-            sum(round(col("value") * 100, 0).cast("long")).as("cents"))
-          .select(col("event_type"), col("n"),
-            round(col("cents").cast("double") / 100, 2).as("total_value"))
-          .orderBy("event_type")
+        val dir = java.nio.file.Files.createTempDirectory("graft-partitioned")
+        try {
+          val ev = Tables.events(s, d)
+            .withColumn("day",
+              expr("CAST(unix_micros(ts) div 86400000000 AS BIGINT)"))
+          ev.write.partitionBy("day").mode("overwrite").parquet(dir.toString)
+          val day0 = ev.agg(min(col("day"))).first().getLong(0)
+          // the partition column comes back with the INFERRED directory
+          // type (int here) — compare with a literal of that type so the
+          // predicate stays a PartitionFilter instead of a cast-wrapped
+          // data filter. Pinned: the table is deleted on return.
+          s.read.parquet(dir.toString)
+            .where(col("day") === lit(day0.toInt))
+            .groupBy("event_type")
+            .agg(count(lit(1)).as("n"),
+              sum(round(col("value") * 100, 0).cast("long")).as("cents"))
+            .select(col("event_type"), col("n"),
+              round(col("cents").cast("double") / 100, 2).as("total_value"))
+            .orderBy("event_type")
+            .transform(pin)
+        } finally graft.core.Scratch.deleteRecursively(dir)
       },
       Some("""WITH ev AS (
              |  SELECT event_type, value,

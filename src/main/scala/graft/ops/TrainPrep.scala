@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryDef, Tables}
+import graft.{Materialize, QueryDef, Tables}
 import graft.Materialize.pin
 import graft.core.Substrate
 import org.apache.spark.sql.{Column, DataFrame}
@@ -1269,19 +1269,21 @@ object TrainPrep {
              |FROM p GROUP BY source ORDER BY source""".stripMargin),
       uses = Seq(SpanRm)),
 
-    // Token-level SUFFIX ARRAYS by distributed prefix doubling (✚ —
-    // algorithm notes at [[suffixArrays]]): the data structure the
-    // published exact-substring dedup builds (Lee et al. 2022 build
-    // suffix arrays to find all ≥50-token repeats); q361/q192 are the
-    // gram-stream span EXTRACTORS, this is the indexing primitive
-    // itself in shuffle form. Oracle: DuckDB materializes every suffix
-    // as a token LIST and lets lexicographic list ordering rank it —
-    // a direct O(n²·L) re-derivation against the O(n log n) doubling.
+    // Token-level SUFFIX ARRAYS (✚): the data structure the published
+    // exact-substring dedup builds (Lee et al. 2022 build suffix arrays
+    // to find all ≥50-token repeats); q361/q192 are the gram-stream
+    // span EXTRACTORS, this is the indexing primitive itself in
+    // shuffle form. A readout of the corpus-global [[GlobalSa]] order:
+    // same-doc suffixes differ in length, so they never share a global
+    // rank, and the per-doc dense rank of it is the per-doc suffix
+    // array. Oracle: DuckDB materializes every suffix as a token LIST
+    // and lets lexicographic list ordering rank it — a direct O(n²·L)
+    // re-derivation against the O(n log n) doubling.
     QueryDef("q366_suffix_array",
-      // readout of the cached [[PerDocSa]] substrate (r17: one per-doc
-      // ladder build per JVM/corpus, charged once in bench; q367 reads
-      // the same)
-      (s, d) => perDocSa(s, d)._1.withColumnRenamed("r", "sa_rank")
+      (s, d) => GlobalSa.read(s, d, "sa")
+        .select(col("doc_id"), col("off"), dense_rank()
+          .over(Window.partitionBy("doc_id").orderBy("r")).cast("long")
+          .as("sa_rank"))
         .orderBy("doc_id", "off"),
       Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w
              |          FROM documents),
@@ -1293,18 +1295,18 @@ object TrainPrep {
              |  CAST(ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY suf)
              |    AS BIGINT) AS sa_rank
              |FROM s ORDER BY doc_id, off""".stripMargin),
-      uses = Seq(PerDocSa)),
+      uses = Seq(GlobalSa)),
 
     // Longest repeated substring per document (✚ — algorithm notes at
-    // [[longestRepeats]]): the SA-adjacent-LCP theorem over q366's
+    // [[perDocRepeats]]): the SA-adjacent-LCP theorem over q366's
     // arrays, LCP by Karp–Miller–Rosenberg rank-table jumping. The
     // oracle shares q366's suffix CTEs textually, takes SA-adjacent
     // pairs with one window lead, and re-derives each LCP by DIRECT
     // token-list comparison (first-mismatch scalar subquery) — an
     // O(Σ L²)-class check against the O(n log L) ladder.
     QueryDef("q367_longest_repeat",
-      (s, d) => { val (sa, t) = perDocSa(s, d)
-        longestRepeatsFrom(Tables.documents(s, d), sa, t).orderBy("doc_id") },
+      (s, d) => perDocRepeats(Tables.documents(s, d),
+        GlobalSa.read(s, d, "sa"), globalSaRungs(s, d)).orderBy("doc_id"),
       Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w
              |          FROM documents),
              |i AS (SELECT doc_id, unnest(range(1, len(w) + 1)) AS i FROM t),
@@ -1337,7 +1339,7 @@ object TrainPrep {
              |  arg.o1 AS off_a, arg.o2 AS off_b
              |FROM documents d LEFT JOIN arg ON arg.doc_id = d.doc_id
              |ORDER BY d.doc_id""".stripMargin),
-      uses = Seq(PerDocSa)),
+      uses = Seq(GlobalSa)),
 
     // The longest CROSS-DOCUMENT repeated token span, exact at any
     // length (✚ — algorithm notes at [[crossDocRepeat]]: the global-
@@ -1350,7 +1352,7 @@ object TrainPrep {
     QueryDef("q374_cross_doc_repeat",
       // readout of the cached [[GlobalSa]] substrate (one ladder build
       // per JVM/corpus, charged once in bench; q375 reads the same)
-      (s, d) => crossDocRepeatFromAdj(GlobalSa.read(s, d, "adj")),
+      (s, d) => maxCrossDocPair(GlobalSa.read(s, d, "adj")),
       Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w
              |          FROM documents),
              |i AS (SELECT doc_id, unnest(range(1, len(w) + 1)) AS i FROM t),
@@ -1857,135 +1859,29 @@ object TrainPrep {
       })
   )
 
-  /** Per-document token suffix arrays by distributed PREFIX DOUBLING
-    * (q366's engine — Manber/Myers 1990 in shuffle form): round k
-    * ranks every suffix by the pair (rank of its first 2^k tokens,
-    * rank of the next 2^k), so ⌈log₂ maxLen⌉ rounds of one
-    * position-keyed self-join + one per-document dense_rank sort each
-    * fully order all suffixes. The suffix TEXT never moves after the
-    * initial tokenization — every round shuffles only
-    * (doc_id, off, rank) triples.
-    *
-    * This is the indexing primitive behind published exact-substring
-    * dedup (suffix arrays over the tokenized corpus find every
-    * ≥L-token repeat); q361/q192 extract spans from bounded gram
-    * streams, a production pipeline builds THIS to find them all.
-    *
-    * Scale: per-document arrays (the dedup family's bucketing —
-    * cross-doc repeats are q361's hash diagonals), so the dense_rank
-    * window partitions by doc_id: documents are bounded (≤ ~10⁵
-    * tokens), the corpus is not — no partition-less window, no
-    * single-task corpus sort. Rounds come from ONE max-length probe;
-    * missing right-halves rank −1 (a proper-prefix suffix sorts before
-    * every extension, the list-lexicographic rule the oracle applies
-    * directly). */
-  def suffixArrays(docs: DataFrame): DataFrame =
-    saWithTables(docs, earlyExit = true)._1
-      .withColumnRenamed("r", "sa_rank")
-
-  /** The prefix-doubling core behind [[suffixArrays]] and
-    * [[longestRepeats]]: returns the final per-document rank frame
-    * `(doc_id, off, r)` plus EVERY intermediate rank table as
-    * (prefix width → frame) — table of width w ranks suffixes by
-    * their length-capped w-token prefix, so two same-doc suffixes
-    * share a width-w rank iff their next w tokens match (capped
-    * prefixes of different lengths never collide: same-doc suffixes
-    * have distinct lengths). `earlyExit` stops doubling once per-doc
-    * ranks are dense-and-distinct — real text gets there in ~log_|V| n
-    * of the ⌈log₂ maxLen⌉ worst-case rounds — and it is sound for the
-    * LCP consumers too (r16; the ladder was previously run in full on
-    * the belief the jump needed every rung): all ranks distinct at
-    * width S ⟺ every pair's capped-S prefixes differ ⟹ every pairwise
-    * LCP < S, and the greedy jump decomposes any value < S with the
-    * remaining rungs (S/2 + S/4 + … + 1 = S−1); the rung-S probe
-    * itself can never fire since no two positions share a width-S
-    * rank. */
-  private[ops] def saWithTables(docs: DataFrame, earlyExit: Boolean)
-      : (DataFrame, Seq[(Long, DataFrame)], Long) = {
-    val toks = pin(docs
-      .select(col("doc_id"), posexplode(split(col("text"), " ")))
-      .select(col("doc_id"), col("pos").cast("long").as("off"),
-        col("col").as("tok")))
-    val byDoc = Window.partitionBy("doc_id")
-    var r = pin(toks.select(col("doc_id"), col("off"),
-      dense_rank().over(byDoc.orderBy("tok")).cast("long").as("r")))
-    val tables = scala.collection.mutable.ListBuffer[(Long, DataFrame)](1L -> r)
-    val mlRow = toks.groupBy("doc_id").count()
-      .agg(max(col("count"))).collect()(0)
-    val maxLen = if (mlRow.isNullAt(0)) 1L else mlRow.getLong(0)
-    // early exit: once every doc's ranks are pairwise distinct the
-    // order is total and further doublings are no-ops; ranks are
-    // dense per doc, so "all distinct" ⇔ max(rank) = doc length
-    def totalOrder(): Boolean = earlyExit && r.groupBy("doc_id")
-      .agg((count(lit(1)) - max(col("r"))).as("dup"))
-      .where(col("dup") > 0).limit(1).count() == 0L
-    var shift = 1L
-    while (shift < maxLen && !totalOrder()) {
-      val right = r.select(col("doc_id"),
-        (col("off") - shift).as("off"), col("r").as("r2"))
-      r = pin(r.join(right, Seq("doc_id", "off"), "left")
-        .select(col("doc_id"), col("off"),
-          dense_rank().over(byDoc.orderBy(col("r"),
-            coalesce(col("r2"), lit(-1L)))).cast("long").as("r")))
-      shift *= 2
-      tables += (shift -> r)
-    }
-    (r, tables.toList, maxLen)
-  }
-
   /** Longest repeated substring per document (q367's engine) — the
     * classic suffix-array theorem (the LRS is the maximum LCP of two
-    * SA-ADJACENT suffixes) with the LCP computed by rank-table
-    * jumping, Karp/Miller/Rosenberg style: walk the width ladder
-    * 2^K..1 once, descending; at width w advance both cursors by w iff
-    * their width-w ranks coincide (⟺ the next w tokens match — see
-    * [[saWithTables]]); the accumulated advance is the exact LCP (its
-    * binary decomposition), in ⌈log₂ maxLen⌉ + 1 position-keyed joins
-    * of the (doc, pair) frame against tree-sized rank tables. No
-    * suffix text is ever materialized pairwise — the O(Σ L²) blowup a
-    * direct adjacent-suffix comparison would cost is the reason the
-    * ladder exists.
+    * SA-ADJACENT suffixes) over the corpus-global order `sa` of
+    * [[globalSaLadder]]: a per-doc `lead` over the global rank gives
+    * each document's adjacent pairs, and [[ladderJumpLcp]] measures
+    * them on the global rungs. Same-doc suffixes differ in length, so
+    * no pair shares a final rank and every rung hit is a true w-token
+    * match. No suffix text is ever materialized pairwise — the
+    * O(Σ L²) blowup a direct adjacent-suffix comparison would cost is
+    * the reason the ladder exists.
     *
     * Output: one row per document — (`lrs_len`, `off_a` < `off_b` the
     * lexicographically smallest offset pair achieving it; single-token
     * docs have no pair: lrs_len 0, NULL offsets). */
-  def longestRepeats(docs: DataFrame): DataFrame = {
-    // earlyExit is sound for the jump — see [[saWithTables]] (r16):
-    // exit at width S bounds every LCP below S, and rungs ≤ S/2
-    // decompose any such value; measured 10.0 → ~6 s at sf0.1
-    val (sa, tables, _) = saWithTables(docs, earlyExit = true)
-    longestRepeatsFrom(docs, sa, tables)
-  }
-
-  /** [[longestRepeats]] over an ALREADY-BUILT rank ladder — the
-    * readout half, split out so the cached [[PerDocSa]] substrate can
-    * feed it (r17: q366 and q367 each rebuilt the same per-doc ladder,
-    * the last un-shared substrate in the suffix family). */
-  private[ops] def longestRepeatsFrom(docs: DataFrame, sa: DataFrame,
+  private[ops] def perDocRepeats(docs: DataFrame, sa: DataFrame,
       tables: Seq[(Long, DataFrame)]): DataFrame = {
-    val bySa = Window.partitionBy("doc_id").orderBy("r")
-    val pairs = sa
-      .withColumn("off_b", lead("off", 1).over(bySa))
-      .where(col("off_b").isNotNull)
-      .select(col("doc_id"), col("off").as("off_a"), col("off_b"))
-    var st = pin(pairs.select(col("doc_id"), col("off_a"),
-      col("off_b"), lit(0L).as("lcp"),
-      col("off_a").as("ca"), col("off_b").as("cb")))
-    tables.sortBy(-_._1).foreach { case (w, t) =>
-      val ta = t.select(col("doc_id"), col("off").as("ca"), col("r").as("ra"))
-      val tb = t.select(col("doc_id"), col("off").as("cb"), col("r").as("rb"))
-      val hit = col("ra").isNotNull && col("rb").isNotNull &&
-        col("ra") === col("rb")
-      st = pin(st.join(ta, Seq("doc_id", "ca"), "left")
-        .join(tb, Seq("doc_id", "cb"), "left")
-        .select(col("doc_id"), col("off_a"), col("off_b"),
-          when(hit, col("lcp") + w).otherwise(col("lcp")).as("lcp"),
-          when(hit, col("ca") + w).otherwise(col("ca")).as("ca"),
-          when(hit, col("cb") + w).otherwise(col("cb")).as("cb")))
-    }
-    val scored = st.select(col("doc_id"), col("lcp"),
-      least(col("off_a"), col("off_b")).as("o1"),
-      greatest(col("off_a"), col("off_b")).as("o2"))
+    val pairs = sa.select(col("doc_id").as("da"), col("off").as("oa"),
+        lead("off", 1).over(Window.partitionBy("doc_id").orderBy("r")).as("ob"))
+      .where(col("ob").isNotNull)
+      .withColumn("db", col("da"))
+    val scored = ladderJumpLcp(pairs, tables).select(col("da").as("doc_id"),
+      col("lcp"), least(col("oa"), col("ob")).as("o1"),
+      greatest(col("oa"), col("ob")).as("o2"))
     val mx = scored.groupBy("doc_id").agg(max(col("lcp")).as("lrs_len"))
     val wmin = Window.partitionBy("doc_id").orderBy("o1", "o2")
     val arg = scored.join(mx, Seq("doc_id"))
@@ -2000,73 +1896,22 @@ object TrainPrep {
         col("off_a"), col("off_b"))
   }
 
-  /** The per-document rank ladder that q366 and q367 both read: the
-    * final rank frame `sa` plus every prefix-doubling rung `tab_<w>`
-    * (the LCP jump in [[longestRepeatsFrom]] needs them all). */
-  lazy val PerDocSa: Substrate = Substrate("per_doc_sa") { (s, dir, out) =>
-    val (sa, tables, _) = saWithTables(Tables.documents(s, dir),
-      earlyExit = true)
-    sa.write.mode("overwrite").parquet(out + "/sa.parquet")
-    tables.foreach { case (w, t) =>
-      t.write.mode("overwrite").parquet(out + s"/tab_$w.parquet") }
-  }
-
-  /** The cached per-doc rank ladder: (rank frame, rungs by width). */
-  private[graft] def perDocSa(s: org.apache.spark.sql.SparkSession,
-      dir: String): (DataFrame, Seq[(Long, DataFrame)]) = {
-    val widths = Substrate.artifacts(PerDocSa.root(s, dir))
-      .collect { case a if a.startsWith("tab_") => a.stripPrefix("tab_").toLong }
-      .sorted
-    (PerDocSa.read(s, dir, "sa"),
-      widths.map(w => w -> PerDocSa.read(s, dir, s"tab_$w")))
-  }
-
-  /** Distributed DENSE RANK of the whole frame by `keys`, plus the
-    * TOTAL group count — the primitive a CORPUS-global suffix order
-    * needs, built without the partition-less window that would sort
-    * everything in one task:
-    * range-repartition on the keys (Spark's distributed-sort shape;
-    * equal keys never straddle a partition boundary), dense-rank
-    * WITHIN each partition, then lift every rank by its partition's
-    * base offset — the prefix sum of earlier partitions' distinct-key
-    * counts, a #partitions-row driver reduction (bounded by config,
-    * never by data). The result is independent of where the sampled
-    * range boundaries fall, so it is deterministic even though
-    * RangePartitioner samples. The group count is the driver prefix
-    * sum's total, so callers that need it (the convergence exit in
-    * [[crossDocRepeat]]) pay no extra action. */
-  private def denseRankGlobalCounted(df: DataFrame, keys: Seq[String],
-      out: String): (DataFrame, Long) = {
-    val s = df.sparkSession
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val kc = keys.map(col)
-    // (r19 note: a persist()+fused-collect variant was tried here and
-    // MEASURED 3× SLOWER on the global_sa build — Dataset.persist
-    // caches COLUMNAR with per-read decode, and every rung is re-read
-    // by joins each round; pinned row blocks stay.)
-    val local = pin(df.repartitionByRange(np, kc: _*)
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__lr",
-        dense_rank().over(Window.partitionBy("__pid").orderBy(kc: _*))
-          .cast("long")))
-    val cnts = local.groupBy("__pid").agg(max(col("__lr")).as("__cnt"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    var acc = 0L
-    val offs = cnts.map { case (p, c) => val o = (p, acc); acc += c; o }.toSeq
-    import s.implicits._
-    val offDf = broadcast(offs.toDF("__pid", "__off"))
-    (local.join(offDf, "__pid")
-      .withColumn(out, col("__lr") + col("__off"))
-      .drop("__pid", "__lr", "__off"), acc)
-  }
-
-  /** The GLOBAL suffix-order ladder shared by [[crossDocRepeat]] and
-    * [[crossDocCoverage]]: returns the final rank frame
-    * (doc_id, off, r, slen) — r the corpus-wide suffix rank (ties ⟺
-    * identical suffixes), slen the suffix length — plus every genuine
-    * capped-width rank table for the LCP jump. Specs call it on
-    * hand-built frames that exist in no corpus dir, so the [[GlobalSa]]
-    * cache does not apply there. */
+  /** The GLOBAL suffix-order ladder behind the whole suffix family
+    * (q366/q367 per document, q374/q375/q377 across documents): returns
+    * the final rank frame (doc_id, off, r, slen) — r the corpus-wide
+    * suffix rank (ties ⟺ identical suffixes), slen the suffix length —
+    * plus every genuine capped-width rank table for the LCP jump.
+    *
+    * Prefix doubling (Manber/Myers 1990 in shuffle form): round k
+    * ranks every suffix by the pair (rank of its first 2^k tokens,
+    * rank of the next 2^k) with one position-keyed self-join and one
+    * [[Scale.globalDenseRank]]; a missing right half ranks −1 (a proper
+    * prefix sorts before every extension, the list-lexicographic rule
+    * the oracles apply directly). Rung w ranks suffixes by their
+    * length-capped w-token prefix, so two suffixes share a width-w rank
+    * iff those prefixes are equal. Specs call it on hand-built frames
+    * that exist in no corpus dir, so the [[GlobalSa]] cache does not
+    * apply there. */
   private[ops] def globalSaLadder(docs: DataFrame)
       : (DataFrame, Seq[(Long, DataFrame)]) = {
     val toks = pin(docs
@@ -2076,28 +1921,26 @@ object TrainPrep {
     val lens = pin(toks.groupBy("doc_id")
       .agg(count(lit(1)).as("dlen")))
     // every rung is a LAZY one-hop projection of its round's PINNED
-    // per-partition rank frame (denseRankGlobalCounted materializes
-    // it) — the former per-round materialize re-wrote the whole n-row
-    // frame a second time for nothing (r19, VERDICT r18 #5)
-    val (r0, g0) =
-      denseRankGlobalCounted(toks, Seq("tok"), "r")
-    var r = r0.select(col("doc_id"), col("off"), col("r"))
+    // per-partition rank frame (the scan materializes it) — the former
+    // per-round materialize re-wrote the whole n-row frame a second
+    // time for nothing (r19, VERDICT r18 #5)
+    val (r0, g0) = Scale.globalDenseRank(toks, Seq(col("tok")))
+    var r = r0.select(col("doc_id"), col("off"), col("dr").as("r"))
     val tables = scala.collection.mutable.ListBuffer[(Long, DataFrame)](1L -> r)
     val mlRow = lens.agg(max(col("dlen"))).collect()(0)
     val maxLen = if (mlRow.isNullAt(0)) 1L else mlRow.getLong(0)
-    // GROUP-CONVERGENCE early exit (r16): the per-doc "all ranks
-    // distinct" exit can never fire when exact duplicate suffixes
-    // exist cross-doc, but prefix doubling has a stronger standard
-    // termination — a round that splits NO group never splits one
-    // again (same-group at 2S ⟹ same-group shifted ⟹ same-group at
-    // 4S, inductively), so the partition already equals full-suffix
-    // equivalence. The no-split round's table is DISCARDED: its
-    // partition duplicates the previous rung's (adding it would let
-    // the jump claim a 2S-token match on what is only a certified
-    // S-token match). Every kept rung is genuine capped-w equality,
-    // and non-identical pairs (the only ones the jump sees) have
-    // LCP < S, decomposable by rungs ≤ S/2. The group count rides the
-    // dense-rank driver prefix sum — no extra probe per round.
+    Materialize.release(toks)
+    // GROUP-CONVERGENCE early exit (r16): a round that splits NO group
+    // never splits one again (same-group at 2S ⟹ same-group shifted ⟹
+    // same-group at 4S, inductively), so the partition already equals
+    // full-suffix equivalence. The no-split round's table is DISCARDED
+    // and its pinned frame released: its partition duplicates the
+    // previous rung's (adding it would let the jump claim a 2S-token
+    // match on what is only a certified S-token match). Every kept rung
+    // is genuine capped-w equality, and non-identical pairs (the only
+    // ones the jump sees) have LCP < S, decomposable by rungs ≤ S/2.
+    // The group count rides the dense rank's driver prefix sum — no
+    // extra probe per round.
     var groups = g0
     var shift = 1L
     var converged = false
@@ -2107,11 +1950,10 @@ object TrainPrep {
       val joined = r.join(right, Seq("doc_id", "off"), "left")
         .select(col("doc_id"), col("off"), col("r").as("r1"),
           coalesce(col("rr"), lit(-1L)).as("r2"))
-      val (rNext, g2) =
-        denseRankGlobalCounted(joined, Seq("r1", "r2"), "r")
-      if (g2 == groups) converged = true
+      val (rNext, g2) = Scale.globalDenseRank(joined, Seq(col("r1"), col("r2")))
+      if (g2 == groups) { converged = true; Materialize.release(rNext) }
       else {
-        r = rNext.select(col("doc_id"), col("off"), col("r"))
+        r = rNext.select(col("doc_id"), col("off"), col("dr").as("r"))
         groups = g2; shift *= 2
         tables += (shift -> r)
       }
@@ -2124,18 +1966,21 @@ object TrainPrep {
     (sa, tables.toList)
   }
 
-  /** The KMR rank-ladder LCP jump (the q367 walk, doc-agnostic) over a
-    * pair frame (`i` passthrough key, `da`, `oa`, `db`, `ob`): one
-    * (doc, cursor)-keyed join per rung, descending widths; returns the
-    * pairs with their exact `lcp`. Callers must route IDENTICAL-rank
-    * pairs around this (their LCP is the full common length; inside
-    * the jump a same-rank hit on the top rung would overshoot), which
-    * also guarantees every hit here is a true w-token match. */
+  /** The KMR rank-ladder LCP jump over a pair frame (`da`, `oa`, `db`,
+    * `ob`, any other columns pass through): walk the width ladder
+    * 2^K..1 once, descending; at width w advance both cursors by w iff
+    * their width-w ranks coincide (⟺ the next w tokens match); the
+    * accumulated advance is the exact `lcp` (its binary decomposition),
+    * one (doc, cursor)-keyed join per rung. Callers must route
+    * IDENTICAL-rank pairs around this (their LCP is the full common
+    * length; inside the jump a same-rank hit on the top rung would
+    * overshoot), which also guarantees every hit here is a true
+    * w-token match. */
   private def ladderJumpLcp(pairs: DataFrame,
       tables: Seq[(Long, DataFrame)]): DataFrame = {
-    var st = pin(pairs.select(col("i"), col("da"), col("oa"),
-      col("db"), col("ob"), lit(0L).as("lcp"),
-      col("oa").as("ca"), col("ob").as("cb")))
+    val keep = pairs.columns.toSeq.map(col)
+    var st = pin(pairs.select(keep ++ Seq(lit(0L).as("lcp"),
+      col("oa").as("ca"), col("ob").as("cb")): _*))
     tables.sortBy(-_._1).foreach { case (w, t) =>
       val ta = t.select(col("doc_id").as("da"), col("off").as("ca"),
         col("r").as("ra"))
@@ -2145,20 +1990,19 @@ object TrainPrep {
         col("ra") === col("rb")
       st = pin(st.join(ta, Seq("da", "ca"), "left")
         .join(tb, Seq("db", "cb"), "left")
-        .select(col("i"), col("da"), col("oa"), col("db"), col("ob"),
+        .select(keep ++ Seq(
           when(hit, col("lcp") + w).otherwise(col("lcp")).as("lcp"),
           when(hit, col("ca") + w).otherwise(col("ca")).as("ca"),
-          when(hit, col("cb") + w).otherwise(col("cb")).as("cb")))
+          when(hit, col("cb") + w).otherwise(col("cb")).as("cb")): _*))
     }
-    st.select(col("i"), col("da"), col("oa"), col("db"), col("ob"),
-      col("lcp"))
+    st.drop("ca", "cb")
   }
 
-  /** The corpus-global suffix order that q374/q375/q377 read: the rank
-    * frame `sa` and every jump rung `tab_<w>`, plus the indexed order
-    * `idx` and adjacent-LCP walk `adj` derived from the PERSISTED ladder
-    * (read-back, not lineage: all artifacts are views of one build).
-    * The gates read only idx/adj. Deterministic: ranks are a pure
+  /** The corpus-global suffix order that the suffix family reads: the
+    * rank frame `sa` and every jump rung `tab_<w>` (q366/q367), plus the
+    * indexed order `idx` and adjacent-LCP walk `adj` derived from the
+    * PERSISTED ladder (read-back, not lineage: all artifacts are views
+    * of one build; q374/q375/q377). Deterministic: ranks are a pure
     * function of the corpus (the distributed dense rank is
     * boundary-placement-independent). */
   lazy val GlobalSa: Substrate = Substrate("global_sa") { (s, dir, out) =>
@@ -2174,17 +2018,21 @@ object TrainPrep {
     adj.write.mode("overwrite").parquet(out + "/adj.parquet")
   }
 
+  /** The cached [[GlobalSa]] rungs by width, for the LCP jump. */
+  private def globalSaRungs(s: org.apache.spark.sql.SparkSession,
+      dir: String): Seq[(Long, DataFrame)] =
+    Substrate.artifacts(GlobalSa.root(s, dir))
+      .collect { case a if a.startsWith("tab_") => a.stripPrefix("tab_").toLong }
+      .sorted.map(w => w -> GlobalSa.read(s, dir, s"tab_$w"))
+
   /** The longest token span repeated ACROSS documents, exact at any
     * length (✚ — the corpus-level statistic of Lee et al.'s exact
     * substring dedup: q361 finds ≥L-token cross-doc spans at a fixed
     * depth, q367 is per-document; this is the global "how long is the
     * worst cross-doc repeat" number, q374's engine).
     *
-    * Construction: the same prefix-doubling ladder as [[saWithTables]]
-    * but with DOC-AGNOSTIC rank tables — every round ranks all corpus
-    * suffixes together via [[denseRankGlobalCounted]] (capped-prefix
-    * convention unchanged: a proper prefix sorts before every
-    * extension), so suffixes of different documents are directly
+    * Construction: the [[globalSaLadder]] ranks all corpus suffixes
+    * together, so suffixes of different documents are directly
     * comparable at every width. By the classic distinct-docs argument,
     * the maximum cross-doc LCP is achieved by some CONSECUTIVE pair of
     * the global suffix order whose documents differ (any farther pair
@@ -2212,100 +2060,22 @@ object TrainPrep {
     * materializes suffix text pairwise. */
   def crossDocRepeat(docs: DataFrame): DataFrame = {
     val (sa, tables) = globalSaLadder(docs)
-    crossDocRepeatFrom(sa, tables)
+    maxCrossDocPair(indexedAdjacentLcps(sa, tables)._2)
   }
 
-  private[ops] def crossDocRepeatFrom(sa: DataFrame,
-      tables: Seq[(Long, DataFrame)]): DataFrame =
-    // dedicated direct-call path (ADVICE r17): the argmax only ever
-    // reads DOC-CHANGING adjacent pairs, so same-doc pairs are dropped
-    // BEFORE the ladder walk instead of after it — the cached-substrate
-    // consumers keep the unfiltered frame (q375/q377 need every pair)
-    crossDocRepeatFromAdj(indexedAdjacentLcps(sa, tables,
-      pairFilter = col("da") =!= col("db"))._2)
-
-  /** q374's readout over the cached adjacent-LCP frame (r17): the max
+  /** q374's readout over the adjacent-LCP frame (r17): the max
     * cross-doc LCP is realized by a DOC-CHANGING consecutive pair of
     * the global order — for any cross-doc pair (x, y), LCP(x, y) is
     * the min of the adjacent LCPs between them, and [x, y] must
     * contain a doc change whose adjacent LCP is therefore ≥ LCP(x, y).
-    * One filter + argmax over the substrate's `adj` artifact; the
-    * former boundary-pair ladder walk (a per-gate subset of the same
-    * walk) is gone — the full walk runs once, in the build, and
-    * q375/q377 read the same frame. */
-  private[ops] def crossDocRepeatFromAdj(adj: DataFrame): DataFrame =
+    * One filter + argmax over the substrate's `adj` artifact; the full
+    * walk runs once, in the build, and q375/q377 read the same frame. */
+  private[ops] def maxCrossDocPair(adj: DataFrame): DataFrame =
     adj.where(col("da") =!= col("db"))
       .orderBy(col("lcp").desc, col("da"), col("oa"), col("db"), col("ob"))
       .limit(1)
       .select(col("lcp").as("repeat_len"), col("da").as("doc_a"),
         col("oa").as("off_a"), col("db").as("doc_b"), col("ob").as("off_b"))
-
-  /** Global ORDER INDEX by `keys` — the row-number sibling of
-    * [[denseRankGlobalCounted]] (range repartition, per-partition
-    * row_number, partition-count prefix sum), 0-based. Shared by the
-    * suffix-order machinery and DataSelect's KNN-Shapley ranks. */
-  private[ops] def globalOrderIndex(df: DataFrame, keys: Seq[String],
-      out: String): DataFrame = {
-    val s = df.sparkSession
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val kc = keys.map(col)
-    val local = pin(df.repartitionByRange(np, kc: _*)
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__lr",
-        row_number().over(Window.partitionBy("__pid").orderBy(kc: _*))
-          .cast("long")))
-    val cnts = local.groupBy("__pid").agg(count(lit(1)).as("__cnt"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    var acc = 0L
-    val offs = cnts.map { case (p, c) => val o = (p, acc); acc += c; o }.toSeq
-    import s.implicits._
-    val offDf = broadcast(offs.toDF("__pid", "__off"))
-    local.join(offDf, "__pid")
-      .withColumn(out, col("__lr") - 1L + col("__off"))
-      .drop("__pid", "__lr", "__off")
-  }
-
-  /** Global RUNNING SUM of `valueCol` in `orderCol` order (inclusive of
-    * the current row) — the same two-phase shape: range repartition on
-    * the order key, per-partition cumulative window, driver prefix sum
-    * of per-partition totals. */
-  private[ops] def runningSumGlobal(df: DataFrame, orderCols: Seq[String],
-      valueCol: String, out: String): DataFrame = {
-    val s = df.sparkSession
-    val np = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val kc = orderCols.map(col)
-    val local = pin(df.repartitionByRange(np, kc: _*)
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__ls",
-        sum(col(valueCol)).over(Window.partitionBy("__pid")
-          .orderBy(kc: _*)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow))))
-    // value-type-agnostic offsets (LONG run ids, DECIMAL Shapley
-    // terms): accumulate in BigDecimal — exact for both — and cast
-    // the offset back to the local sum's own type (offsets are whole
-    // partition totals, so the cast is always exact)
-    val tots = local.groupBy("__pid").agg(sum(col(valueCol)).as("__tot"))
-      .collect().map { r =>
-        val v = r.get(1) match {
-          case null => BigDecimal(0)
-          case l: java.lang.Long => BigDecimal(l)
-          case d: java.math.BigDecimal => BigDecimal(d)
-          case other => sys.error(
-            s"runningSumGlobal: unsupported value column type " +
-              s"${other.getClass.getName} for '$valueCol' — only LONG and " +
-              s"DECIMAL sums are exact; cast the column first")
-        }
-        (r.getInt(0), v)
-      }.sortBy(_._1)
-    var acc = BigDecimal(0)
-    val offs = tots.map { case (p, c) => val o = (p, acc); acc += c; o }.toSeq
-    import s.implicits._
-    val sumType = local.schema("__ls").dataType
-    val offDf = broadcast(offs.toDF("__pid", "__off"))
-    local.join(offDf, "__pid")
-      .withColumn(out, col("__ls") + col("__off").cast(sumType))
-      .drop("__pid", "__ls", "__off")
-  }
 
   /** Per-document CROSS-DOCUMENT match statistics, exact at any length
     * (✚ — matching statistics over the global suffix order; the
@@ -2347,15 +2117,15 @@ object TrainPrep {
     * Identical-rank pairs are identical suffixes (LCP = common
     * length); distinct ranks walk the ladder. */
   private def indexedAdjacentLcps(sa: DataFrame,
-      tables: Seq[(Long, DataFrame)],
-      pairFilter: Column = lit(true)): (DataFrame, DataFrame) = {
-    val idx = pin(globalOrderIndex(sa,
-      Seq("r", "doc_id", "off"), "i"))
+      tables: Seq[(Long, DataFrame)]): (DataFrame, DataFrame) = {
+    val idx = pin(Scale.globalRowNumber(sa,
+        Seq(col("r"), col("doc_id"), col("off")))
+      .withColumn("i", col("rn") - 1L).drop("rn"))
     val aSide = idx.select(col("i"), col("doc_id").as("da"),
       col("off").as("oa"), col("r").as("ra"), col("slen").as("sla"))
     val bSide = idx.select((col("i") - 1L).as("i"),
       col("doc_id").as("db"), col("off").as("ob"), col("r").as("rb"))
-    val adj0 = aSide.join(bSide, "i").where(pairFilter)
+    val adj0 = aSide.join(bSide, "i")
     val sameR = adj0.where(col("ra") === col("rb"))
       .select(col("i"), col("da"), col("oa"), col("db"), col("ob"),
         col("sla").as("lcp"))
@@ -2385,7 +2155,8 @@ object TrainPrep {
       .select(col("i"), col("doc_id"),
         coalesce(col("chg"), lit(0L)).as("chg"),
         col("lcp_in"), col("lcp_out"))
-    val withRun = pin(runningSumGlobal(marked, Seq("i"), "chg", "run"))
+    val withRun = pin(Scale.globalRunningSum(marked, Seq(col("i")), col("chg"))
+      .withColumnRenamed("cum", "run"))
     val maxRunRow = withRun.agg(max(col("run"))).collect()(0)
     val maxRun = if (maxRunRow.isNullAt(0)) 0L else maxRunRow.getLong(0)
     val wUp = Window.partitionBy("run").orderBy("i")
@@ -2449,7 +2220,8 @@ object TrainPrep {
         isEval.cast("long").as("ev"),
         when(isEval, lit(null)).otherwise(col("lcp_in")).as("lcp_in"),
         col("lcp_out"))
-    val withSeg = pin(runningSumGlobal(marked, Seq("i"), "ev", "seg"))
+    val withSeg = pin(Scale.globalRunningSum(marked, Seq(col("i")), col("ev"))
+      .withColumnRenamed("cum", "seg"))
     val totalEvalRow = withSeg.agg(max(col("seg"))).collect()(0)
     val totalEval = if (totalEvalRow.isNullAt(0)) 0L else totalEvalRow.getLong(0)
     val wUp = Window.partitionBy("seg").orderBy("i")

@@ -97,6 +97,10 @@ class LayoutInvarianceSpec extends AnyFunSuite {
     "q353_dendrogram_cut",
     "q358_hdbscan",
     "q359_glosh_outliers",
+    // the per-doc suffix arrays and longest repeats read the global
+    // suffix order through per-doc windows and the rung jump
+    "q366_suffix_array",
+    "q367_longest_repeat",
     // round-16: the distributed dense rank behind the global suffix
     // order (range repartition + per-partition dense_rank + driver
     // offset prefix sum) must elect the identical ranks — and so the

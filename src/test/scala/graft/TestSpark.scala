@@ -23,10 +23,7 @@ object TestSpark {
     try body(dir)
     finally {
       sc.setCheckpointDir(prior.orNull)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(dir)
+      graft.core.Scratch.deleteRecursively(dir.toPath)
       assert(sc.getCheckpointDir == prior,
         s"checkpoint dir not restored: ${sc.getCheckpointDir} != $prior")
     }

@@ -28,21 +28,42 @@ class Batch22Spec extends AnyFunSuite {
       assert(g._1 == w._1 && g._2 == w._2)
       assert(math.abs(g._3 - w._3) < 0.005)
     }
-    // plan contract: the read is partition-pruned to ONE directory
-    val df = SparkEntry.queries("q318_partition_pruned")(spark, sf)
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    // plan contract: the read is partition-pruned to ONE directory. The
+    // gate pins its result before it deletes the table, so the scan is
+    // in the plan of the pinning action, seen by an execution listener
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
     def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
       case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
       case f: FileSourceScanExec => Seq(f)
       case other => other.children.flatMap(scans)
     }
-    val scan = scans(df.queryExecution.executedPlan)
-      .find(_.partitionFilters.nonEmpty)
-    assert(scan.isDefined, "expected a partition-filtered scan")
-    assert(scan.get.relation.location
-      .listFiles(scan.get.partitionFilters, Nil).size == 1,
+    val pruned = new java.util.concurrent.ConcurrentLinkedQueue[FileSourceScanExec]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        scans(qe.executedPlan).filter(_.partitionFilters.nonEmpty).foreach(pruned.add)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries("q318_partition_pruned")(spark, sf)
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(!pruned.isEmpty, "expected a partition-filtered scan")
+    val scan = pruned.peek()
+    assert(scan.relation.location.listFiles(scan.partitionFilters, Nil).size == 1,
       "only the target day's directory may survive pruning")
+  }
+
+  test("q318 deletes the partitioned copy of events it writes") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def copies(): Set[String] = Option(tmp.list()).toSet.flatten
+      .filter(_.startsWith("graft-partitioned"))
+    val before = copies()
+    SparkEntry.queries("q318_partition_pruned")(spark, sf).collect()
+    assert(copies() -- before == Set.empty[String])
   }
 
   test("q319 sample accuracy matches an exact driver-side replication") {

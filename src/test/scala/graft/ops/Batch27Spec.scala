@@ -245,6 +245,23 @@ class Batch27Spec extends AnyFunSuite {
     assert(bruteCrossLcp(docs) == 5L)
   }
 
+  test("globalSaLadder keeps pinned only the frames its result reads: " +
+      "the token frame and the discarded no-split round are freed") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // docs 1 and 2 are identical, so the width-8 round splits no group
+    // before the 5-token suffixes are fully ranked: it is discarded
+    val df = Seq(1L -> "a b a b c", 2L -> "a b a b c", 3L -> "c a b")
+      .toDF("doc_id", "text")
+    val before = sc.getPersistentRDDs.keySet
+    val (sa, tables) = TrainPrep.globalSaLadder(df)
+    assert(tables.map(_._1) == Seq(1L, 2L, 4L))
+    val live = (sa +: tables.map(_._2))
+      .flatMap(graft.Materialize.pinnedRdds).map(_.id).toSet
+    val leaked = sc.getPersistentRDDs.keySet -- before -- live
+    assert(leaked.isEmpty, s"orphaned pinned RDDs: $leaked")
+  }
+
   test("q374 equals brute force on seeded random corpora capped below " +
       "8-token repeats, and the exit always fires early") {
     import spark.implicits._

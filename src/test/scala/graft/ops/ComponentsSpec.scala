@@ -358,4 +358,25 @@ class ComponentsSpec extends AnyFunSuite {
     }
     assert(got == expect)
   }
+
+  test("boruvkaMst runs ⌈log₂ n⌉ merging rounds plus the empty probe") {
+    // a 4,096-node path weighted w(i, i+1) = trailing zeros of (i+1):
+    // every round merges aligned blocks pairwise on the next weight, so
+    // 12 merging rounds leave one component and the 13th finds no edge
+    val n = 4096L
+    val nodes = (0L until n).toDF("id")
+    val edges = (0L until n - 1)
+      .map(i => (i, i + 1, java.lang.Long.numberOfTrailingZeros(i + 1).toDouble))
+      .toDF("a", "b", "w")
+    val (mst, labels) = Components.boruvkaMst(nodes, edges)
+    assert(mst.count() == n - 1)
+    assert(labels.select("comp").distinct().collect().map(_.getLong(0)).toSeq == Seq(0L))
+  }
+
+  test("boruvkaMst refuses an edge endpoint that is not a node") {
+    val e = intercept[IllegalArgumentException](Components.boruvkaMst(
+      Seq(1L, 2L, 3L).toDF("id"),
+      Seq((1L, 2L, 0.5), (2L, 9L, 0.1)).toDF("a", "b", "w")))
+    assert(e.getMessage.contains("endpoint 9 is not a node"), e.getMessage)
+  }
 }

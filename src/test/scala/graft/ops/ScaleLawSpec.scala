@@ -128,6 +128,7 @@ class ScaleLawSpec extends AnyFunSuite {
       warm(TestSpark.sf0001); warm(fixture)
       val small = gateMetrics(name, TestSpark.sf0001)._1
       val large = gateMetrics(name, fixture)._1
+      info(f"records $small -> $large (x${large.toDouble / math.max(small, 1)}%.1f)")
       // +20k absolute slack: at sf0.001 constant factors (bounded model
       // tables, AQE broadcast flips) dominate and pure ratios would be
       // meaningless for near-zero baselines.
@@ -309,11 +310,11 @@ class ScaleLawSpec extends AnyFunSuite {
   // r15: one map-side-combined corpus groupBy; the EG iteration runs
   // on the K-row domain frame only
   law("q365_doremi_weights", 5.0)
-  // r17: the per-doc rank ladder is a substrate (one build per
-  // JVM/corpus, cold/cold law below); q366's readout is a rename of
-  // the cached rank frame, q367's the pair frame + LCP jump
-  lawOn("q366_suffix_array", 5.0, big, "namespace", TrainPrep.PerDocSa.root(spark, _))
-  lawOn("q367_longest_repeat", 5.0, big, "namespace", TrainPrep.PerDocSa.root(spark, _))
+  // q366/q367 read the global suffix ladder (cold/cold law below):
+  // q366 a per-doc dense rank of the cached rank frame, q367 the per-doc
+  // adjacent-pair frame + the LCP jump over the cached rungs
+  lawOn("q366_suffix_array", 5.0, big, "namespace", TrainPrep.GlobalSa.root(spark, _))
+  lawOn("q367_longest_repeat", 5.0, big, "namespace", TrainPrep.GlobalSa.root(spark, _))
   // r15: vocab-sized per-lang model broadcast + one per-doc sum + one
   // per-lang tercile window
   law("q368_ccnet_buckets", 5.0)
@@ -381,11 +382,6 @@ class ScaleLawSpec extends AnyFunSuite {
   // distributed dense rank — n-row shuffles × a round count that
   // namespace replication holds constant (doc lengths preserved)
   substrateLaw("global suffix ladder (q374/q375)", 5.0, 5.0, TrainPrep.GlobalSa)
-  // per-doc rank ladder: per round one (doc, off)-keyed join + one
-  // per-doc dense-rank window — n-row shuffles × a round count that
-  // namespace replication holds constant (doc lengths preserved)
-  substrateLaw("per-doc suffix ladder (q366/q367)", 5.0, 5.0,
-    TrainPrep.PerDocSa)
   // KNN-Shapley valuation: the %37 eval sample grows 14 → 32 between
   // the tiny fixtures before saturating its cap, multiplying the pair
   // frame beyond the data growth (the q345 workload class; the
@@ -467,8 +463,8 @@ class ScaleLawSpec extends AnyFunSuite {
   pinLaw("q375_cross_doc_coverage", 5.0, TrainPrep.GlobalSa.root(spark, _)) // adjacent-pair + run frames
   pinLaw("q376_knn_shapley", 5.0, DataSelect.Shapley.root(spark, _)) // readout of the cached value frame (the sample-growth term lives in the substrate's cold/cold law)
   pinLaw("q377_contamination_spans", 5.0, TrainPrep.GlobalSa.root(spark, _)) // adjacent-pair + seg frames
-  pinLaw("q366_suffix_array", 5.0, TrainPrep.PerDocSa.root(spark, _)) // pins the cached rank frame readout
-  pinLaw("q367_longest_repeat", 5.0, TrainPrep.PerDocSa.root(spark, _)) // pins the pair frame per jump rung
+  pinLaw("q366_suffix_array", 5.0, TrainPrep.GlobalSa.root(spark, _)) // pins nothing: a window over the cached rank frame
+  pinLaw("q367_longest_repeat", 5.0, TrainPrep.GlobalSa.root(spark, _)) // pins the pair frame per jump rung
 
   test("the pin probe detects a deliberately re-introduced wide pin " +
       "(q351's defect class: checkpoint 64 dims, read 8)") {

@@ -196,21 +196,57 @@ class ScaleSpec extends AnyFunSuite {
       "at least half the partitions must sit in a quarter-space rectangle")
   }
 
-  test("globalRowNumber equals the single-task window rank at any partitioning") {
+  test("the two-phase scan equals a sequential scan at any partitioning: " +
+      "row number, LONG and DECIMAL running sums, running min, dense rank") {
     import spark.implicits._
     val rnd = new scala.util.Random(7)
-    // duplicate keys force the doc_id tiebreak; skewed keys force
-    // uneven range partitions
-    val rows = (1L to 5000L).map(id => (s"k${rnd.nextInt(40)}", id)).toDF("key", "id")
-    val want = rows.orderBy("key", "id").collect()
-      .map(r => (r.getString(0), r.getLong(1))).zipWithIndex
-      .map { case (t, i) => (t, i + 1L) }.toMap
-    for (parts <- Seq(1, 5, 32)) {
-      val got = Scale.globalRowNumber(rows.repartition(parts),
-          Seq(col("key"), col("id")))
-        .collect().map(r => ((r.getString(0), r.getLong(1)), r.getLong(2))).toMap
-      assert(got == want, s"parts=$parts")
-    }
+    // duplicate keys force the id tiebreak and give the dense rank
+    // ties; skewed keys force uneven range partitions; the three-key
+    // frame leaves range partitions empty at 8 shuffle partitions
+    def frame(keys: Int) = (1L to 3000L)
+      .map(id => (s"k${rnd.nextInt(keys)}", id, rnd.nextInt(201) - 100L))
+      .toDF("key", "id", "v")
+      .withColumn("d", (col("v") / 7).cast("decimal(20,6)"))
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try for (keys <- Seq(40, 3); df = frame(keys); shuffle <- Seq(1, 8)) {
+      spark.conf.set("spark.sql.shuffle.partitions", shuffle.toString)
+      val seq = df.collect().map(r => (r.getString(0), r.getLong(1),
+          r.getLong(2), BigDecimal(r.getDecimal(3))))
+        .sortBy(r => (r._1, r._2))
+      val keyRank = seq.map(_._1).distinct.zipWithIndex.toMap
+      val cv = seq.map(_._3).scanLeft(0L)(_ + _).tail
+      val cd = seq.map(_._4).scanLeft(BigDecimal(0))(_ + _).tail
+      val mv = seq.map(_._3).scanLeft(Long.MaxValue)(math.min).tail
+      val want = seq.indices.map { i =>
+        seq(i)._2 -> (i + 1L, cv(i), cd(i), mv(i), keyRank(seq(i)._1) + 1L)
+      }.toMap
+      val sort = Seq(col("key"), col("id"))
+      for (parts <- Seq(1, 5, 32)) {
+        val in = df.repartition(parts)
+        val (ranked, groups) = Scale.globalDenseRank(in, Seq(col("key")))
+        val got = Scale.globalRowNumber(in, sort)
+          .join(Scale.globalRunningSum(in, sort, col("v"))
+            .select(col("id"), col("cum").as("cv")), "id")
+          .join(Scale.globalRunningSum(in, sort, col("d"))
+            .select(col("id"), col("cum").as("cd")), "id")
+          .join(Scale.globalRunningMin(in, sort, col("v"))
+            .select(col("id"), col("cum").as("mv")), "id")
+          .join(ranked.select("id", "dr"), "id")
+          .select("id", "rn", "cv", "cd", "mv", "dr").collect()
+          .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2),
+            BigDecimal(r.getDecimal(3)), r.getLong(4), r.getLong(5))).toMap
+        val at = s"keys=$keys shuffle=$shuffle parts=$parts"
+        assert(got == want, at)
+        assert(groups == keyRank.size.toLong, at)
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  test("globalRunningSum refuses a floating-point value before any job runs") {
+    val df = spark.range(10).withColumn("x", col("id").cast("double"))
+    val e = intercept[IllegalArgumentException](
+      Scale.globalRunningSum(df, Seq(col("id")), col("x")))
+    assert(e.getMessage.contains("double"), e.getMessage)
   }
 
   test("distributedLag equals the global per-key lag on adversarial splits") {
